@@ -5,12 +5,12 @@ package graft
   * `<outDir>/<name>.txt`, so plan-shape claims in OPTIMIZATION_r*.md are
   * checkable against committed files without running Spark.
   *
-  * Run: sbt "runMain graft.PlanDump <sfDir> <outDir> [queryName ...]"
+  * Run: sbt "runMain graft.PlanDump <sfDir> <outDir> [--no-broadcast] [queryName ...]"
   * With no names, dumps the three bench groups (headline + group2 + group3).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [queryName ...]")
+    require(args.length >= 2, "usage: PlanDump <sfDir> <outDir> [--no-broadcast] [queryName ...]")
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
@@ -22,27 +22,19 @@ object PlanDump {
     val noBroadcast = args.contains("--no-broadcast")
     if (noBroadcast) spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val suffix = if (noBroadcast) "_nobroadcast" else ""
+    val named = args.drop(2).toSeq.filterNot(_ == "--no-broadcast")
     val names =
-      if (args.length > 2) args.drop(2).toSeq.filterNot(_ == "--no-broadcast")
+      if (named.nonEmpty) named
       else graft.queries.Catalog.headlineNames ++
         graft.queries.Catalog.benchGroup2Names ++ graft.queries.Catalog.benchGroup3Names
     names.foreach { name =>
       val q = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
-      graft.core.PlanProbe.clear()
-      val df = q(spark, sfDir)
       // queryExecution.explainString == what .explain("formatted") prints
-      val txt = df.queryExecution.explainString(
+      val txt = q(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      // operators that split at an RDD boundary (r17: the MR scans run on
-      // queryExecution.toRdd) record their exchange/sort child plans in
-      // PlanProbe — append them so the dump still shows the full shape
-      val children = graft.core.PlanProbe.recorded.map { case (tag, qe) =>
-        s"\n\n== RDD-boundary child plan: $tag ==\n" +
-          qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-      }.mkString
       java.nio.file.Files.write(outDir.resolve(s"$name$suffix.txt"),
-        (txt + children).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(s"[plandump] wrote $name (${txt.length + children.length} chars)")
+        txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(s"[plandump] wrote $name (${txt.length} chars)")
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Behavioral analytics over event logs: ordered funnels and cohort
   * retention. Both are user-keyed — every stage shuffles on the SAME user
@@ -258,45 +259,27 @@ object Behavior {
   private[graft] def skipPastSelect(df: DataFrame, keyCols: Seq[Column],
                                     orderCols: Seq[Column], lenCol: String): DataFrame = {
     graft.core.KeyImage.requireAtomic(df, keyCols)
-    val pre = df
-      // collision-free length-prefixed key image (same reasoning as Cusum:
-      // a separator encoding could merge crafted keys and the cursor would
-      // leak across their series)
-      // zero-normalized image (KeyImage.ofNormalized): sorting by the real
-      // columns groups -0.0 with 0.0 (SQL key equality), so the change-probe
-      // image must agree or the cursor would reset mid-series on ±0.0 keys
-      .withColumn("__spk", graft.core.KeyImage.ofNormalized(df, keyCols))
-      .repartition(keyCols: _*)
-      // sort on the REAL key columns, not the image (r16 optimization round
-      // — the scanPattern precedent): KeyImage is injective, so grouping by
-      // (keyCols, order) equals grouping by (__spk, order), and Catalyst can
-      // now ELIDE this sort when an upstream window already ordered the
-      // partition by (key, order) — q162's plan dropped its second Sort. The
-      // image stays as the collision-free key-CHANGE probe in the scan.
-      .sortWithinPartitions(keyCols ++ orderCols: _*)
+    // collision-free length-prefixed key image (same reasoning as Cusum: a
+    // separator encoding could merge crafted keys and the cursor would leak
+    // across their series), zero-normalized (KeyImage.ofNormalized): the
+    // scan sorts by the REAL key columns, which groups -0.0 with 0.0 (SQL key
+    // equality) and lets Catalyst reuse an upstream window's (key, order)
+    // sort, so the key-change probe image must agree or the cursor would
+    // reset mid-series on ±0.0 keys
+    val pre = df.withColumn("__spk", graft.core.KeyImage.ofNormalized(df, keyCols))
     val preSchema = pre.schema
     val lenIdx = preSchema.fieldIndex(lenCol)
     val keyIdx = preSchema.fieldIndex("__spk")
-    // numeric-width-agnostic long read of the candidate length (the external
-    // path used getAs[Number].longValue — integral widths only, same set)
-    val lenGet: org.apache.spark.sql.catalyst.InternalRow => Long =
-      preSchema(lenIdx).dataType match {
-        case org.apache.spark.sql.types.LongType    => _.getLong(lenIdx)
-        case org.apache.spark.sql.types.IntegerType => _.getInt(lenIdx).toLong
-        case org.apache.spark.sql.types.ShortType   => _.getShort(lenIdx).toLong
-        case org.apache.spark.sql.types.ByteType    => _.getByte(lenIdx).toLong
-        case dt => sys.error(s"skipPastSelect: length column '$lenCol' must be integral, got $dt")
-      }
-    // INTERNAL-row scan (r17 optimization round — the MR object boundary was
-    // the verdict's #3): the previous Dataset.mapPartitions over external
-    // Rows planned a DeserializeToObject/SerializeFromObject pair, so every
-    // field of every row round-tripped through Scala objects (UTF8String →
-    // String, micros → LocalDateTime, …) just to read one length and one key
-    // per row. This filter streams the sorted UnsafeRows through UNTOUCHED —
-    // one-in/one-out, no buffering, no per-row conversion — cloning only the
-    // tiny key image it must retain across rows for the key-change probe.
-    graft.core.PlanProbe.record("skip_past_child", pre.queryExecution)
-    val rdd = pre.queryExecution.toRdd.mapPartitions { it =>
+    // the candidate length, integral widths only: a fractional length has no
+    // row count, so DOUBLE, FLOAT and DECIMAL columns fail at build rather
+    // than truncate
+    val lenType = preSchema(lenIdx).dataType
+    if (!Seq(LongType, IntegerType, ShortType, ByteType).contains(lenType))
+      sys.error(s"skipPastSelect: length column '$lenCol' must be integral, got $lenType")
+    // a one-in/one-out filter over the sorted UnsafeRows: no buffering, no
+    // per-row conversion, cloning only the key image it must retain across
+    // rows for the key-change probe
+    graft.core.MrScan.of(pre, keyCols, orderCols, preSchema) { it =>
       var curKey: org.apache.spark.unsafe.types.UTF8String = null
       var consume = 0L
       it.filter { r =>
@@ -309,13 +292,11 @@ object Behavior {
         if (changed) { curKey = if (key == null) null else key.clone(); consume = 0L }
         if (consume > 0L) { consume -= 1L; false }
         else {
-          val len = if (r.isNullAt(lenIdx)) 0L else lenGet(r)
+          val len = if (r.isNullAt(lenIdx)) 0L else r.get(lenIdx, lenType).asInstanceOf[Number].longValue
           if (len > 0L) { consume = len - 1L; true } else false
         }
       }
-    }
-    org.apache.spark.sql.graft.Bridge.internalDf(df.sparkSession, rdd, preSchema)
-      .drop("__spk")
+    }.drop("__spk")
   }
 
   /** First-order Markov transition matrix over per-user event sequences:

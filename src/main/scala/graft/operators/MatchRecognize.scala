@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Row-pattern recognition by a per-key sequential cursor — the execution
   * shape MATCH_RECOGNIZE needs when the lead()-expansion rewrite cannot apply:
@@ -14,10 +15,11 @@ import org.apache.spark.sql.types._
   *   - Catalyst evaluates every DEFINE predicate ONCE per row as a boolean
   *     column (lag/lead physical navigation included) — codegen'd, vectorized,
   *     pushdown-friendly; the scan never re-evaluates a predicate.
-  *   - The scan itself is ONE hash repartition on the key + one in-partition
-  *     sort on (key, order) — Catalyst collapses it into the DEFINE window's
-  *     own exchange/sort, so the whole operator costs a single shuffle — and
-  *     a streaming `mapPartitions` pass holding only the current match
+  *   - The scan itself is ONE Catalyst node, [[graft.core.MrScan]]: it
+  *     requires its input clustered by the key and sorted by (key, order),
+  *     so EnsureRequirements plans that exchange and sort — or reuses the
+  *     DEFINE window's, so the whole operator costs a single shuffle — and
+  *     its body streams each partition holding only the current match
   *     attempt's rows. Keys parallelize across partitions; nothing reaches
   *     the driver.
   *
@@ -117,22 +119,14 @@ object MatchRecognize {
   final case class SkipToFirst(tokenIdx: Int) extends Skip
   final case class SkipToLast(tokenIdx: Int) extends Skip
 
-  /** Epoch micros of an ORDER BY value — needed only under a WITHIN bound. */
-  private[operators] def micros(v: Any): Long = v match {
-    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
-    case t: java.time.LocalDateTime => // TIMESTAMP_NTZ surfaces as LocalDateTime
-      t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L
-    case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000L
-    case other => sys.error("MATCH_RECOGNIZE WITHIN requires a timestamp ORDER BY column, got " +
-      (if (other == null) "NULL" else other.getClass.getSimpleName))
-  }
-
   /** A double/float/integral/decimal as an EXACT scale-6 decimal, rounded
     * HALF_UP exactly like Spark's double→decimal cast — so a sequential sum
     * of these is order-independent and matches `SUM(CAST(x AS DECIMAL(_,6)))`
-    * in any engine.
+    * in any engine. Takes internal (Decimal, the batch scan) and external
+    * (BigDecimal, the streaming twin) values alike.
     */
   private[graft] def toDecimal6(v: Any): java.math.BigDecimal = (v match {
+    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
     case b: java.math.BigDecimal => b
     case b: scala.math.BigDecimal => b.bigDecimal
     case d: java.lang.Double => java.math.BigDecimal.valueOf(d)
@@ -142,18 +136,15 @@ object MatchRecognize {
       (if (other == null) "NULL" else other.getClass.getSimpleName))
   }).setScale(6, java.math.RoundingMode.HALF_UP)
 
-  /** [[toDecimal6]] for INTERNAL values (the r17 InternalRow scan): Decimal
-    * instead of BigDecimal, integrals boxed as java Numbers, identical
-    * rounding and result for every value the external twin accepted.
+  /** MIN/MAX MEASURES order over EXTERNAL values (the streaming twin): the
+    * type's natural order, strings in UTF-8 byte order like the batch scan's
+    * UTF8String — Java's UTF-16 `String.compareTo` disagrees once a
+    * supplementary code point meets U+E000..U+FFFF.
     */
-  private[graft] def toDecimal6Internal(v: Any): java.math.BigDecimal = (v match {
-    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-    case d: java.lang.Double => java.math.BigDecimal.valueOf(d)
-    case f: java.lang.Float => new java.math.BigDecimal(f.toString)
-    case n: java.lang.Number => java.math.BigDecimal.valueOf(n.longValue)
-    case other => sys.error("SUM over a non-numeric MEASURES column: " +
-      (if (other == null) "NULL" else other.getClass.getSimpleName))
-  }).setScale(6, java.math.RoundingMode.HALF_UP)
+  private[graft] def compareMeasure(a: Any, b: Any): Int = (a, b) match {
+    case (s: String, t: String) => UTF8String.fromString(s).compareTo(UTF8String.fromString(t))
+    case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
+  }
 
   /** Single-linear-sequence entry — the pre-r11 surface, unchanged: every
     * token is one global variable in pattern order, one branch.
@@ -344,15 +335,12 @@ object MatchRecognize {
     require(missing.isEmpty, s"MEASURES reference columns absent from the input: ${missing.mkString(", ")}")
 
     val withDefs = (0 until n).foldLeft(df)((d, i) => d.withColumn(s"__mr_def_$i", defs(i)))
-    // sort on the REAL key columns (not the image) so Catalyst can collapse
-    // this sort into the DEFINE window's own (key, order) sort; the image is
-    // only the collision-free equality probe for key-change detection
-    val pre = withDefs
-      // zero-normalized image: the sort below groups -0.0 with 0.0, so the
-      // key-change probe must agree (see KeyImage.ofNormalized)
-      .withColumn("__mr_spk", graft.core.KeyImage.ofNormalized(withDefs, keyCols))
-      .repartition(keyCols: _*)
-      .sortWithinPartitions(keyCols ++ orderCols: _*)
+    // the scan sorts on the REAL key columns (not the image) so Catalyst can
+    // reuse the DEFINE window's own (key, order) sort; the image is only the
+    // collision-free equality probe for key-change detection. Zero-normalized:
+    // the sort groups -0.0 with 0.0, so the key-change probe must agree (see
+    // KeyImage.ofNormalized)
+    val pre = withDefs.withColumn("__mr_spk", graft.core.KeyImage.ofNormalized(withDefs, keyCols))
 
     val inSchema = pre.schema
     val inTypes: Array[DataType] = inSchema.fields.map(_.dataType)
@@ -428,8 +416,7 @@ object MatchRecognize {
     val withinUs = withinMicros.getOrElse(0L)
     val skipMode = skip
     val nameByIdx = varNames.toArray
-    val nameU8: Array[org.apache.spark.unsafe.types.UTF8String] =
-      varNames.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray
+    val nameU8: Array[UTF8String] = varNames.map(UTF8String.fromString).toArray
     val emitAll = allRows
     val emitOneRowCls = oneRowClassifier
     // both timestamp flavors store epoch micros as an internal long — WITHIN
@@ -442,27 +429,15 @@ object MatchRecognize {
     val tsTypeName = inTypes(tsIdx).simpleString
     val needsDyn = dynArr.exists(_ != null)
 
-    // INTERNAL-row scan (r17 optimization round — the MR object boundary was
-    // the r16 verdict's top remaining cost): the previous Dataset
-    // .mapPartitions over external Rows planned a DeserializeToObject /
-    // SerializeFromObject pair, converting EVERY field of EVERY row
-    // (UTF8String → String, micros-long → LocalDateTime, Decimal → BigDecimal
-    // and back) before the NFA read its one boolean per DEFINE. This pass
-    // consumes the sorted UnsafeRows directly — the only per-row work is one
-    // buffer copy (rows must outlive the iterator slot for backtracking) —
-    // and emits internal rows; Bridge.internalDf wraps them without a second
-    // conversion. One semantic note: min/max MEASURES over StringType now
-    // compare UTF8String binary order — Spark's and DuckDB's own string
-    // collation — where the external path compared Java UTF-16 Strings; the
-    // two differ only when a supplementary code point meets a BMP char in
-    // [U+E000, U+FFFF] at the first differing position (no oracle or spec
-    // data does — and the new order is the engine-native one).
-    graft.core.PlanProbe.record("mr_scan_child", pre.queryExecution)
-    val rddOut = pre.queryExecution.toRdd.mapPartitions { it =>
+    // the scan consumes the sorted UnsafeRows directly — the only per-row
+    // work is one buffer copy (rows must outlive the iterator slot for
+    // backtracking) — and emits internal rows. min/max MEASURES over
+    // StringType compare UTF8String binary order, Spark's and DuckDB's own
+    // string collation.
+    graft.core.MrScan.of(pre, keyCols, orderCols, outSchema) { it =>
       new scala.collection.AbstractIterator[org.apache.spark.sql.catalyst.InternalRow] {
         import org.apache.spark.sql.catalyst.InternalRow
         import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-        import org.apache.spark.unsafe.types.UTF8String
         // cross-variable (interpreted) DEFINEs read EXTERNAL rows —
         // MrConditions' value model is String/BigDecimal/Timestamp — so
         // convert lazily, only the rows a dynamic predicate actually touches
@@ -710,7 +685,7 @@ object MatchRecognize {
                     if (colIdx < 0 || !row.isNullAt(colIdx)) acc = acc.asInstanceOf[Long] + 1L
                   case "sum" =>
                     if (!row.isNullAt(colIdx)) {
-                      val d = toDecimal6Internal(row.get(colIdx, inTypes(colIdx)))
+                      val d = toDecimal6(row.get(colIdx, inTypes(colIdx)))
                       acc = if (acc == null) d else acc.asInstanceOf[java.math.BigDecimal].add(d)
                     }
                   case _ =>
@@ -925,7 +900,7 @@ object MatchRecognize {
               case "cnt" => if (!row.isNullAt(colIdx)) acc(j) = acc(j).asInstanceOf[Long] + 1L
               case "sum" =>
                 if (!row.isNullAt(colIdx)) {
-                  val d = toDecimal6Internal(row.get(colIdx, inTypes(colIdx)))
+                  val d = toDecimal6(row.get(colIdx, inTypes(colIdx)))
                   acc(j) = if (acc(j) == null) d
                   else acc(j).asInstanceOf[java.math.BigDecimal].add(d)
                 }
@@ -1014,6 +989,5 @@ object MatchRecognize {
         }
       }
     }
-    org.apache.spark.sql.graft.Bridge.internalDf(df.sparkSession, rddOut, outSchema)
   }
 }

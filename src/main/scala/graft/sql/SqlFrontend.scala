@@ -1291,14 +1291,14 @@ object SqlFrontend {
         // same way). EVERY row enters the scan — non-candidates still occupy
         // row positions a selected match must consume.
         val cand0 = spark.sql(s"SELECT *, __mr.__len AS __graft_len FROM ($candidateSql) __graft_mr0")
-        // column pruning through the opaque selection pass (r16 optimization
-        // round, guide §2.3 "project before the exchange"): skipPastSelect's
-        // mapPartitions is a black box to Catalyst, so every source column —
-        // including wide payloads no clause references — was shuffled, sorted
-        // and object-converted. The scan needs only the key/order columns and
-        // the candidate struct (measures already live INSIDE __mr, computed
-        // by the CASE above, before the opaque boundary); the outer select
-        // reads partCols + __mr fields. Identical output rows (q162 oracle).
+        // column pruning before the selection scan (r16 optimization round,
+        // guide §2.3 "project before the exchange"): skipPastSelect's MrScan
+        // node reads its whole input by position, so Catalyst cannot prune
+        // beneath it and every source column would be shuffled and sorted.
+        // The scan needs only the key/order columns and the candidate struct
+        // (measures already live INSIDE __mr, computed by the CASE above);
+        // the outer select reads partCols + __mr fields. Identical output
+        // rows (q162 oracle).
         val candRefs = (partCols ++ ordCols)
           .flatMap("\\w+".r.findAllIn(_)).map(_.toLowerCase).toSet
         val cand = cand0.select(cand0.columns
@@ -1495,18 +1495,18 @@ object SqlFrontend {
       measureSrc.foreach { case (_, a) => require(!a.startsWith("__mr_"),
         s"MATCH_RECOGNIZE: measure alias '$a' uses the reserved __mr_ prefix") }
       val input00full = spark.sql(s"SELECT * FROM $tbl")
-      // Column pruning through the opaque NFA scan (r16 optimization round,
-      // guide §2.3): scanPattern's mapPartitions is a black box to Catalyst,
-      // so every source column — wide payloads included — crossed the
-      // exchange, both sorts and the object boundary even when no clause
-      // referenced it. Under ONE ROW PER MATCH the output is partition keys
-      // + measures, and every column the scan can possibly touch appears
-      // textually in PARTITION BY / ORDER BY / DEFINE / MEASURES (the
-      // substitution and the interpreted conditions both resolve names from
-      // these same texts), so keeping exactly the source columns mentioned
-      // there is safe over-approximation — quoted literals contribute
-      // harmless extra tokens, never a miss. ALL ROWS emits every source
-      // column by contract: no pruning.
+      // Column pruning before the NFA scan (r16 optimization round, guide
+      // §2.3): scanPattern's MrScan node reads its whole input by position,
+      // so Catalyst cannot prune beneath it and every source column — wide
+      // payloads included — would cross the exchange and the sort even when
+      // no clause referenced it. Under ONE ROW PER MATCH the output is
+      // partition keys + measures, and every column the scan can possibly
+      // touch appears textually in PARTITION BY / ORDER BY / DEFINE /
+      // MEASURES (the substitution and the interpreted conditions both
+      // resolve names from these same texts), so keeping exactly the source
+      // columns mentioned there is safe over-approximation — quoted literals
+      // contribute harmless extra tokens, never a miss. ALL ROWS emits every
+      // source column by contract: no pruning.
       val input00 =
         if (allRowsPerMatch) input00full
         else {

@@ -745,7 +745,8 @@ object StreamingMatchRecognize extends Serializable {
 
             /** Aggregate over runs (same exactness contract as the batch
               * scan: exact HALF_UP-scale-6 decimal sums, one-division avg,
-              * natural-order min/max, non-null counting).
+              * natural-order min/max with strings in code-point order,
+              * non-null counting).
               */
             def aggOverRuns(fn: Int, rs: Array[Long], colI: Int): Any = {
               var cntAcc = 0L
@@ -768,7 +769,7 @@ object StreamingMatchRecognize extends Serializable {
                       val v = row.get(colI)
                       if (cmp == null) cmp = v
                       else {
-                        val r = v.asInstanceOf[Comparable[Any]].compareTo(cmp)
+                        val r = MatchRecognize.compareMeasure(v, cmp)
                         if ((fn == 2 && r < 0) || (fn == 3 && r > 0)) cmp = v
                       }
                     }
@@ -878,7 +879,7 @@ object StreamingMatchRecognize extends Serializable {
                         val v = row.get(colI)
                         if (accCmp(am) == null) accCmp(am) = v
                         else {
-                          val c = v.asInstanceOf[Comparable[Any]].compareTo(accCmp(am))
+                          val c = MatchRecognize.compareMeasure(v, accCmp(am))
                           if ((fn == 2 && c < 0) || (fn == 3 && c > 0)) accCmp(am) = v
                         }
                       }

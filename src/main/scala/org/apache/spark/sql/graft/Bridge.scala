@@ -22,19 +22,10 @@ object Bridge {
   def resolvedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** Wrap an RDD of INTERNAL rows as a DataFrame (r17 optimization round):
-    * the public `createDataFrame(RDD[Row], schema)` twin forces a
-    * Scala-object round trip on every field of every row, and a
-    * `Dataset.mapPartitions` over external Rows plans a
-    * DeserializeToObject/SerializeFromObject pair around the lambda — the
-    * per-row tax the MATCH_RECOGNIZE scans used to pay. This is the same
-    * `private[sql]` surface Spark's own readers use; rows must already be in
-    * the internal representation (UTF8String, micros-long timestamps,
-    * Decimal, …) matching `schema`.
+  /** The DataFrame of a logical plan — how a custom Catalyst node such as
+    * [[graft.core.MrScan]] enters the Dataset API.
     */
-  def internalDf(spark: org.apache.spark.sql.SparkSession,
-                 rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                 schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
+  def ofRows(spark: org.apache.spark.sql.classic.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
 }

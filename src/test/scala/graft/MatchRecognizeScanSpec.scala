@@ -352,7 +352,6 @@ class MatchRecognizeScanSpec extends SparkSpec {
     // a single exchange + a single sort (the q162 plan-guard precedent: if
     // this regresses, the operator pays a second full shuffle at 100 TB)
     ticker.createOrReplaceTempView("mr_ticker")
-    graft.core.PlanProbe.clear()
     val df = SqlFrontend.execute(spark,
       """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
         |  PARTITION BY k ORDER BY ts, id
@@ -360,28 +359,25 @@ class MatchRecognizeScanSpec extends SparkSpec {
         |  ONE ROW PER MATCH
         |  PATTERN (S D+ U+)
         |  DEFINE D AS D.v < PREV(D.v), U AS U.v > PREV(U.v))""".stripMargin)
-    // r17: the scan runs on queryExecution.toRdd, so the exchange/sort live
-    // in the recorded CHILD plan; the OUTER plan must carry NO shuffle, NO
-    // sort and — the point of the InternalRow port — NO object boundary
-    val children = graft.core.PlanProbe.recorded
-    assert(children.nonEmpty, "scan did not record its child plan")
-    val plan = children.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
-    val outer = df.queryExecution.executedPlan.toString
-    val exchanges = "Exchange".r.findAllIn(plan).size
-    val sorts = "\\bSort\\b".r.findAllIn(plan).size
-    assert(exchanges == 1, s"expected ONE shared exchange, got $exchanges:\n${plan.take(3000)}")
-    assert(sorts == 1, s"expected ONE shared sort, got $sorts:\n${plan.take(3000)}")
-    assert(!outer.contains("Exchange") && !"\\bSort\\b".r.findAllIn(outer).hasNext,
-      s"outer plan grew a shuffle/sort:\n${outer.take(3000)}")
-    assert(!outer.contains("DeserializeToObject") && !plan.contains("DeserializeToObject"),
-      s"MR scan re-grew the external-Row object boundary:\n${outer.take(3000)}")
+    // the exchange and sort sit below the MrScanExec node of the one plan,
+    // and — the point of the InternalRow scan — no object boundary
+    val plan = finalPlanOnly(df.queryExecution.executedPlan.toString)
+    val scanAt = plan.indexOf("MrScanExec")
+    val exchanges = "Exchange".r.findAllMatchIn(plan).toSeq
+    val sorts = "\\bSort\\b".r.findAllMatchIn(plan).toSeq
+    assert(scanAt >= 0, s"no MrScanExec node:\n${plan.take(3000)}")
+    assert(exchanges.size == 1, s"expected ONE shared exchange, got ${exchanges.size}:\n${plan.take(3000)}")
+    assert(sorts.size == 1, s"expected ONE shared sort, got ${sorts.size}:\n${plan.take(3000)}")
+    assert((exchanges ++ sorts).forall(_.start > scanAt),
+      s"the exchange and sort must sit below the scan:\n${plan.take(3000)}")
+    assert(!plan.contains("DeserializeToObject"),
+      s"MR scan re-grew the external-Row object boundary:\n${plan.take(3000)}")
 
     // cross-variable route: the PREV nav helper column is a SEPARATE
     // selectExpr window pass before the scan — CollapseWindow must merge it
     // into the DEFINE window (same spec), keeping one exchange + one sort +
     // one Window; a second of any would double the 100 TB shuffle bill
-    graft.core.PlanProbe.clear()
-    SqlFrontend.execute(spark,
+    val plan2 = finalPlanOnly(SqlFrontend.execute(spark,
       """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
         |  PARTITION BY k ORDER BY ts, id
         |  MEASURES FIRST(S.id) AS s_id, LAST(U.v) AS top
@@ -389,13 +385,28 @@ class MatchRecognizeScanSpec extends SparkSpec {
         |  PATTERN (S D+ U+)
         |  DEFINE D AS D.v < PREV(D.v),
         |         U AS U.v > PREV(U.v) AND U.v < FIRST(S.v))""".stripMargin)
-    val children2 = graft.core.PlanProbe.recorded
-    assert(children2.nonEmpty, "cross-var scan did not record its child plan")
-    val plan2 = children2.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
-    assert("Exchange".r.findAllIn(plan2).size == 1 &&
+      .queryExecution.executedPlan.toString)
+    assert(plan2.contains("MrScanExec") &&
+      "Exchange".r.findAllIn(plan2).size == 1 &&
       "\\bSort\\b".r.findAllIn(plan2).size == 1 &&
       "\\bWindow\\b".r.findAllIn(plan2).size == 1,
       s"cross-var route plan regressed:\n${plan2.take(3000)}")
+  }
+
+  test("a scan's output joins with itself (the scan node takes fresh ids per side)") {
+    ticker.createOrReplaceTempView("mr_ticker")
+    val m = SqlFrontend.execute(spark,
+      """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
+        |  PARTITION BY k ORDER BY ts, id
+        |  MEASURES FIRST(S.id) AS s_id, LAST(U.v) AS top
+        |  ONE ROW PER MATCH
+        |  PATTERN (S D+ U+)
+        |  DEFINE D AS D.v < PREV(D.v), U AS U.v > PREV(U.v))""".stripMargin)
+    val pairs = m.as("a").join(m.as("b"), col("a.k") === col("b.k") && col("a.s_id") === col("b.s_id"))
+      .select(col("a.s_id"), col("b.top")).collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    val direct = m.select("s_id", "top").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    assert(direct.nonEmpty && pairs == direct,
+      s"self-join of the scan output: $pairs")
   }
 
   test("cross-variable DEFINE on the unbounded scan route: rise capped by the start row's value") {

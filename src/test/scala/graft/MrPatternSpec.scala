@@ -308,10 +308,9 @@ class MrPatternSpec extends SparkSpec {
 
   test("plan guard: composite patterns keep the ONE exchange + ONE sort scan shape") {
     // branch expansion happens at PLAN time; the physical scan is the same
-    // single mapPartitions over the shared (key, order) sort — alternation
+    // single MrScanExec over the shared (key, order) sort — alternation
     // must not add an exchange, a sort, or a second Window at 100 TB
     alt.createOrReplaceTempView("mr_plan_alt")
-    graft.core.PlanProbe.clear()
     val df = SqlFrontend.execute(spark,
       """SELECT * FROM mr_plan_alt MATCH_RECOGNIZE (
            PARTITION BY k ORDER BY ts, id
@@ -320,19 +319,18 @@ class MrPatternSpec extends SparkSpec {
            PATTERN (A (X | Y))
            DEFINE A AS A.kind = 'a', X AS X.kind = 'x', Y AS Y.v > PREV(Y.v)
          )""")
-    // r17: the scan runs on queryExecution.toRdd — exchange/sort live in the
-    // recorded child plan; the outer plan must stay shuffle/sort/object-free
-    val children = graft.core.PlanProbe.recorded
-    assert(children.nonEmpty, "scan did not record its child plan")
-    val plan = children.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
-    val outer = df.queryExecution.executedPlan.toString
+    // the exchange and sort sit below the MrScanExec node of the one plan
+    val plan = finalPlanOnly(df.queryExecution.executedPlan.toString)
+    val scanAt = plan.indexOf("MrScanExec")
+    assert(scanAt >= 0, s"no MrScanExec node:\n${plan.take(3000)}")
     assert("Exchange".r.findAllIn(plan).size == 1,
       s"composite pattern added an exchange:\n${plan.take(3000)}")
     assert("\\bSort\\b".r.findAllIn(plan).size == 1,
       s"composite pattern added a sort:\n${plan.take(3000)}")
-    assert(!outer.contains("Exchange") && !"\\bSort\\b".r.findAllIn(outer).hasNext &&
-      !outer.contains("DeserializeToObject"),
-      s"outer plan regressed:\n${outer.take(3000)}")
+    assert(plan.indexOf("Exchange") > scanAt &&
+      "\\bSort\\b".r.findFirstMatchIn(plan).exists(_.start > scanAt) &&
+      !plan.contains("DeserializeToObject"),
+      s"plan regressed:\n${plan.take(3000)}")
   }
 
   // ---------------------------------------- ISO choice-point order (r12)

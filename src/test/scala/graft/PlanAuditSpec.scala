@@ -97,23 +97,72 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q162: skip-past selection reuses the candidate window's exchange — one shuffle total") {
-    // r17: the skip-past scan runs on queryExecution.toRdd, so its exchange
-    // lives in the recorded CHILD plan (PlanProbe); the outer plan must stay
-    // shuffle-free AND object-boundary-free (the InternalRow port's point)
-    graft.core.PlanProbe.clear()
-    val outer = plan("q162_match_skip_past")
-    val children = graft.core.PlanProbe.recorded
-    assert(children.nonEmpty, "skipPastSelect did not record its child plan")
-    val p = children.map(c => finalPlanOnly(c._2.executedPlan.toString)).mkString("\n")
-    // skipPastSelect's explicit repartition(key) must COLLAPSE into the
-    // window's ENSURE_REQUIREMENTS exchange (same key): at 60M events the
-    // second shuffle would double the network cost for zero movement. The
-    // scan's (__spk, ts, tie) ordering is a cheap LOCAL re-sort on top of
-    // the window's existing (user, ts, tie) sort — two Sorts, one Exchange.
+    // skipPastSelect's MrScanExec requires its input clustered by the key
+    // and sorted by (key, ts, tie); EnsureRequirements must satisfy both with
+    // the candidate window's own exchange and sort — at 60M events a second
+    // shuffle would double the network cost for zero movement
+    val p = plan("q162_match_skip_past")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
       s"candidate window and skip-past scan must share one exchange:\n${p.linesIterator.filter(_.contains("Exchange")).mkString("\n")}")
-    assert(!outer.contains("Exchange") && !outer.contains("DeserializeToObject"),
-      s"outer plan must be shuffle- and object-boundary-free:\n${outer.take(2000)}")
+    assert("\\bSort \\[".r.findAllIn(p).size == 1, s"window and scan must share one sort:\n$p")
+    assert(p.indexOf("MrScanExec") >= 0 && p.indexOf("MrScanExec") < p.indexOf("Exchange"),
+      s"the exchange must sit below the scan node:\n$p")
+    assert(!p.contains("DeserializeToObject"), s"the scan re-grew an object boundary:\n$p")
+  }
+
+  private val mrQueries = Seq("q162_match_skip_past", "q169_match_xvar_cap",
+    "q176_match_permute", "q177_match_subset", "q180_match_iso_preferment")
+
+  test("MATCH_RECOGNIZE scans are one Catalyst plan: exchange and sort under MrScanExec") {
+    for (name <- mrQueries) {
+      val p = plan(name)
+      val scanAt = p.indexOf("MrScanExec")
+      assert(scanAt >= 0, s"$name: no MrScanExec node:\n$p")
+      assert(!p.contains("ExistingRDD") && !p.contains("DeserializeToObject"),
+        s"$name: the scan left the plan through an RDD or object boundary:\n$p")
+      assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
+        s"$name: expected exactly one hash exchange:\n$p")
+      assert(p.indexOf("Exchange hashpartitioning") > scanAt &&
+        "\\bSort \\[".r.findAllMatchIn(p).exists(_.start > scanAt),
+        s"$name: the exchange and sort must sit below MrScanExec:\n$p")
+    }
+  }
+
+  test("building the MATCH_RECOGNIZE queries runs no table-scanning Spark job before the action") {
+    // a scan that leaves the plan through queryExecution.toRdd runs the
+    // child's shuffle stage under adaptive execution while the DataFrame is
+    // still being built. Every spark.read.parquet runs one footer job to
+    // infer the schema; what must not run is a job that scans table rows (a
+    // FileScanRDD). Jobs are counted by job group; a marker job in the same
+    // group, started after the builds, proves every earlier job event has
+    // reached the listener.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "mr-build-" + System.nanoTime()
+    val scanJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") markerSeen.countDown()
+          else if (e.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD")))
+            scanJobs.add(e.stageInfos.map(_.name).mkString(", "))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      Seq("q162_match_skip_past", "q169_match_xvar_cap")
+        .foreach(graft.queries.Catalog.queries(_)(spark, sfDir))
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      assert(scanJobs.isEmpty, s"building scanned table rows: ${scanJobs.toArray.mkString("; ")}")
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("q76: decontamination's corpus scan is shuffle-free on the broadcast path") {

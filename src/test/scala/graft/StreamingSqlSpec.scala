@@ -447,6 +447,62 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("MATCH_RECOGNIZE MIN/MAX over strings: batch and streaming agree on code-point order") {
+    // U+1F600 is a surrogate pair in UTF-16 (D83D DE00), so Java's String
+    // order puts it BELOW U+E000; in code-point order — UTF-8 byte order,
+    // Spark's and DuckDB's string collation — it is above
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[(String, String, Timestamp, String)]
+    StatementCatalog.reset()
+    Seq("cp_matches", "cp_events").foreach { t =>
+      if (TableRegistry.exists(t)) TableRegistry.dropTable(t)
+      spark.catalog.dropTempView(t)
+    }
+    val grin = "\uD83D\uDE00"
+    val priv = "\uE000"
+    def at(sec: Long) = new Timestamp((1000000L + sec) * 1000L)
+    // the breaking 'y' row closes the greedy A+ run on the streaming route
+    val rows = Seq(("u1", "x", at(0), grin), ("u1", "x", at(1), priv), ("u1", "y", at(2), "a"))
+    val mrSql = """
+      |SELECT * FROM %s
+      |  MATCH_RECOGNIZE (
+      |    PARTITION BY u
+      |    ORDER BY ts
+      |    MEASURES MIN(A.s) AS mn, MAX(A.s) AS mx
+      |    ONE ROW PER MATCH
+      |    PATTERN (A+)
+      |    DEFINE A AS A.t = 'x'
+      |  )""".stripMargin
+    import spark.implicits._
+    rows.toDF("u", "t", "ts", "s").createOrReplaceTempView("cp_batch")
+    val batch = SqlFrontend.execute(spark, mrSql.format("cp_batch"))
+      .select("mn", "mx").as[(String, String)].collect().toSeq
+    assert(batch == Seq((priv, grin)), s"batch scan: $batch")
+
+    val mem = MemoryStream[(String, String, Timestamp, String)]
+    val schema = mem.toDF().toDF("u", "t", "ts", "s").schema
+    TableRegistry.createTable(TableRegistry.TableDef("cp_events", Some(schema),
+      load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      loadStream = Some(_ => mem.toDF().toDF("u", "t", "ts", "s"))))
+    SqlFrontend.execute(spark, "CREATE TABLE cp_matches AS" + mrSql.format("cp_events"))
+    val q = StatementCatalog.get("cp_matches").collect {
+      case s: StatementCatalog.Standing => s.query
+    }.getOrElse(fail("standing statement expected"))
+    try {
+      mem.addData(rows: _*); q.processAllAvailable()
+      val streamed = SqlFrontend.execute(spark, "SELECT mn, mx FROM cp_matches")
+        .as[(String, String)].collect().toSeq
+      assert(streamed == Seq((priv, grin)), s"streaming twin: $streamed")
+    } finally {
+      SqlFrontend.execute(spark, "DROP TABLE cp_matches")
+      TableRegistry.dropTable("cp_events")
+      spark.catalog.dropTempView("cp_batch")
+      StatementCatalog.reset()
+    }
+  }
+
   test("streaming MATCH_RECOGNIZE defaults to SKIP PAST LAST ROW and honors SET sql.state-ttl") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
