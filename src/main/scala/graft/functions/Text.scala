@@ -100,7 +100,11 @@ object Text {
     */
   def langQualityFused(c: Column): Column = fusedUdf(c)
 
-  private case class LangQ(lang_pred: String, quality: java.lang.Double)
+  /** The fused UDF's result struct. Package-private, not private: Janino
+    * cannot call a private case class's accessors from the generated
+    * serializer (see [[graft.llmops.Dedup]]'s SigSet).
+    */
+  private[functions] case class LangQ(lang_pred: String, quality: java.lang.Double)
 
   private lazy val fusedUdf = {
     val enSet = new java.util.HashSet[String](java.util.Arrays.asList(enStopwords: _*))

@@ -368,8 +368,11 @@ object Dedup {
     * sig computed from tokens(null) = [""] (so banding sees the row, like
     * minHashSignatures), sh = null (so verification drops its pairs, like
     * shingleSets).
+    * Package-private, not private: Janino cannot call a private case class's
+    * accessors from the generated result serializer, so a `private` result
+    * struct fails every compile and falls back to the interpreter.
     */
-  private case class SigSet(sig: Array[Long], sh: Array[Long])
+  private[llmops] case class SigSet(sig: Array[Long], sh: Array[Long])
 
   private def sigSetUdf(shingleSize: Int, numHashes: Int) = {
     val sz = shingleSize
