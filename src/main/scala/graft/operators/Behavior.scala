@@ -136,8 +136,8 @@ object Behavior {
 
   /** [[sequenceMatch]] with BOUNDED quantifiers — the DataFrame twin of the
     * SQL `MATCH_RECOGNIZE` quantifier rewrite and of
-    * [[graft.streaming.StreamingSequenceMatchQ]] (whose expansion order this
-    * REUSES, so all three surfaces share one greedy semantics): the pattern
+    * [[graft.streaming.StreamingSequenceMatchQ]] (whose greedy order its
+    * expansions enumerate, so all three surfaces share one semantics): the pattern
     * expands into fixed type-sequences tried leftmost-longest-first, compiled
     * into ONE when-chain over shared lead() windows — one shuffle, one sort,
     * every start row decided independently (SKIP TO NEXT ROW). Output adds

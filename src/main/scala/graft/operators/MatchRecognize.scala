@@ -23,14 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     attempt's rows. Keys parallelize across partitions; nothing reaches
   *     the driver.
   *
-  * Matching is the SQL-standard GREEDY semantics shared with the bounded
-  * rewrite and [[graft.streaming.StreamingSequenceMatchQ]]: quantifier counts
-  * are explored leftmost-longest-first (descending lexicographic), with
-  * backtracking, so for bounded patterns the scan and the CASE-expansion
-  * formulation select identical matches (spec-pinned). RELUCTANT quantifiers
-  * (`A+?`/`A*?`/`A{m,n}?` — Flink's lazy forms, r10) flip that token's
-  * exploration to ascending (shortest-first) while keeping leftmost priority,
-  * on every surface identically. `AFTER MATCH SKIP PAST
+  * Matching is [[MrMatcher]]'s walk — the one matcher every MATCH_RECOGNIZE
+  * operator runs, batch and streaming — with the SQL-standard GREEDY
+  * semantics shared with the bounded rewrite: quantifier counts are explored
+  * leftmost-longest-first (descending lexicographic), with backtracking, so
+  * for bounded patterns the scan and the CASE-expansion formulation select
+  * identical matches (spec-pinned). RELUCTANT quantifiers (`A+?`/`A*?`/
+  * `A{m,n}?` — Flink's lazy forms, r10) flip that token's exploration to
+  * ascending (shortest-first) while keeping leftmost priority, on every
+  * surface identically. `AFTER MATCH SKIP PAST
   * LAST ROW` (the default) advances the cursor past a selected match —
   * matches never overlap; `SKIP TO NEXT ROW` advances one row — overlapping
   * matches all emit.
@@ -100,10 +101,7 @@ object MatchRecognize {
     * same field/exactness contract as the per-variable structs.
     */
   final case class SubsetSpec(name: String, members: Seq[Int],
-                              aggs: Seq[(String, String)] = Seq.empty) {
-    require(members.nonEmpty, s"SUBSET $name needs at least one member variable")
-    require(members.distinct.size == members.size, s"SUBSET $name repeats a member")
-  }
+                              aggs: Seq[(String, String)] = Seq.empty)
 
   /** AFTER MATCH skip strategy — all four of the standard's forms. The
     * variable-targeted forms resume the cursor AT the named variable's
@@ -118,33 +116,6 @@ object MatchRecognize {
   case object SkipToNextRow extends Skip
   final case class SkipToFirst(tokenIdx: Int) extends Skip
   final case class SkipToLast(tokenIdx: Int) extends Skip
-
-  /** A double/float/integral/decimal as an EXACT scale-6 decimal, rounded
-    * HALF_UP exactly like Spark's double→decimal cast — so a sequential sum
-    * of these is order-independent and matches `SUM(CAST(x AS DECIMAL(_,6)))`
-    * in any engine. Takes internal (Decimal, the batch scan) and external
-    * (BigDecimal, the streaming twin) values alike.
-    */
-  private[graft] def toDecimal6(v: Any): java.math.BigDecimal = (v match {
-    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-    case b: java.math.BigDecimal => b
-    case b: scala.math.BigDecimal => b.bigDecimal
-    case d: java.lang.Double => java.math.BigDecimal.valueOf(d)
-    case f: java.lang.Float => new java.math.BigDecimal(f.toString)
-    case n: java.lang.Number => java.math.BigDecimal.valueOf(n.longValue)
-    case other => sys.error("SUM over a non-numeric MEASURES column: " +
-      (if (other == null) "NULL" else other.getClass.getSimpleName))
-  }).setScale(6, java.math.RoundingMode.HALF_UP)
-
-  /** MIN/MAX MEASURES order over EXTERNAL values (the streaming twin): the
-    * type's natural order, strings in UTF-8 byte order like the batch scan's
-    * UTF8String — Java's UTF-16 `String.compareTo` disagrees once a
-    * supplementary code point meets U+E000..U+FFFF.
-    */
-  private[graft] def compareMeasure(a: Any, b: Any): Int = (a, b) match {
-    case (s: String, t: String) => UTF8String.fromString(s).compareTo(UTF8String.fromString(t))
-    case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
-  }
 
   /** Single-linear-sequence entry — the pre-r11 surface, unchanged: every
     * token is one global variable in pattern order, one branch.
@@ -271,13 +242,7 @@ object MatchRecognize {
       "dynDefs must align with varNames (or be empty)")
     // a SUBSET with neither aggregates nor measureCols emits nothing — legal
     // since r11: DEFINE conditions may reference it (MrConditions SubCol)
-    subsets.foreach { s =>
-      s.members.foreach(m => require(m >= 0 && m < n,
-        s"SUBSET ${s.name} references unknown variable index $m"))
-      require(!varNames.contains(s.name),
-        s"SUBSET ${s.name} collides with a pattern variable name")
-    }
-    require(subsets.map(_.name).distinct.size == subsets.size, "duplicate SUBSET name")
+    MrMatcher.requireSubsets(varNames, subsets.map(s => s.name -> s.members))
     // cross-variable DEFINE conditions (r10): compiled once at plan time
     // against the INPUT schema (helper columns are appended after it, so
     // field indices stay valid on the scan's rows), evaluated per tested row
@@ -298,29 +263,10 @@ object MatchRecognize {
       require(Set("cnt", "sum", "min", "max").contains(fn), s"unknown aggregate '$fn'")
       require(c == "*" || df.columns.contains(c), s"aggregate over unknown column '$c'")
       require(fn == "cnt" || c != "*", s"'$fn(*)' is not a thing — name a column")
-      // fail at plan time, not mid-job: sum needs a numeric external type
-      // (toDecimal6's contract); min/max compare via Comparable, which binary
-      // (Array[Byte]) and nested types don't implement
-      if (fn == "sum") {
-        val dt = df.schema(c).dataType
-        require(dt.isInstanceOf[NumericType],
-          s"SUM MEASURES column '$c' must be numeric, got ${dt.simpleString}")
-      }
-      if (fn == "min" || fn == "max") {
-        val dt = df.schema(c).dataType
-        val orderableAtomic = dt.isInstanceOf[NumericType] || (dt match {
-          case StringType | BooleanType | DateType | TimestampType | TimestampNTZType => true
-          case _ => false
-        })
-        require(orderableAtomic,
-          s"${fn.toUpperCase} MEASURES column '$c' must have an orderable atomic type " +
-            s"(numeric/string/boolean/date/timestamp), got ${dt.simpleString}")
-      } }
-    skip match {
-      case SkipToFirst(i) => require(i >= 0 && i < n, s"skip target out of range: $i")
-      case SkipToLast(i)  => require(i >= 0 && i < n, s"skip target out of range: $i")
-      case _ => ()
+      // fail at plan time, not mid-job
+      if (c != "*") MrMatcher.requireAggType(fn, c, df.schema(c).dataType)
     }
+    MrMatcher.requireSkipTarget(skip, n)
     require(defs.size == n, "one DEFINE predicate per variable (lit(true) when absent)")
     withinMicros.foreach(w => require(w > 0, s"WITHIN bound must be positive, got $w micros"))
     graft.core.KeyImage.requireAtomic(df, keyCols)
@@ -400,11 +346,21 @@ object MatchRecognize {
     val offSpecArr: Array[(Int, Boolean, Int)] = offsetMeasures.toArray
     val emitRunning = runningStructs
     val emitRunningAgg = runningAggStructs
-    // per variable / subset: (fn, input field index or -1 for "*")
-    def aggIdxOf(spec: Seq[(String, String)]): Array[(String, Int)] =
-      spec.map { case (fn, c) => (fn, if (c == "*") -1 else inSchema.fieldIndex(c)) }.toArray
-    val aggIdxArr: Array[Array[(String, Int)]] = aggs.map(aggIdxOf).toArray
-    val subAggIdxArr: Array[Array[(String, Int)]] = subsets.map(s => aggIdxOf(s.aggs)).toArray
+    // aggregate structs, variables' first then subsets': the variables whose
+    // runs feed each, its field codes and input columns (-1 = "*")
+    val aggTargets: Seq[(Array[Int], Seq[(String, String)])] =
+      (0 until n).filter(u => aggs(u).nonEmpty).map(u => (Array(u), aggs(u))) ++
+        subsets.filter(_.aggs.nonEmpty).map(s => (s.members.toArray, s.aggs))
+    val aggVars: Array[Array[Int]] = aggTargets.map(_._1).toArray
+    val aggFns: Array[Array[Int]] = aggTargets.map(_._2.map(a => MrMatcher.fnCode(a._1)).toArray).toArray
+    val aggCols: Array[Array[Int]] = aggTargets.map(_._2.map { case (_, c) =>
+      if (c == "*") -1 else inSchema.fieldIndex(c) }.toArray).toArray
+    // per variable: its aggregate struct's index, -1 when it has none
+    val aggOfVar: Array[Int] = {
+      val a = Array.fill(n)(-1)
+      aggTargets.take(nAggStructs).zipWithIndex.foreach { case ((vs, _), k) => a(vs.head) = k }
+      a
+    }
     val subMembersArr: Array[Array[Int]] = subsets.map(_.members.toArray).toArray
 
     // the execution program (r12): the parse tree when the caller has one —
@@ -412,10 +368,9 @@ object MatchRecognize {
     // otherwise the branch-shaped choice (identical order for linear and
     // front-choice patterns, which is every branch-only caller)
     val prog: MrProg = tree.map(t => MrProg.ofTree(t, varIdxMap)).getOrElse(MrProg.ofBranches(branches))
-    val hasWithin = withinMicros.isDefined
     val withinUs = withinMicros.getOrElse(0L)
     val skipMode = skip
-    val nameByIdx = varNames.toArray
+    val names = varNames.toVector
     val nameU8: Array[UTF8String] = varNames.map(UTF8String.fromString).toArray
     val emitAll = allRows
     val emitOneRowCls = oneRowClassifier
@@ -471,7 +426,7 @@ object MatchRecognize {
 
         /** Pull rows until index j (cursor-relative) exists or the key ends.
           * Rows are copied ON INGESTION: the source iterator reuses one
-          * UnsafeRow buffer, and the NFA buffers rows for backtracking.
+          * UnsafeRow buffer, and the matcher buffers rows for backtracking.
           */
         private def ensure(j: Int): Boolean = {
           while (bufLen <= j && !keyDone) {
@@ -500,28 +455,34 @@ object MatchRecognize {
           val i = defIdxArr(t); !r.isNullAt(i) && r.getBoolean(i)
         }
 
+        // the one matcher over the cursor-relative buffer: a batch key is
+        // closed at its last row, so no attempt is ever open
+        private val matcher = new MrMatcher(prog, n, withinUs) {
+          protected def avail(pos: Int): Int = if (ensure(pos)) 1 else 0
+          protected def test(v: Int, pos: Int, runStart: Int): Int = {
+            val r = rowAt(pos)
+            if (defOk(r, v) && dynOk(r, v, runStart, pos)) 1 else 0
+          }
+          protected def micros(pos: Int): Long = tsMicrosAt(rowAt(pos))
+        }
+
         // cross-variable predicate context: one mutable instance per task,
         // repointed per tested row (zero allocation in the scan loop).
         // Placement visibility is PATH-positional: a variable is readable iff
-        // its run is committed on the attempt path being explored (placed
-        // flags set/cleared as the walk recurses/backtracks) — the program-
-        // order generalization of the r11 branch-positional rule.
-        private val dynStarts = new Array[Int](n)
-        private val placed = new Array[Boolean](n)
+        // its run is committed on the attempt path being explored.
         private object dynCtx extends MrConditions.Ctx {
           var curRow: Row = _
           var self = 0
           var runStart = 0
           var candPos = 0
-          var countsRef: Array[Int] = _
           def cur: Row = curRow
           def rowAt(pos: Int): Row = toScala(buf.get(base + pos))
           def selfTok: Int = self
           def selfRunStart: Int = runStart
           def selfPos: Int = candPos
-          def starts: Array[Int] = dynStarts
-          def counts: Array[Int] = countsRef
-          override def placedBefore(tok: Int): Boolean = placed(tok)
+          def starts: Array[Int] = matcher.starts
+          def counts: Array[Int] = matcher.counts
+          override def placedBefore(tok: Int): Boolean = matcher.placed(tok)
         }
         private def dynOk(r: InternalRow, gv: Int, runStart: Int, pos: Int): Boolean = {
           val d = dynArr(gv)
@@ -532,86 +493,44 @@ object MatchRecognize {
           }
         }
 
-        // program tables (hoisted from the MrProg for the hot loop)
-        private val pKind = prog.kind; private val pV = prog.v
-        private val pLo = prog.lo; private val pHi = prog.hi
-        private val pRel = prog.rel; private val pExcl = prog.excl
-        private val pNxt = prog.nxt; private val pAlts = prog.alts
-        private val pEntry = prog.entry
-        // the winning attempt path: placements in ROW order (ALL ROWS
-        // emission and variable-targeted skips need the order, not just the
-        // per-variable arrays); depth <= n (one placement per variable)
-        private val pathVar = new Array[Int](n)
-        private val pathStart = new Array[Int](n)
-        private val pathCount = new Array[Int](n)
-        private val pathExcl = new Array[Boolean](n)
-        private var pathLen = 0
-        private var matchLen = 0
+        private val accs: Array[MrMatcher.Agg] = aggFns.map(new MrMatcher.Agg(_))
+        // RUNNING aggregates: one accumulator per agg-bearing variable
+        private val runAccs: Array[MrMatcher.Agg] =
+          if (!runningAggStructs) null else aggOfVar.map(k => if (k < 0) null else new MrMatcher.Agg(aggFns(k)))
 
-        /** Walk the ordered-choice program at the cursor: greedy leftmost-
-          * longest with backtracking, choice points decided at their written
-          * positions (ISO 9075-2 preferment — a quantifier written before an
-          * alternation dominates it). Cross-variable predicates are sound
-          * inside the avail-scan because a row's test depends only on the
-          * run's start and PATH-earlier variables' placements, both fixed
-          * here (the prefix property: a valid run's prefixes are valid).
-          * On success the placement arrays and path hold the winning match.
+        private def cell(r: InternalRow, ci: Int): Any =
+          if (ci < 0) java.lang.Boolean.TRUE // a row-count field counts every row
+          else if (r.isNullAt(ci)) null
+          else r.get(ci, inTypes(ci))
+
+        /** An accumulator's fields as an internal struct: exact BigDecimal
+          * sums become scale-6 internal Decimals, the rest pass through.
           */
-        private def walk(ip: Int, pos: Int, startUs: Long, counts: Array[Int]): Boolean = {
-          pKind(ip) match {
-            case 2 => // Done: the empty match never selects
-              if (pos > 0) { matchLen = pos; true } else false
-            case 1 => // Split: alternatives in written (preference) order
-              val ts = pAlts(ip)
-              var i = 0
-              while (i < ts.length) {
-                if (walk(ts(i), pos, startUs, counts)) return true
-                i += 1
-              }
-              false
-            case _ => // Var: scan the run, explore counts, recurse
-              val gv = pV(ip)
-              dynStarts(gv) = pos
-              var c = 0
-              while (c < pHi(ip) && ensure(pos + c) && defOk(rowAt(pos + c), gv) &&
-                dynOk(rowAt(pos + c), gv, pos, pos + c) &&
-                (!hasWithin || tsMicrosAt(rowAt(pos + c)) - startUs <= withinUs)) c += 1
-              val d = pathLen
-              pathVar(d) = gv; pathStart(d) = pos; pathExcl(d) = pExcl(ip)
-              def tryCount(k: Int): Boolean = {
-                counts(gv) = k
-                pathCount(d) = k
-                placed(gv) = true
-                pathLen = d + 1
-                if (walk(pNxt(ip), pos + k, startUs, counts)) true
-                else { pathLen = d; placed(gv) = false; false }
-              }
-              if (pRel(ip)) { // reluctant: shortest first (Flink's lazy forms)
-                var k = pLo(ip)
-                while (k <= c) {
-                  if (tryCount(k)) return true
-                  k += 1
-                }
-              } else {
-                while (c >= pLo(ip)) {
-                  if (tryCount(c)) return true
-                  c -= 1
-                }
-              }
-              counts(gv) = 0 // clean failed placement (later alternatives read zeros)
-              false
+        private def aggRowOf(acc: MrMatcher.Agg): InternalRow = {
+          val vals = new Array[Any](acc.size)
+          var j = 0
+          while (j < vals.length) {
+            vals(j) = acc.result(j) match {
+              case b: java.math.BigDecimal => Decimal(new scala.math.BigDecimal(b), 38, 6)
+              case v => v
+            }
+            j += 1
           }
+          new GenericInternalRow(vals)
         }
 
-        /** One attempt at the cursor position. Returns true on a match (the
-          * path/placement arrays hold it).
-          */
-        private def tryMatch(counts: Array[Int]): Boolean = {
-          java.util.Arrays.fill(placed, false)
-          pathLen = 0
-          dynCtx.countsRef = counts
-          val startUs = if (hasWithin) tsMicrosAt(rowAt(0)) else 0L
-          walk(pEntry, 0, startUs, counts)
+        /** Aggregate struct `k` over its variables' matched runs. */
+        private def aggOver(k: Int): InternalRow = {
+          val acc = accs(k)
+          acc.clear()
+          val cols = aggCols(k)
+          var j = 0
+          while (j < cols.length) {
+            val ci = cols(j)
+            matcher.foldRuns(acc, j, aggVars(k))(pos => cell(rowAt(pos), ci))
+            j += 1
+          }
+          aggRowOf(acc)
         }
 
         private def projMeasure(r: InternalRow): InternalRow = {
@@ -627,8 +546,7 @@ object MatchRecognize {
 
         private def mk(src: InternalRow, structVals: Array[Any], subVals: Array[Any],
                        offVals: Array[Any], runVals: Array[Any], runAggVals: Array[Any],
-                       aggVals: Array[Any], subAggVals: Array[Any],
-                       len: Long, seq: Long, cls: UTF8String): InternalRow = {
+                       aggVals: Array[Any], len: Long, seq: Long, cls: UTF8String): InternalRow = {
           val vals = new Array[Any](outArity)
           var i = 0
           while (i < nOrig) { vals(i) = src.get(i, inTypes(i)); i += 1 }
@@ -639,92 +557,23 @@ object MatchRecognize {
             at += a.length
           }
           put(structVals); put(subVals); put(offVals); put(runVals); put(runAggVals)
-          put(aggVals); put(subAggVals)
+          put(aggVals)
           vals(lenPos) = len
           vals(lenPos + 1) = seq
           if (emitAll || emitOneRowCls) vals(lenPos + 2) = cls
           new GenericInternalRow(vals)
         }
 
-        /** Aggregates over a set of matched runs (p, c): cnt exact, sum EXACT
-          * decimal over HALF_UP-scale-6 values (order-independent, the Spark
-          * double→decimal cast's rounding), min/max by the column type's
-          * natural order; non-cnt fields NULL when the runs are empty.
-          */
-        /** Materialize an aggregate-accumulator array as an internal struct
-          * row: exact BigDecimal sums become scale-6 internal Decimals; cnt
-          * longs and min/max internal values pass through.
-          */
-        private def aggRowOf(vals: Array[Any]): InternalRow = {
-          val out = new Array[Any](vals.length)
-          var j = 0
-          while (j < vals.length) {
-            out(j) = vals(j) match {
-              case b: java.math.BigDecimal => Decimal(new scala.math.BigDecimal(b), 38, 6)
-              case v => v
-            }
-            j += 1
-          }
-          new GenericInternalRow(out)
-        }
-
-        private def aggOver(spec: Array[(String, Int)], runs: Array[Long]): InternalRow = {
-          val vals = new Array[Any](spec.length)
-          var j = 0
-          while (j < spec.length) {
-            val (fn, colIdx) = spec(j)
-            var acc: Any = if (fn == "cnt") 0L else null
-            var ri = 0
-            while (ri < runs.length) {
-              val p = (runs(ri) >> 32).toInt; val c = runs(ri).toInt
-              var r = 0
-              while (r < c) {
-                val row = rowAt(p + r)
-                fn match {
-                  case "cnt" =>
-                    if (colIdx < 0 || !row.isNullAt(colIdx)) acc = acc.asInstanceOf[Long] + 1L
-                  case "sum" =>
-                    if (!row.isNullAt(colIdx)) {
-                      val d = toDecimal6(row.get(colIdx, inTypes(colIdx)))
-                      acc = if (acc == null) d else acc.asInstanceOf[java.math.BigDecimal].add(d)
-                    }
-                  case _ =>
-                    if (!row.isNullAt(colIdx)) {
-                      val v = row.get(colIdx, inTypes(colIdx))
-                      if (acc == null) acc = v
-                      else {
-                        val cmp = v.asInstanceOf[Comparable[Any]].compareTo(acc)
-                        if ((fn == "min" && cmp < 0) || (fn == "max" && cmp > 0)) acc = v
-                      }
-                    }
-                }
-                r += 1
-              }
-              ri += 1
-            }
-            vals(j) = acc
-            j += 1
-          }
-          aggRowOf(vals)
-        }
-
-        private def run1(p: Int, c: Int): Array[Long] =
-          if (c == 0) Array.emptyLongArray else Array((p.toLong << 32) | (c.toLong & 0xffffffffL))
-
-        private def emit(counts: Array[Int], seq: Long): Unit = {
-          // global starts (-1 = variable absent from the matched path) and
-          // the match length, from the winning path's placement order
-          val gStarts = Array.fill(n)(-1)
-          val len = matchLen.toLong
-          locally { var t = 0
-            while (t < pathLen) { gStarts(pathVar(t)) = pathStart(t); t += 1 } }
+        private def emit(len: Int, seq: Long): Unit = {
+          val starts = matcher.starts
+          val counts = matcher.counts
           val structVals = if (hasMeasures) new Array[Any](2 * n) else null
           if (hasMeasures) {
             var u = 0
             while (u < n) {
-              if (gStarts(u) >= 0 && counts(u) > 0) {
-                structVals(2 * u) = projMeasure(rowAt(gStarts(u)))
-                structVals(2 * u + 1) = projMeasure(rowAt(gStarts(u) + counts(u) - 1))
+              if (counts(u) > 0) {
+                structVals(2 * u) = projMeasure(rowAt(starts(u)))
+                structVals(2 * u + 1) = projMeasure(rowAt(starts(u) + counts(u) - 1))
               }
               u += 1
             }
@@ -735,21 +584,10 @@ object MatchRecognize {
           if (subVals != null) {
             var s = 0
             while (s < nSub) {
-              val ms = subMembersArr(s)
-              var first = -1; var last = -1
-              var mi = 0
-              while (mi < ms.length) {
-                val u = ms(mi)
-                if (gStarts(u) >= 0 && counts(u) > 0) {
-                  if (first < 0 || gStarts(u) < first) first = gStarts(u)
-                  val e = gStarts(u) + counts(u) - 1
-                  if (e > last) last = e
-                }
-                mi += 1
-              }
+              val first = matcher.firstRowIn(subMembersArr(s), Int.MaxValue)
               if (first >= 0) {
                 subVals(2 * s) = projMeasure(rowAt(first))
-                subVals(2 * s + 1) = projMeasure(rowAt(last))
+                subVals(2 * s + 1) = projMeasure(rowAt(matcher.lastRowIn(subMembersArr(s), Int.MaxValue)))
               }
               s += 1
             }
@@ -758,88 +596,27 @@ object MatchRecognize {
             if (offSpecArr.isEmpty) null
             else offSpecArr.map { case (tk, isFirst, k) =>
               val c = counts(tk)
-              if (gStarts(tk) < 0 || c <= k) null // absent/short run → NULL struct
-              else projMeasure(rowAt(gStarts(tk) + (if (isFirst) k else c - 1 - k)))
+              if (c <= k) null // absent/short run → NULL struct
+              else projMeasure(rowAt(starts(tk) + (if (isFirst) k else c - 1 - k)))
             }
           val aggVals: Array[Any] =
-            if (nAggStructs == 0) null
-            else {
-              val av = new Array[Any](nAggStructs)
-              var k = 0; var u = 0
-              while (u < n) {
-                if (aggIdxArr(u).nonEmpty) {
-                  av(k) = aggOver(aggIdxArr(u), run1(math.max(gStarts(u), 0), counts(u)))
-                  k += 1
-                }
-                u += 1
-              }
-              av
-            }
-          val subAggVals: Array[Any] =
-            if (nSubAggStructs == 0) null
-            else {
-              val av = new Array[Any](nSubAggStructs)
-              var k = 0; var s = 0
-              while (s < nSub) {
-                if (subAggIdxArr(s).nonEmpty) {
-                  // member runs in row order (order only matters for exactness
-                  // bookkeeping — every aggregate here is order-independent)
-                  val runs = subMembersArr(s).filter(u => gStarts(u) >= 0 && counts(u) > 0)
-                    .sortBy(gStarts(_)).map(u => (gStarts(u).toLong << 32) |
-                      (counts(u).toLong & 0xffffffffL))
-                  av(k) = aggOver(subAggIdxArr(s), runs)
-                  k += 1
-                }
-                s += 1
-              }
-              av
-            }
+            if (accs.isEmpty) null else Array.tabulate[Any](accs.length)(aggOver)
           if (!emitAll) {
-            // ONE-ROW CLASSIFIER (r14, ISO): the LAST matched row's label —
-            // the deepest path entry that placed at least one row (a match
-            // has matchLen > 0, so one exists)
-            val oneRowLabel = if (!emitOneRowCls) null else {
-              var t = pathLen - 1
-              while (t >= 0 && pathCount(t) == 0) t -= 1
-              nameU8(pathVar(t))
-            }
+            // ONE-ROW CLASSIFIER (r14, ISO): the LAST matched row's label
+            val oneRowLabel = if (!emitOneRowCls) null else nameU8(matcher.lastVar)
             out.enqueue(mk(rowAt(0), structVals, subVals, offVals, null, null,
-              aggVals, subAggVals, len, seq, oneRowLabel))
+              aggVals, len.toLong, seq, oneRowLabel))
           }
           else {
-            // running-aggregate accumulators (r11): one per agg-bearing
-            // variable, updated incrementally as the emit cursor enters its
-            // run — O(rows × fields), never a per-row rescan of the prefix
-            val runAcc: Array[Array[Any]] = if (!emitRunningAgg) null else {
-              val a = new Array[Array[Any]](n)
-              var u = 0
-              while (u < n) {
-                if (aggIdxArr(u).nonEmpty) {
-                  val spec = aggIdxArr(u)
-                  val vals = new Array[Any](spec.length)
-                  var j = 0
-                  while (j < spec.length) { vals(j) = if (spec(j)._1 == "cnt") 0L else null; j += 1 }
-                  a(u) = vals
-                }
-                u += 1
-              }
-              a
-            }
-            // the before-the-run view: cnt fields 0, everything else NULL
-            val emptyAggRows: Array[Any] = if (!emitRunningAgg) null else {
-              val a = new Array[Any](n)
-              var u = 0
-              while (u < n) {
-                if (runAcc(u) != null) a(u) = aggRowOf(runAcc(u).clone())
-                u += 1
-              }
-              a
-            }
-            var pos = 0; var t = 0
-            while (t < pathLen) {
-              val gv = pathVar(t)
+            // RUNNING aggregates (r11) fold incrementally as the emit cursor
+            // enters each run — O(rows × fields), never a per-row rescan
+            if (emitRunningAgg) runAccs.foreach(a => if (a != null) a.clear())
+            var t = 0
+            while (t < matcher.pathLen) {
+              val gv = matcher.pathVar(t)
               var c = 0
-              while (c < pathCount(t)) {
+              while (c < matcher.pathCount(t)) {
+                val pos = matcher.pathStart(t) + c
                 val runVals: Array[Any] =
                   if (!emitRunning) null
                   else {
@@ -849,9 +626,9 @@ object MatchRecognize {
                     val rv = new Array[Any](2 * n)
                     var u = 0
                     while (u < n) {
-                      if (gStarts(u) >= 0 && counts(u) > 0 && gStarts(u) <= pos) {
-                        rv(2 * u) = projMeasure(rowAt(gStarts(u)))
-                        rv(2 * u + 1) = projMeasure(rowAt(math.min(pos, gStarts(u) + counts(u) - 1)))
+                      if (counts(u) > 0 && starts(u) <= pos) {
+                        rv(2 * u) = projMeasure(rowAt(starts(u)))
+                        rv(2 * u + 1) = projMeasure(rowAt(math.min(pos, starts(u) + counts(u) - 1)))
                       }
                       u += 1
                     }
@@ -862,104 +639,31 @@ object MatchRecognize {
                   else {
                     // fold BEFORE the exclusion check: an excluded row is part
                     // of the match, later RUNNING views must have seen it
-                    if (runAcc(gv) != null) accumulate(runAcc(gv), aggIdxArr(gv), rowAt(pos))
+                    val acc = runAccs(gv)
+                    if (acc != null) {
+                      val cols = aggCols(aggOfVar(gv))
+                      var j = 0
+                      while (j < cols.length) { acc.add(j, cell(rowAt(pos), cols(j))); j += 1 }
+                    }
                     val av = new Array[Any](nAggStructs)
-                    var k = 0; var u = 0
+                    var u = 0
                     while (u < n) {
-                      if (aggIdxArr(u).nonEmpty) {
-                        av(k) =
-                          if (gStarts(u) < 0 || gStarts(u) > pos) emptyAggRows(u) // run not begun
-                          else if (gStarts(u) + counts(u) - 1 <= pos) aggVals(k) // fully visible
-                          else aggRowOf(runAcc(u).clone()) // mid-run snapshot
-                        k += 1
-                      }
+                      val k = aggOfVar(u)
+                      if (k >= 0) av(k) =
+                        if (counts(u) > 0 && starts(u) + counts(u) - 1 <= pos) aggVals(k) // fully visible
+                        else aggRowOf(runAccs(u)) // not begun (cnt 0, NULLs) or mid-run
                       u += 1
                     }
                     av
                   }
-                if (!pathExcl(t)) // {- X -}: matched but not emitted
+                if (!matcher.pathExcl(t)) // {- X -}: matched but not emitted
                   out.enqueue(mk(rowAt(pos), structVals, subVals, offVals, runVals, runAggVals,
-                    aggVals, subAggVals, len, seq, nameU8(gv)))
-                pos += 1; c += 1
+                    aggVals, len.toLong, seq, nameU8(gv)))
+                c += 1
               }
               t += 1
             }
           }
-        }
-
-        /** Fold one row into a running-aggregate accumulator (same exactness
-          * contract as [[aggOver]]: exact decimal sums, natural-order
-          * min/max, non-null counting).
-          */
-        private def accumulate(acc: Array[Any], spec: Array[(String, Int)], row: InternalRow): Unit = {
-          var j = 0
-          while (j < spec.length) {
-            val (fn, colIdx) = spec(j)
-            fn match {
-              case "cnt" if colIdx < 0 => acc(j) = acc(j).asInstanceOf[Long] + 1L
-              case "cnt" => if (!row.isNullAt(colIdx)) acc(j) = acc(j).asInstanceOf[Long] + 1L
-              case "sum" =>
-                if (!row.isNullAt(colIdx)) {
-                  val d = toDecimal6(row.get(colIdx, inTypes(colIdx)))
-                  acc(j) = if (acc(j) == null) d
-                  else acc(j).asInstanceOf[java.math.BigDecimal].add(d)
-                }
-              case _ =>
-                if (!row.isNullAt(colIdx)) {
-                  val v = row.get(colIdx, inTypes(colIdx))
-                  if (acc(j) == null) acc(j) = v
-                  else {
-                    val cmp = v.asInstanceOf[Comparable[Any]].compareTo(acc(j))
-                    if ((fn == "min" && cmp < 0) || (fn == "max" && cmp > 0)) acc(j) = v
-                  }
-                }
-            }
-            j += 1
-          }
-        }
-
-        /** Cursor rows to consume after a selected match, per strategy.
-          * Variable-targeted skips resume AT the target row; re-anchoring at
-          * the match's own start (or an empty/absent target) would loop —
-          * loud.
-          */
-        /** First row mapped to variable i on the winning path, -1 when the
-          * variable matched no rows. A variable can occupy SEVERAL path
-          * entries (PATTERN (A B A)) and any placement can be an empty run —
-          * ISO's first/last-row-mapped semantics mean the scan must skip
-          * zero-count entries and, for LAST, walk from the END (the variable's
-          * last run, not firstRunStart + lastRunCount).
-          */
-        private def firstRowOf(i: Int): Int = {
-          var t = 0
-          while (t < pathLen && !(pathVar(t) == i && pathCount(t) > 0)) t += 1
-          if (t == pathLen) -1 else pathStart(t)
-        }
-
-        /** Last row mapped to variable i on the winning path, -1 when absent. */
-        private def lastRowOf(i: Int): Int = {
-          var t = pathLen - 1
-          while (t >= 0 && !(pathVar(t) == i && pathCount(t) > 0)) t -= 1
-          if (t < 0) -1 else pathStart(t) + pathCount(t) - 1
-        }
-
-        private def skipAdvance(): Int = skipMode match {
-          case SkipPastLastRow => matchLen
-          case SkipToNextRow => 1
-          case SkipToFirst(i) =>
-            val pos = firstRowOf(i)
-            if (pos < 0) sys.error(s"AFTER MATCH SKIP TO FIRST ${nameByIdx(i)}: " +
-              "the variable matched no rows in the selected match")
-            if (pos == 0) sys.error(s"AFTER MATCH SKIP TO FIRST ${nameByIdx(i)} would " +
-              "re-anchor at the match's own start row (infinite loop)")
-            pos
-          case SkipToLast(i) =>
-            val pos = lastRowOf(i)
-            if (pos < 0) sys.error(s"AFTER MATCH SKIP TO LAST ${nameByIdx(i)}: " +
-              "the variable matched no rows in the selected match")
-            if (pos == 0) sys.error(s"AFTER MATCH SKIP TO LAST ${nameByIdx(i)} would " +
-              "re-anchor at the match's own start row (infinite loop)")
-            pos
         }
 
         private var matchSeq = 0L // per-key match ordinal, resets with the key
@@ -970,11 +674,11 @@ object MatchRecognize {
               if (stash == null && !it.hasNext) finished = true
               else { buf.clear(); base = 0; curKey = null; keyDone = false; matchSeq = 0L } // next key
             } else {
-              val counts = new Array[Int](n)
-              if (tryMatch(counts)) {
+              val len = matcher.resolve(0)
+              if (len > 0) {
                 matchSeq += 1
-                emit(counts, matchSeq)
-                advance(skipAdvance())
+                emit(len, matchSeq)
+                advance(matcher.skipTarget(skipMode, 0, len, names))
               }
               else advance(1)
             }

@@ -372,14 +372,14 @@ object MrConditions {
     * streaming operator's retention margin before the first undecided start.
     */
   def maxPrevDepth(c: Compiled): Int = {
-    def walk(e: Ex): Int = e match {
+    def depth(e: Ex): Int = e match {
       case PrevNav(n, _) => n
-      case Un(_, x) => walk(x)
-      case Bin(_, l, r) => math.max(walk(l), walk(r))
-      case h: Hybrid => h.atomExs.map(walk).foldLeft(0)(math.max)
+      case Un(_, x) => depth(x)
+      case Bin(_, l, r) => math.max(depth(l), depth(r))
+      case h: Hybrid => h.atomExs.map(depth).foldLeft(0)(math.max)
       case _ => 0
     }
-    walk(c.rootEx)
+    depth(c.rootEx)
   }
 
   /** SUBSET union read: collect the PLACED member intervals (branch-earlier

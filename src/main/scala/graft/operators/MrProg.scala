@@ -1,9 +1,9 @@
 package graft.operators
 
 /** A PATTERN compiled to an ordered-choice instruction graph — the execution
-  * form both MATCH_RECOGNIZE scans (batch [[MatchRecognize.scanPattern]] and
-  * streaming [[graft.streaming.StreamingMatchRecognize]]) walk with
-  * backtracking.
+  * form the one matcher, [[MrMatcher]], walks with backtracking for every
+  * MATCH_RECOGNIZE operator (batch [[MatchRecognize.scanPattern]], streaming
+  * [[graft.streaming.StreamingMatchRecognize]]).
   *
   * Why a graph and not expanded branches (r12, closes the r11 conformance
   * deviation): ISO 9075-2 decides CHOICE POINTS in left-to-right encounter
@@ -26,7 +26,7 @@ package graft.operators
   *     continuation first), and PERMUTE (its lexicographic permutation
   *     alternation — the standard's own definition);
   *   - `Done` (kind 2, always ip 0): a completed match (the empty match
-  *     never selects — callers check end > start).
+  *     never selects — the matcher checks end > start).
   *
   * Every root-to-Done path places each variable at most once
   * ([[MrPattern.expand]] validates this and the branch caps before a

@@ -389,28 +389,23 @@ object StreamPlanner {
 
   /** One stage whose FROM carries `MATCH_RECOGNIZE` — the standing-CEP form,
     * routed to a stateful operator instead of the batch lead()-window
-    * rewrite, which streams can't run (unbounded window functions). Two
-    * routes:
+    * rewrite, which streams can't run (unbounded window functions). One
+    * route: every statement runs on
+    * [[graft.streaming.StreamingMatchRecognize]] (value-buffered state, the
+    * batch scan's [[graft.operators.MrMatcher]]) — literal type DEFINEs
+    * (`V AS V.col = 'lit'`) included. DEFINEs range over ANY number of source
+    * columns in their ORIGINAL types (r11), `PREV()` physical
+    * back-navigation, `NEXT()` via one-event decision deferral (r11),
+    * cross-variable / FIRST() / logical-offset conditions, composite
+    * patterns (alternation, grouping, PERMUTE) executed by the parse tree in
+    * ISO per-choice-point order (r12), SUBSET union variables in DEFINE and
+    * MEASURES (r12), `ALL ROWS PER MATCH` per-row emission with CLASSIFIER()
+    * and RUNNING/FINAL measure views, and `{- exclusion -}` under ALL ROWS
+    * (r12).
     *
-    *   - literal type DEFINEs (`V AS V.col = 'lit'`, all on one column,
-    *     every variable defined, ONE ROW, no value/agg measures) →
-    *     [[graft.streaming.StreamingSequenceMatchQ]] (type-token state,
-    *     O(maxLen));
-    *   - everything else → [[graft.streaming.StreamingMatchRecognize]]
-    *     (value-buffered state): DEFINEs over ANY number of source columns
-    *     in their ORIGINAL types (r11), `PREV()` physical back-navigation,
-    *     `NEXT()` via one-event decision deferral (r11), cross-variable /
-    *     FIRST() / logical-offset conditions, composite patterns
-    *     (alternation, grouping, PERMUTE) executed by the parse tree in ISO
-    *     per-choice-point order (r12), SUBSET union variables in DEFINE and
-    *     MEASURES (r12), `ALL ROWS PER MATCH` per-row emission with
-    *     CLASSIFIER() and RUNNING/FINAL measure views, and `{- exclusion -}`
-    *     under ALL ROWS (r12).
-    *
-    * Shared surface: PARTITION BY over any number of plain columns (r13 —
+    * Surface: PARTITION BY over any number of plain columns (r13 —
     * composite keys ride a collision-free [[graft.core.KeyImage]] state key
-    * on the value route and the original typed columns are re-emitted; the
-    * typed route stays single-column); `ORDER BY ts[, tie]` (r12 —
+    * and the original typed columns are re-emitted); `ORDER BY ts[, tie]` (r12 —
     * the optional second column is the within-timestamp tie-break, the batch
     * route's `ORDER BY ts, event_id` shape); the full quantifier
     * grammar incl. unbounded and reluctant forms; `WITHIN` at micros precision (r13);
@@ -434,8 +429,6 @@ object StreamPlanner {
     * time-gap conditions — the column buffers like any condCol).
     */
   private def matchRecognizeStage(spark: SparkSession, stageSql: String): DataFrame = {
-    import graft.streaming.StreamingSequenceMatchQ
-    import graft.streaming.StreamingSequenceMatchQ.QTok
     val m = SqlFrontend.MatchRecognizeRe.findFirstMatchIn(stageSql)
       .getOrElse(sys.error("matchRecognizeStage without FROM … MATCH_RECOGNIZE"))
     val tbl = m.group(1)
@@ -475,7 +468,7 @@ object StreamPlanner {
     // batch-vs-streaming skip gap): SKIP TO NEXT ROW, SKIP PAST LAST ROW
     // (the default when the clause is absent), and the variable-targeted
     // SKIP TO [FIRST|LAST] <var> (bare SKIP TO <var> = LAST, the standard) —
-    // the overlapping-runs strategies, always on the value route
+    // the overlapping-runs strategies
     val skipToNext = "(?is)AFTER\\s+MATCH\\s+SKIP\\s+TO\\s+NEXT\\s+ROW".r.findFirstIn(body).isDefined
     val skipPastExplicit = "(?is)AFTER\\s+MATCH\\s+SKIP\\s+PAST\\s+LAST\\s+ROW".r.findFirstIn(body).isDefined
     val skipToVar: Option[(String, String)] =
@@ -488,7 +481,7 @@ object StreamPlanner {
       "MATCH_RECOGNIZE: supported AFTER MATCH strategies are SKIP TO NEXT ROW, " +
         "SKIP PAST LAST ROW (the default when the clause is absent), and " +
         "SKIP TO [FIRST|LAST] <variable>")
-    // ALL ROWS PER MATCH (r12): per-row emission on the value route —
+    // ALL ROWS PER MATCH (r12): per-row emission —
     // row_ts/cls + the buffered columns, RUNNING-default measures
     val allRowsPerMatch = "(?is)ALL\\s+ROWS\\s+PER\\s+MATCH".r.findFirstIn(body).isDefined
     // SUBSET union variables (r12 — previously a loud batch-only refusal):
@@ -524,14 +517,14 @@ object StreamPlanner {
     val withinM = "(?is)^\\s*WITHIN\\s+INTERVAL\\s+'(\\d+)'\\s+(\\w+)".r
       .findFirstMatchIn(body.substring(patEnd))
     // composite grammars (alternation/grouping/PERMUTE — r11, beyond Flink
-    // CEP's SQL surface) expand to preference-ordered branches and ride the
-    // VALUE route's applyPattern; {- exclusion -} stays refused (ONE-ROW
+    // CEP's SQL surface) expand to preference-ordered branches and ride
+    // applyPattern; {- exclusion -} stays refused (ONE-ROW
     // output shape — the operator rejects excluded tokens loudly)
     val composite = graft.operators.MrPattern.isComposite(patText)
     val (expBranches, expNames): (Seq[Vector[graft.operators.MrPattern.PTok]], Seq[String]) =
       if (composite) graft.operators.MrPattern.expand(patText) else (Nil, Nil)
-    // unbounded quantifiers (`+`/`*`/`{m,}`) ride the operator's NFA resolve
-    // (QTok.Unbounded, r9) — greedy runs stay OPEN until a breaking event or
+    // unbounded quantifiers (`+`/`*`/`{m,}`, hi = Int.MaxValue) ride the
+    // matcher — greedy runs stay OPEN until a breaking event or
     // the within horizon, exactly the batch scan's semantics
     // trailing `?` = the reluctant (lazy) forms, same grammar as the batch
     // frontend — shortest-first exploration, early decision in the operator
@@ -541,15 +534,14 @@ object StreamPlanner {
       else patText.split("\\s+").toSeq.map {
         case TokenRe(name, q, pm, lo, comma, hi, lzy) =>
           if (q != null) (name, 0, 1, q == "??")
-          else if (pm != null && pm.startsWith("+")) (name, 1, QTok.Unbounded, pm == "+?")
-          else if (pm != null) (name, 0, QTok.Unbounded, pm == "*?")
+          else if (pm != null && pm.startsWith("+")) (name, 1, Int.MaxValue, pm == "+?")
+          else if (pm != null) (name, 0, Int.MaxValue, pm == "*?")
           else if (lo == null) (name, 1, 1, false)
           else if (comma == null) (name, lo.toInt, lo.toInt, lzy != null)
-          else if (hi == null) (name, lo.toInt, QTok.Unbounded, lzy != null)
+          else if (hi == null) (name, lo.toInt, Int.MaxValue, lzy != null)
           else (name, lo.toInt, hi.toInt, lzy != null)
         case tok => sys.error(s"unsupported pattern token '$tok'")
       }
-    val DefineRe = "(?is)^(\\w+)\\s+AS\\s+(\\w+)\\.(\\w+)\\s*=\\s*'([^']*)'\\s*$".r
     val defSrc: Seq[(String, String)] = clause("(?is)DEFINE\\s+(.*)$")
       .map(SqlFrontend.splitTopLevelCommas(_).map(_.trim)).getOrElse(Seq.empty)
       .map { d =>
@@ -560,19 +552,9 @@ object StreamPlanner {
     val varNames = tokens.map(_._1).toSet
     defSrc.foreach { case (v, _) =>
       require(varNames.contains(v), s"DEFINE for unknown pattern variable '$v'") }
-    // two streaming routes: literal type DEFINEs (`V AS V.col = 'lit'`, all
-    // on one column, every variable defined) ride the typed operator; any
-    // richer predicate (the ticker PREV idiom, cross-variable caps) rides
-    // the VALUE operator — r10, previously a loud batch-only refusal
-    val allLiteral = !composite && defSrc.nonEmpty &&
-      defSrc.forall { case (v, c) => s"$v AS $c" match {
-        case DefineRe(v1, v2, _, _) => v1 == v2
-        case _ => false
-      } } && tokens.forall { case (v, _, _, _) => defSrc.exists(_._1 == v) }
-    val valueRoute = !allLiteral
     // WITHIN in MICROS (r13) — sub-second CEP horizons (fraud bursts) now
-    // match the batch route's precision; both streaming operators compare
-    // event-time micros directly, so no whole-seconds restriction remains
+    // match the batch route's precision; the operator compares event-time
+    // micros directly, so no whole-seconds restriction remains
     val withinMicros = withinM.map { mm =>
       graft.operators.Cumulate.durationMicros(s"${mm.group(1)} ${mm.group(2)}")
     }.getOrElse(0L)
@@ -766,30 +748,11 @@ object StreamPlanner {
     // watermark delay defaults to the TTL itself — a 0s delay would engage
     // Spark's late-row filter against cross-key event-time skew (r8 ADVICE);
     // 'sql.state-ttl-watermark-delay' tunes it explicitly
-    // value MEASURES force the value route even under all-literal DEFINEs
-    // (the typed operator emits spans only)
-    // the ALL-ROWS projection re-exposes the buffered columns — recorded by
-    // the value route for the post-match select
+    // the ALL-ROWS projection re-exposes the buffered columns — recorded
+    // for the post-match select
     var allRowsCondCols: Seq[String] = Nil
-    val matched = (if (!valueRoute && valueMeasures.isEmpty && aggMeasures.isEmpty &&
-      matchNumberAlias.isEmpty && !allRowsPerMatch && subsetSrc.isEmpty && parts.size == 1 &&
-      skipToVar.isEmpty && !oneRowCls) {
-      val defines = defSrc.map { case (v, c) =>
-        s"$v AS $c" match { case DefineRe(_, _, cc, lit0) => v -> (cc, lit0) }
-      }.toMap
-      val typeCols = defines.values.map(_._1).toSet
-      require(typeCols.size == 1,
-        s"streaming MATCH_RECOGNIZE DEFINEs must all test ONE column, got $typeCols")
-      val qtoks = tokens.map { case (v, lo, hi, rel) => QTok(defines(v)._2, lo, hi, rel) }
-      StreamingSequenceMatchQ(input, parts.head, typeCols.head, ord, "__tie",
-        qtoks, withinMicros, ttlSeconds = ttlSeconds,
-        ttlWatermarkDelay = graft.sources.TableRegistry.stateTtlWatermarkDelay(ttlSeconds),
-        skipPast = !skipToNext)
-    } else {
-      // ---- VALUE route: rich predicates on StreamingMatchRecognize (r10).
-      // Referenced columns are read from the conditions; at most one string
-      // (type) and one numeric (value) column of the source, resolved by
-      // the source schema's dtypes
+    val matched = {
+      // referenced columns are read from the conditions
       val defMap = defSrc.toMap
       val subsetNames = subsetSrc.map(_._1).toSet
       val refCols: Seq[String] = defSrc.flatMap { case (_, c) =>
@@ -798,7 +761,7 @@ object StreamPlanner {
           .map(_.group(2)).toSeq
       }.distinct
       require(defSrc.nonEmpty, "streaming MATCH_RECOGNIZE requires a DEFINE clause — an " +
-        "undefined pattern variable matches every row, which neither streaming route can bound")
+        "undefined pattern variable matches every row, which the operator cannot bound")
       require(refCols.nonEmpty, "streaming MATCH_RECOGNIZE: value DEFINEs reference no columns")
       refCols.foreach(c => require(input.columns.contains(c),
         s"streaming MATCH_RECOGNIZE: DEFINE references unknown column '$c'"))
@@ -820,7 +783,7 @@ object StreamPlanner {
           nidx(t.name), t.lo, t.hi, t.reluctant, t.excluded)).toIndexedSeq)
         else Seq(tokens.zipWithIndex.map { case ((_, lo, hi, rel), i) =>
           graft.operators.MatchRecognize.BTok(i, lo,
-            if (hi == QTok.Unbounded) None else Some(hi), rel) }.toIndexedSeq)
+            if (hi == Int.MaxValue) None else Some(hi), rel) }.toIndexedSeq)
       val conds = tokens.map { case (v, _, _, _) => defMap.get(v) }
       // composite PARTITION BY (r13): the operator keys on one string — a
       // collision-free KeyImage of the columns — and the original typed
@@ -862,10 +825,10 @@ object StreamPlanner {
         // undecided-at-expiry runs surface as a NAMED accumulator (r12) —
         // visible in the Spark UI / status without an oracle diff
         openTailAcc = Some(spark.sparkContext.longAccumulator(s"mr_open_tails_$tbl")))
-    }).toDF()
+    }.toDF()
     // restore the partition columns' ORIGINAL types: a single column casts
     // the operator's string key back; a composite key re-reads the typed
-    // values the value route buffered/measured (the KeyImage string never
+    // values the operator buffered/measured (the KeyImage string never
     // leaves this stage). Under ALL ROWS the per-row shape re-exposes the
     // ORDER BY column (from row_ts, original type) and the buffered columns
     // by name.

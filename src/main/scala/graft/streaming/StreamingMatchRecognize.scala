@@ -10,22 +10,23 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.operators.{MatchRecognize, MrConditions}
+import graft.operators.{MatchRecognize, MrConditions, MrMatcher, MrProg}
 
-/** Streaming MATCH_RECOGNIZE over VALUE predicates — the ticker idiom
-  * (`D AS D.value < PREV(D.value)`) as a standing query, which the typed
-  * operator ([[StreamingSequenceMatchQ]], literal type tokens only) cannot
-  * express (r10; Flink's CEP runs these natively, so a reference user's
-  * first streaming value pattern lands here).
+/** Streaming MATCH_RECOGNIZE — every standing MATCH_RECOGNIZE statement,
+  * from literal type DEFINEs (also reached through the
+  * [[StreamingSequenceMatchQ]] adapter) to the ticker idiom
+  * (`D AS D.value < PREV(D.value)`; Flink's CEP runs these natively, so a
+  * reference user's first streaming value pattern lands here).
   *
-  * Semantics contract: identical greedy leftmost-longest selection to the
-  * batch NFA scan ([[MatchRecognize.scan]]) — bounded, unbounded AND
-  * reluctant quantifiers, cross-variable / FIRST() / logical-offset DEFINE
-  * conditions — decided with the streaming twins' open/dead/winner rules: a
-  * run still extensible by future events stays OPEN until a breaking event,
-  * the WITHIN horizon, or (reluctant) the shortest completion the moment it
-  * exists. On a closed stream the emitted spans equal the batch scan's
-  * row-for-row (spec-pinned).
+  * Semantics contract: each key's buffer runs the batch scan's own matcher,
+  * [[graft.operators.MrMatcher]] — bounded, unbounded AND reluctant
+  * quantifiers, cross-variable / FIRST() / logical-offset DEFINE conditions —
+  * with the one answer batch never gives: a row past the newest buffered one
+  * has not arrived yet, so a run still extensible by future events stays
+  * OPEN until a breaking event, the WITHIN horizon, or (reluctant) the
+  * shortest completion the moment it exists. On a closed stream the emitted
+  * spans and MATCH_NUMBER ordinals equal the batch scan's row-for-row
+  * (spec-pinned, MrParitySpec).
   *
   * DEFINE columns (r11 — generalized from the r10 one-numeric+one-string
   * shape): `condCols` are the columns the conditions reference, buffered
@@ -59,8 +60,8 @@ import graft.operators.{MatchRecognize, MrConditions}
   *
   * Scale shape: one `groupByKey(key)` shuffle; per-key state is the rows
   * from `navDepth` before the selection frontier onward (navDepth = the
-  * deepest PREV offset any condition uses) — the typed operator's
-  * decided-prefix eviction plus that margin, so state is O(longest open
+  * deepest PREV offset any condition uses) — the decided prefix is
+  * evicted down to that margin, so state is O(longest open
   * attempt + navDepth), event-time-capped by WITHIN and wall-capped by the
   * TTL. Buffered rows wrap their cell arrays in a [[GenericRow]] ONCE at
   * append/restore time — the interpreter's per-read path allocates nothing.
@@ -157,28 +158,37 @@ object StreamingMatchRecognize extends Serializable {
                  cursor: Int, undecided: Array[Boolean], matchSeq: Long = 0L,
                  pending: Array[(Int, Array[Array[Any]])] = Array.empty)
 
-  /** Mutable evaluation context over the growing per-key buffers; rows are
-    * pre-wrapped GenericRows over the stored cell arrays (zero per-read
-    * allocation). `placedA` carries the attempt path's committed placements
-    * so cross-variable visibility is PATH-positional — the program-order
-    * generalization of the batch scan's placedBefore rule (r12).
+  /** The one matcher over a key's growing buffers, and the DEFINE
+    * evaluation context it tests rows through: rows are pre-wrapped
+    * GenericRows over the stored cell arrays (zero per-read allocation); a
+    * row past the newest buffered one has not arrived yet, so a run reaching
+    * it stays open and a NEXT() read of it defers the attempt. Cross-variable
+    * visibility is PATH-positional (the matcher's `placed` flags).
     */
-  private final class Cx(rowsB: ArrayBuffer[Row], val startsA: Array[Int],
-                         val countsA: Array[Int], val placedA: Array[Boolean])
-    extends MrConditions.Ctx {
-    var curPos = 0
-    var self = 0
-    var runStart = 0
-    var maxP = 0
+  private final class Matcher(prog: MrProg, nTok: Int, withinUs: Long,
+                              rowsB: ArrayBuffer[Row], tssB: ArrayBuffer[Long],
+                              compiled: Array[MrConditions.Compiled])
+    extends MrMatcher(prog, nTok, withinUs) with MrConditions.Ctx {
+    private var curPos = 0
+    private var self = 0
+    private var runStart = 0
+    protected def avail(pos: Int): Int = if (pos < rowsB.length) 1 else -1
+    protected def micros(pos: Int): Long = tssB(pos)
+    protected def test(v: Int, pos: Int, runStart: Int): Int = {
+      val d = compiled(v)
+      if (d == null) 1
+      else {
+        self = v; this.runStart = runStart; curPos = pos
+        d.holdsOrDefer(this)
+      }
+    }
     def cur: Row = rowsB(curPos)
     def rowAt(pos: Int): Row = rowsB(pos)
     def selfTok: Int = self
     def selfRunStart: Int = runStart
     def selfPos: Int = curPos
-    def starts: Array[Int] = startsA
-    def counts: Array[Int] = countsA
-    override def maxPos: Int = maxP
-    override def placedBefore(tok: Int): Boolean = placedA(tok)
+    override def maxPos: Int = rowsB.length - 1
+    override def placedBefore(tok: Int): Boolean = placed(tok)
   }
 
   /** Linear-sequence entry (the pre-r11 surface, unchanged): every token is
@@ -201,8 +211,6 @@ object StreamingMatchRecognize extends Serializable {
       defs, withinMicros, ttlSeconds, ttlWatermarkDelay, skip, stateProbe, measures,
       aggMeasures, matchNumberAlias)
   }
-
-  private val AggFnCode = Map("cnt" -> 0, "sum" -> 1, "min" -> 2, "max" -> 3, "avg" -> 4)
 
   /** Branch-general entry (r11): `branches` are [[graft.operators.MrPattern]]-
     * expanded alternative linear sequences in PREFERENCE order over the
@@ -245,26 +253,13 @@ object StreamingMatchRecognize extends Serializable {
     // MATCH_NUMBER ordinals stay batch-equal; only SKIP TO NEXT ROW decides
     // starts independently (the undecided-flags walk)
     val cursorMode = skip != MatchRecognize.SkipToNextRow
-    skip match {
-      case MatchRecognize.SkipToFirst(i) =>
-        require(i >= 0 && i < nTok, s"skip target out of range: $i")
-      case MatchRecognize.SkipToLast(i) =>
-        require(i >= 0 && i < nTok, s"skip target out of range: $i")
-      case _ => ()
-    }
+    MrMatcher.requireSkipTarget(skip, nTok)
     val nSub = subsets.size
     require(condCols.nonEmpty, "conditions must reference at least one column")
     require(nTok > 0, "pattern must name at least one variable")
     require(varNames.distinct.size == nTok, s"duplicate variable name in $varNames")
     require(branches.nonEmpty, "pattern must carry at least one branch")
-    subsets.foreach { case (nm, members) =>
-      require(members.nonEmpty, s"SUBSET $nm needs at least one member variable")
-      require(members.forall(m => m >= 0 && m < nTok),
-        s"SUBSET $nm references an unknown variable index")
-      require(members.distinct.size == members.size, s"SUBSET $nm repeats a member")
-      require(!varNames.contains(nm), s"SUBSET $nm collides with a pattern variable name")
-    }
-    require(subsets.map(_._1).distinct.size == nSub, "duplicate SUBSET name")
+    MrMatcher.requireSubsets(varNames, subsets)
     branches.foreach { b =>
       require(b.nonEmpty, "empty pattern branch")
       require(b.map(_.v).distinct.size == b.size, "a variable may appear only once per branch")
@@ -311,18 +306,7 @@ object StreamingMatchRecognize extends Serializable {
       require(!reservedOut.contains(m.alias) && !m.alias.startsWith("__mr_") &&
         !(allRows && condCols.contains(m.alias)),
         s"measure alias '${m.alias}' collides with an output/reserved name")
-      if (m.col != "*") {
-        val dt = df.schema(m.col).dataType
-        if (m.fn == "sum" || m.fn == "avg")
-          require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
-            s"${m.fn.toUpperCase} MEASURES column '${m.col}' must be numeric, got ${dt.simpleString}")
-        if (m.fn == "min" || m.fn == "max")
-          require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType] || (dt match {
-            case StringType | BooleanType | DateType | TimestampType | TimestampNTZType => true
-            case _ => false
-          }), s"${m.fn.toUpperCase} MEASURES column '${m.col}' must have an orderable atomic " +
-            s"type, got ${dt.simpleString}")
-      }
+      if (m.col != "*") MrMatcher.requireAggType(m.fn, m.col, df.schema(m.col).dataType)
     }
     // MATCH_NUMBER(): the key's 1-based emitted-match ordinal. Cursor-mode
     // emission (skip-past AND the variable-targeted skips, r14) is strictly
@@ -389,9 +373,7 @@ object StreamingMatchRecognize extends Serializable {
     // choice points decided at their written positions (ISO preferment) —
     // otherwise the branch-shaped choice (identical order for linear and
     // front-choice patterns)
-    val prog: graft.operators.MrProg = tree
-      .map(t => graft.operators.MrProg.ofTree(t, varIdx))
-      .getOrElse(graft.operators.MrProg.ofBranches(branches))
+    val prog: MrProg = tree.map(t => MrProg.ofTree(t, varIdx)).getOrElse(MrProg.ofBranches(branches))
     val withinUs = withinMicros
 
     // QMatch's shape (the r10 contract); under ALL ROWS (r12) each matched
@@ -426,11 +408,14 @@ object StreamingMatchRecognize extends Serializable {
     val nMeas = measArr.length
     // (fnCode, tok, colIdx or -1 for '*', running)
     val aggMeasArr: Array[(Int, Int, Int, Boolean)] = aggMeasures.map(m =>
-      (AggFnCode(m.fn), m.tok, if (m.col == "*") -1 else condSchema.fieldIndex(m.col),
+      (MrMatcher.fnCode(m.fn), m.tok, if (m.col == "*") -1 else condSchema.fieldIndex(m.col),
         m.running)).toArray
     val nAggMeas = aggMeasArr.length
     val hasMatchNumber = matchNumberAlias.isDefined
-    val subMembersArr: Array[Array[Int]] = subsets.map(_._2.toArray).toArray
+    val aggFns: Array[Int] = aggMeasArr.map(_._1)
+    // each measure target's variables: a variable itself, or a SUBSET's members
+    val tokVars: Array[Array[Int]] =
+      (0 until nTok).map(Array(_)).toArray ++ subsets.map(_._2.toArray)
     // per-row extras under ALL ROWS: row_ts, row_tie, cls, the condCols
     val nRowCols = if (allRows) 3 + nCond else 0
     // ONE-ROW CLASSIFIER slot (mutually exclusive with allRows by the
@@ -540,251 +525,40 @@ object StreamingMatchRecognize extends Serializable {
               rows.foreach(v => out += new GenericRow(v))
             }
 
-            val starts = new Array[Int](nTok)
-            val counts = new Array[Int](nTok)
-            val placed = new Array[Boolean](nTok)
-            val cx = new Cx(rowsB, starts, counts, placed)
-            // program tables (hoisted for the hot loop)
-            val pKind = prog.kind; val pV = prog.v
-            val pLo = prog.lo; val pHi = prog.hi
-            val pRel = prog.rel; val pExcl = prog.excl
-            val pNxt = prog.nxt; val pAlts = prog.alts
-            // the winning attempt path in ROW order (ALL ROWS emission and
-            // exclusion need the order; depth <= nTok)
-            val pathVar = new Array[Int](nTok)
-            val pathStart = new Array[Int](nTok)
-            val pathCount = new Array[Int](nTok)
-            val pathExcl = new Array[Boolean](nTok)
-            var pathLen = 0
+            val finAcc = new MrMatcher.Agg(aggFns)
+            val runAcc = new MrMatcher.Agg(aggFns)
+            val m = new Matcher(prog, nTok, withinUs, rowsB, tssB, compiled)
 
-            /** 1 holds, 0 not, -1 undecidable until the successor arrives. */
-            def predOk(gv: Int, pos: Int, runStart: Int): Int = {
-              val d = compiled(gv)
-              if (d == null) 1
-              else {
-                cx.self = gv; cx.runStart = runStart; cx.curPos = pos
-                d.holdsOrDefer(cx)
-              }
+            def cell(pos: Int, colI: Int): Any =
+              if (colI < 0) java.lang.Boolean.TRUE // a row-count field counts every row
+              else { val row = rowsB(pos); if (row.isNullAt(colI)) null else row.get(colI) }
+
+            /** FIRST/LAST of measure target `tok` (a variable, or a SUBSET
+              * union at `nTok + i`) at or before buffer position `limit` —
+              * Int.MaxValue is the FINAL whole-match view, any other the
+              * RUNNING view at that row (NULL before the target's run begins).
+              */
+            def valueMeasureAt(isFirst: Boolean, tok: Int, colI: Int, limit: Int): Any = {
+              val at = if (isFirst) m.firstRowIn(tokVars(tok), limit) else m.lastRowIn(tokVars(tok), limit)
+              if (at < 0) null else cell(at, colI)
             }
 
-            /** >0 winner len, -1 open, 0 dead — the batch program walk
-              * (choice points at their written positions, ISO preferment)
-              * with the streaming open rules: the FIRST non-dead outcome in
-              * preference order decides, so an OPEN possibility met before
-              * any completed match defers the WHOLE position (a lower-
-              * preference match must not pre-empt a higher-preference
-              * attempt that future events may yet complete). A NEXT() read
-              * past the newest row aborts the whole attempt to OPEN
-              * (decision deferred one event).
+            /** The FINAL aggregate measures (the non-running ones) of the
+              * winner just resolved.
               */
-            def resolve(p: Int): Int = {
-              val len = rowsB.length
-              val futureViolated = withinUs > 0L && tssB(len - 1) - tssB(p) > withinUs
-              java.util.Arrays.fill(counts, 0)
-              java.util.Arrays.fill(placed, false)
-              pathLen = 0
-              def walk(ip: Int, pos: Int): Int = pKind(ip) match {
-                case 2 => if (pos > p) pos - p else 0 // the empty match never selects
-                case 1 =>
-                  val ts = pAlts(ip)
-                  var i = 0
-                  while (i < ts.length) {
-                    val r = walk(ts(i), pos)
-                    if (r != 0) return r // winner or open — both stop lower preference
-                    i += 1
-                  }
-                  0
-                case _ =>
-                  val gv = pV(ip)
-                  starts(gv) = pos
-                  // scan the run, capped at the quantifier's hi — rows beyond
-                  // the cap are never placed, so they must not defer/decide
-                  var avail = 0
-                  var stop = 0 // 1 pred-false, 2 buffer-end, 3 within, 4 cap
-                  while (stop == 0) {
-                    if (avail >= pHi(ip)) stop = 4
-                    else if (pos + avail >= len) stop = 2
-                    else if (withinUs > 0L && tssB(pos + avail) - tssB(p) > withinUs) stop = 3
-                    else predOk(gv, pos + avail, pos) match {
-                      case 1 => avail += 1
-                      case 0 => stop = 1
-                      case _ => throw MrConditions.NotYet
-                    }
-                  }
-                  // stop==2 implies avail < hi (cap checked first): the run is
-                  // still extensible by future events unless the horizon is
-                  // already past every extension
-                  val openHere = stop == 2 && !futureViolated
-                  val d = pathLen
-                  pathVar(d) = gv; pathStart(d) = pos; pathExcl(d) = pExcl(ip)
-                  def tryCount(k: Int): Int = {
-                    counts(gv) = k
-                    pathCount(d) = k
-                    placed(gv) = true
-                    pathLen = d + 1
-                    val r = walk(pNxt(ip), pos + k)
-                    if (r == 0) { pathLen = d; placed(gv) = false }
-                    r
-                  }
-                  if (pRel(ip)) {
-                    // lazy: shortest first; a win or an open at count k blocks
-                    // every longer k, and only an all-dead scan of an
-                    // extensible run stays open
-                    var c = pLo(ip)
-                    while (c <= avail) {
-                      val r = tryCount(c)
-                      if (r != 0) return r
-                      c += 1
-                    }
-                    if (openHere) return -1
-                    counts(gv) = 0
-                    0
-                  } else {
-                    if (openHere) return -1
-                    var c = avail
-                    while (c >= pLo(ip)) {
-                      val r = tryCount(c)
-                      if (r != 0) return r
-                      c -= 1
-                    }
-                    counts(gv) = 0
-                    0
-                  }
-              }
-              try walk(prog.entry, p) catch { case MrConditions.NotYet => -1 }
-            }
-
-            /** Buffer position of variable i's FIRST matched row on the
-              * winning path, -1 when the variable matched no rows — valid
-              * right after a winning resolve. A variable can occupy several
-              * path entries (PATTERN (A B A)) and any placement can be an
-              * empty run; ISO's first/last-row-mapped skip semantics need the
-              * zero-count entries skipped and, for LAST, the scan to run from
-              * the END — identical to the batch scan's firstRowOf/lastRowOf.
-              */
-            def firstRowOf(i: Int): Int = {
-              var t = 0
-              while (t < pathLen && !(pathVar(t) == i && pathCount(t) > 0)) t += 1
-              if (t == pathLen) -1 else pathStart(t)
-            }
-
-            /** Buffer position of variable i's LAST matched row, -1 when absent. */
-            def lastRowOf(i: Int): Int = {
-              var t = pathLen - 1
-              while (t >= 0 && !(pathVar(t) == i && pathCount(t) > 0)) t -= 1
-              if (t < 0) -1 else pathStart(t) + pathCount(t) - 1
-            }
-
-            /** The cursor's next position after a winner at `p` of length
-              * `len` — the batch scan's skipAdvance in buffer-absolute form
-              * (r14). The variable-targeted strategies resume AT the target
-              * variable's first/last matched row, so matches may OVERLAP (a
-              * later match starts inside the previous span); an empty-run
-              * target or a self-re-anchor fails loudly, the standard's
-              * infinite-loop rules — identical to the batch scan and Flink.
-              */
-            def skipAdvanceTo(p: Int, len: Int): Int = skip match {
-              case MatchRecognize.SkipPastLastRow => p + len
-              case MatchRecognize.SkipToFirst(i) =>
-                val pos = firstRowOf(i)
-                if (pos < 0) sys.error(s"AFTER MATCH SKIP TO FIRST ${varNames(i)}: " +
-                  "the variable matched no rows in the selected match")
-                if (pos == p) sys.error(s"AFTER MATCH SKIP TO FIRST ${varNames(i)} would " +
-                  "re-anchor at the match's own start row (infinite loop)")
-                pos
-              case MatchRecognize.SkipToLast(i) =>
-                val pos = lastRowOf(i)
-                if (pos < 0) sys.error(s"AFTER MATCH SKIP TO LAST ${varNames(i)}: " +
-                  "the variable matched no rows in the selected match")
-                if (pos == p) sys.error(s"AFTER MATCH SKIP TO LAST ${varNames(i)} would " +
-                  "re-anchor at the match's own start row (infinite loop)")
-                pos
-              case MatchRecognize.SkipToNextRow =>
-                throw new IllegalStateException("unreachable: SKIP TO NEXT ROW never walks " +
-                  "the cursor")
-            }
-
-            /** Placed runs of measure target `m` — a variable, or a SUBSET
-              * union (`nTok + i`): the member runs pooled in row order —
-              * packed (start << 32 | len). Valid right after a winning
-              * resolve (a successful recursion returns without mutation).
-              */
-            def runsOf(m: Int): Array[Long] =
-              if (m < nTok) {
-                if (counts(m) > 0)
-                  Array((starts(m).toLong << 32) | (counts(m).toLong & 0xffffffffL))
-                else Array.emptyLongArray
-              } else subMembersArr(m - nTok).filter(u => counts(u) > 0).sortBy(starts(_))
-                .map(u => (starts(u).toLong << 32) | (counts(u).toLong & 0xffffffffL))
-
-            /** FIRST/LAST over runs. `limitPos < 0` = the FINAL whole-match
-              * view; otherwise the RUNNING view at that buffer position
-              * (rows at or before it; NULL before the target's run begins).
-              */
-            def valueMeasureAt(isFirst: Boolean, rs: Array[Long], colI: Int,
-                               limitPos: Int): Any = {
-              var firstIdx = -1; var lastIdx = -1
-              var i = 0
-              while (i < rs.length) {
-                val s = (rs(i) >> 32).toInt; val c = rs(i).toInt
-                if (limitPos < 0 || s <= limitPos) {
-                  if (firstIdx < 0) firstIdx = s
-                  val e = s + c - 1
-                  val eEff = if (limitPos < 0) e else math.min(e, limitPos)
-                  if (eEff > lastIdx) lastIdx = eEff
+            def finalAggs(): Array[Any] = {
+              finAcc.clear()
+              val vals = new Array[Any](nAggMeas)
+              var am = 0
+              while (am < nAggMeas) {
+                val (_, tok, colI, running) = aggMeasArr(am)
+                if (!running) {
+                  m.foldRuns(finAcc, am, tokVars(tok))(cell(_, colI))
+                  vals(am) = finAcc.result(am)
                 }
-                i += 1
+                am += 1
               }
-              val at = if (isFirst) firstIdx else lastIdx
-              if (at < 0) null
-              else {
-                val row = rowsB(at)
-                if (row.isNullAt(colI)) null else row.get(colI)
-              }
-            }
-
-            /** Aggregate over runs (same exactness contract as the batch
-              * scan: exact HALF_UP-scale-6 decimal sums, one-division avg,
-              * natural-order min/max with strings in code-point order,
-              * non-null counting).
-              */
-            def aggOverRuns(fn: Int, rs: Array[Long], colI: Int): Any = {
-              var cntAcc = 0L
-              var dec: java.math.BigDecimal = null; var nd = 0L
-              var cmp: Any = null
-              var i = 0
-              while (i < rs.length) {
-                val s = (rs(i) >> 32).toInt; val e = s + rs(i).toInt - 1
-                var pos = s
-                while (pos <= e) {
-                  val row = rowsB(pos)
-                  fn match {
-                    case 0 => if (colI < 0 || !row.isNullAt(colI)) cntAcc += 1L
-                    case 1 | 4 => if (!row.isNullAt(colI)) {
-                      val d = MatchRecognize.toDecimal6(row.get(colI))
-                      dec = if (dec == null) d else dec.add(d)
-                      nd += 1L
-                    }
-                    case _ => if (!row.isNullAt(colI)) {
-                      val v = row.get(colI)
-                      if (cmp == null) cmp = v
-                      else {
-                        val r = MatchRecognize.compareMeasure(v, cmp)
-                        if ((fn == 2 && r < 0) || (fn == 3 && r > 0)) cmp = v
-                      }
-                    }
-                  }
-                  pos += 1
-                }
-                i += 1
-              }
-              fn match {
-                case 0 => cntAcc
-                case 1 => dec // scale-6 by construction (DecimalType(38,6))
-                case 4 => if (dec == null) null
-                  else java.lang.Double.valueOf(dec.doubleValue() / nd)
-                case _ => cmp
-              }
+              vals
             }
 
             /** ONE ROW PER MATCH for the winner starting at buffer position
@@ -799,26 +573,14 @@ object StreamingMatchRecognize extends Serializable {
               vals(2) = toTs(tssB(p + len - 1))
               vals(3) = tiesB(p)
               vals(4) = len
-              if (oneRowClassifier) {
-                // ISO ONE-ROW CLASSIFIER: the LAST matched row's label — the
-                // deepest path entry that placed at least one row (matchLen >
-                // 0 guarantees one exists)
-                var t = pathLen - 1
-                while (t >= 0 && pathCount(t) == 0) t -= 1
-                vals(5) = varNames(pathVar(t))
+              if (oneRowClassifier) vals(5) = varNames(m.lastVar) // ISO: the LAST matched row's label
+              var i = 0
+              while (i < nMeas) {
+                val (isFirst, tok, colI, _) = measArr(i)
+                vals(5 + nClsCols + i) = valueMeasureAt(isFirst, tok, colI, Int.MaxValue)
+                i += 1
               }
-              var m = 0
-              while (m < nMeas) {
-                val (isFirst, tok, colI, _) = measArr(m)
-                vals(5 + nClsCols + m) = valueMeasureAt(isFirst, runsOf(tok), colI, -1)
-                m += 1
-              }
-              var am = 0
-              while (am < nAggMeas) {
-                val (fn, tok, colI, _) = aggMeasArr(am)
-                vals(5 + nClsCols + nMeas + am) = aggOverRuns(fn, runsOf(tok), colI)
-                am += 1
-              }
+              System.arraycopy(finalAggs(), 0, vals, 5 + nClsCols + nMeas, nAggMeas)
               // the MATCH_NUMBER slot (ordIdx) stays unstamped here; emitNow
               // or the pending flush assigns it in emission order
               rendered += vals
@@ -835,58 +597,32 @@ object StreamingMatchRecognize extends Serializable {
               * emit in the micro-batch that decides the winner.
               */
             def emitMatchRows(p: Int, len: Int): Unit = {
-              val measRuns: Array[Array[Long]] =
-                if (nMeas == 0) null else Array.tabulate(nMeas)(m => runsOf(measArr(m)._2))
               val finVals = new Array[Any](nMeas)
-              locally { var m = 0
-                while (m < nMeas) {
-                  val (isFirst, _, colI, running) = measArr(m)
-                  if (!running) finVals(m) = valueMeasureAt(isFirst, measRuns(m), colI, -1)
-                  m += 1
+              locally { var i = 0
+                while (i < nMeas) {
+                  val (isFirst, tok, colI, running) = measArr(i)
+                  if (!running) finVals(i) = valueMeasureAt(isFirst, tok, colI, Int.MaxValue)
+                  i += 1
                 } }
-              val finAgg = new Array[Any](nAggMeas)
-              locally { var am = 0
-                while (am < nAggMeas) {
-                  val (fn, tok, colI, running) = aggMeasArr(am)
-                  if (!running) finAgg(am) = aggOverRuns(fn, runsOf(tok), colI)
-                  am += 1
-                } }
-              val accCnt = new Array[Long](nAggMeas)
-              val accDec = new Array[java.math.BigDecimal](nAggMeas)
-              val accN = new Array[Long](nAggMeas)
-              val accCmp = new Array[Any](nAggMeas)
+              val finAgg = finalAggs()
+              runAcc.clear()
               val startTs = toTs(tssB(p)); val endTs = toTs(tssB(p + len - 1))
               val startTie = tiesB(p)
               var t = 0
-              while (t < pathLen) {
-                val gv = pathVar(t)
+              while (t < m.pathLen) {
+                val gv = m.pathVar(t)
                 var r = 0
-                while (r < pathCount(t)) {
-                  val pos = pathStart(t) + r
+                while (r < m.pathCount(t)) {
+                  val pos = m.pathStart(t) + r
                   val row = rowsB(pos)
                   // fold into RUNNING accumulators BEFORE the exclusion check
                   var am = 0
                   while (am < nAggMeas) {
-                    val (fn, _, colI, running) = aggMeasArr(am)
-                    if (running && aggFoldTarget(am)(gv)) fn match {
-                      case 0 => if (colI < 0 || !row.isNullAt(colI)) accCnt(am) += 1L
-                      case 1 | 4 => if (!row.isNullAt(colI)) {
-                        val d = MatchRecognize.toDecimal6(row.get(colI))
-                        accDec(am) = if (accDec(am) == null) d else accDec(am).add(d)
-                        accN(am) += 1L
-                      }
-                      case _ => if (!row.isNullAt(colI)) {
-                        val v = row.get(colI)
-                        if (accCmp(am) == null) accCmp(am) = v
-                        else {
-                          val c = MatchRecognize.compareMeasure(v, accCmp(am))
-                          if ((fn == 2 && c < 0) || (fn == 3 && c > 0)) accCmp(am) = v
-                        }
-                      }
-                    }
+                    val (_, _, colI, running) = aggMeasArr(am)
+                    if (running && aggFoldTarget(am)(gv)) runAcc.add(am, cell(pos, colI))
                     am += 1
                   }
-                  if (!pathExcl(t)) { // {- X -}: matched but not emitted
+                  if (!m.pathExcl(t)) { // {- X -}: matched but not emitted
                     val vals = new Array[Any](5 + nRowCols + nMeas + nAggMeas +
                       (if (hasMatchNumber) 1 else 0))
                     vals(0) = key; vals(1) = startTs; vals(2) = endTs
@@ -897,26 +633,17 @@ object StreamingMatchRecognize extends Serializable {
                       vals(8 + ci) = if (row.isNullAt(ci)) null else row.get(ci)
                       ci += 1
                     }
-                    var m = 0
-                    while (m < nMeas) {
-                      val (isFirst, _, colI, running) = measArr(m)
-                      vals(5 + nRowCols + m) =
-                        if (running) valueMeasureAt(isFirst, measRuns(m), colI, pos)
-                        else finVals(m)
-                      m += 1
+                    var i = 0
+                    while (i < nMeas) {
+                      val (isFirst, tok, colI, running) = measArr(i)
+                      vals(5 + nRowCols + i) =
+                        if (running) valueMeasureAt(isFirst, tok, colI, pos) else finVals(i)
+                      i += 1
                     }
                     var am2 = 0
                     while (am2 < nAggMeas) {
-                      val (fn, _, _, running) = aggMeasArr(am2)
                       vals(5 + nRowCols + nMeas + am2) =
-                        if (!running) finAgg(am2)
-                        else fn match {
-                          case 0 => accCnt(am2)
-                          case 1 => accDec(am2)
-                          case 4 => if (accDec(am2) == null) null
-                            else java.lang.Double.valueOf(accDec(am2).doubleValue() / accN(am2))
-                          case _ => accCmp(am2)
-                        }
+                        if (aggMeasArr(am2)._4) runAcc.result(am2) else finAgg(am2)
                       am2 += 1
                     }
                     // ordinal slot stamped at emission (emitNow / flush)
@@ -955,7 +682,6 @@ object StreamingMatchRecognize extends Serializable {
                   ci += 1
                 }
                 cellsB += cells; rowsB += new GenericRow(cells); tssB += us; tiesB += tie
-                cx.maxP = rowsB.length - 1
                 if (!cursorMode) undecB += true
                 if (cursorMode) {
                   // the buffer cursor is the selection frontier: only the
@@ -967,12 +693,12 @@ object StreamingMatchRecognize extends Serializable {
                   // the cursor strictly advances, so the walk terminates.
                   var walking = true
                   while (walking && cursor < rowsB.length) {
-                    resolve(cursor) match {
+                    m.resolve(cursor) match {
                       case -1 => walking = false
                       case 0 => cursor += 1
                       case len =>
                         emitNow(render(cursor, len)) // positional: ordinal = batch __mr_seq
-                        cursor = skipAdvanceTo(cursor, len)
+                        cursor = m.skipTarget(skip, cursor, len, varNames)
                     }
                   }
                   val drop = math.max(0, cursor - navDepth)
@@ -980,14 +706,13 @@ object StreamingMatchRecognize extends Serializable {
                     cellsB.remove(0, drop); rowsB.remove(0, drop)
                     tssB.remove(0, drop); tiesB.remove(0, drop)
                     cursor -= drop
-                    cx.maxP = rowsB.length - 1
                   }
                 } else {
                   // SKIP TO NEXT ROW: every start decides independently
                   var p = 0
                   while (p < rowsB.length) {
                     if (undecB(p)) {
-                      resolve(p) match {
+                      m.resolve(p) match {
                         case -1 => ()
                         case 0 => undecB(p) = false
                         case w =>
@@ -1019,7 +744,6 @@ object StreamingMatchRecognize extends Serializable {
                     cellsB.remove(0, drop); rowsB.remove(0, drop)
                     tssB.remove(0, drop); tiesB.remove(0, drop)
                     undecB.remove(0, drop)
-                    cx.maxP = rowsB.length - 1
                     // surviving deferred starts are >= firstUndec > drop:
                     // shift them into the post-drop coordinates
                     var pi = 0

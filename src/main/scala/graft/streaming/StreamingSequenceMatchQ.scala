@@ -3,81 +3,41 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+import org.apache.spark.sql.functions.col
 
-/** Streaming twin of the QUANTIFIED MATCH_RECOGNIZE rewrite
-  * ([[graft.sql.SqlFrontend]] `PATTERN (A B{1,2} C?)`) over literal event
-  * types: bounded quantifiers expand to fixed type-sequences tried in GREEDY
-  * order (leftmost quantifier longest first — identical to the SQL CASE), and
-  * every stream position is an independent match start (AFTER MATCH SKIP TO
-  * NEXT ROW).
+import graft.operators.MatchRecognize
+
+/** Streaming quantified sequence match over literal event types —
+  * `PATTERN (A B{1,2} C?)` with every variable defined as `type = '<lit>'` —
+  * as a standing query. It is a thin adapter over
+  * [[StreamingMatchRecognize.applyPattern]], the way
+  * [[graft.operators.Behavior]] maps the same tokens onto the batch scan:
+  * token `i` becomes variable `v<i>` defined as `v<i>.<typeCol> = '<typ>'`
+  * over the type column cast to string, so both run the one
+  * [[graft.operators.MrMatcher]] and select identical matches on a closed
+  * stream.
   *
-  * The streaming subtlety fixed patterns don't have: when a SHORT alternative
-  * completes, a greedy-earlier LONGER one may still be completable by future
-  * events, so the start is UNDECIDED until every greedy-earlier alternative
-  * is either fully matched or broken by an arrived event. A start is
-  * guaranteed decided once `maxLen` events exist from it, so state per key is
-  * the trailing ≤ maxLen (type, ts, tie) events plus one undecided flag each —
-  * O(maxLen), never an event-history buffer. Matches therefore emit in the
-  * micro-batch of their DECIDING event (≥ their last matched event), append
-  * mode, immutably — the same rows the batch/SQL form produces on the closed
-  * stream, which the spec pins.
+  * Strategy: every position is an independent match start (AFTER MATCH SKIP
+  * TO NEXT ROW) by default; `skipPast = true` is the SQL-standard default,
+  * AFTER MATCH SKIP PAST LAST ROW (batch twin:
+  * [[graft.operators.Behavior.sequenceMatchSkipPast]]).
   *
-  * Contract boundary (same as Flink CEP): a start whose shorter alternative
-  * matched but whose longer one is still open emits only when a further event
-  * (or nothing — if the stream truly ends mid-decision the tail stays
-  * undecided) breaks the longer candidate. The `within` bound applies per
-  * alternative in exact event-time micros; an alternative whose events
-  * arrived but violate the bound is broken, not open.
-  *
-  * Ordering contract (the StreamingSequenceMatch/StreamingAnomaly family
-  * contract): rows sort by (ts, tie) WITHIN a trigger; cross-trigger
-  * event-time order is the source's responsibility. A later trigger
-  * delivering an EARLIER event appends behind already-buffered rows and will
-  * not match patterns spanning it — batch equivalence holds for in-order
-  * sources (per-key ordered topics), not for late data.
-  *
-  * `ttlSeconds > 0` bounds the store on unbounded key spaces — the
-  * reference's `SET 'sql.state-ttl' = '14 d'` analog (see
-  * [[StreamingOps.ttlConf]]): a key idle past the TTL loses its undecided
-  * starts and trailing events (an open long-alternative candidate simply
-  * never emits), and the key's next event starts a fresh buffer. With a
-  * `within` bound, any TTL ≥ within loses no DECIDABLE match — an evicted
-  * start was past its within horizon, where completion was impossible and
-  * the futureViolated rule had already decided or doomed it.
-  *
-  * `skipPast = true` switches to the SQL-standard DEFAULT strategy, AFTER
-  * MATCH SKIP PAST LAST ROW (batch twin:
-  * [[graft.operators.Behavior.sequenceMatchSkipPast]]): the buffer head IS
-  * the selection cursor. Only the OLDEST unresolved start may decide — a
-  * younger start that already has a complete alternative must wait, because
-  * an older still-open start can later match ACROSS it and consume its rows
-  * (emitting early would produce an overlap the batch scan never selects).
-  * The head resolves to: a greedy winner (emit, drop the match's `len`
-  * buffer entries — the consumption), dead (drop one entry), or open (stop,
-  * wait for events). State stays O(maxLen): the head is guaranteed decided
-  * within `maxLen` events of its position, so the frontier advances and the
-  * buffer never outgrows the same bound as the skip-to-next form.
-  *
-  * UNBOUNDED quantifiers (`QTok(t, m, QTok.Unbounded)` — SQL `A+`/`A{m,}`,
-  * r9): resolution switches from the enumerated alternatives to an NFA that
-  * explores counts greedily with backtracking in the same leftmost-longest
-  * order. A greedy run that reaches the buffer's newest event stays OPEN —
-  * only a breaking event (type mismatch) or the within horizon decides it,
-  * Flink CEP's greedy contract — so the decided-once-maxLen-events state
-  * bound becomes O(longest open run); a `within` bound restores an
-  * event-time cap (and any TTL ≥ within loses no decidable match, as above).
+  * Decisions follow the value operator's open/dead/winner rules: a start
+  * whose shorter alternative matched while a greedy-earlier longer one (or
+  * an unbounded greedy run) can still be completed by future events stays
+  * undecided until a breaking event or the `withinMicros` horizon decides
+  * it; a reluctant token decides as soon as its shortest completion exists.
+  * Matches emit in the micro-batch of their deciding event, append mode. An
+  * event arriving below a key's buffered tail in a later micro-batch is
+  * dropped and logged, and `ttlSeconds > 0` evicts idle keys (the
+  * reference's `SET 'sql.state-ttl'`) — both the value operator's rules.
   */
 object StreamingSequenceMatchQ {
 
   /** One pattern token: `typ` repeated between `min` and `max` times;
-    * `max = QTok.Unbounded` is `+` / `{m,}` — the NFA resolver takes over
-    * (see the unbounded paragraph in the class doc); `reluctant` flips the
-    * token's exploration to shortest-first (Flink's lazy `+?`/`*?`/`{m,n}?`),
-    * identically on all three surfaces. A lazy run also DECIDES earlier: the
-    * shortest completion wins as soon as it exists, instead of waiting for a
-    * run break — an open shorter alternative still blocks longer ones.
+    * `max = QTok.Unbounded` is `+` / `{m,}`; `reluctant` flips the token's
+    * exploration to shortest-first (Flink's lazy `+?`/`*?`/`{m,n}?`),
+    * identically on every surface.
     */
   case class QTok(typ: String, min: Int, max: Int, reluctant: Boolean = false) {
     require(min >= 0 && max >= min, s"bad quantifier {$min,$max}")
@@ -86,19 +46,18 @@ object StreamingSequenceMatchQ {
     /** `max` sentinel for unbounded quantifiers (`A+` = `QTok(t, 1, Unbounded)`). */
     val Unbounded: Int = Int.MaxValue
   }
-  case class Ev(key: String, typ: String, ts: Timestamp, tie: Long)
   case class QMatch(key: String, match_start_ts: Timestamp, match_end_ts: Timestamp,
                     start_tie: Long, matched_len: Int)
-  case class Buf(types: Seq[String], tsMicros: Seq[Long], ties: Seq[Long],
-                 undecided: Seq[Boolean])
 
-  /** Greedy-ordered fixed type-sequences of a quantified pattern (shared
-    * with the batch twin [[graft.operators.Behavior.sequenceMatchQ]]). */
+  /** Greedy-ordered fixed type-sequences of a bounded quantified pattern —
+    * the batch rewrite [[graft.operators.Behavior.sequenceMatchQ]] compiles
+    * them into one when-chain.
+    */
   private[graft] def expansions(pattern: Seq[QTok]): Seq[Seq[String]] = {
     require(pattern.forall(_.max != QTok.Unbounded),
       "unbounded quantifier: expansions enumerate fixed sequences — the unbounded " +
-        "surfaces are the NFA paths (this operator with QTok.Unbounded routes there; " +
-        "batch: graft.operators.MatchRecognize.scan)")
+        "surfaces run the matcher (streaming: this operator; batch: " +
+        "graft.operators.MatchRecognize.scan)")
     val seqs = pattern
       .map(t => (if (t.reluctant) t.min to t.max else t.max to t.min by -1)
         .map(c => Seq.fill(c)(t.typ)))
@@ -112,186 +71,17 @@ object StreamingSequenceMatchQ {
   def apply(df: DataFrame, keyCol: String, typeCol: String, tsCol: String, tieCol: String,
             pattern: Seq[QTok], withinMicros: Long = 0L, ttlSeconds: Long = 0L,
             ttlWatermarkDelay: String = "0 seconds", skipPast: Boolean = false): Dataset[QMatch] = {
-    // unbounded quantifiers can't enumerate alternatives — the NFA resolver
-    // explores counts greedily (descending) with backtracking instead, in
-    // the SAME leftmost-longest order, so bounded patterns behave identically
-    // on either path
-    val useNfa = pattern.exists(_.max == QTok.Unbounded)
-    // an unbounded greedy run with neither a WITHIN horizon nor a state TTL
-    // never has to decide: an unbroken `A+` grows per-key state forever and
-    // emits nothing (documented below) — loud at plan time, not a silent leak
-    if (useNfa && withinMicros == 0L && ttlSeconds == 0L)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        "StreamingSequenceMatchQ: unbounded quantifier with neither withinMicros nor " +
-          "ttlSeconds — an unbroken greedy run grows per-key state without bound and " +
-          "never emits; set a WITHIN bound (and/or a TTL >= it) to cap state age")
-    val exps = if (useNfa) Seq.empty else expansions(pattern)
-    val nTok = pattern.size
-    require(pattern.nonEmpty, "pattern must name at least one token")
-    require(pattern.exists(_.max > 0), "pattern admits only the empty match")
-    require(withinMicros >= 0, s"withinMicros out of range: $withinMicros")
-    val withinUs = withinMicros
-    implicit val evEnc = Encoders.product[Ev]
-    implicit val outEnc = Encoders.product[QMatch]
-    implicit val stEnc = Encoders.product[Buf]
-    implicit val keyEnc = Encoders.STRING
-
-    def toTs(us: Long): Timestamp = {
-      val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-      t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-      t
+    pattern.foreach(t => require(!t.typ.contains("'"),
+      s"StreamingSequenceMatchQ: event type literal ${t.typ} contains a quote (')"))
+    val toks = pattern.indices.map { i =>
+      val t = pattern(i)
+      MatchRecognize.MrTok(s"v$i", t.min, if (t.max == QTok.Unbounded) None else Some(t.max),
+        t.reluctant)
     }
-
-    val sel = df.select(col(keyCol).cast("string").as("key"), col(typeCol).cast("string").as("typ"),
-      col(tsCol).cast("timestamp").as("ts"), col(tieCol).cast("long").as("tie"))
-    val srcQ = if (ttlSeconds > 0) sel.withWatermark("ts", ttlWatermarkDelay) else sel
-    srcQ.as[Ev]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Buf, QMatch](OutputMode.Append(), StreamingOps.ttlConf(ttlSeconds)) {
-        (key: String, rows: Iterator[Ev], state: GroupState[Buf]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var buf = state.getOption.getOrElse(Buf(Nil, Nil, Nil, Nil))
-          val out = Seq.newBuilder[QMatch]
-          var newest = Long.MinValue
-
-          /** Resolve the start at offset `p`: winner length (> 0), 0 = dead
-            * (every alternative broken), -1 = open (a longer alternative is
-            * still completable by future events). The within-horizon rule:
-            * once the NEWEST event is already past the within bound from this
-            * start, every not-yet-complete alternative is doomed too (its end
-            * would be even later) — the start decides NOW instead of waiting
-            * for a type-breaking event, which also bounds state age.
-            */
-          def resolve(types: IndexedSeq[String], tss: IndexedSeq[Long], p: Int): Int =
-            if (useNfa) nfaResolve(types, tss, p) else expResolve(types, tss, p)
-
-          /** NFA form of [[expResolve]] — same outcomes, no enumeration:
-            * counts explored greedily (longest first, backtracking); a run
-            * that reaches the buffer's NEWEST event while greedy wants more
-            * is OPEN (a future event may extend it) unless the within
-            * horizon already dooms every longer candidate — so `A+` decides
-            * only at a breaking event or the within bound, exactly Flink
-            * CEP's greedy contract.
-            */
-          def nfaResolve(types: IndexedSeq[String], tss: IndexedSeq[Long], p: Int): Int = {
-            val len = types.length
-            val futureViolated = withinUs > 0L && tss(len - 1) - tss(p) > withinUs
-            def go(tokI: Int, pos: Int): Int = { // >0 winner len, -1 open, 0 dead
-              if (tokI == nTok) return if (pos > p) pos - p else 0
-              val tok = pattern(tokI)
-              var avail = 0
-              while (pos + avail < len && types(pos + avail) == tok.typ &&
-                (withinUs == 0L || tss(pos + avail) - tss(p) <= withinUs)) avail += 1
-              if (tok.reluctant) {
-                // lazy: shortest first. A win or an open at count k blocks
-                // every longer count (a future event can only extend, never
-                // create a SHORTER completion), so the first non-dead result
-                // decides; only if every count <= avail is dead and the run
-                // itself could still grow does the start stay open.
-                var c = tok.min
-                val cap = math.min(tok.max, avail)
-                while (c <= cap) {
-                  val r = go(tokI + 1, pos + c)
-                  if (r != 0) return r
-                  c += 1
-                }
-                if (pos + avail == len && avail < tok.max && !futureViolated) return -1
-                0
-              } else {
-                if (pos + avail == len && avail < tok.max && !futureViolated) return -1
-                var c = math.min(tok.max, avail)
-                while (c >= tok.min) {
-                  val r = go(tokI + 1, pos + c)
-                  if (r != 0) return r
-                  c -= 1
-                }
-                0
-              }
-            }
-            go(0, p)
-          }
-
-          def expResolve(types: IndexedSeq[String], tss: IndexedSeq[Long], p: Int): Int = {
-            val avail = types.length - p
-            val futureViolated = withinUs > 0L && tss(types.length - 1) - tss(p) > withinUs
-            var open = false
-            var winner = -1
-            val it = exps.iterator
-            while (!open && winner < 0 && it.hasNext) {
-              val ex = it.next()
-              if (avail >= ex.size) {
-                var ok = true
-                var i = 0
-                while (ok && i < ex.size) { ok = types(p + i) == ex(i); i += 1 }
-                if (ok && (withinUs == 0L || tss(p + ex.size - 1) - tss(p) <= withinUs))
-                  winner = ex.size
-                // else: broken (type mismatch, or within violated with
-                // all its events already arrived) — try the next one
-              } else {
-                var prefix = true
-                var i = 0
-                while (prefix && i < avail) { prefix = types(p + i) == ex(i); i += 1 }
-                if (prefix && !futureViolated) open = true // completable by future events
-              }
-            }
-            if (winner >= 0) winner else if (open) -1 else 0
-          }
-
-          rows.toSeq.sortBy(e => (StreamingOps.tsMicros(e.ts), e.tie)).foreach { e =>
-            newest = math.max(newest, StreamingOps.tsMicros(e.ts))
-            var types = (buf.types :+ e.typ).toIndexedSeq
-            var tss = (buf.tsMicros :+ StreamingOps.tsMicros(e.ts)).toIndexedSeq
-            var ties = (buf.ties :+ e.tie).toIndexedSeq
-            if (skipPast) {
-              // SKIP PAST LAST ROW: the buffer head is the selection cursor.
-              // Only the oldest unresolved start may decide — a younger start
-              // with a complete alternative WAITS (an older open start can
-              // still match across it and consume its rows). Winner: emit and
-              // drop the match's len entries (the consumption); dead: drop
-              // one; open: stop until more events arrive.
-              var walking = true
-              while (walking && types.nonEmpty) {
-                resolve(types, tss, 0) match {
-                  case -1 => walking = false
-                  case 0 =>
-                    types = types.drop(1); tss = tss.drop(1); ties = ties.drop(1)
-                  case len =>
-                    out += QMatch(key, toTs(tss(0)), toTs(tss(len - 1)), ties(0), len)
-                    types = types.drop(len); tss = tss.drop(len); ties = ties.drop(len)
-                }
-              }
-              buf = Buf(types, tss, ties, Seq.fill(types.length)(true))
-            } else {
-              // SKIP TO NEXT ROW: every start decides independently
-              val undecided = (buf.undecided :+ true).toArray
-              var p = 0
-              while (p < types.length) {
-                if (undecided(p)) {
-                  resolve(types, tss, p) match {
-                    case -1 => ()
-                    case 0 => undecided(p) = false // every alternative broken
-                    case winner =>
-                      out += QMatch(key, toTs(tss(p)), toTs(tss(p + winner - 1)), ties(p), winner)
-                      undecided(p) = false
-                  }
-                }
-                p += 1
-              }
-              // drop the decided prefix: events BEFORE the oldest undecided
-              // start are never needed again (matches begin AT a start)
-              val keepFrom = undecided.indexOf(true) match {
-                case -1 => types.length
-                case i  => i
-              }
-              buf = Buf(types.drop(keepFrom), tss.drop(keepFrom), ties.drop(keepFrom),
-                undecided.drop(keepFrom).toSeq)
-            }
-          }
-          state.update(buf)
-          StreamingOps.armTtl(state, ttlSeconds, newest)
-          out.result().iterator
-          }
-      }
+    val defs = pattern.indices.map(i => Some(s"v$i.$typeCol = '${pattern(i).typ}'"))
+    StreamingMatchRecognize(df.withColumn(typeCol, col(typeCol).cast("string")), keyCol,
+      Seq(typeCol), tsCol, tieCol, toks, defs, withinMicros, ttlSeconds, ttlWatermarkDelay,
+      if (skipPast) MatchRecognize.SkipPastLastRow else MatchRecognize.SkipToNextRow)
+      .as[QMatch](Encoders.product[QMatch])
   }
 }

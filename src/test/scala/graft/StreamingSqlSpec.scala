@@ -289,6 +289,51 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("streaming MATCH_RECOGNIZE with literal DEFINEs drops a late event instead of " +
+    "appending it out of order") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[(String, String, Timestamp)]
+    StatementCatalog.reset()
+    Seq("late_lit_matches", "late_lit_events").foreach { t =>
+      if (TableRegistry.exists(t)) TableRegistry.dropTable(t)
+      spark.catalog.dropTempView(t)
+    }
+    val mem = MemoryStream[(String, String, Timestamp)]
+    val schema = mem.toDF().toDF("u", "t", "ts").schema
+    TableRegistry.createTable(TableRegistry.TableDef("late_lit_events", Some(schema),
+      load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      loadStream = Some(_ => mem.toDF().toDF("u", "t", "ts"))))
+    SqlFrontend.execute(spark,
+      """CREATE TABLE late_lit_matches AS
+        |SELECT * FROM late_lit_events MATCH_RECOGNIZE (
+        |  PARTITION BY u ORDER BY ts
+        |  MEASURES A.ts AS start_ts, B.ts AS end_ts
+        |  ONE ROW PER MATCH
+        |  PATTERN (A B)
+        |  DEFINE A AS A.t = 'A', B AS B.t = 'B')""".stripMargin)
+    val q = StatementCatalog.get("late_lit_matches").collect {
+      case s: StatementCatalog.Standing => s.query
+    }.getOrElse(fail("MATCH_RECOGNIZE CTAS over a stream must register a standing statement"))
+    def ev(t: String, s: String) = ("u1", t, Timestamp.valueOf(s"2024-01-01 $s"))
+    def got = SqlFrontend.execute(spark, "SELECT start_ts, end_ts FROM late_lit_matches")
+      .collect().map(r => (r.getTimestamp(0), r.getTimestamp(1))).toSet
+    try {
+      mem.addData(ev("A", "00:02:00")); q.processAllAvailable()
+      // B@00:01 arrives a micro-batch later, below the buffered A@00:02
+      mem.addData(ev("B", "00:01:00")); q.processAllAvailable()
+      assert(got.isEmpty, s"a late event must not complete a match ending before it starts: $got")
+      mem.addData(ev("A", "00:03:00"), ev("B", "00:04:00")); q.processAllAvailable()
+      assert(got == Set((Timestamp.valueOf("2024-01-01 00:03:00"),
+        Timestamp.valueOf("2024-01-01 00:04:00"))), s"in-order rows still match: $got")
+    } finally {
+      SqlFrontend.execute(spark, "DROP TABLE late_lit_matches")
+      TableRegistry.dropTable("late_lit_events")
+      StatementCatalog.reset()
+    }
+  }
+
   test("streaming MATCH_RECOGNIZE value route: the ticker PREV idiom as a standing statement") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
