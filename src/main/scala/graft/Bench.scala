@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** One session recipe for Bench AND SpotTime, so spot-times in BASELINE.md
+  /** One session recipe for Bench AND Smoke, so spot-times in BASELINE.md
     * measure the same environment as the headline runs. The shared config
     * set lives in [[graft.core.Sessions]] (r16 — one definition); the one
     * bench-specific extra: bench data arrives as ONE parquet file per table

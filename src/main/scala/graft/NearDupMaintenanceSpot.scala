@@ -37,15 +37,14 @@ object NearDupMaintenanceSpot {
 
     val (nC, dC, secC) = run(s"$tmp/storeC", s"$tmp/sinkC", compactAfterB1 = true)
     val (nU, dU, secU) = run(s"$tmp/storeU", s"$tmp/sinkU", compactAfterB1 = false)
-    val keptEqual = StreamingNearDup.keptDocs(spark, s"$tmp/storeC", s"$tmp/sinkC")
-      .select("doc_id").exceptAll(
-        StreamingNearDup.keptDocs(spark, s"$tmp/storeU", s"$tmp/sinkU").select("doc_id"))
-      .isEmpty && nC == nU
+    val p = Drain.parity(
+      StreamingNearDup.keptDocs(spark, s"$tmp/storeC", s"$tmp/sinkC").select("doc_id"),
+      StreamingNearDup.keptDocs(spark, s"$tmp/storeU", s"$tmp/sinkU").select("doc_id"))
     val storeFiles = Option(new java.io.File(s"$tmp/storeC").listFiles())
       .map(_.count(_.isDirectory)).getOrElse(-1)
-    val ok = keptEqual && nC > 0
-    println(f"""[neardupspot] {"sf":"$sfDir","keptCompacted":$nC,"keptControl":$nU,"distinctTexts":$dC,"secCompacted":$secC%.1f,"secControl":$secU%.1f,"storeDirsAfterCompact":$storeFiles,"keptEqual":$keptEqual,"ok":$ok}""")
-    spark.stop()
-    if (!ok) sys.exit(1)
+    val report = Drain.report("neardupspot", p.ok)("sf" -> sfDir, "keptCompacted" -> nC,
+      "keptControl" -> nU, "distinctTexts" -> dC, "secCompacted" -> secC, "secControl" -> secU,
+      "storeDirsAfterCompact" -> storeFiles, "keptEqual" -> (p.extra == 0 && p.missing == 0))
+    Drain.exit(spark, report)
   }
 }

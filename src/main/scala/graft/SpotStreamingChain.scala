@@ -58,7 +58,6 @@ object SpotStreamingChain {
     import graft.core.Tables
 
     val t0 = System.nanoTime()
-    val feedDir = java.nio.file.Files.createTempDirectory("chainfeed").toString
     val claims = Tables(spark, sfDir, "events").select(
         col("event_id").as("claim_id"), col("event_type").as("city"),
         col("ts").cast("timestamp").as("ts"), col("value").as("amount"))
@@ -69,29 +68,11 @@ object SpotStreamingChain {
     import spark.implicits._
     val sentinels = cities.zipWithIndex.map { case (c, i) => (-1L - i, c, sentinelTs, 0.0) }
       .toSeq.toDF("claim_id", "city", "ts", "amount")
+    // the sentinels carry the latest event time, so they land in the last slice
+    val feed = Drain.feed(claims.unionByName(sentinels), "ts", slices, "chainfeed")
+    val feedDir = feed.dir
 
-    // event-time-ordered slice boundaries (approx quantiles are fine — the
-    // contract is only that later slices carry later event time; computed on
-    // the epoch-seconds projection, approxQuantile takes numeric columns)
-    val bounds = claims.select(unix_timestamp(col("ts")).cast("double").as("s"))
-      .stat.approxQuantile("s", (1 until slices).map(_.toDouble / slices).toArray, 0.001)
-    def sliceOf(i: Int) = {
-      val lo = if (i == 0) None else Some(bounds(i - 1))
-      val hi = if (i == slices - 1) None else Some(bounds(i))
-      val base = claims.withColumn("__s", unix_timestamp(col("ts")).cast("double"))
-      val f = (lo, hi) match {
-        case (None, Some(h))    => base.filter(col("__s") < h)
-        case (Some(l), Some(h)) => base.filter(col("__s") >= l && col("__s") < h)
-        case (Some(l), None)    => base.filter(col("__s") >= l)
-        case _                  => base
-      }
-      val sl = f.drop("__s")
-      if (i == slices - 1) sl.unionByName(sentinels) else sl
-    }
-    def writeSlice(i: Int): Unit =
-      sliceOf(i).write.mode("append").parquet(feedDir)
-
-    val schema = claims.unionByName(sentinels).schema
+    val schema = feed.schema
     TableRegistry.createTable(TableRegistry.TableDef("cq_claims", Some(schema),
       watermarkCol = Some("ts"), watermarkDelay = Some("1 minute"),
       load = s => s.read.schema(schema).parquet(feedDir),
@@ -99,7 +80,7 @@ object SpotStreamingChain {
     // chain_claims_static: the REAL claims snapshot both twins join back to
     claims.createOrReplaceTempView("cq_claims_static")
 
-    writeSlice(0) // the file-stream source needs at least one file at plan time
+    feed.publish(0) // the file-stream source needs at least one file at plan time
     SqlFrontend.execute(spark,
       "CREATE TABLE cq_norm AS SELECT claim_id, city, ts, amount FROM cq_claims")
     // the chained sink table declares its OWN event-time watermark — the
@@ -133,9 +114,7 @@ object SpotStreamingChain {
         | AND c.ts >= s.window_time - INTERVAL '6' HOUR
         | AND c.ts <= s.window_time""".stripMargin)
 
-    def q(name: String) = StatementCatalog.get(name).collect {
-      case s: StatementCatalog.Standing => s.query
-    }.getOrElse(sys.error(s"'$name' is not standing"))
+    def q(name: String) = Drain.standing(name)
     def drainAll(): Unit = {
       q("cq_norm").processAllAvailable()
       if (q("cq_spikes").isActive) q("cq_spikes").processAllAvailable()
@@ -149,7 +128,7 @@ object SpotStreamingChain {
         SqlFrontend.execute(spark, "STOP STATEMENT 'cq_spikes'")
         println(s"[chain] STOPPED cq_spikes after slice ${i - 1}")
       }
-      writeSlice(i)
+      feed.publish(i)
       if (restartAfter > 0 && i == restartAfter) {
         if (mode == "restart") {
           // the upstream stage keeps committing while the middle one is down
@@ -195,29 +174,19 @@ object SpotStreamingChain {
         "SELECT claim_id, city, window_time FROM cq_queue")
       .select(col("claim_id"), col("city"), col("window_time").cast("string").as("wt"))
 
-    val nChain = chainQueue.count()
-    val nBatch = batchQueue.count()
-    val missing = batchQueue.exceptAll(chainQueue).count()
-    val extra = chainQueue.exceptAll(batchQueue).count()
-    val ok = nChain > 0 && missing == 0 && extra == 0
-    val totalSec = (System.nanoTime() - t0) / 1e9
-    println(f"""[chain] {"chain":"lab4-3stage","sf":"$sfDir","slices":$slices,""" +
-      f""""restartAfter":$restartAfter,"mode":"$mode","restarted":$restarted,""" +
-      f""""chainRows":$nChain,"batchRows":$nBatch,"missing":$missing,"extra":$extra,""" +
-      f""""drainSec":$drainSec%.1f,"totalSec":$totalSec%.1f,"ok":$ok}""")
+    val p = Drain.parity(chainQueue, batchQueue)
+    val report = Drain.report("chain", p.ok)("chain" -> "lab4-3stage", "sf" -> sfDir,
+      "slices" -> slices, "restartAfter" -> restartAfter, "mode" -> mode, "restarted" -> restarted,
+      "chainRows" -> p.streamed, "batchRows" -> p.batch, "missing" -> p.missing, "extra" -> p.extra,
+      "drainSec" -> drainSec, "totalSec" -> (System.nanoTime() - t0) / 1e9)
 
     // drop the standing statements and remove the multi-GB feed/sink dirs
     Seq("cq_queue", "cq_spikes", "cq_norm").foreach(t =>
       SqlFrontend.execute(spark, s"DROP TABLE $t"))
     TableRegistry.dropTable("cq_claims")
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) p.listFiles().foreach(rmrf)
-      p.delete(): Unit
-    }
-    rmrf(new java.io.File(feedDir))
-    rmrf(new java.io.File(s"${System.getProperty("java.io.tmpdir")}/graft_streams/" +
-      spark.sparkContext.applicationId))
-    spark.stop()
-    if (!ok) sys.exit(1)
+    feed.delete()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(
+      s"${System.getProperty("java.io.tmpdir")}/graft_streams/${spark.sparkContext.applicationId}"))
+    Drain.exit(spark, report)
   }
 }

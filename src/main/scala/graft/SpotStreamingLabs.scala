@@ -32,7 +32,6 @@ object SpotStreamingLabs {
     val nc = if (ann) Some(500) else None
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val tmp = java.nio.file.Files.createTempDirectory("labstream").toString
-    var failed = false
 
     // ------------------------------------------------------------- lab3
     val t3 = System.nanoTime()
@@ -48,14 +47,11 @@ object SpotStreamingLabs {
       .select(col("zone"), col("window_start").cast("string").as("window_start")).distinct()
     val batch3 = graft.pipelines.Labs.lab3Fleet(spark, sfDir)
       .select(col("zone"), col("window_start").cast("string").as("window_start")).distinct()
-    val nStream3 = streamSet3.count()
-    val nBatch3 = batch3.count()
-    val missing = batch3.exceptAll(streamSet3).count()
-    val extra = streamSet3.exceptAll(batch3).count()
     val zoneCount = batch3.select("zone").distinct().count()
-    val ok3 = extra == 0 && missing <= zoneCount && nStream3 > 0
-    if (!ok3) failed = true
-    println(f"""[labstream] {"lab":"lab3FleetStreaming","sec":$sec3%.2f,"streamSurges":$nStream3,"batchSurges":$nBatch3,"missingFinalWindows":$missing,"extra":$extra,"ok":$ok3}""")
+    val p3 = Drain.parity(streamSet3, batch3, allowedMissing = zoneCount)
+    val lab3 = Drain.report("labstream", p3.ok)("lab" -> "lab3FleetStreaming", "sec" -> sec3,
+      "streamSurges" -> p3.streamed, "batchSurges" -> p3.batch,
+      "missingFinalWindows" -> p3.missing, "extra" -> p3.extra)
 
     // ------------------------------------------------------------- lab4
     val t4 = System.nanoTime()
@@ -66,8 +62,7 @@ object SpotStreamingLabs {
     val enum5 = Seq("APPROVE", "APPROVE_PARTIAL", "REQUEST_DOCS", "DENY_INELIGIBLE", "DENY_FRAUD")
     val streamed4 = spark.read.parquet(s"$tmp/l4sink").select(col("claim_id"), col("verdict"))
     val batch4 = graft.pipelines.Labs.lab4Fraud(spark, sfDir).select(col("claim_id"), col("verdict"))
-    val nStream4 = streamed4.count()
-    val nBatch4 = batch4.count()
+    val ids = Drain.parity(streamed4.select("claim_id"), batch4.select("claim_id"))
     // claim-id-keyed join: per-claim verdict parity without collecting either
     // result set; counts are the only driver-side values
     val joined = streamed4.as("s").join(batch4.as("b"), Seq("claim_id"))
@@ -80,13 +75,11 @@ object SpotStreamingLabs {
     val verdictDiffs =
       if (ann) 0L else joined.filter(col("s.verdict") =!= col("b.verdict")).count()
     val enumOk = streamed4.filter(!col("verdict").isin(enum5: _*)).count() == 0
-    val keySetEqual = streamed4.select("claim_id").exceptAll(batch4.select("claim_id")).count() == 0 &&
-      batch4.select("claim_id").exceptAll(streamed4.select("claim_id")).count() == 0
-    val ok4 = nStream4 > 0 && verdictDiffs == 0 && enumOk && (!ann || keySetEqual)
-    if (!ok4) failed = true
-    println(f"""[labstream] {"lab":"lab4FraudStreaming","ann":$ann,"sec":$sec4%.2f,"streamJudged":$nStream4,"batchJudged":$nBatch4,"commonClaims":$common,"verdictDiffs":$verdictDiffs,"ok":$ok4}""")
-
-    spark.stop()
-    if (failed) sys.exit(1)
+    val keySetEqual = ids.extra == 0 && ids.missing == 0
+    val lab4 = Drain.report("labstream", ids.streamed > 0 && verdictDiffs == 0 && enumOk &&
+        (!ann || keySetEqual))("lab" -> "lab4FraudStreaming", "ann" -> ann, "sec" -> sec4,
+      "streamJudged" -> ids.streamed, "batchJudged" -> ids.batch, "commonClaims" -> common,
+      "verdictDiffs" -> verdictDiffs)
+    Drain.exit(spark, lab3, lab4)
   }
 }

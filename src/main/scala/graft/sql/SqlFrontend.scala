@@ -1043,9 +1043,7 @@ object SqlFrontend {
       (inner.trim, end)
     }
     require(patText.nonEmpty, "MATCH_RECOGNIZE requires a non-empty PATTERN")
-    val withinMicros = "(?is)^\\s*WITHIN\\s+INTERVAL\\s+'(\\d+)'\\s+(\\w+)".r
-      .findFirstMatchIn(body.substring(patEnd))
-      .map(mm => graft.operators.Cumulate.durationMicros(s"${mm.group(1)} ${mm.group(2)}"))
+    val withinMicros = parseWithin(body.substring(patEnd))
     // alternation / grouping / PERMUTE / exclusion → MrPattern's branch
     // expansion, always routed to the NFA cursor scan (scanPattern); a plain
     // whitespace-separated quantified sequence keeps the linear fast paths
@@ -1882,6 +1880,19 @@ object SqlFrontend {
       seasonalPeriod = key("seasonalPeriod", "0").toInt,
       dOrder = key("dOrder", "1").toInt)
   }
+
+  /** The optional `WITHIN INTERVAL 'n' unit` right after a MATCH_RECOGNIZE
+    * PATTERN's closing paren, in micros. Both the batch and the standing
+    * front end read it here, so a zero or negative bound fails the same way
+    * on every route.
+    */
+  private[sql] def parseWithin(afterPattern: String): Option[Long] =
+    "(?is)^\\s*WITHIN\\s+INTERVAL\\s+'(-?\\d+)'\\s+(\\w+)".r.findFirstMatchIn(afterPattern)
+      .map { mm =>
+        require(mm.group(1).toLong > 0,
+          s"WITHIN bound must be positive, got INTERVAL '${mm.group(1)}' ${mm.group(2)}")
+        graft.operators.Cumulate.durationMicros(s"${mm.group(1)} ${mm.group(2)}")
+      }
 
   // ------------------------------------------------- balanced-call utilities
 

@@ -514,8 +514,6 @@ object StreamPlanner {
       if (end < 0) sys.error("MATCH_RECOGNIZE: unbalanced parentheses in PATTERN")
       (inner.trim, end)
     }
-    val withinM = "(?is)^\\s*WITHIN\\s+INTERVAL\\s+'(\\d+)'\\s+(\\w+)".r
-      .findFirstMatchIn(body.substring(patEnd))
     // composite grammars (alternation/grouping/PERMUTE — r11, beyond Flink
     // CEP's SQL surface) expand to preference-ordered branches and ride
     // applyPattern; {- exclusion -} stays refused (ONE-ROW
@@ -553,11 +551,8 @@ object StreamPlanner {
     defSrc.foreach { case (v, _) =>
       require(varNames.contains(v), s"DEFINE for unknown pattern variable '$v'") }
     // WITHIN in MICROS (r13) — sub-second CEP horizons (fraud bursts) now
-    // match the batch route's precision; the operator compares event-time
-    // micros directly, so no whole-seconds restriction remains
-    val withinMicros = withinM.map { mm =>
-      graft.operators.Cumulate.durationMicros(s"${mm.group(1)} ${mm.group(2)}")
-    }.getOrElse(0L)
+    // match the batch route's precision; 0 = no horizon (none was written)
+    val withinMicros = SqlFrontend.parseWithin(body.substring(patEnd)).getOrElse(0L)
 
     // MEASURES: ORDER-BY-column refs map to the operator's match_start_ts /
     // match_end_ts; any other `[FIRST|LAST](var.col)` is a VALUE measure
@@ -824,7 +819,9 @@ object StreamPlanner {
         allRows = allRowsPerMatch, subsets = opSubsets,
         // undecided-at-expiry runs surface as a NAMED accumulator (r12) —
         // visible in the Spark UI / status without an oracle diff
-        openTailAcc = Some(spark.sparkContext.longAccumulator(s"mr_open_tails_$tbl")))
+        openTailAcc = Some(spark.sparkContext.longAccumulator(s"mr_open_tails_$tbl")),
+        stateProbe = Some(new graft.streaming.StreamingOps.MaxAccumulator)
+          .map { p => spark.sparkContext.register(p, s"mr_peak_state_rows_$tbl"); p })
     }.toDF()
     // restore the partition columns' ORIGINAL types: a single column casts
     // the operator's string key back; a composite key re-reads the typed

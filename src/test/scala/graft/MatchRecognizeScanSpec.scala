@@ -755,4 +755,25 @@ class MatchRecognizeScanSpec extends SparkSpec {
       .map(_.name).filter(n => n.startsWith("__graft_mr_") || n.startsWith("__graft_llmops_"))
     assert(leftover.isEmpty, s"ephemeral rewrite views leaked: ${leftover.mkString(", ")}")
   }
+
+  // WITHIN INTERVAL '0' used to mean three things: no bound (standing),
+  // single-instant matches only (batch bounded route), an error (batch scan)
+  private def zeroWithin(pattern: String): IllegalArgumentException = {
+    ticker.createOrReplaceTempView("mr_ticker")
+    intercept[IllegalArgumentException](SqlFrontend.execute(spark,
+      s"""SELECT * FROM mr_ticker MATCH_RECOGNIZE (
+         |  PARTITION BY k ORDER BY ts, id MEASURES FIRST(S.id) AS s ONE ROW PER MATCH
+         |  PATTERN ($pattern) WITHIN INTERVAL '0' MINUTE
+         |  DEFINE D AS D.v < PREV(D.v), U AS U.v > PREV(U.v))""".stripMargin).collect())
+  }
+
+  test("WITHIN INTERVAL '0' is refused on the bounded route") {
+    val e = zeroWithin("S D U")
+    assert(e.getMessage.contains("WITHIN bound must be positive"), e.getMessage)
+  }
+
+  test("WITHIN INTERVAL '0' is refused on the scan route") {
+    val e = zeroWithin("S D+ U+")
+    assert(e.getMessage.contains("WITHIN bound must be positive"), e.getMessage)
+  }
 }

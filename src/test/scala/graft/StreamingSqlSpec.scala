@@ -1018,6 +1018,35 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("streaming MATCH_RECOGNIZE: WITHIN INTERVAL '0' is refused, not read as unbounded") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[(String, Timestamp, Double)]
+    StatementCatalog.reset()
+    if (TableRegistry.exists("w0_events")) TableRegistry.dropTable("w0_events")
+    val mem = MemoryStream[(String, Timestamp, Double)]
+    val schema = mem.toDF().toDF("u", "ts", "v").schema
+    TableRegistry.createTable(TableRegistry.TableDef("w0_events", Some(schema),
+      load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      loadStream = Some(_ => mem.toDF().toDF("u", "ts", "v"))))
+    try {
+      val e = intercept[IllegalArgumentException](SqlFrontend.execute(spark,
+        """CREATE TABLE w0_matches AS
+          |SELECT * FROM w0_events MATCH_RECOGNIZE (
+          |  PARTITION BY u ORDER BY ts
+          |  MEASURES FIRST(A.ts) AS s_ts ONE ROW PER MATCH
+          |  PATTERN (A B) WITHIN INTERVAL '0' SECOND
+          |  DEFINE B AS B.v > PREV(B.v))""".stripMargin))
+      assert(e.getMessage.contains("WITHIN bound must be positive"), e.getMessage)
+      assert(StatementCatalog.get("w0_matches").isEmpty, "a refused CTAS must not register")
+    } finally {
+      if (TableRegistry.exists("w0_matches")) SqlFrontend.execute(spark, "DROP TABLE w0_matches")
+      TableRegistry.dropTable("w0_events")
+      StatementCatalog.reset()
+    }
+  }
+
   test("streaming MATCH_RECOGNIZE: per-step time-gap DEFINE over the ORDER BY column equals batch (r13)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
