@@ -81,6 +81,8 @@ object SpotStreamingChain {
     claims.createOrReplaceTempView("cq_claims_static")
 
     feed.publish(0) // the file-stream source needs at least one file at plan time
+    // rows cq_spikes' anomaly stage drops behind a city's last window
+    val late = new Drain.Accumulables(spark, "anomaly_late_rows_")
     SqlFrontend.execute(spark,
       "CREATE TABLE cq_norm AS SELECT claim_id, city, ts, amount FROM cq_claims")
     // the chained sink table declares its OWN event-time watermark — the
@@ -178,7 +180,9 @@ object SpotStreamingChain {
     val report = Drain.report("chain", p.ok)("chain" -> "lab4-3stage", "sf" -> sfDir,
       "slices" -> slices, "restartAfter" -> restartAfter, "mode" -> mode, "restarted" -> restarted,
       "chainRows" -> p.streamed, "batchRows" -> p.batch, "missing" -> p.missing, "extra" -> p.extra,
+      "anomalyLateRows" -> late.sum("anomaly_late_rows_"),
       "drainSec" -> drainSec, "totalSec" -> (System.nanoTime() - t0) / 1e9)
+    late.stop()
 
     // drop the standing statements and remove the multi-GB feed/sink dirs
     Seq("cq_queue", "cq_spikes", "cq_norm").foreach(t =>

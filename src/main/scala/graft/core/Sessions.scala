@@ -28,8 +28,7 @@ import org.apache.spark.sql.SparkSession
   *     the scaladoc history at Graft.scala, r7/r15);
   *   - the RocksDB state store provider — per-key streaming state off-heap
   *     (the 100M+ standing-key backend), and the opt-in that routes
-  *     transformWithState operators (TtlAnomaly, StreamingMatchRecognize's
-  *     default engine);
+  *     transformWithState engine (StreamingMatchRecognize's default);
   *   - Spark's generated-class cache (`codegen.cache.maxEntries`) raised
   *     from 100 to 4096 — graft re-plans every execution, so a class is
   *     compiled once only if the cache holds the working set. Each class is

@@ -106,8 +106,9 @@ object TableRegistry {
 
   /** The session's `sql.state-ttl` as whole seconds — the knob the reference
     * sets before its stateful queries (`'1 HOURS'` LAB1-Walkthrough.md:120,
-    * `'14 d'` LAB4-Walkthrough.md:124). The stateful streaming planners read
-    * this and pass it to the operators' event-time TTL (StreamingOps.ttlConf).
+    * `'14 d'` LAB4-Walkthrough.md:124). The standing MATCH_RECOGNIZE stage
+    * reads this and passes it to the operator's event-time TTL
+    * (StreamingOps.ttlConf).
     * None when unset (state unbounded, the operators' default).
     */
   def stateTtlSeconds: Option[Long] = get("sql.state-ttl").map(durationSeconds)

@@ -262,6 +262,12 @@ object StreamPlanner {
 
   /** Plan the SELECT text into a streaming DataFrame (see object doc). */
   private[graft] def plan(spark: SparkSession, select: String): DataFrame = {
+    // a versioned STREAM table has no standing operator: refuse here, before
+    // the batch rewrite meets its mangled view name
+    SqlFrontend.TemporalJoinRe.findAllMatchIn(select).map(m => SqlFrontend.unqualify(m.group(2)))
+      .find(t => TableRegistry.exists(t) && TableRegistry.resolve(t).loadStream.isDefined)
+      .foreach(t => throw new IllegalArgumentException(s"a standing temporal table join " +
+        s"(FOR SYSTEM_TIME AS OF) over STREAM table '$t' is not supported; query its snapshot"))
     val (ctes, finalSelect) = splitWith(select)
     var views = Map.empty[String, String]
     TableRegistry.streamTableNames
@@ -820,6 +826,7 @@ object StreamPlanner {
         // undecided-at-expiry runs surface as a NAMED accumulator (r12) —
         // visible in the Spark UI / status without an oracle diff
         openTailAcc = Some(spark.sparkContext.longAccumulator(s"mr_open_tails_$tbl")),
+        lateRows = Some(spark.sparkContext.longAccumulator(s"mr_late_rows_$tbl")),
         stateProbe = Some(new graft.streaming.StreamingOps.MaxAccumulator)
           .map { p => spark.sparkContext.register(p, s"mr_peak_state_rows_$tbl"); p })
     }.toDF()
@@ -910,9 +917,13 @@ object StreamPlanner {
     // to string for the state key, and nested string renderings are
     // ambiguous — guard every arity
     graft.core.KeyImage.requireAtomic(input, parts.map(p => expr(p)))
+    // rows the operator drops behind their key's frontier, named after the
+    // stage's source view like the MR stage's accumulators
+    val src = "^\\s*(\\w+)".r.findFirstMatchIn(fromPart).fold("subquery")(_.group(1))
     val det = StreamingAnomaly.withPayload(input,
       keyExpr, expr(ord), expr(args.head),
-      to_json(struct(input.columns.map(col).toIndexedSeq: _*), jsonOpts), cfg)
+      to_json(struct(input.columns.map(col).toIndexedSeq: _*), jsonOpts), cfg,
+      lateRows = Some(spark.sparkContext.longAccumulator(s"anomaly_late_rows_$src")))
     val expanded = det.toDF()
       .select(
         from_json(col("payload"), input.schema, jsonOpts).as("__r"),

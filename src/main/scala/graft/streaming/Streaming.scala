@@ -43,11 +43,11 @@ object StreamingOps {
   def tsMicros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
 
-  /** Event-time state TTL for the user-keyed behavioral twins — the analog of
+  /** Event-time state TTL for StreamingMatchRecognize — the analog of
     * the reference's `SET 'sql.state-ttl' = '14 d'` (LAB4-Walkthrough.md:124):
     * a key whose newest event is more than `ttlSeconds` behind the watermark
     * has its state EVICTED (dropped, not flushed — Flink TTL semantics; an
-    * open funnel/interval/trail simply disappears), and a later event of the
+    * open match attempt simply disappears), and a later event of the
     * same key re-enters with FRESH state, exactly as a first-ever event would.
     * Without a TTL the state store grows monotonically with key cardinality —
     * users/entities on a 100 TB stream — which is the one structure a
@@ -57,7 +57,7 @@ object StreamingOps {
     * requires a streaming input; the operator installs the event-time
     * watermark itself (delay = `ttlWatermarkDelay`), which also engages
     * Spark's late-row filter — rows older than the watermark are dropped,
-    * consistent with the family's in-order-source contract.
+    * consistent with the operator's own late-row rule.
     */
   private[streaming] def ttlConf(ttlSeconds: Long): org.apache.spark.sql.streaming.GroupStateTimeout = {
     require(ttlSeconds >= 0, s"ttlSeconds must be >= 0, got $ttlSeconds")

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.util.LongAccumulator
 
 import graft.anomaly.AnomalyDetector
 
@@ -18,9 +19,12 @@ import graft.anomaly.AnomalyDetector
   *   - state = ring buffer of ≤ maxTrainingSize recent values per key — the
   *     reference's own state bound ("prevents memory issues",
   *     LAB4-Walkthrough.md:188);
-  *   - rows within a trigger batch are processed in event-time order;
-  *     cross-trigger ordering is the source's responsibility (the reference
-  *     replays sorted for the same reason, scripts/publish_lab3_data.py:357-370);
+  *   - rows within a trigger batch are processed in event-time order; a row
+  *     strictly older than its key's frontier (the last folded row's ts,
+  *     `BufferState.lastTsMicros`) arrived behind it in a later trigger and
+  *     is DROPPED, leaving buffer, forecast and period untouched — Flink's
+  *     rule for rows behind the watermark, and StreamingMatchRecognize's.
+  *     `lateRows` counts the drops;
   *   - emits exactly the batch detector's contract: nulls until
   *     minTrainingSize, then forecast/upper/lower/is_anomaly.
   *
@@ -60,7 +64,8 @@ object StreamingAnomaly {
     * the stage's input is already the tumbled aggregate stream).
     */
   def withPayload(df: DataFrame, keyExpr: Column, tsExpr: Column, valueExpr: Column,
-                  payloadExpr: Column, cfg: AnomalyDetector.Config): Dataset[DetectionP] = {
+                  payloadExpr: Column, cfg: AnomalyDetector.Config,
+                  lateRows: Option[LongAccumulator] = None): Dataset[DetectionP] = {
     implicit val pointEnc = Encoders.product[PointP]
     implicit val detEnc = Encoders.product[DetectionP]
     implicit val stateEnc = Encoders.product[BufferState]
@@ -79,7 +84,10 @@ object StreamingAnomaly {
           var buf = state.getOption.map(_.values).getOrElse(Nil)
           var lastTs = state.getOption.map(_.lastTsMicros).getOrElse(Long.MinValue)
           var period = state.getOption.map(_.period).getOrElse(0)
-          val out = rows.toSeq.sortBy(p => StreamingOps.tsMicros(p.ts)).map { p =>
+          val (late, inOrder) = rows.toSeq.sortBy(p => StreamingOps.tsMicros(p.ts))
+            .partition(p => StreamingOps.tsMicros(p.ts) < lastTs)
+          if (late.nonEmpty) lateRows.foreach(_.add(late.size.toLong))
+          val out = inOrder.map { p =>
             // forecast math lives in AnomalyDetector.step — one copy shared
             // with the batch sequential path and the pure-Scala twin, so
             // batch ≡ streaming holds for every forecast option (zband, ar,

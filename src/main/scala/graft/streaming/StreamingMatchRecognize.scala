@@ -53,8 +53,8 @@ import graft.operators.{MatchRecognize, MrConditions, MrMatcher, MrProg}
   * micro-batch, but the buffer is append-only across batches — in-order
   * arrival per key across micro-batches is the parity contract's assumption
   * (the bounded replays and Kafka-per-key ordering satisfy it). A late event
-  * arriving BELOW the buffer tail is detected, counted, logged loudly at
-  * ERROR, and DROPPED — the watermark rule applied even when no TTL
+  * arriving BELOW the buffer tail is detected, counted in `lateRows`, logged
+  * loudly at ERROR, and DROPPED — the watermark rule applied even when no TTL
   * watermark is configured — rather than silently corrupting PREV navigation
   * and run detection.
   *
@@ -246,7 +246,8 @@ object StreamingMatchRecognize extends Serializable {
                    allRows: Boolean = false,
                    subsets: Seq[(String, Seq[Int])] = Seq.empty,
                    openTailAcc: Option[org.apache.spark.util.LongAccumulator] = None,
-                   oneRowClassifier: Boolean = false): DataFrame = {
+                   oneRowClassifier: Boolean = false,
+                   lateRows: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val nTok = varNames.size
     // cursor-mode strategies (skip-past and the variable-targeted skips, r14)
     // share the selection-frontier walk: emission is strictly positional, so
@@ -754,12 +755,14 @@ object StreamingMatchRecognize extends Serializable {
                 }
               }
             }
-            if (late > 0)
+            if (late > 0) {
+              lateRows.foreach(_.add(late.toLong))
               org.slf4j.LoggerFactory.getLogger(getClass).error(
                 s"StreamingMatchRecognize: dropped $late late event(s) for key '$key' " +
                   "arriving below the buffer tail — per-key event-time order across " +
                   "micro-batches is the operator's contract (see scaladoc); configure " +
                   "a TTL watermark or repair the upstream ordering")
+            }
             (Buf(cellsB.toArray, tssB.toArray, tiesB.toArray,
               cursor, undecB.toArray, matchSeq, pendB.toArray), out.result(), newest)
           }
@@ -771,7 +774,7 @@ object StreamingMatchRecognize extends Serializable {
     // heap-backed flatMapGroupsWithState store is the executor-memory
     // ceiling — the RocksDB state store is the scale-safe backend, reached
     // through transformWithState (ValueState + event-time timers for the
-    // TTL, the TtlAnomaly pattern). Both engines run the SAME processKey, so
+    // TTL). Both engines run the SAME processKey, so
     // outputs are identical by construction; the session opts in by setting
     // the RocksDB provider (Graft.session/Bench.session do), and sessions on
     // the default heap provider — or batch execution of this operator — keep

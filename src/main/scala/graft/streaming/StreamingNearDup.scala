@@ -21,7 +21,7 @@ import graft.llmops.Dedup
   * `a` and `c` because `b` was never stored) — the standard online-dedup
   * contract, since re-clustering history per batch would be O(corpus).
   *
-  * Store layout (at-least-once safe, the [[StreamingRollup]] discipline):
+  * Store layout (at-least-once safe):
   *  - `store/sigs_b<id>` (band, bucket, doc_id) and `store/sh_b<id>`
   *    (doc_id, sh) — APPEND-ONLY per-batch dirs, written with
   *    mode=overwrite so a re-delivered batch rewrites its own dirs

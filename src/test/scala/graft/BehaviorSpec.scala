@@ -76,72 +76,13 @@ class BehaviorSpec extends SparkSpec {
     assert(cells == Map(0L -> 2L, 1L -> 1L))
   }
 
-  test("streaming funnel commits match the batch funnel across micro-batches") {
+  test("funnel rejects duplicate stage names") {
     import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = org.apache.spark.sql.Encoders.product[(Long, String, java.sql.Timestamp)]
-    val fixture = Seq(
-      (1L, "view", ts(1)), (1L, "click", ts(2)), (1L, "purchase", ts(3)),
-      (2L, "click", ts(1)), (2L, "view", ts(2)), (2L, "purchase", ts(3)),
-      (3L, "view", ts(5)), (3L, "click", ts(5)),
-      (4L, "click", ts(1)))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp)]
-    val stream = graft.streaming.StreamingFunnel(
-      mem.toDF().toDF("user_id", "event_type", "ts"),
-      "user_id", "event_type", "ts", Seq("view", "click", "purchase"))
-    val q = stream.writeStream.format("memory").queryName("funnel_sink")
-      .outputMode("append").start()
-    try {
-      val (b1, b2) = fixture.splitAt(4) // split mid-user-1 across triggers
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val commits = spark.table("funnel_sink")
-      .collect().map(r => (r.getAs[String]("user"), r.getAs[String]("stage")) -> r.getAs[java.sql.Timestamp]("ts")).toMap
-    val batch = Behavior.funnel(
-      fixture.toDF("user_id", "event_type", "ts"), "user_id", "event_type", "ts",
-      Seq("view", "click", "purchase")).collect()
-    for (r <- batch; stage <- Seq("view", "click", "purchase")) {
-      val u = r.getAs[Long]("user_id").toString
-      val expected = Option(r.getAs[java.sql.Timestamp](s"${stage}_ts"))
-      assert(commits.get((u, stage)) == expected,
-        s"user $u stage $stage: streaming ${commits.get((u, stage))} vs batch $expected")
-    }
-    assert(commits.keySet.map(_._1) == Set("1", "2", "3"), "user 4 never enters the funnel")
-  }
-
-  test("streaming funnel rejects duplicate stage names like the batch twin") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = org.apache.spark.sql.Encoders.product[(Long, String, java.sql.Timestamp)]
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp)]
+    val events = Seq((1L, "view", ts(1))).toDF("user_id", "event_type", "ts")
     val ex = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingFunnel(
-        mem.toDF().toDF("user_id", "event_type", "ts"),
-        "user_id", "event_type", "ts", Seq("view", "click", "view"))
+      Behavior.funnel(events, "user_id", "event_type", "ts", Seq("view", "click", "view"))
     }
     assert(ex.getMessage.contains("distinct"))
-  }
-
-  test("streaming funnel keeps sub-millisecond strictness (micros, not getTime)") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = org.apache.spark.sql.Encoders.product[(Long, String, java.sql.Timestamp)]
-    val view = java.sql.Timestamp.valueOf("2026-01-05 00:00:00")
-    val click = java.sql.Timestamp.valueOf("2026-01-05 00:00:00")
-    click.setNanos(500000) // same millisecond, 500µs later — strictly after
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = graft.streaming.StreamingFunnel(
-      mem.toDF().toDF("user_id", "event_type", "ts"),
-      "user_id", "event_type", "ts", Seq("view", "click"))
-      .writeStream.format("memory").queryName("funnel_us_sink").outputMode("append").start()
-    try {
-      mem.addData(Seq((1L, "view", view), (1L, "click", click)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val stages = spark.table("funnel_us_sink").collect().map(_.getAs[String]("stage")).toSet
-    assert(stages == Set("view", "click"),
-      s"a click 500µs after the view must commit (batch does) — got $stages")
   }
 
   test("sessionize starts a new session exactly past the gap") {
@@ -206,36 +147,6 @@ class BehaviorSpec extends SparkSpec {
     val unbounded = Behavior.funnel(events, "user_id", "event_type", "ts", Seq("view", "click"))
       .collect().map(r => r.getAs[Long]("user_id") -> r.getAs[String]("stage")).toMap
     assert(unbounded == Map(100L -> "click", 200L -> "click"))
-  }
-
-  test("streaming sessionize labels equal the batch operator across micro-batches") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = org.apache.spark.sql.Encoders.product[(Long, Long, java.sql.Timestamp)]
-    val ts = (sec: Int) => java.sql.Timestamp.valueOf(f"2026-01-01 00:${sec / 60}%02d:${sec % 60}%02d")
-    // user 100: events at 0s, 30s (same session, gap == threshold), 61s (new
-    // session: gap 31 > 30), 200s (third session); user 200: one event
-    val fixture = Seq(
-      (1L, 100L, ts(0)), (2L, 100L, ts(30)), (3L, 100L, ts(61)),
-      (4L, 100L, ts(200)), (5L, 200L, ts(10)))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val q = graft.streaming.StreamingSessionize(
-      mem.toDF().toDF("event_id", "user_id", "ts"),
-      "user_id", "ts", "event_id", gapSeconds = 30)
-      .writeStream.format("memory").queryName("sess_sink").outputMode("append").start()
-    try {
-      val (b1, b2) = fixture.splitAt(3) // split mid-key across triggers
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("sess_sink").collect()
-      .map(r => (r.getAs[String]("user"), r.getAs[Long]("tie"), r.getAs[Long]("session_seq"))).toSet
-    val batch = Behavior.sessionize(
-      fixture.toDF("event_id", "user_id", "ts"), "user_id", "ts", "event_id", gapSeconds = 30)
-      .collect()
-      .map(r => (r.getAs[Long]("user_id").toString, r.getAs[Long]("event_id"), r.getAs[Long]("session_seq"))).toSet
-    assert(streamed == batch, s"streaming labels must equal batch:\n$streamed\nvs\n$batch")
-    assert(batch.map(_._3).max == 3L, "fixture must exercise multiple sessions")
   }
 
   test("bigramLmScore: broadcast and join paths are bit-identical; scores rank fluency") {

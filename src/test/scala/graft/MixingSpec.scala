@@ -148,42 +148,6 @@ class MixingSpec extends SparkSpec {
     assert(out(2).getAs[Boolean]("is_current"))
   }
 
-  test("streaming scd2 emits exactly the batch operator's closed intervals") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = org.apache.spark.sql.Encoders.product[(Long, Long, java.sql.Timestamp, Option[String])]
-    val ts = (m: Int) => java.sql.Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
-    val fixture = Seq(
-      (1L, 100L, ts(1), Option("A")), (2L, 100L, ts(2), Option("A")),
-      (3L, 100L, ts(3), Option.empty[String]), (4L, 100L, ts(4), Option("B")),
-      (5L, 200L, ts(1), Option("X")),
-      // same-instant changes: the (ts, tie) sort must resolve P-then-Q in
-      // both engines, not by arrival/iterator order
-      (6L, 300L, ts(5), Option("P")), (7L, 300L, ts(5), Option("Q")))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, java.sql.Timestamp, Option[String])]
-    val q = graft.streaming.StreamingScd2(
-      mem.toDF().toDF("event_id", "user_id", "ts", "event_type"),
-      "user_id", "event_type", "ts", "event_id")
-      .writeStream.format("memory").queryName("scd2_sink").outputMode("append").start()
-    try {
-      val (b1, b2) = fixture.splitAt(3) // split mid-key across triggers
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("scd2_sink").collect()
-      .map(r => (r.getAs[String]("key"), r.getAs[String]("state"),
-        r.getAs[java.sql.Timestamp]("valid_from"), r.getAs[java.sql.Timestamp]("valid_to"))).toSet
-    val batchClosed = graft.operators.Scd2(
-      fixture.toDF("event_id", "user_id", "ts", "event_type"),
-      "user_id", "event_type", "ts", "event_id")
-      .filter(col("valid_to").isNotNull).collect()
-      .map(r => (r.getAs[Long]("user_id").toString, r.getAs[String]("state"),
-        r.getAs[java.sql.Timestamp]("valid_from"), r.getAs[java.sql.Timestamp]("valid_to"))).toSet
-    assert(streamed == batchClosed,
-      s"streaming closed intervals must equal batch:\n$streamed\nvs\n$batchClosed")
-    assert(batchClosed.exists(_._2 == null), "the null-state interval must be present and closed")
-  }
-
   test("decontaminate paths agree on null-text docs") {
     import spark.implicits._
     val corpus = Seq((1L, Option("alpha beta gamma")), (2L, Option.empty[String]))

@@ -528,9 +528,9 @@ class SqlFrontendSpec extends SparkSpec with BeforeAndAfterAll {
     implicit val sq = spark.sqlContext
     implicit val enc = org.apache.spark.sql.Encoders.product[(String, String, java.sql.Timestamp, Long)]
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String, java.sql.Timestamp, Long)]
-    val sq2 = graft.streaming.StreamingSequenceMatch(
+    val sq2 = graft.streaming.StreamingSequenceMatchQ(
       mem.toDF().toDF("k", "t", "ts", "id"), "k", "t", "ts", "id",
-      pattern = Seq("x", "x"), skipPast = true)
+      pattern = Seq(QTok("x", 1, 1), QTok("x", 1, 1)), skipPast = true)
       .writeStream.format("memory").queryName("mr_sp_stream").outputMode("append").start()
     try {
       // split mid-k1 across triggers: non-overlap must hold across batches

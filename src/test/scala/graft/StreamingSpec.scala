@@ -77,8 +77,10 @@ class StreamingSpec extends SparkSpec {
     implicit val enc = Encoders.product[(String, String, Timestamp, Long)]
     val mem = MemoryStream[(String, String, Timestamp, Long)]
     val pattern = Seq("A", "B", "C")
-    val matches = graft.streaming.StreamingSequenceMatch(
-      mem.toDF().toDF("u", "t", "ts", "id"), "u", "t", "ts", "id", pattern, 7200L * 1000000L)
+    val matches = graft.streaming.StreamingSequenceMatchQ(
+      mem.toDF().toDF("u", "t", "ts", "id"), "u", "t", "ts", "id",
+      pattern.map(graft.streaming.StreamingSequenceMatchQ.QTok(_, 1, 1)), 7200L * 1000000L)
+      .drop("matched_len")
     val q = matches.writeStream.format("memory").queryName("seq_sink").outputMode("append").start()
     val rows = Seq(
       ("u1", "A", ts("2024-01-01 00:00:00"), 1L), ("u1", "B", ts("2024-01-01 00:01:00"), 2L),

@@ -3,6 +3,8 @@ package graft
 import java.sql.Timestamp
 
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.sql.{SqlFrontend, StatementCatalog}
 import graft.sources.TableRegistry
@@ -319,6 +321,7 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
     def ev(t: String, s: String) = ("u1", t, Timestamp.valueOf(s"2024-01-01 $s"))
     def got = SqlFrontend.execute(spark, "SELECT start_ts, end_ts FROM late_lit_matches")
       .collect().map(r => (r.getTimestamp(0), r.getTimestamp(1))).toSet
+    val acc = new Drain.Accumulables(spark, "mr_late_rows_")
     try {
       mem.addData(ev("A", "00:02:00")); q.processAllAvailable()
       // B@00:01 arrives a micro-batch later, below the buffered A@00:02
@@ -327,9 +330,113 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
       mem.addData(ev("A", "00:03:00"), ev("B", "00:04:00")); q.processAllAvailable()
       assert(got == Set((Timestamp.valueOf("2024-01-01 00:03:00"),
         Timestamp.valueOf("2024-01-01 00:04:00"))), s"in-order rows still match: $got")
+      eventually(timeout(30.seconds)) { assert(acc.sum("mr_late_rows_") == 1L) }
     } finally {
+      acc.stop()
       SqlFrontend.execute(spark, "DROP TABLE late_lit_matches")
       TableRegistry.dropTable("late_lit_events")
+      StatementCatalog.reset()
+    }
+  }
+
+  test("standing ML_DETECT_ANOMALIES drops and counts a row older than its key's last row") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[(String, Timestamp, Double)]
+    StatementCatalog.reset()
+    val runs = Seq("late_anom", "inorder_anom")
+    runs.flatMap(r => Seq(s"${r}_out", s"${r}_events")).foreach { t =>
+      if (TableRegistry.exists(t)) TableRegistry.dropTable(t)
+      spark.catalog.dropTempView(t)
+    }
+    val acc = new Drain.Accumulables(spark, "anomaly_late_rows_")
+    val feeds = runs.map { r =>
+      val mem = MemoryStream[(String, Timestamp, Double)]
+      val schema = mem.toDF().toDF("k", "ts", "v").schema
+      TableRegistry.createTable(TableRegistry.TableDef(s"${r}_events", Some(schema),
+        load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+        loadStream = Some(_ => mem.toDF().toDF("k", "ts", "v"))))
+      SqlFrontend.execute(spark,
+        s"""CREATE TABLE ${r}_out AS
+           |SELECT k, ts, v, ML_DETECT_ANOMALIES(v, ts,
+           |    JSON_OBJECT('minTrainingSize' VALUE 2, 'maxTrainingSize' VALUE 50))
+           |  OVER (PARTITION BY k ORDER BY ts
+           |        RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS anom
+           |FROM ${r}_events""".stripMargin)
+      val q = StatementCatalog.get(s"${r}_out").collect {
+        case st: StatementCatalog.Standing => st.query
+      }.getOrElse(fail("an ML_DETECT_ANOMALIES CTAS over a stream must run standing"))
+      (mem, q)
+    }
+    def ev(k: String, s: String, v: Double) = (k, Timestamp.valueOf(s"2024-01-01 $s"), v)
+    val batch1 = Seq(ev("k1", "00:01:00", 10.0), ev("k1", "00:02:00", 12.0),
+      ev("k1", "00:03:00", 11.0), ev("k2", "00:01:00", 5.0), ev("k2", "00:02:00", 6.0))
+    val late = ev("k1", "00:00:30", 100.0) // behind k1's last row, 00:03
+    val batch2 = Seq(ev("k1", "00:04:00", 13.0), ev("k1", "00:05:00", 10.0),
+      ev("k2", "00:03:00", 7.0))
+    val batch3 = Seq(ev("k1", "00:06:00", 12.0))
+    def out(r: String) = SqlFrontend.execute(spark,
+      s"SELECT k, ts, v, anom.forecast_value, anom.upper_bound, anom.lower_bound FROM ${r}_out")
+      .collect().map(_.toSeq).toSet
+    try {
+      feeds.zip(Seq(true, false)).foreach { case ((mem, q), withLate) =>
+        mem.addData(batch1); q.processAllAvailable()
+        mem.addData(if (withLate) late +: batch2 else batch2); q.processAllAvailable()
+        mem.addData(batch3); q.processAllAvailable()
+      }
+      val (withLate, inOrder) = (out("late_anom"), out("inorder_anom"))
+      assert(inOrder.size == 9 && inOrder.count(_(3) != null) == 5)
+      assert(withLate == inOrder,
+        s"a late row must change no forecast:\n$withLate\nvs the in-order run\n$inOrder")
+      eventually(timeout(30.seconds)) {
+        assert(acc.sum("anomaly_late_rows___graft_src_late_anom_events_") == 1L)
+      }
+      assert(acc.sum("anomaly_late_rows___graft_src_inorder_anom_events_") == 0L)
+    } finally {
+      acc.stop()
+      runs.foreach { r =>
+        SqlFrontend.execute(spark, s"DROP TABLE ${r}_out")
+        TableRegistry.dropTable(s"${r}_events")
+      }
+      StatementCatalog.reset()
+    }
+  }
+
+  test("a standing temporal join (FOR SYSTEM_TIME AS OF over a STREAM table) is refused " +
+    "at CREATE and leaves no running statement") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[(String, String, Timestamp)]
+    StatementCatalog.reset()
+    Seq("tj_out", "tj_orders", "tj_rates").foreach { t =>
+      if (TableRegistry.exists(t)) TableRegistry.dropTable(t)
+      spark.catalog.dropTempView(t)
+    }
+    val orders = MemoryStream[(String, String, Timestamp)]
+    val rates = MemoryStream[(String, String, Timestamp)]
+    def register(name: String, mem: MemoryStream[(String, String, Timestamp)],
+                 cols: Seq[String], pk: Seq[String]): Unit = {
+      val schema = mem.toDF().toDF(cols: _*).schema
+      TableRegistry.createTable(TableRegistry.TableDef(name, Some(schema), primaryKey = pk,
+        watermarkCol = Some(cols.last), watermarkDelay = Some("1 minute"),
+        load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+        loadStream = Some(_ => mem.toDF().toDF(cols: _*))))
+    }
+    register("tj_orders", orders, Seq("order_id", "currency", "order_ts"), Nil)
+    register("tj_rates", rates, Seq("currency", "rate", "rate_ts"), Seq("currency"))
+    try {
+      val e = intercept[IllegalArgumentException](SqlFrontend.execute(spark,
+        """CREATE TABLE tj_out AS
+          |SELECT o.order_id, r.rate FROM tj_orders o
+          |JOIN tj_rates FOR SYSTEM_TIME AS OF o.order_ts AS r ON r.currency = o.currency
+          |""".stripMargin))
+      assert(e.getMessage.contains("FOR SYSTEM_TIME AS OF"), e.getMessage)
+      assert(StatementCatalog.get("tj_out").isEmpty && !TableRegistry.exists("tj_out"))
+      assert(!spark.streams.active.exists(_.name == "tj_out"), "no standing query may start")
+    } finally {
+      Seq("tj_orders", "tj_rates").foreach(TableRegistry.dropTable)
       StatementCatalog.reset()
     }
   }

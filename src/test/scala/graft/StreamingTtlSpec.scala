@@ -4,10 +4,13 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Event-time state TTL for the user-keyed behavioral twins — the analog of
-  * the reference's `SET 'sql.state-ttl' = '14 d'` (LAB4-Walkthrough.md:124).
+import graft.streaming.StreamingSequenceMatchQ.QTok
+
+/** Event-time state TTL of the standing MATCH_RECOGNIZE operator — the analog
+  * of the reference's `SET 'sql.state-ttl' = '14 d'` (LAB4-Walkthrough.md:124).
   * Each test pins BOTH halves of the contract: (1) a key idle past the TTL is
   * EVICTED (its partial state is dropped, never flushed), and (2) the key's
   * next event RE-ENTERS with fresh state, behaving exactly like a first-ever
@@ -31,61 +34,15 @@ class StreamingTtlSpec extends SparkSpec {
     q.processAllAvailable()
   }
 
-  test("funnel TTL: idle user's partial funnel evicts; next events restart at stage 0") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, String, Timestamp)]
-    val mem = MemoryStream[(String, String, Timestamp)]
-    val q = graft.streaming.StreamingFunnel(
-      mem.toDF().toDF("user_id", "event_type", "ts"),
-      "user_id", "event_type", "ts", Seq("view", "click"), ttlSeconds = 100L)
-      .writeStream.format("memory").queryName("ttl_funnel").outputMode("append").start()
-    try {
-      push(mem, q, ("u1", "view", at(0)))            // commits view; timer at 100 s
-      push(mem, q, ("w1", "view", at(1000)))         // watermark -> 1000 s after this batch
-      push(mem, q, ("w2", "view", at(1001)))         // u1 evicted here (100 < 1000)
-      push(mem, q, ("u1", "click", at(1002)))        // fresh state: click can't commit at stage 1
-      push(mem, q, ("u1", "view", at(1003)))         // re-entry: view commits AGAIN
-    } finally q.stop()
-    val u1 = spark.table("ttl_funnel").collect()
-      .filter(_.getAs[String]("user") == "u1")
-      .map(r => (r.getAs[String]("stage"), r.getAs[Timestamp]("ts"))).toSet
-    // without eviction this would be {view@0, click@1002}
-    assert(u1 == Set(("view", at(0)), ("view", at(1003))),
-      s"expected the funnel to restart at stage 0 after eviction, got $u1")
-  }
-
-  test("sessionize TTL: evicted user re-enters with session_seq restarting at 1") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, Timestamp, Long)]
-    val mem = MemoryStream[(String, Timestamp, Long)]
-    val q = graft.streaming.StreamingSessionize(
-      mem.toDF().toDF("user_id", "ts", "event_id"),
-      "user_id", "ts", "event_id", gapSeconds = 50L, ttlSeconds = 100L)
-      .writeStream.format("memory").queryName("ttl_sess").outputMode("append").start()
-    try {
-      push(mem, q, ("u1", at(0), 1L))
-      push(mem, q, ("u1", at(60), 2L))   // 60 > gap 50 -> session 2; timer at 160 s
-      push(mem, q, ("w1", at(1000), 90L))
-      push(mem, q, ("w2", at(1001), 91L)) // u1 evicted (160 < 1000)
-      push(mem, q, ("u1", at(1100), 3L))  // would be session 3 without eviction
-    } finally q.stop()
-    val seqs = spark.table("ttl_sess").collect()
-      .filter(_.getAs[String]("user") == "u1")
-      .map(r => r.getAs[Long]("tie") -> r.getAs[Long]("session_seq")).toMap
-    assert(seqs == Map(1L -> 1L, 2L -> 2L, 3L -> 1L),
-      s"post-eviction re-entry must restart the session count at 1, got $seqs")
-  }
-
   test("sequenceMatch TTL: a pattern can't span the eviction gap; fresh trail matches after") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[(String, String, Timestamp, Long)]
     val mem = MemoryStream[(String, String, Timestamp, Long)]
-    val q = graft.streaming.StreamingSequenceMatch(
+    val q = graft.streaming.StreamingSequenceMatchQ(
       mem.toDF().toDF("k", "typ", "ts", "tie"),
-      "k", "typ", "ts", "tie", pattern = Seq("A", "B"), ttlSeconds = 100L)
+      "k", "typ", "ts", "tie", pattern = Seq(QTok("A", 1, 1), QTok("B", 1, 1)),
+      ttlSeconds = 100L)
       .writeStream.format("memory").queryName("ttl_seq").outputMode("append").start()
     try {
       push(mem, q, ("u1", "A", at(0), 1L))     // trail [A]; timer 100 s
@@ -103,7 +60,6 @@ class StreamingTtlSpec extends SparkSpec {
 
   test("sequenceMatchQ TTL: an undecided start evicts silently; fresh buffer decides normally") {
     import spark.implicits._
-    import graft.streaming.StreamingSequenceMatchQ.QTok
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[(String, String, Timestamp, Long)]
     val mem = MemoryStream[(String, String, Timestamp, Long)]
@@ -158,74 +114,6 @@ class StreamingTtlSpec extends SparkSpec {
       s"only the post-eviction run may match, got ${m.toSeq}")
   }
 
-  test("scd2 TTL: the evicted open interval is dropped, never flushed; next change opens fresh") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, String, Timestamp, Long)]
-    val mem = MemoryStream[(String, String, Timestamp, Long)]
-    val q = graft.streaming.StreamingScd2(
-      mem.toDF().toDF("k", "attr", "ts", "tie"),
-      "k", "attr", "ts", "tie", ttlSeconds = 100L)
-      .writeStream.format("memory").queryName("ttl_scd2").outputMode("append").start()
-    try {
-      push(mem, q, ("k1", "x", at(0), 1L))     // opens interval x
-      push(mem, q, ("w1", "x", at(1000), 90L))
-      push(mem, q, ("w2", "x", at(1001), 91L)) // k1 evicted: open x is gone
-      push(mem, q, ("k1", "y", at(1100), 2L))  // fresh: opens y, emits NOTHING for x
-      push(mem, q, ("k1", "z", at(1200), 3L))  // closes y normally
-    } finally q.stop()
-    val rows = spark.table("ttl_scd2").collect()
-      .filter(_.getAs[String]("key") == "k1")
-      .map(r => (r.getAs[String]("state"), r.getAs[Timestamp]("valid_from"), r.getAs[Timestamp]("valid_to")))
-    assert(rows.toSeq == Seq(("y", at(1100), at(1200))),
-      s"the evicted open interval x must never surface, got ${rows.toSeq}")
-  }
-
-  test("resample TTL: a dead sensor stops forward-filling; re-entry re-anchors the grid") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, Timestamp, Double)]
-    val mem = MemoryStream[(String, Timestamp, Double)]
-    val q = graft.streaming.StreamingResample(
-      mem.toDF().toDF("k", "ts", "v"),
-      "k", "ts", "v", stepSeconds = 10L, ttlSeconds = 100L)
-      .writeStream.format("memory").queryName("ttl_resample").outputMode("append").start()
-    try {
-      push(mem, q, ("k1", at(0), 1.0))      // anchors grid at 0
-      push(mem, q, ("w1", at(1000), 9.0))
-      push(mem, q, ("w2", at(1001), 9.0))   // k1 evicted: cursor+last obs gone
-      push(mem, q, ("k1", at(1105), 2.0))   // re-anchors at 1105 — NOT 110 fills from v=1.0
-    } finally q.stop()
-    val rows = spark.table("ttl_resample").collect()
-      .filter(_.getAs[String]("k") == "k1")
-      .map(r => (r.getAs[Timestamp]("grid_ts"), r.getAs[Double]("v")))
-    assert(rows.toSet == Set((at(0), 1.0), (at(1105), 2.0)),
-      s"eviction must stop the fill and re-anchor, got ${rows.toSet}")
-  }
-
-  test("transitions TTL: no pair spans the eviction gap; re-entry chains freshly") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, Long, Timestamp, String)]
-    val mem = MemoryStream[(String, Long, Timestamp, String)]
-    val q = graft.streaming.StreamingTransitions.pairs(
-      mem.toDF().toDF("user_id", "event_id", "ts", "event_type"),
-      "user_id", "event_type", "ts", "event_id", ttlSeconds = 100L)
-      .writeStream.format("memory").queryName("ttl_trans").outputMode("append").start()
-    try {
-      push(mem, q, ("u1", 1L, at(0), "view"), ("u1", 2L, at(1), "click"))
-      push(mem, q, ("w1", 90L, at(1000), "view"))
-      push(mem, q, ("w2", 91L, at(1001), "view")) // u1 evicted
-      push(mem, q, ("u1", 3L, at(1100), "purchase")) // fresh chain: NO click->purchase pair
-      push(mem, q, ("u1", 4L, at(1101), "refund"))   // purchase->refund pairs normally
-    } finally q.stop()
-    val pairs = spark.table("ttl_trans").collect()
-      .filter(_.getAs[String]("user") == "u1")
-      .map(r => (r.getAs[String]("prev_type"), r.getAs[String]("next_type"))).toSet
-    assert(pairs == Set(("view", "click"), ("purchase", "refund")),
-      s"the click->purchase pair must not span the eviction gap, got $pairs")
-  }
-
   test("TTL watermark delay defaults to the TTL; session key overrides; durations can't wrap") {
     import graft.sources.TableRegistry
     // default: delay = the TTL itself — a 0s delay would engage Spark's
@@ -250,9 +138,11 @@ class StreamingTtlSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[(String, Timestamp, Long)]
     val mem = MemoryStream[(String, Timestamp, Long)]
-    val q = graft.streaming.StreamingSessionize(
-      mem.toDF().toDF("user_id", "ts", "event_id"),
-      "user_id", "ts", "event_id", gapSeconds = 10L, ttlSeconds = 100L)
+    // a one-event pattern: every row is its own match, so the output counts
+    // rows, and the state store holds one row per live key
+    val q = graft.streaming.StreamingSequenceMatchQ(
+      mem.toDF().toDF("user_id", "ts", "event_id").withColumn("typ", lit("e")),
+      "user_id", "typ", "ts", "event_id", pattern = Seq(QTok("e", 1, 1)), ttlSeconds = 100L)
       .writeStream.format("memory").queryName("ttl_card").outputMode("append").start()
     val batches = 10
     val keysPerBatch = 20
@@ -266,10 +156,14 @@ class StreamingTtlSpec extends SparkSpec {
       push(mem, q, ("flush", at(batches * 200L), 9999L)) // one more watermark move
     } finally q.stop()
     val totalKeys = batches * keysPerBatch + 1
+    // bound: keys per batch (20) × batches live (a batch's keys evict once
+    // the next batch's watermark passes their ts + 100 s, so at most 2) ×
+    // state rows per key (1) = 40, plus the flush key — under totalKeys / 3
+    // = 67; without the TTL every one of the 201 keys stays
     val stateRows = q.lastProgress.stateOperators(0).numRowsTotal
     assert(stateRows < totalKeys / 3,
       s"state must stay bounded by the live window: $stateRows rows vs $totalKeys keys seen")
-    // and the output is still complete: every key labeled exactly once
+    // and the output is still complete: every key matched exactly once
     assert(spark.table("ttl_card").count() == totalKeys.toLong)
   }
 }
