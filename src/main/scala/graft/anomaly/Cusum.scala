@@ -2,7 +2,6 @@ package graft.anomaly
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** CUSUM changepoint detection (Page 1954) — the mean-SHIFT member of the
@@ -19,10 +18,9 @@ import org.apache.spark.sql.types._
   * restart convention, so repeated shifts re-alarm). Defaults k=0.5 (tuned
   * to detect ≥1σ shifts), h=5 (ARL₀ ≈ 10⁴ points under H₀).
   *
-  * One `step()` drives the batch sequential path and the streaming
-  * flatMapGroupsWithState twin — bit-identical, the family discipline.
-  * State is O(1) per key (six doubles); the batch path is one key shuffle +
-  * in-partition sort, keys streamed through each task one after another.
+  * One `step()` drives the batch sequential path. State is O(1) per key
+  * (six doubles); the batch path is one key shuffle + in-partition sort,
+  * keys streamed through each task one after another.
   */
 object Cusum {
 
@@ -107,50 +105,5 @@ object Cusum {
       }
     }(Encoders.row(outSchema))
       .drop("__v", "__key")
-  }
-
-  case class Ev(key: String, tie: Long, ts: java.sql.Timestamp, v: Option[Double])
-  case class Out(key: String, tie: Long, ts: java.sql.Timestamp, v: Option[Double],
-                 s_pos: Option[Double], s_neg: Option[Double],
-                 is_changepoint: Option[Boolean], warm: Boolean)
-
-  /** Streaming twin: the same step over flatMapGroupsWithState — in-batch
-    * rows time-ordered, state carried across micro-batches, bit-identical
-    * to [[detectBatch]] on ordered arrivals. A null value row passes through
-    * with null sums and unchanged state — exactly the batch path's
-    * null-row semantics (an Option-typed Ev so deserialization cannot
-    * crash the query on a null metric).
-    */
-  def detectStream(df: DataFrame, keyCol: String, valueCol: String, tsCol: String,
-                   tieCol: String, cfg: Config) = {
-    implicit val evEnc = Encoders.product[Ev]
-    implicit val outEnc = Encoders.product[Out]
-    implicit val stEnc = Encoders.product[State]
-    implicit val keyEnc = Encoders.STRING
-    // null tie/ts coalesce to minimal sentinels (a null Long field would
-    // kill deserialization; a null ts would NPE the sort) — mirroring the
-    // batch sort's NULLS FIRST placement instead of dropping the row
-    df.select(col(keyCol).cast("string").as("key"),
-        coalesce(col(tieCol).cast("long"), lit(Long.MinValue)).as("tie"),
-        coalesce(col(tsCol).cast("timestamp"), to_timestamp(lit(0))).as("ts"),
-        col(valueCol).cast("double").as("v")).as[Ev]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[State, Out](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Ev], state: GroupState[State]) =>
-          var st = state.getOption.getOrElse(Empty)
-          val out = Seq.newBuilder[Out]
-          rows.toSeq.sortBy(e => (graft.streaming.StreamingOps.tsMicros(e.ts), e.tie)).foreach { e =>
-            e.v match {
-              case Some(x) =>
-                val (next, sPos, sNeg, alarm, warm) = step(st, x, cfg)
-                st = next
-                out += Out(key, e.tie, e.ts, e.v, Some(sPos), Some(sNeg), Some(alarm), warm)
-              case None =>
-                out += Out(key, e.tie, e.ts, None, None, None, None, st.n >= cfg.warmup)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.StructType
 
 /** A per-key sequential scan as ONE Catalyst node — the execution shape of
@@ -55,25 +55,13 @@ case class MrScanExec(keys: Seq[Expression], order: Seq[Expression], output: Seq
 }
 
 object MrScan {
-  private object Planner extends SparkStrategy {
-    def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case s: MrScan => MrScanExec(s.keys, s.order, s.output, s.body, planLater(s.child)) :: Nil
-      case _ => Nil
-    }
-  }
-
-  /** `df` scanned per key by `body`, whose rows have `schema`. Installs the
-    * planner strategy on `df`'s own session once.
-    */
+  /** `df` scanned per key by `body`, whose rows have `schema`. */
   def of(df: DataFrame, keys: Seq[Column], order: Seq[Column], schema: StructType)(
       body: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val exp = spark.experimental
-    exp.synchronized { if (!exp.extraStrategies.contains(Planner)) exp.extraStrategies :+= Planner }
     // key and order columns resolved against df's own plan
     val Project(cols, child) = df.select(keys ++ order: _*).queryExecution.analyzed
     val (keyExprs, orderExprs) = cols.map { case Alias(e, _) => e; case e => e }.splitAt(keys.size)
     val output = schema.map(f => AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
-    org.apache.spark.sql.graft.Bridge.ofRows(spark, MrScan(keyExprs, orderExprs, output, body, child))
+    Planner.ofRows(df.sparkSession, MrScan(keyExprs, orderExprs, output, body, child))
   }
 }

@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.RunningSum
 import graft.functions.Text
 
 /** Corpus-curation operators for training-data pipelines: deterministic
@@ -191,45 +192,25 @@ object Curation {
     * holds consecutive docs whose combined tokens stay ~within budget.
     *
     * Distributed prefix sum (the global `Window.orderBy` formulation moves the
-    * whole corpus through ONE task — VERDICT r1 wrong-#4):
-    *   1. range-repartition + sort within partitions on `orderCol` — a
-    *      distributed sort whose partition ids are range-ordered;
-    *   2. pass 1: per-partition token totals (one tiny row per partition to
-    *      the driver);
-    *   3. pass 2: per-partition running sum seeded with the broadcast
-    *      cumulative offset of all earlier partitions.
-    * Both passes run over the SAME RDD object, so the shuffle is computed once
-    * and reused, and the sampled range boundaries are identical. Result is
-    * bit-identical to the single-task window; every stage is bounded by a
-    * partition, not the corpus.
+    * whole corpus through ONE task — VERDICT r1 wrong-#4): the shared
+    * [[graft.core.RunningSum]] node sums the tokens before each doc over a
+    * range shuffle on `orderCol`, so `cum_tokens` = that sum + `n_tokens`
+    * and `pack_id` = that sum div `budget`. Result is bit-identical to the
+    * single-task window; every stage is bounded by a partition, not the
+    * corpus.
     */
   def packByTokenBudget(df: DataFrame, textCol: String, orderCol: String, budget: Int,
                         numPartitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
     val tokens = df.withColumn("n_tokens", Text.tokenCount(col(textCol)).cast("long"))
     // numPartitions = 0 lets AQE size the range shuffle; an explicit value
     // pins it (tests, or callers matching a downstream layout)
-    val ranged = (if (numPartitions > 0) tokens.repartitionByRange(numPartitions, col(orderCol))
-                  else tokens.repartitionByRange(col(orderCol)))
-      .sortWithinPartitions(orderCol)
-    val schema = ranged.schema
-      .add("cum_tokens", org.apache.spark.sql.types.LongType, nullable = false)
-      .add("pack_id", org.apache.spark.sql.types.LongType, nullable = false)
-    val nTokIdx = ranged.schema.fieldIndex("n_tokens")
-
-    val rowRdd = ranged.rdd // one RDD: both passes share the sort shuffle
-    val offsets = graft.core.PrefixSum.partitionOffsets(
-      rowRdd, (_: org.apache.spark.sql.Row).getLong(nTokIdx)) // offsets(pid) = tokens before pid
-
-    val packed = rowRdd.mapPartitionsWithIndex { (pid, it) =>
-      var cum = offsets(pid)
-      it.map { r =>
-        val n = r.getLong(nTokIdx)
-        cum += n
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ cum :+ (cum - n) / budget)
-      }
-    }
-    spark.createDataFrame(packed, schema)
+    val ranged = if (numPartitions > 0) tokens.repartitionByRange(numPartitions, col(orderCol)) else tokens
+    // a null count weighs 0, as in a SUM window; `div` is typed nullable
+    // though a positive budget never yields null, so both columns coalesce
+    RunningSum.of(ranged, Seq(col(orderCol)), col("n_tokens"))
+      .withColumn("cum_tokens", col(RunningSum.Before) + coalesce(col("n_tokens"), lit(0L)))
+      .withColumn("pack_id", coalesce(expr(s"${RunningSum.Before} div $budget"), lit(0L)))
+      .drop(RunningSum.Before, RunningSum.Total)
   }
 
   /** Deterministic stratified sampling: per-stratum keep rates (percent) over

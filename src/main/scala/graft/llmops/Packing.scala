@@ -1,9 +1,9 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.RunningSum
 import graft.functions.Text
 
 /** Sequence packing — the concat-and-chunk batching step that turns a
@@ -17,12 +17,10 @@ import graft.functions.Text
   *
   * Scale shape (the totalSort pattern with sums instead of counts):
   *   1. project to (order key, id, n_tokens) — the TEXT NEVER SHUFFLES;
-  *   2. range-shuffle + in-partition sort on the order key;
-  *   3. pass 1: per-partition token sums (one long per partition to the
-  *      driver); pass 2: each partition computes exact global token offsets
-  *      seeded with the broadcast prefix sums. Both passes reuse one
-  *      shuffled RDD.
-  *   4. a row-local explode fans each document out to the sequences it
+  *   2. the shared [[graft.core.RunningSum]] node sums the tokens before
+  *      each document over a range shuffle on the order key — its exact
+  *      global token offset;
+  *   3. a row-local explode fans each document out to the sequences it
   *      overlaps — output size = Σ ceil(spans), the answer itself.
   *
   * Offsets are exclusive 0-based global token positions; `seq_id` is
@@ -54,7 +52,6 @@ object Packing {
                     order: Seq[Column] = Nil, startOffset: Long = 0L): DataFrame = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
     require(startOffset >= 0, s"startOffset must be >= 0, got $startOffset")
-    val spark = df.sparkSession
     val ord = if (order.nonEmpty) order else Seq(col(idCol))
     // a SortOrder (col.desc / col.asc_nulls_last) cannot be PROJECTED —
     // split each order entry into its projectable child + the direction,
@@ -77,29 +74,9 @@ object Packing {
         case (_, NullsLast)          => col(s"__po$i").desc_nulls_last
       }
     }
-    val ranged = slim.repartitionByRange(ordCols: _*).sortWithinPartitions(ordCols: _*)
-
-    val rowRdd = ranged.queryExecution.toRdd
-    val ntIdx = ranged.schema.fieldIndex("__nt")
-    val offsets = graft.core.PrefixSum.partitionOffsets(rowRdd, (_: org.apache.spark.sql.catalyst.InternalRow).getLong(ntIdx), startOffset)
-
-    val baseSchema = ranged.schema
-    val withOff = StructType(baseSchema.fields :+ StructField("__off", LongType, nullable = false))
-    val offRows = rowRdd.mapPartitionsWithIndex { (pid, it) =>
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(baseSchema)
-      var off = offsets(pid)
-      it.map { ir =>
-        val r = conv(ir).asInstanceOf[Row]
-        val out = Row.fromSeq(r.toSeq :+ off)
-        off += r.getLong(ntIdx)
-        out
-      }
-    }
-    val offDf = spark.createDataFrame(offRows, withOff)
-
     val L = lit(seqLen)
-    offDf
+    RunningSum.of(slim, ordCols, col("__nt"))
+      .withColumn("__off", col(RunningSum.Before) + startOffset)
       .filter(col("__nt") > 0)
       // `div`, not `/`: Spark's `/` on longs is DOUBLE division
       .withColumn("__seqs",

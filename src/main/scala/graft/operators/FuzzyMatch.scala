@@ -101,8 +101,8 @@ object FuzzyMatch {
     * sorting" pairs without any exact key agreeing.
     *
     * Candidate count is exactly (windowSize−1)·N — linear, not quadratic.
-    * The global order comes from [[Ids.contiguousRowIds]] (distributed
-    * range-sort + two-pass prefix sum — no single-task window), each row is
+    * The global order comes from [[Ids.contiguousRowIds]] (the
+    * [[graft.core.RunningSum]] node — no single-task window), each row is
     * replicated windowSize−1 times with its target position, and the pairing
     * is one integer equi-join on position: every step shuffles on keys with
     * full cardinality. `sortCols` must be a total order (add a unique

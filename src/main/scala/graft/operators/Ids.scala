@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.RunningSum
+
 /** Dense global row numbering — `row_number() OVER (ORDER BY …)` without the
   * single-task window.
   *
@@ -10,24 +12,18 @@ import org.apache.spark.sql.functions._
   * shard assignment, sample addressing, pack offsets, resumable exports. The
   * obvious `Window.orderBy` formulation funnels the WHOLE dataset through one
   * task (no partition key), which is exactly the scale-killer the packing
-  * operator already eliminated (VERDICT r1 wrong-#4) — so this reuses that
-  * two-pass distributed prefix sum, counting rows instead of tokens:
+  * operator already eliminated (VERDICT r1 wrong-#4) — so this numbers rows
+  * with the shared [[graft.core.RunningSum]] node, counting rows instead of
+  * tokens: `row_id` is the number of rows before each row in the order. The
+  * node range-partitions and sorts on the order key, sums each partition,
+  * then numbers each partition from the count of all earlier partitions.
   *
-  *   1. range-repartition + sort within partitions on the order key — a
-  *      distributed sort whose partition ids are range-ordered;
-  *   2. pass 1: per-partition row counts (one tiny row per partition to the
-  *      driver);
-  *   3. pass 2: each partition numbers its rows locally, seeded with the
-  *      broadcast cumulative count of all earlier partitions.
-  *
-  * Both passes run over the SAME RDD object, so the sort shuffle is computed
-  * once and the sampled range boundaries are identical. The result is
-  * bit-identical to the single-task `row_number() - 1` PROVIDED the order key
-  * is a total order — with duplicate keys the range partitioner may split a
-  * tie group across partitions and tie order becomes partition order, which
-  * is exactly the same caveat `row_number` has (nondeterministic tie order);
-  * pass a unique tiebreak column for reproducible output, as every caller
-  * should anyway.
+  * The result is bit-identical to the single-task `row_number() - 1`
+  * PROVIDED the order key is a total order — with duplicate keys the range
+  * partitioner may split a tie group across partitions and tie order becomes
+  * partition order, which is exactly the same caveat `row_number` has
+  * (nondeterministic tie order); pass a unique tiebreak column for
+  * reproducible output, as every caller should anyway.
   *
   * `monotonically_increasing_id()` is NOT this: its ids are unique but
   * sparse (partition-id << 33 | local), with gaps that break shard math.
@@ -37,25 +33,9 @@ object Ids {
   def contiguousRowIds(df: DataFrame, orderCols: Seq[String],
                        idName: String = "row_id", numPartitions: Int = 0): DataFrame = {
     require(orderCols.nonEmpty, "contiguousRowIds needs at least one order column")
-    val spark = df.sparkSession
     val cols: Seq[Column] = orderCols.map(col)
-    val ranged = (if (numPartitions > 0) df.repartitionByRange(numPartitions, cols: _*)
-                  else df.repartitionByRange(cols: _*))
-      .sortWithinPartitions(cols: _*)
-    val schema = ranged.schema.add(idName, org.apache.spark.sql.types.LongType, nullable = false)
-
-    val rowRdd = ranged.rdd // one RDD: both passes share the sort shuffle
-    val offsets = graft.core.PrefixSum.partitionOffsets(
-      rowRdd, (_: org.apache.spark.sql.Row) => 1L) // offsets(pid) = rows before pid
-
-    val numbered = rowRdd.mapPartitionsWithIndex { (pid, it) =>
-      var next = offsets(pid)
-      it.map { r =>
-        val out = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ next)
-        next += 1
-        out
-      }
-    }
-    spark.createDataFrame(numbered, schema)
+    val ranged = if (numPartitions > 0) df.repartitionByRange(numPartitions, cols: _*) else df
+    RunningSum.of(ranged, cols, lit(1L))
+      .withColumnRenamed(RunningSum.Before, idName).drop(RunningSum.Total)
   }
 }

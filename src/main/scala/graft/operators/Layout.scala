@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+
+import graft.core.RunningSum
 
 /** Physical-layout operators: total-order sorting with exact global
   * positions (the terasort pattern — range shuffle, never a single-task
@@ -21,15 +22,10 @@ object Layout {
     * `numShards > 0`) an equal-width `shard` assignment.
     *
     * The naive formulation — `row_number() OVER (ORDER BY …)` — moves the
-    * whole corpus through ONE task. This is the distributed form:
-    *   1. `repartitionByRange` + `sortWithinPartitions` on the sort key — a
-    *      range shuffle whose partition ids are globally ordered;
-    *   2. pass 1: per-partition row counts (one long per partition to the
-    *      driver);
-    *   3. pass 2: each partition numbers its rows seeded with the broadcast
-    *      cumulative count of all earlier partitions.
-    * Both passes reuse the SAME shuffled RDD, so the sort is computed once.
-    * The result is bit-identical to the single-task window at any partition
+    * whole corpus through ONE task. This is the distributed form: the shared
+    * [[graft.core.RunningSum]] node counts the rows before each row over a
+    * range shuffle on the sort key, so `global_pos` = that count + 1. The
+    * result is bit-identical to the single-task window at any partition
     * count. `shard = ((global_pos-1) * numShards) div N` — contiguous,
     * equal-width (±1) shards in sort order, reproducible across engines
     * (pure integer arithmetic).
@@ -40,34 +36,14 @@ object Layout {
   def totalSort(df: DataFrame, order: Seq[Column], numShards: Int = 0,
                 numPartitions: Int = 0): DataFrame = {
     require(order.nonEmpty, "totalSort needs at least one sort column")
-    val spark = df.sparkSession
-    val ranged = (if (numPartitions > 0) df.repartitionByRange(numPartitions, order: _*)
-                  else df.repartitionByRange(order: _*))
-      .sortWithinPartitions(order: _*)
-
-    // one INTERNAL-row RDD: both passes share the sort shuffle, and the
-    // counting pass never pays catalyst→Scala conversion (the .rdd form
-    // deserialized every field of every row just to call it.size)
-    val rowRdd = ranged.queryExecution.toRdd
-    val offsets = graft.core.PrefixSum.partitionOffsets(rowRdd,
-      (_: org.apache.spark.sql.catalyst.InternalRow) => 1L)
-    val n = offsets.last max 1L
-
-    var schema = ranged.schema.add("global_pos", LongType, nullable = false)
-    if (numShards > 0) schema = schema.add("shard", LongType, nullable = false)
-    val baseSchema = ranged.schema
-    val numbered = rowRdd.mapPartitionsWithIndex { (pid, it) =>
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(baseSchema)
-      var pos = offsets(pid)
-      it.map { ir =>
-        val r = conv(ir).asInstanceOf[Row]
-        pos += 1L
-        val base = r.toSeq :+ pos
-        Row.fromSeq(if (numShards > 0) base :+ ((pos - 1L) * numShards) / n else base)
-      }
-    }
-    spark.createDataFrame(numbered, schema)
+    val ranged = if (numPartitions > 0) df.repartitionByRange(numPartitions, order: _*) else df
+    val pos = RunningSum.of(ranged, order, lit(1L))
+      .withColumn("global_pos", col(RunningSum.Before) + 1L)
+    // coalesce only keeps shard typed non-null: `div` is typed nullable,
+    // and a divisor >= 1 never yields null
+    val shard = expr(s"(${RunningSum.Before} * $numShards) div greatest(${RunningSum.Total}, 1)")
+    (if (numShards > 0) pos.withColumn("shard", coalesce(shard, lit(0L))) else pos)
+      .drop(RunningSum.Before, RunningSum.Total)
   }
 
   /** Z-order value: interleave the low `bits` bits of each column's

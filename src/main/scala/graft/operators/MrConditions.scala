@@ -281,7 +281,7 @@ object MrConditions {
 
     val spark = org.apache.spark.sql.SparkSession.active
     val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(extSchema)
-    val parsedE = spark.sessionState.sqlParser.parseExpression(rewritten)
+    val parsedE = org.apache.spark.sql.graft.Bridge.parser(spark).parseExpression(rewritten)
     val proj = org.apache.spark.sql.catalyst.plans.logical.Project(
       Seq(Alias(parsedE, "__mr_cond")()),
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation(attrs))

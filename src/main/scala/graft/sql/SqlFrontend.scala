@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.agent._
 import graft.ml._
 import graft.sources.TableRegistry
+import org.apache.spark.sql.graft.Bridge
 
 /** Statement-text front-end for the reference's SQL surface (VERDICT r1
   * missing-#5): accepts the walkthroughs' DDL as text and dispatches into the
@@ -175,7 +176,9 @@ object SqlFrontend {
   /** Parse query text with Flink/standard-SQL string-literal semantics:
     * backslashes stay literal (the walkthrough regexes — `'\*{0,2}…'`,
     * LAB1-Walkthrough.md:203-205 — depend on it). Spark's default literal
-    * parser strips them; the legacy flag is scoped to this one parse.
+    * parser strips them; the legacy rule is scoped to this thread's parses
+    * of this statement (the rewrite's own included) by
+    * `Bridge.withLiteralStrings`, and the session's conf is never written.
     */
   private[graft] def parseSql(spark: SparkSession, text: String): DataFrame = {
     // continuously-written standing-statement sinks re-resolve their parquet
@@ -184,12 +187,9 @@ object SqlFrontend {
     TableRegistry.refreshOnRead
       .filter(t => ("(?i)\\b" + java.util.regex.Pattern.quote(t) + "\\b").r.findFirstIn(text).isDefined)
       .foreach(t => TableRegistry.resolve(t).load(spark).createOrReplaceTempView(t))
-    val key = "spark.sql.parser.escapedStringLiterals"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
     val prevScope = ephemeralViews.get()
     ephemeralViews.set(scala.collection.mutable.Buffer.empty[String])
-    try spark.sql(rewrite(spark, text))
+    try Bridge.withLiteralStrings(spark)(Bridge.sql(spark, rewrite(spark, text)))
     finally {
       // rewrite-registered intermediate views (llmops TVFs, MATCH_RECOGNIZE
       // scan / skip-past relations) are statement-scoped: the analyzed plan
@@ -198,10 +198,6 @@ object SqlFrontend {
       // session's lifetime (r8 ADVICE)
       ephemeralViews.get().foreach(v => spark.catalog.dropTempView(v))
       ephemeralViews.set(prevScope)
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1288,7 +1284,7 @@ object SqlFrontend {
         // rewritten text references (rewriteTemporalJoin registers views the
         // same way). EVERY row enters the scan — non-candidates still occupy
         // row positions a selected match must consume.
-        val cand0 = spark.sql(s"SELECT *, __mr.__len AS __graft_len FROM ($candidateSql) __graft_mr0")
+        val cand0 = Bridge.sql(spark, s"SELECT *, __mr.__len AS __graft_len FROM ($candidateSql) __graft_mr0")
         // column pruning before the selection scan (r16 optimization round,
         // guide §2.3 "project before the exchange"): skipPastSelect's MrScan
         // node reads its whole input by position, so Catalyst cannot prune
@@ -1304,9 +1300,9 @@ object SqlFrontend {
             c == "__mr" || c == "__graft_len")
           .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
         val sel = graft.operators.Behavior.skipPastSelect(
-          cand, partCols.map(org.apache.spark.sql.functions.expr),
-          ordCols.map(org.apache.spark.sql.functions.expr), "__graft_len")
-        val out = sel.selectExpr(partCols ++ measureNames.map(a => s"__mr.$a AS $a"): _*)
+          cand, partCols.map(Bridge.expr(spark, _)),
+          ordCols.map(Bridge.expr(spark, _)), "__graft_len")
+        val out = sel.select((partCols ++ measureNames.map(a => s"__mr.$a AS $a")).map(Bridge.expr(spark, _)): _*)
         // counter-named like every rewrite-registered view (llmops TVFs,
         // temporal join): a content-hash name can collide across texts and
         // silently swap plans under a cached/standing statement
@@ -1400,7 +1396,7 @@ object SqlFrontend {
             case Some(cond) if needsDyn(cond, nm) =>
               (org.apache.spark.sql.functions.lit(true), Some(navRewrite(cond, nm, forDyn = true)))
             case Some(cond) =>
-              (org.apache.spark.sql.functions.expr(localDefine(cond, nm)), None)
+              (Bridge.expr(spark, localDefine(cond, nm)), None)
           }
         }
       val defs = defPairs.map(_._1)
@@ -1531,12 +1527,12 @@ object SqlFrontend {
         else partCols.foldLeft((input00, Seq.empty[String])) {
           case ((df, acc), p) if p.matches("\\w+") => (df, acc :+ p)
           case ((df, acc), p) =>
-            val nm = df.selectExpr(p).columns.head
+            val nm = df.select(Bridge.expr(spark, p)).columns.head
             require(!input00.columns.contains(nm),
               s"MATCH_RECOGNIZE: PARTITION BY expression '$p' resolves to auto-name '$nm', " +
                 "which already exists as a source column — pre-project the expression " +
                 "upstream under a different alias")
-            (df.withColumn(nm, org.apache.spark.sql.functions.expr(p)), acc :+ s"`$nm`")
+            (df.withColumn(nm, Bridge.expr(spark, p)), acc :+ s"`$nm`")
         }
       require(partColsR.distinct.size == partColsR.size,
         s"MATCH_RECOGNIZE: PARTITION BY entries resolve to duplicate key columns: $partColsR")
@@ -1590,7 +1586,7 @@ object SqlFrontend {
       // (baseCols comes from the PRE-nav `input`)
       val input2 =
         if (navCols.isEmpty) input
-        else input.selectExpr("*" +: navCols.toSeq.map { case (nm, e) => s"$e AS $nm" }: _*)
+        else input.select(("*" +: navCols.toSeq.map { case (nm, e) => s"$e AS $nm" }).map(Bridge.expr(spark, _)): _*)
       // composite patterns hand the MrPattern-expanded branches to the scan;
       // a linear sequence is its own single branch — same machinery either way
       val branches: Seq[IndexedSeq[graft.operators.MatchRecognize.BTok]] =
@@ -1599,8 +1595,8 @@ object SqlFrontend {
         else Seq(varSpecs.zipWithIndex.map { case ((_, lo, hi, rel), i) =>
           graft.operators.MatchRecognize.BTok(i, lo, hi, rel) }.toIndexedSeq)
       val scanned = graft.operators.MatchRecognize.scanPattern(
-        input2, partColsR.map(org.apache.spark.sql.functions.expr),
-        ordCols.map(org.apache.spark.sql.functions.expr), ord, varNames, branches, defs,
+        input2, partColsR.map(Bridge.expr(spark, _)),
+        ordCols.map(Bridge.expr(spark, _)), ord, varNames, branches, defs,
         withinMicros, scanSkip, allRowsPerMatch, measureColNames,
         if (aggSpecs.forall(_.isEmpty)) Seq.empty else aggSpecs, dynDefs, offsetSpecs,
         runningStructs = runningNonAgg, runningAggStructs = runningAggs,
@@ -1615,7 +1611,7 @@ object SqlFrontend {
       // ALL ROWS emits every input column (the standard's shape); ONE ROW the
       // partition key plus measures — both from the match rows the scan kept
       val baseCols = if (allRowsPerMatch) input.columns.toSeq else partCols
-      val out = scanned.selectExpr(baseCols ++ measures: _*)
+      val out = scanned.select((baseCols ++ measures).map(Bridge.expr(spark, _)): _*)
       val view = "__graft_mr_scan_" + llmopsViewId.incrementAndGet()
       out.createOrReplaceTempView(view)
       trackEphemeralView(view)

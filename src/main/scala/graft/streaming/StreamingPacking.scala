@@ -28,8 +28,9 @@ import graft.llmops.Packing
   *
   * State is ONE long per batch — there is no per-key state to bottleneck,
   * because packing's only cross-batch dependency is "where did the token
-  * stream end". Within a batch the placement is the full distributed
-  * two-pass prefix-sum — arbitrarily large batches pack in parallel.
+  * stream end". Within a batch the placement is the shared
+  * [[graft.core.RunningSum]] node over a range shuffle — arbitrarily large
+  * batches pack in parallel.
   *
   * Ordering contract: sequences follow ARRIVAL order across batches (batch
   * N+1's documents pack after batch N's, whatever their ids), and `order`

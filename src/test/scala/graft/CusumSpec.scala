@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.anomaly.{AnomalyDetector, Cusum}
@@ -64,31 +62,5 @@ class CusumSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(out.nonEmpty && out.head >= 100 && out.head <= 120,
       s"NaN mid-warmup and mid-run must not disable detection, alarms=${out.take(3).mkString(",")}")
-  }
-
-  test("streaming twin is bit-identical to batch across micro-batch splits") {
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, Timestamp, Long, Double)]
-    val vals = series(shiftAt = 80, shiftSigma = 2.0, n = 160)
-    val rows = vals.zipWithIndex.map { case (v, i) =>
-      ("k", new Timestamp(1700000000000L + i * 60000L), i.toLong, v)
-    }
-    val mem = MemoryStream[(String, Timestamp, Long, Double)]
-    val cfg = Cusum.Config(warmup = 40, k = 0.5, h = 5.0)
-    val q = Cusum.detectStream(mem.toDF().toDF("key", "ts", "tie", "v"),
-        "key", "v", "ts", "tie", cfg)
-      .writeStream.format("memory").queryName("cusum_sink").outputMode("append").start()
-    try {
-      val (a, rest) = rows.splitAt(55)
-      val (b, c) = rest.splitAt(60)
-      Seq(a, b, c).foreach { chunk => mem.addData(chunk: _*); q.processAllAvailable() }
-    } finally q.stop()
-    val stream = spark.table("cusum_sink")
-      .select("tie", "s_pos", "s_neg", "is_changepoint")
-      .collect().map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2), r.getBoolean(3)))).toMap
-    val batch = Cusum.detectBatch(toDf(vals), col("v"), Seq(col("key")), Seq(col("tie")), cfg)
-      .select("tie", "s_pos", "s_neg", "is_changepoint")
-      .collect().map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2), r.getBoolean(3)))).toMap
-    assert(stream == batch)
   }
 }

@@ -11,11 +11,17 @@ class LayoutSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val df = (1 to 2000).map(i => (i.toLong, rnd.nextInt(50))).toDF("id", "v")
       .repartition(7) // scattered input layout
-    for (parts <- Seq(1, 3, 8)) {
-      val fast = Layout.totalSort(df, Seq(col("v").desc, col("id")), numShards = 4,
-          numPartitions = parts)
-        .select("id", "global_pos", "shard").as[(Long, Long, Long)].collect()
-        .map { case (k, p, s) => ((k, p), s) }.toMap
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    // numPartitions = 0: the range exchange is planned 200 wide and AQE
+    // coalesces it
+    for ((parts, width) <- Seq(1 -> shuffle, 3 -> shuffle, 8 -> shuffle, 0 -> "200")) {
+      spark.conf.set("spark.sql.shuffle.partitions", width)
+      val fast =
+        try Layout.totalSort(df, Seq(col("v").desc, col("id")), numShards = 4,
+            numPartitions = parts)
+          .select("id", "global_pos", "shard").as[(Long, Long, Long)].collect()
+          .map { case (k, p, s) => ((k, p), s) }.toMap
+        finally spark.conf.set("spark.sql.shuffle.partitions", shuffle)
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("v").desc, col("id"))
       val slow = df.withColumn("global_pos", row_number().over(w).cast("long"))
         .withColumn("shard", expr("((global_pos - 1) * 4) DIV 2000"))

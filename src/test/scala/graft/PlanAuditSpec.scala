@@ -243,11 +243,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q141: total sort numbers rows across MANY partitions — never a one-task window") {
-    // the range shuffle lives inside the numbered RDD (the result plan is a
-    // Scan ExistingRDD), so audit the physical layout, not the plan string
+    // the numbering is the RunningSum node over a range shuffle; audit the
+    // physical layout too, not only the plan string
     val df = graft.queries.Catalog.queries("q141_total_sort")(spark, sfDir)
-    assert(df.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"),
-      "totalSort must come back as the numbered RDD, not a window plan")
+    assert(df.queryExecution.executedPlan.toString.contains("RunningSum"),
+      "totalSort must come back as the RunningSum node, not a window plan")
     assert(!df.queryExecution.executedPlan.toString.contains("Window"),
       "the single-task row_number window is the anti-pattern")
     assert(df.rdd.getNumPartitions > 1,

@@ -58,58 +58,6 @@ class RecoverySpec extends SparkSpec {
     assert(got(5).getBoolean(1), "spike must be flagged using recovered state")
   }
 
-  test("CUSUM stream recovers baseline AND accumulated sums across query restarts") {
-    import graft.anomaly.Cusum
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, Long, Timestamp, Double)]
-    val cfg = Cusum.Config(warmup = 5, k = 0.5, h = 3.0)
-    // 5-point baseline around 10.4, then a persistent +1.6 level shift: each
-    // shifted point adds z − k ≈ 2.4 to S⁺, so the alarm fires on the SECOND
-    // shifted point — which arrives after the restart. Flagging it needs both
-    // the frozen (μ, σ) and the partially-accumulated S⁺ from run 1.
-    val values = Seq(10.0, 11.0, 10.0, 11.0, 10.0, 12.0, 12.0, 10.5)
-    val pts = values.zipWithIndex.map { case (v, i) =>
-      ("k1", i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i}%02d:00"), v)
-    }
-    val tmp = java.nio.file.Files.createTempDirectory("recov-cusum").toString
-
-    val mem = MemoryStream[(String, Long, Timestamp, Double)]
-    def startQuery(m: MemoryStream[(String, Long, Timestamp, Double)]) =
-      Cusum.detectStream(m.toDF().toDF("key", "tie", "ts", "value"),
-          "key", "value", "ts", "tie", cfg)
-        .writeStream.format("parquet")
-        .option("path", s"$tmp/sink").option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append").start()
-
-    // run 1: warmup + the FIRST shifted point (S⁺ ≈ 2.42, below h)
-    val (first, second) = pts.splitAt(6)
-    val q1 = startQuery(mem)
-    try { mem.addData(first: _*); q1.processAllAvailable() } finally q1.stop()
-    // run 2: new query instance, same checkpoint
-    mem.addData(second: _*)
-    val q2 = startQuery(mem)
-    try q2.processAllAvailable() finally q2.stop()
-
-    val got = spark.read.parquet(s"$tmp/sink").orderBy("tie")
-      .select("s_pos", "s_neg", "is_changepoint", "warm").collect()
-    assert(got.length == values.length)
-
-    // bit-identical to an uninterrupted batch run over the same series
-    import spark.implicits._
-    val batch = Cusum.detectBatch(
-      pts.toDF("key", "tie", "ts", "value"), col("value"),
-      Seq(col("key")), Seq(col("tie")), cfg)
-      .orderBy("tie").select("s_pos", "s_neg", "is_changepoint", "warm").collect()
-    got.zip(batch).zipWithIndex.foreach { case ((s, b), i) =>
-      assert(s.getDouble(0) == b.getDouble(0) && s.getDouble(1) == b.getDouble(1) &&
-        s.getBoolean(2) == b.getBoolean(2) && s.getBoolean(3) == b.getBoolean(3),
-        s"row $i diverged after recovery: stream=$s batch=$b")
-    }
-    // the changepoint is at index 6 — first row AFTER the restart
-    assert(got(6).getBoolean(2), "changepoint must fire from recovered S⁺ + baseline")
-    assert(!got(5).getBoolean(2), "the pre-restart shifted point must NOT yet alarm")
-  }
-
   test("streaming MATCH_RECOGNIZE recovers mid-pattern state across query restarts (ALL ROWS, composite, SUBSET, MATCH_NUMBER)") {
     // the r13 recovery contract (VERDICT r12 #1): the Buf state — buffered
     // rows, cursor, undecided branches AND matchSeq — rides the checkpoint,
