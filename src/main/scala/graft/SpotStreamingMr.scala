@@ -95,7 +95,7 @@ object SpotStreamingMr {
   /** Both sides in one comparable shape: timestamps as epoch micros,
     * integers as long, decimals at (38, 6).
     */
-  private def canon(df: DataFrame): DataFrame = df.select(df.schema.fields.toSeq.map { f =>
+  private[graft] def canon(df: DataFrame): DataFrame = df.select(df.schema.fields.toSeq.map { f =>
     val c = col(f.name)
     (f.dataType match {
       case TimestampType | TimestampNTZType => unix_micros(c.cast("timestamp"))

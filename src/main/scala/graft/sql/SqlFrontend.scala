@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.agent._
 import graft.ml._
+import graft.operators.MatchRecognize
 import graft.sources.TableRegistry
 import org.apache.spark.sql.graft.Bridge
 
@@ -901,8 +902,6 @@ object SqlFrontend {
           s"AND ($alias.__graft_valid_to IS NULL OR $timeExpr < $alias.__graft_valid_to)")
     })
 
-  private[graft] val MatchRecognizeRe = "(?is)FROM\\s+([\\w.`]+)\\s+MATCH_RECOGNIZE\\s*\\(".r
-
   /** Flink `MATCH_RECOGNIZE` (row-pattern recognition, the CEP SQL surface):
     * `PATTERN` sequences of variables with BOUNDED quantifiers (`A`, `A?`,
     * `A{m}`, `A{m,n}`), `ONE ROW PER MATCH`, `AFTER MATCH SKIP TO NEXT ROW`
@@ -976,127 +975,18 @@ object SqlFrontend {
     * helper column over the same shared window). The interpreter's condition
     * surface is the documented subset in MrConditions; anything beyond it
     * fails at plan time with the bounded-path hint.
+    *
+    * The clause itself is read by [[MrClause.parse]], the one parser the
+    * standing planner's stage shares; this method only lowers it.
     */
   private[graft] def rewriteMatchRecognize(spark: SparkSession, sql: String): String = {
-    val m = MatchRecognizeRe.findFirstMatchIn(sql).getOrElse(return sql)
-    val tbl = m.group(1)
-    val (pieces, after) = balancedArgs(sql, m.end - 1)
-    val body = pieces.mkString(", ")
-    val keywords = Set("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "UNION",
-      "JOIN", "ON", "LEFT", "RIGHT", "INNER", "FULL", "CROSS")
-    val aliasM = "(?is)^\\s*(?:AS\\s+)?(\\w+)".r.findFirstMatchIn(sql.substring(after))
-      .filter(a => !keywords.contains(a.group(1).toUpperCase))
-    val alias = aliasM.map(_.group(1)).getOrElse("__graft_mr")
-    val aliasEnd = after + aliasM.map(_.end).getOrElse(0)
-
-    def clause(re: String): Option[String] =
-      re.r.findFirstMatchIn(body).map(_.group(1).trim)
-    val part = clause("(?is)PARTITION\\s+BY\\s+(.*?)\\s+ORDER\\s+BY")
-      .getOrElse(sys.error("MATCH_RECOGNIZE requires PARTITION BY"))
-    // multi-column ORDER BY: the FIRST column is the event time (row offsets,
-    // WITHIN bounds, end_ts all measure it); trailing columns only break ties
-    // deterministically — same contract as the operators' tieCol
-    val ordList = clause("(?is)ORDER\\s+BY\\s+(\\w+(?:\\s*,\\s*\\w+)*)")
-      .getOrElse(sys.error("MATCH_RECOGNIZE requires ORDER BY"))
-    val ordCols = ordList.split(",").map(_.trim).toSeq
+    val mr = MrClause.parse(sql).getOrElse(return sql)
+    val partCols = mr.partition
+    val ordCols = mr.order
     val ord = ordCols.head
-    val allRowsPerMatch = "(?is)ALL\\s+ROWS\\s+PER\\s+MATCH".r.findFirstIn(body).isDefined
-    val skipToNext = "(?is)AFTER\\s+MATCH\\s+SKIP\\s+TO\\s+NEXT\\s+ROW".r.findFirstIn(body).isDefined
-    val skipPastExplicit = "(?is)AFTER\\s+MATCH\\s+SKIP\\s+PAST\\s+LAST\\s+ROW".r.findFirstIn(body).isDefined
-    // the variable-targeted strategies (SKIP TO [FIRST|LAST] <var>; bare
-    // SKIP TO <var> = LAST, the standard) — routed to the cursor scan
-    val skipToVar: Option[(String, String)] =
-      if (skipToNext || skipPastExplicit) None
-      else "(?is)AFTER\\s+MATCH\\s+SKIP\\s+TO\\s+(?:(FIRST|LAST)\\s+)?(\\w+)".r
-        .findFirstMatchIn(body)
-        .map(m => (Option(m.group(1)).map(_.toUpperCase).getOrElse("LAST"), m.group(2)))
-    require(skipToNext || skipPastExplicit || skipToVar.isDefined ||
-      !"(?is)AFTER\\s+MATCH".r.findFirstIn(body).isDefined,
-      "MATCH_RECOGNIZE: supported AFTER MATCH strategies are SKIP TO NEXT ROW, " +
-        "SKIP PAST LAST ROW (the default when the clause is absent), and " +
-        "SKIP TO [FIRST|LAST] <variable>")
-    val skipPast = !skipToNext // explicit SKIP PAST LAST ROW, or the standard default
-    // PREV()/NEXT() are handled inside subst (DEFINE-only physical navigation).
-    // The pattern text is extracted with BALANCED parens (composite patterns —
-    // alternation groups, PERMUTE — nest them; a .*? regex would cut at the
-    // first ')'), then the optional WITHIN suffix is read after the close.
-    val patKwM = "(?is)PATTERN\\s*\\(".r.findFirstMatchIn(body)
-      .getOrElse(sys.error("MATCH_RECOGNIZE requires PATTERN (...)"))
-    // raw balanced span, NOT balancedArgs: quantifier commas (`A{2,4}`) sit at
-    // paren depth 1 and must pass through verbatim, not as argument splits
-    val (patText, patEnd) = {
-      var depth = 0; var i = patKwM.end - 1; var inner: String = null; var end = -1
-      while (end < 0 && i < body.length) {
-        body.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-            if (depth == 0) { inner = body.substring(patKwM.end, i); end = i + 1 }
-          case _ =>
-        }
-        i += 1
-      }
-      if (end < 0) sys.error("MATCH_RECOGNIZE: unbalanced parentheses in PATTERN")
-      (inner.trim, end)
-    }
-    require(patText.nonEmpty, "MATCH_RECOGNIZE requires a non-empty PATTERN")
-    val withinMicros = parseWithin(body.substring(patEnd))
-    // alternation / grouping / PERMUTE / exclusion → MrPattern's branch
-    // expansion, always routed to the NFA cursor scan (scanPattern); a plain
-    // whitespace-separated quantified sequence keeps the linear fast paths
-    val composite = graft.operators.MrPattern.isComposite(patText)
-    val (expBranches, expNames): (Seq[Vector[graft.operators.MrPattern.PTok]], Seq[String]) =
-      if (composite) graft.operators.MrPattern.expand(patText) else (Nil, Nil)
-    // hi = None → UNBOUNDED (`+`, `*`, `{m,}`) — routed to the NFA cursor
-    // scan; a trailing `?` (Flink's reluctant forms `+?`/`*?`/`??`/`{m,n}?`)
-    // flips that token's exploration to shortest-first
-    val TokenRe = "(\\w+)(?:(\\?\\??)|([+*]\\??)|\\{(\\d+)(?:(,)(\\d+)?)?\\}(\\?)?)?".r
-    val varSpecs: Seq[(String, Int, Option[Int], Boolean)] =
-      if (composite) expNames.map(n => (n, 1, Option(1), false)) // quantifiers live per-branch
-      else patText.split("\\s+").toSeq.map {
-        case TokenRe(name, q, pm, lo, comma, hi, lzy) =>
-          if (q != null) (name, 0, Some(1), q == "??")
-          else if (pm != null && pm.startsWith("+")) (name, 1, None, pm == "+?")
-          else if (pm != null) (name, 0, None, pm == "*?")
-          else if (lo == null) (name, 1, Some(1), false)
-          else if (comma == null) (name, lo.toInt, Some(lo.toInt), lzy != null)
-          else if (hi == null) (name, lo.toInt, None, lzy != null)
-          else (name, lo.toInt, Some(hi.toInt), lzy != null)
-        case tok => sys.error(s"MATCH_RECOGNIZE: unsupported pattern token '$tok' — " +
-          "use variables with quantifiers (A, A?, A+, A*, A{m}, A{m,}, A{m,n}, " +
-          "or their reluctant forms A??, A+?, A*?, A{m,n}?)")
-      }
-    varSpecs.foreach { case (nm, lo, hi, _) =>
-      hi.foreach(h => require(lo <= h, s"MATCH_RECOGNIZE: empty quantifier range {$lo,$h} on '$nm'")) }
-    require(varSpecs.nonEmpty, "MATCH_RECOGNIZE requires a non-empty PATTERN")
-    require(varSpecs.map(_._1).distinct.size == varSpecs.size,
-      s"MATCH_RECOGNIZE: duplicate pattern variable in '$patText'")
-    val varNames = varSpecs.map(_._1)
-    val idx = varNames.zipWithIndex.toMap
-    val w = s"(PARTITION BY $part ORDER BY $ordList)"
-    val unboundedPat = varSpecs.exists(_._3.isEmpty)
-    skipToVar.foreach { case (_, v) => require(idx.contains(v),
-      s"MATCH_RECOGNIZE: AFTER MATCH SKIP TO references unknown pattern variable '$v'") }
-    // SUBSET union variables (ISO 9075-2 row-pattern; absent in Flink):
-    // `SUBSET U = (A, B), V = (C)` between PATTERN and DEFINE. MEASURES over a
-    // subset name see the union of the member variables' matched rows; DEFINE
-    // may reference one too (r11) — needsDyn routes it to MrConditions'
-    // SubCol union reads over the member runs placed so far in the attempt.
-    val subsetSrc: Seq[(String, Seq[String])] =
-      clause("(?is)\\bSUBSET\\s+(.*?)\\s*(?:\\bDEFINE\\b.*)?$")
-        .map(s => splitTopLevelCommas(s).map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty)
-        .map { s =>
-          val sm = "(?is)^(\\w+)\\s*=\\s*\\(([^)]*)\\)$".r.findFirstMatchIn(s.trim)
-            .getOrElse(sys.error(s"MATCH_RECOGNIZE SUBSET needs 'NAME = (V1, V2, …)': $s"))
-          val members = sm.group(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-          members.foreach(v => require(idx.contains(v),
-            s"MATCH_RECOGNIZE: SUBSET ${sm.group(1)} references unknown pattern variable '$v'"))
-          require(!idx.contains(sm.group(1)),
-            s"MATCH_RECOGNIZE: SUBSET ${sm.group(1)} collides with a pattern variable")
-          (sm.group(1), members)
-        }
-    require(subsetSrc.map(_._1).distinct.size == subsetSrc.size,
-      "MATCH_RECOGNIZE: duplicate SUBSET name")
-    val subsetNames: Set[String] = subsetSrc.map(_._1).toSet
+    val idx = mr.varIndex
+    val w = s"(PARTITION BY ${partCols.mkString(", ")} ORDER BY ${ordCols.mkString(", ")})"
+    val subsetNames: Set[String] = mr.subsets.map(_._1).toSet
     // a variable name valid in MEASURES: pattern variables plus subsets
     val mVars: Set[String] = idx.keySet ++ subsetNames
 
@@ -1175,72 +1065,38 @@ object SqlFrontend {
           }
         })
     }
-    def splitTop(s: String): Seq[String] =
-      splitTopLevelCommas(s).map(_.trim).filter(_.nonEmpty)
-
-    val measureSrcParsed = clause("(?is)MEASURES\\s+(.*?)\\s+(?:ONE\\s+ROW|ALL\\s+ROWS|AFTER\\s+MATCH|PATTERN\\b)")
-      .map(splitTop).getOrElse(Seq.empty)
-      .map { e =>
-        val am = "(?is)^(.*?)\\s+AS\\s+(\\w+)\\s*$".r.findFirstMatchIn(e)
-          .getOrElse(sys.error(s"MATCH_RECOGNIZE measure needs 'expr AS alias': $e"))
-        (am.group(1), am.group(2))
-      }
-    // the standard's RUNNING|FINAL measure-semantics keywords: under ALL ROWS
-    // a RUNNING measure sees the match only up to the CURRENT output row
-    // (r10 — the scan's __mr_run_* structs); under ONE ROW the output point
-    // is the final row, where RUNNING ≡ FINAL, so both keywords strip to the
-    // default there. Under ALL ROWS the DEFAULT is RUNNING (r11 — the
-    // standard's and Flink's default, closing the r10 documented deviation);
-    // FINAL is the per-measure opt-out keyword. Measures the scan has no
-    // running view for (logical offsets, SUBSET refs) refuse loudly under the
-    // running default with a mark-it-FINAL hint — never a silent FINAL.
-    val measureRunning: Seq[Boolean] = measureSrcParsed.map { case (e, _) =>
-      allRowsPerMatch && !"(?is)^\\s*FINAL\\b".r.findFirstIn(e).isDefined }
-    val measureSrc = measureSrcParsed.map { case (e, a) =>
-      ("(?is)^\\s*(?:RUNNING|FINAL)\\b\\s*".r.replaceFirstIn(e, ""), a) }
-    val defineSrc: Map[String, String] = clause("(?is)DEFINE\\s+(.*)$")
-      .map(splitTop).getOrElse(Seq.empty)
-      .map { d =>
-        val dm = "(?is)^(\\w+)\\s+AS\\s+(.*)$".r.findFirstMatchIn(d)
-          .getOrElse(sys.error(s"MATCH_RECOGNIZE DEFINE needs 'VAR AS condition': $d"))
-        require(idx.contains(dm.group(1)), s"DEFINE for unknown pattern variable '${dm.group(1)}'")
-        dm.group(1) -> dm.group(2)
-      }.toMap
-
-    val partCols = splitTop(part)
     // MATCH_NUMBER(), CLASSIFIER() and aggregate measures need the cursor —
     // scan route (CLASSIFIER under ONE ROW is the last matched row's label,
     // r14 — only the scan's winning path knows it)
-    val usesMatchNumber = measureSrc.exists { case (e, _) =>
-      "(?i)\\bMATCH_NUMBER\\s*\\(".r.findFirstIn(e).isDefined }
-    val usesClassifier = measureSrc.exists { case (e, _) =>
-      "(?i)\\bCLASSIFIER\\s*\\(".r.findFirstIn(e).isDefined }
+    val usesMatchNumber = mr.measures.exists(m =>
+      "(?i)\\bMATCH_NUMBER\\s*\\(".r.findFirstIn(m.text).isDefined)
+    val usesClassifier = mr.measures.exists(m =>
+      "(?i)\\bCLASSIFIER\\s*\\(".r.findFirstIn(m.text).isDefined)
     val AggRe = "(?i)\\b(count|sum|min|max|avg)\\s*\\(\\s*(\\w+)\\.(\\w+|\\*)\\s*\\)".r
-    val usesAggregates = measureSrc.exists { case (e, _) =>
-      AggRe.findAllMatchIn(e).exists(mm => mVars.contains(mm.group(2))) }
+    val usesAggregates = mr.measures.exists(m =>
+      AggRe.findAllMatchIn(m.text).exists(mm => mVars.contains(mm.group(2))))
     // which flavors of per-output-row RUNNING structs the scan must emit:
     // var-ref measures need __mr_run_first/last, aggregate measures (r11)
     // need __mr_run_agg — detected separately so neither pays for the other
-    val runningAggs = measureSrc.zip(measureRunning).exists { case ((e, _), r) =>
-      r && AggRe.findAllMatchIn(e).exists(mm => idx.contains(mm.group(2))) }
-    val runningNonAgg = measureSrc.zip(measureRunning).exists { case ((e, _), r) =>
-      r && {
-        val stripped = AggRe.replaceAllIn(e, mm =>
+    val runningAggs = mr.measures.exists(m =>
+      m.running && AggRe.findAllMatchIn(m.text).exists(mm => idx.contains(mm.group(2))))
+    val runningNonAgg = mr.measures.exists(m =>
+      m.running && {
+        val stripped = AggRe.replaceAllIn(m.text, mm =>
           if (idx.contains(mm.group(2))) "0"
           else java.util.regex.Matcher.quoteReplacement(mm.matched))
         "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(stripped)
           .exists(mm => idx.contains(mm.group(1)))
-      } }
-    val replacement = if (!composite && subsetSrc.isEmpty && !unboundedPat &&
-      !allRowsPerMatch && !usesMatchNumber && !usesAggregates && !usesClassifier &&
-      skipToVar.isEmpty) {
+      })
+    val relation = if (!mr.composite && mr.subsets.isEmpty && mr.linear.forall(_.hi.isDefined) &&
+      !mr.allRows && !usesMatchNumber && !usesAggregates && !usesClassifier &&
+      (mr.skip == MatchRecognize.SkipToNextRow || mr.skip == MatchRecognize.SkipPastLastRow)) {
       // ------------------------------- bounded, ONE ROW: lead()-expansion CASE
       // every bounded-count assignment, greedy order: leftmost quantifier
       // longest first (descending lexicographic) — reluctant tokens ascend
       // (shortest first) instead; zero-length matches excluded
-      val expansions: Seq[Seq[Int]] = varSpecs
-        .map { case (_, lo, hi, rel) =>
-          (if (rel) lo to hi.get else hi.get to lo by -1).toSeq }
+      val expansions: Seq[Seq[Int]] = mr.linear
+        .map(t => (if (t.reluctant) t.lo to t.hi.get else t.hi.get to t.lo by -1).toSeq)
         .foldLeft(Seq(Seq.empty[Int]))((acc, counts) => acc.flatMap(pfx => counts.map(pfx :+ _)))
         .filter(_.sum > 0)
       require(expansions.nonEmpty, "MATCH_RECOGNIZE: pattern admits only the empty match")
@@ -1252,32 +1108,32 @@ object SqlFrontend {
       // the existence guard on the final row, the WITHIN bound, its measures
       val branches = expansions.map { counts =>
         val starts = counts.scanLeft(0)(_ + _)
-        val offsets: Map[String, Seq[Int]] = varNames.zipWithIndex.map { case (v, i) =>
+        val offsets: Map[String, Seq[Int]] = mr.varNames.zipWithIndex.map { case (v, i) =>
           v -> (starts(i) until starts(i + 1))
         }.toMap
         val len = counts.sum
-        val defineConds = varNames.flatMap { v =>
-          defineSrc.get(v).toSeq.flatMap(cond =>
+        val defineConds = mr.varNames.flatMap { v =>
+          mr.defines.get(v).toSeq.flatMap(cond =>
             offsets(v).map(off => s"(${subst(cond, offsets, Some((v, off)))})"))
         }
         val exists = s"${at(ord, len - 1)} IS NOT NULL"
-        val within = withinMicros.map(us =>
+        val within = mr.withinMicros.map(us =>
           s"unix_micros(CAST(${at(ord, len - 1)} AS TIMESTAMP)) - " +
             s"unix_micros(CAST($ord AS TIMESTAMP)) <= $us")
         val cond = ((defineConds :+ exists) ++ within.toSeq).mkString(" AND ")
         // '__len' always rides in the struct: the skip-past selection consumes
         // it, and the measure-less form already exposed it as the one field
         val fields = (s"'__len', $len" +:
-          measureSrc.map { case (e, a) => s"'$a', ${subst(e, offsets, None)}" }).mkString(", ")
+          mr.measures.map(m => s"'${m.alias}', ${subst(m.text, offsets, None)}")).mkString(", ")
         s"WHEN ($cond) THEN named_struct($fields)"
       }
 
-      val measureNames = measureSrc.map(_._2)
+      val measureNames = mr.measures.map(_.alias)
       require(!measureNames.contains("__len"), "MATCH_RECOGNIZE: '__len' is a reserved measure alias")
-      val candidateSql = s"SELECT *, CASE ${branches.mkString(" ")} END AS __mr FROM $tbl"
-      if (!skipPast) {
+      val candidateSql = s"SELECT *, CASE ${branches.mkString(" ")} END AS __mr FROM ${mr.table}"
+      if (mr.skip == MatchRecognize.SkipToNextRow) {
         val outerCols = (partCols ++ measureNames.map(a => s"__mr.$a AS $a")).mkString(", ")
-        s"FROM (SELECT $outerCols FROM ($candidateSql) __graft_mr0 WHERE __mr IS NOT NULL) $alias"
+        s"(SELECT $outerCols FROM ($candidateSql) __graft_mr0 WHERE __mr IS NOT NULL)"
       } else {
         // non-overlap selection: candidates flow through skipPastSelect's
         // per-key ordered scan; the selected relation becomes a temp view the
@@ -1309,7 +1165,7 @@ object SqlFrontend {
         val view = "__graft_mr_skippast_" + llmopsViewId.incrementAndGet()
         out.createOrReplaceTempView(view)
         trackEphemeralView(view)
-        s"FROM $view $alias"
+        view
       }
     } else {
       // -------------- unbounded quantifiers / ALL ROWS: the NFA cursor scan.
@@ -1390,8 +1246,8 @@ object SqlFrontend {
       // (static Catalyst column, interpreted condition) per variable: exactly
       // one of the pair is live — lit(true) + Some(text) on the dynamic route
       val defPairs: Seq[(org.apache.spark.sql.Column, Option[String])] =
-        varSpecs.map { case (nm, _, _, _) =>
-          defineSrc.get(nm) match {
+        mr.varNames.map { nm =>
+          mr.defines.get(nm) match {
             case None => (org.apache.spark.sql.functions.lit(true), None)
             case Some(cond) if needsDyn(cond, nm) =>
               (org.apache.spark.sql.functions.lit(true), Some(navRewrite(cond, nm, forDyn = true)))
@@ -1404,8 +1260,8 @@ object SqlFrontend {
         if (defPairs.exists(_._2.isDefined)) defPairs.map(_._2) else Seq.empty
       // columns the MEASURES read → captured into the per-variable structs
       // (subset-variable refs too — their structs carry the same fields)
-      val measureColNames = measureSrc.flatMap { case (e, _) =>
-        "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(e)
+      val measureColNames = mr.measures.flatMap { m =>
+        "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(m.text)
           .filter(mm => mVars.contains(mm.group(1))).map(_.group(2)).toSeq
       }.distinct
       // MEASURES read the FULL match (final semantics): FIRST/LAST/bare refs
@@ -1486,9 +1342,9 @@ object SqlFrontend {
             else s"__mr_last_$vv.$c"
           })
       }
-      measureSrc.foreach { case (_, a) => require(!a.startsWith("__mr_"),
-        s"MATCH_RECOGNIZE: measure alias '$a' uses the reserved __mr_ prefix") }
-      val input00full = spark.sql(s"SELECT * FROM $tbl")
+      mr.measures.foreach(m => require(!m.alias.startsWith("__mr_"),
+        s"MATCH_RECOGNIZE: measure alias '${m.alias}' uses the reserved __mr_ prefix"))
+      val input00full = spark.sql(s"SELECT * FROM ${mr.table}")
       // Column pruning before the NFA scan (r16 optimization round, guide
       // §2.3): scanPattern's MrScan node reads its whole input by position,
       // so Catalyst cannot prune beneath it and every source column — wide
@@ -1502,9 +1358,9 @@ object SqlFrontend {
       // contribute harmless extra tokens, never a miss. ALL ROWS emits every
       // source column by contract: no pruning.
       val input00 =
-        if (allRowsPerMatch) input00full
+        if (mr.allRows) input00full
         else {
-          val refs = (partCols ++ ordCols ++ defineSrc.values ++ measureSrc.map(_._1))
+          val refs = (partCols ++ ordCols ++ mr.defines.values ++ mr.measures.map(_.text))
             .flatMap("\\w+".r.findAllIn(_)).map(_.toLowerCase).toSet
           // a column whose NAME is not a plain \w+ identifier (backticked,
           // hyphenated, non-ASCII) can never be matched by the token probe —
@@ -1523,7 +1379,7 @@ object SqlFrontend {
       // source column (a silent replace would corrupt it in the output);
       // two raw entries resolving to one auto-name are a duplicate key.
       val (input, partColsR) =
-        if (!allRowsPerMatch) (input00, partCols)
+        if (!mr.allRows) (input00, partCols)
         else partCols.foldLeft((input00, Seq.empty[String])) {
           case ((df, acc), p) if p.matches("\\w+") => (df, acc :+ p)
           case ((df, acc), p) =>
@@ -1536,13 +1392,13 @@ object SqlFrontend {
         }
       require(partColsR.distinct.size == partColsR.size,
         s"MATCH_RECOGNIZE: PARTITION BY entries resolve to duplicate key columns: $partColsR")
-      if (allRowsPerMatch) measureSrc.foreach { case (_, a) =>
-        require(!input.columns.contains(a),
-          s"MATCH_RECOGNIZE: ALL ROWS PER MATCH emits every input column; measure alias '$a' collides") }
+      if (mr.allRows) mr.measures.foreach(m =>
+        require(!input.columns.contains(m.alias),
+          s"MATCH_RECOGNIZE: ALL ROWS PER MATCH emits every input column; measure alias '${m.alias}' collides"))
       // logical-offset FIRST/LAST measures → extra per-(var, kind, k) structs
       val OffRe = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*,\\s*(\\d+)\\s*\\)".r
-      val offsetSpecs: Seq[(Int, Boolean, Int)] = measureSrc.flatMap { case (e, _) =>
-        OffRe.findAllMatchIn(e).flatMap { mm =>
+      val offsetSpecs: Seq[(Int, Boolean, Int)] = mr.measures.flatMap { m =>
+        OffRe.findAllMatchIn(m.text).flatMap { mm =>
           val (kind, v, k) = (mm.group(1).toUpperCase, mm.group(2), mm.group(4).toInt)
           if (!idx.contains(v) || k == 0) None else Some((idx(v), kind == "FIRST", k))
         }
@@ -1551,8 +1407,8 @@ object SqlFrontend {
       val aggByVar = {
         val byVar = scala.collection.mutable.Map
           .empty[String, scala.collection.mutable.LinkedHashSet[(String, String)]]
-        measureSrc.foreach { case (e, _) =>
-          AggRe.findAllMatchIn(e).foreach { mm =>
+        mr.measures.foreach { m =>
+          AggRe.findAllMatchIn(m.text).foreach { mm =>
             val (fn, v, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
             if (mVars.contains(v)) {
               val specs = byVar.getOrElseUpdate(v,
@@ -1568,18 +1424,11 @@ object SqlFrontend {
         byVar
       }
       val aggSpecs: Seq[Seq[(String, String)]] =
-        varNames.map(v => aggByVar.get(v).map(_.toSeq).getOrElse(Seq.empty))
-      val subsetSpecs: Seq[graft.operators.MatchRecognize.SubsetSpec] =
-        subsetSrc.map { case (nm, members) =>
-          graft.operators.MatchRecognize.SubsetSpec(nm, members.map(idx),
+        mr.varNames.map(v => aggByVar.get(v).map(_.toSeq).getOrElse(Seq.empty))
+      val subsetSpecs: Seq[MatchRecognize.SubsetSpec] =
+        mr.subsets.map { case (nm, members) =>
+          MatchRecognize.SubsetSpec(nm, members,
             aggByVar.get(nm).map(_.toSeq).getOrElse(Seq.empty)) }
-      val scanSkip: graft.operators.MatchRecognize.Skip =
-        if (skipToNext) graft.operators.MatchRecognize.SkipToNextRow
-        else skipToVar match {
-          case Some(("FIRST", v)) => graft.operators.MatchRecognize.SkipToFirst(idx(v))
-          case Some((_, v))       => graft.operators.MatchRecognize.SkipToLast(idx(v))
-          case None               => graft.operators.MatchRecognize.SkipPastLastRow
-        }
       // PREV/NEXT helpers for interpreted DEFINEs ride as input columns over
       // the same window W — Catalyst collapses their sort into the scan's
       // (plan-guard spec); they are dropped by the final selectExpr below
@@ -1587,37 +1436,29 @@ object SqlFrontend {
       val input2 =
         if (navCols.isEmpty) input
         else input.select(("*" +: navCols.toSeq.map { case (nm, e) => s"$e AS $nm" }).map(Bridge.expr(spark, _)): _*)
-      // composite patterns hand the MrPattern-expanded branches to the scan;
-      // a linear sequence is its own single branch — same machinery either way
-      val branches: Seq[IndexedSeq[graft.operators.MatchRecognize.BTok]] =
-        if (composite) expBranches.map(_.map(t => graft.operators.MatchRecognize.BTok(
-          idx(t.name), t.lo, t.hi, t.reluctant, t.excluded)).toIndexedSeq)
-        else Seq(varSpecs.zipWithIndex.map { case ((_, lo, hi, rel), i) =>
-          graft.operators.MatchRecognize.BTok(i, lo, hi, rel) }.toIndexedSeq)
-      val scanned = graft.operators.MatchRecognize.scanPattern(
+      val scanned = MatchRecognize.scanPattern(
         input2, partColsR.map(Bridge.expr(spark, _)),
-        ordCols.map(Bridge.expr(spark, _)), ord, varNames, branches, defs,
-        withinMicros, scanSkip, allRowsPerMatch, measureColNames,
+        ordCols.map(Bridge.expr(spark, _)), ord, mr.varNames, mr.scanBranches, defs,
+        mr.withinMicros, mr.skip, mr.allRows, measureColNames,
         if (aggSpecs.forall(_.isEmpty)) Seq.empty else aggSpecs, dynDefs, offsetSpecs,
         runningStructs = runningNonAgg, runningAggStructs = runningAggs,
         subsets = subsetSpecs,
         // composite patterns execute by the parse tree (r12): choice points
         // decided at their written positions — ISO preferment even when a
         // variable-length quantifier precedes an alternation
-        tree = if (composite) Some(graft.operators.MrPattern.parse(patText)) else None,
-        oneRowClassifier = usesClassifier && !allRowsPerMatch)
-      val measures = measureSrc.zip(measureRunning).map { case ((e, a), running) =>
-        s"${scanMeasure(e, running)} AS $a" }
+        tree = mr.tree,
+        oneRowClassifier = usesClassifier && !mr.allRows)
+      val measures = mr.measures.map(m => s"${scanMeasure(m.text, m.running)} AS ${m.alias}")
       // ALL ROWS emits every input column (the standard's shape); ONE ROW the
       // partition key plus measures — both from the match rows the scan kept
-      val baseCols = if (allRowsPerMatch) input.columns.toSeq else partCols
+      val baseCols = if (mr.allRows) input.columns.toSeq else partCols
       val out = scanned.select((baseCols ++ measures).map(Bridge.expr(spark, _)): _*)
       val view = "__graft_mr_scan_" + llmopsViewId.incrementAndGet()
       out.createOrReplaceTempView(view)
       trackEphemeralView(view)
-      s"FROM $view $alias"
+      view
     }
-    rewriteMatchRecognize(spark, sql.substring(0, m.start) + replacement + sql.substring(aliasEnd))
+    rewriteMatchRecognize(spark, mr.splice(sql, relation))
   }
 
   private[graft] val CumulateRe =
@@ -1790,8 +1631,6 @@ object SqlFrontend {
           s"__graft_h_a, INTERVAL $slideUs MICROSECOND)) __graft_h1 AS window_start) __graft_h")
     })
 
-  private val DetectAnomaliesRe = "(?is)ML_DETECT_ANOMALIES\\s*\\(".r
-
   /** `ML_DETECT_ANOMALIES(v, ts, JSON_OBJECT('minTrainingSize' VALUE …, …))
     * OVER (PARTITION BY k ORDER BY t RANGE …)` (LAB3-Walkthrough.md:119-132,
     * LAB4-Walkthrough.md:150-163) → the engine's z-band detector expressed as
@@ -1803,10 +1642,8 @@ object SqlFrontend {
     * go through [[graft.anomaly.AnomalyDetector.Config]].
     */
   private[graft] def rewriteDetectAnomalies(sql: String): String = {
-    val m = DetectAnomaliesRe.findFirstMatchIn(sql).getOrElse(return sql)
-    val (args, afterArgs) = balancedArgs(sql, m.end - 1)
-    require(args.size >= 2, s"ML_DETECT_ANOMALIES needs (value, ts[, config]), got ${args.size}")
-    val cfg = parseAnomalyCfg(args.drop(2).mkString(" "))
+    val call = AnomalyCall.parse(sql).getOrElse(return sql)
+    val cfg = call.cfg
     // this rewrite IS the z-band window formulation; a seasonal or AR config
     // has no SQL-window form — fail loudly rather than mis-evaluate (the
     // DataFrame API, AnomalyDetector.detectBatch, runs those)
@@ -1814,12 +1651,7 @@ object SqlFrontend {
       s"the SQL OVER-window rewrite supports forecast='zband' with enableStl=FALSE only " +
         s"(got forecast='${cfg.forecast}', enableStl=${cfg.enableStl}); " +
         "use AnomalyDetector.detectBatch for the AR/seasonal forecasters")
-
-    val overM = ("(?is)^\\s*OVER\\s*\\(\\s*PARTITION\\s+BY\\s+(.*?)\\s+ORDER\\s+BY\\s+(\\S+)" +
-      "(?:\\s+RANGE\\s+BETWEEN\\s+UNBOUNDED\\s+PRECEDING\\s+AND\\s+CURRENT\\s+ROW)?\\s*\\)").r
-      .findFirstMatchIn(sql.substring(afterArgs))
-      .getOrElse(sys.error("ML_DETECT_ANOMALIES requires an OVER (PARTITION BY … ORDER BY …) clause"))
-    val (part, ord) = (overM.group(1), overM.group(2))
+    val (part, ord) = (call.partition.mkString(", "), call.order)
     // sliding-frame sums as differences of two growing-frame cumulative sums
     // — the AnomalyDetector.detectBatchWindow rewrite (Spark re-aggregates a
     // bounded sliding ROWS frame from scratch per row; UNBOUNDED PRECEDING
@@ -1834,7 +1666,7 @@ object SqlFrontend {
       s"(CASE WHEN $b IS NULL THEN $a ELSE $a - $b END)"
     }
 
-    val vx = s"CAST(${args.head} AS DOUBLE)"
+    val vx = s"CAST(${call.value} AS DOUBLE)"
     // element precision 27, not 38 — see AnomalyDetector.detectBatchWindow:
     // at 38 the capped subtraction silently drops to scale 7
     val s1 = s"CAST(CAST(${frameSum(s"CAST(CAST($vx AS STRING) AS DECIMAL(27,6))")} AS STRING) AS DOUBLE)"
@@ -1852,8 +1684,7 @@ object SqlFrontend {
         s"'lower_bound', CASE WHEN $warm THEN $lower END, " +
         s"'is_anomaly', CASE WHEN $warm THEN ($vx > $upper OR $vx < $lower) ELSE false END)"
 
-    val rewritten = sql.substring(0, m.start) + struct + sql.substring(afterArgs + overM.end)
-    rewriteDetectAnomalies(rewritten)
+    rewriteDetectAnomalies(call.splice(sql, struct))
   }
 
   /** `JSON_OBJECT('minTrainingSize' VALUE …, …)` config text → detector
@@ -1876,19 +1707,6 @@ object SqlFrontend {
       seasonalPeriod = key("seasonalPeriod", "0").toInt,
       dOrder = key("dOrder", "1").toInt)
   }
-
-  /** The optional `WITHIN INTERVAL 'n' unit` right after a MATCH_RECOGNIZE
-    * PATTERN's closing paren, in micros. Both the batch and the standing
-    * front end read it here, so a zero or negative bound fails the same way
-    * on every route.
-    */
-  private[sql] def parseWithin(afterPattern: String): Option[Long] =
-    "(?is)^\\s*WITHIN\\s+INTERVAL\\s+'(-?\\d+)'\\s+(\\w+)".r.findFirstMatchIn(afterPattern)
-      .map { mm =>
-        require(mm.group(1).toLong > 0,
-          s"WITHIN bound must be positive, got INTERVAL '${mm.group(1)}' ${mm.group(2)}")
-        graft.operators.Cumulate.durationMicros(s"${mm.group(1)} ${mm.group(2)}")
-      }
 
   // ------------------------------------------------- balanced-call utilities
 

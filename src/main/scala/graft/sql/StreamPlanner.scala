@@ -2,6 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.TableRegistry
@@ -277,7 +278,9 @@ object StreamPlanner {
         TableRegistry.scanStream(spark, t).createOrReplaceTempView(v)
         views += t -> v
       }
-    def stage(body: String): DataFrame = {
+    // one literal-string scope per stage: the extension stages parse their
+    // clause text (PARTITION BY, DEFINE, call arguments) by parseSql's rule
+    def stage(body: String): DataFrame = Bridge.withLiteralStrings(spark) {
       val substituted = views.foldLeft(body) { case (acc, (n, v)) =>
         nameRe(n).replaceAllIn(acc, java.util.regex.Matcher.quoteReplacement(v))
       }
@@ -433,226 +436,86 @@ object StreamPlanner {
     * FINAL); non-integral ORDER BY tie columns. DEFINEs and non-anchor
     * MEASURES over the ORDER BY column are SUPPORTED since r13 (per-step
     * time-gap conditions — the column buffers like any condCol).
+    *
+    * The clause is read by [[MrClause.parse]], the batch rewrite's parser, so
+    * every grammar-level refusal reads the same on both routes; this stage
+    * only lowers the parsed clause and enforces its own limits.
     */
   private def matchRecognizeStage(spark: SparkSession, stageSql: String): DataFrame = {
-    val m = SqlFrontend.MatchRecognizeRe.findFirstMatchIn(stageSql)
+    val mr = MrClause.parse(stageSql)
       .getOrElse(sys.error("matchRecognizeStage without FROM … MATCH_RECOGNIZE"))
-    val tbl = m.group(1)
-    val (pieces, after) = SqlFrontend.balancedArgs(stageSql, stageSql.indexOf('(', m.end - 1))
-    val body = pieces.mkString(", ")
-    def clause(re: String): Option[String] = re.r.findFirstMatchIn(body).map(_.group(1).trim)
-    val part = clause("(?is)PARTITION\\s+BY\\s+(.*?)\\s+ORDER\\s+BY")
-      .getOrElse(sys.error("MATCH_RECOGNIZE requires PARTITION BY"))
-    // multi-column PARTITION BY (r13 — the batch route's general clause):
-    // state keys on a collision-free KeyImage of the columns; the original
-    // typed columns are re-emitted from the buffered rows (they are constant
-    // per key by construction, so any matched row carries them).
-    // r15 (Flink conformance): entries may be EXPRESSIONS — each non-plain
-    // entry pre-projects onto the source below under the same auto-name the
-    // batch route's selectExpr emits (`PARTITION BY UPPER(region)` → column
-    // `upper(region)`), so stream and batch output schemas agree. Under ALL
-    // ROWS (r16) the batch twin ADDS the same auto-named column to its
-    // every-input-column shape, so the old schema-agreement refusal is gone
-    // on both routes.
-    val rawParts = SqlFrontend.splitTopLevelCommas(part).map(_.trim).filter(_.nonEmpty)
-    require(rawParts.nonEmpty,
-      s"streaming MATCH_RECOGNIZE PARTITION BY names no columns: '$part'")
+    val tbl = mr.table
+    // multi-column PARTITION BY (r13): state keys on a collision-free
+    // KeyImage of the columns; the original typed columns are re-emitted
+    // from the buffered rows (they are constant per key by construction, so
+    // any matched row carries them). Entries may be EXPRESSIONS (r15): each
+    // non-plain entry pre-projects onto the source below under the same
+    // auto-name the batch route's projection emits (`PARTITION BY
+    // UPPER(region)` → column `upper(region)`), so stream and batch output
+    // schemas agree, under ALL ROWS too (r16).
+    val rawParts = mr.partition
     require(rawParts.distinct.size == rawParts.size,
-      s"streaming MATCH_RECOGNIZE PARTITION BY repeats an entry: '$part'")
+      s"streaming MATCH_RECOGNIZE PARTITION BY repeats an entry: '${rawParts.mkString(", ")}'")
     // ORDER BY <ts>[, <tie>] (r12): an optional second column is the
     // within-timestamp tie-break (the batch route's `ORDER BY ts, event_id`
     // shape) — buffered as the operator's tie so equal-timestamp rows order
     // deterministically instead of by arrival
-    val ordCols = clause("(?is)ORDER\\s+BY\\s+(\\w+(?:\\s*,\\s*\\w+)*)")
-      .getOrElse(sys.error("MATCH_RECOGNIZE requires ORDER BY"))
-      .split(",").map(_.trim).toSeq
-    require(ordCols.size <= 2, "streaming MATCH_RECOGNIZE supports ORDER BY " +
-      s"<ts>[, <tie>] — at most one tie-break column, got ${ordCols.mkString(", ")}")
-    val ord = ordCols.head
-    val tieCol: Option[String] = ordCols.lift(1)
-    // the FULL strategy surface of the batch rewrite (r14 — the last
-    // batch-vs-streaming skip gap): SKIP TO NEXT ROW, SKIP PAST LAST ROW
-    // (the default when the clause is absent), and the variable-targeted
-    // SKIP TO [FIRST|LAST] <var> (bare SKIP TO <var> = LAST, the standard) —
-    // the overlapping-runs strategies
-    val skipToNext = "(?is)AFTER\\s+MATCH\\s+SKIP\\s+TO\\s+NEXT\\s+ROW".r.findFirstIn(body).isDefined
-    val skipPastExplicit = "(?is)AFTER\\s+MATCH\\s+SKIP\\s+PAST\\s+LAST\\s+ROW".r.findFirstIn(body).isDefined
-    val skipToVar: Option[(String, String)] =
-      if (skipToNext || skipPastExplicit) None
-      else "(?is)AFTER\\s+MATCH\\s+SKIP\\s+TO\\s+(?:(FIRST|LAST)\\s+)?(\\w+)".r
-        .findFirstMatchIn(body)
-        .map(mm => (Option(mm.group(1)).map(_.toUpperCase).getOrElse("LAST"), mm.group(2)))
-    require(skipToNext || skipPastExplicit || skipToVar.isDefined ||
-      !"(?is)AFTER\\s+MATCH".r.findFirstIn(body).isDefined,
-      "MATCH_RECOGNIZE: supported AFTER MATCH strategies are SKIP TO NEXT ROW, " +
-        "SKIP PAST LAST ROW (the default when the clause is absent), and " +
-        "SKIP TO [FIRST|LAST] <variable>")
-    // ALL ROWS PER MATCH (r12): per-row emission —
-    // row_ts/cls + the buffered columns, RUNNING-default measures
-    val allRowsPerMatch = "(?is)ALL\\s+ROWS\\s+PER\\s+MATCH".r.findFirstIn(body).isDefined
-    // SUBSET union variables (r12 — previously a loud batch-only refusal):
-    // `SUBSET U = (A, B)` between PATTERN and DEFINE; resolved to member
-    // indexes after the variable table is known
-    val subsetSrc: Seq[(String, Seq[String])] =
-      clause("(?is)\\bSUBSET\\s+(.*?)\\s*(?:\\bDEFINE\\b.*)?$")
-        .map(SqlFrontend.splitTopLevelCommas(_).map(_.trim).filter(_.nonEmpty))
-        .getOrElse(Seq.empty)
-        .map { s =>
-          val sm = "(?is)^(\\w+)\\s*=\\s*\\(([^)]*)\\)$".r.findFirstMatchIn(s.trim)
-            .getOrElse(sys.error(s"MATCH_RECOGNIZE SUBSET needs 'NAME = (V1, V2, …)': $s"))
-          (sm.group(1), sm.group(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        }
-    // PATTERN text by balanced-paren span (composite grammars nest parens;
-    // quantifier commas pass through verbatim), WITHIN read after the close
-    val patKwM = "(?is)PATTERN\\s*\\(".r.findFirstMatchIn(body)
-      .getOrElse(sys.error("MATCH_RECOGNIZE requires PATTERN (...)"))
-    val (patText, patEnd) = {
-      var depth = 0; var i = patKwM.end - 1; var inner: String = null; var end = -1
-      while (end < 0 && i < body.length) {
-        body.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-            if (depth == 0) { inner = body.substring(patKwM.end, i); end = i + 1 }
-          case _ =>
-        }
-        i += 1
-      }
-      if (end < 0) sys.error("MATCH_RECOGNIZE: unbalanced parentheses in PATTERN")
-      (inner.trim, end)
-    }
-    // composite grammars (alternation/grouping/PERMUTE — r11, beyond Flink
-    // CEP's SQL surface) expand to preference-ordered branches and ride
-    // applyPattern; {- exclusion -} stays refused (ONE-ROW
-    // output shape — the operator rejects excluded tokens loudly)
-    val composite = graft.operators.MrPattern.isComposite(patText)
-    val (expBranches, expNames): (Seq[Vector[graft.operators.MrPattern.PTok]], Seq[String]) =
-      if (composite) graft.operators.MrPattern.expand(patText) else (Nil, Nil)
-    // unbounded quantifiers (`+`/`*`/`{m,}`, hi = Int.MaxValue) ride the
-    // matcher — greedy runs stay OPEN until a breaking event or
-    // the within horizon, exactly the batch scan's semantics
-    // trailing `?` = the reluctant (lazy) forms, same grammar as the batch
-    // frontend — shortest-first exploration, early decision in the operator
-    val TokenRe = "(\\w+)(?:(\\?\\??)|([+*]\\??)|\\{(\\d+)(?:(,)(\\d+)?)?\\}(\\?)?)?".r
-    val tokens: Seq[(String, Int, Int, Boolean)] =
-      if (composite) expNames.map(n => (n, 1, 1, false)) // quantifiers live per-branch
-      else patText.split("\\s+").toSeq.map {
-        case TokenRe(name, q, pm, lo, comma, hi, lzy) =>
-          if (q != null) (name, 0, 1, q == "??")
-          else if (pm != null && pm.startsWith("+")) (name, 1, Int.MaxValue, pm == "+?")
-          else if (pm != null) (name, 0, Int.MaxValue, pm == "*?")
-          else if (lo == null) (name, 1, 1, false)
-          else if (comma == null) (name, lo.toInt, lo.toInt, lzy != null)
-          else if (hi == null) (name, lo.toInt, Int.MaxValue, lzy != null)
-          else (name, lo.toInt, hi.toInt, lzy != null)
-        case tok => sys.error(s"unsupported pattern token '$tok'")
-      }
-    val defSrc: Seq[(String, String)] = clause("(?is)DEFINE\\s+(.*)$")
-      .map(SqlFrontend.splitTopLevelCommas(_).map(_.trim)).getOrElse(Seq.empty)
-      .map { d =>
-        val dm = "(?is)^(\\w+)\\s+AS\\s+(.*)$".r.findFirstMatchIn(d)
-          .getOrElse(sys.error(s"MATCH_RECOGNIZE DEFINE needs 'VAR AS condition': $d"))
-        dm.group(1) -> dm.group(2).trim
-      }
-    val varNames = tokens.map(_._1).toSet
-    defSrc.foreach { case (v, _) =>
-      require(varNames.contains(v), s"DEFINE for unknown pattern variable '$v'") }
-    // WITHIN in MICROS (r13) — sub-second CEP horizons (fraud bursts) now
-    // match the batch route's precision; 0 = no horizon (none was written)
-    val withinMicros = SqlFrontend.parseWithin(body.substring(patEnd)).getOrElse(0L)
-
+    require(mr.order.size <= 2, "streaming MATCH_RECOGNIZE supports ORDER BY " +
+      s"<ts>[, <tie>] — at most one tie-break column, got ${mr.order.mkString(", ")}")
+    val ord = mr.order.head
+    val tieCol: Option[String] = mr.order.lift(1)
+    val nTok = mr.varNames.size
     // MEASURES: ORDER-BY-column refs map to the operator's match_start_ts /
     // match_end_ts; any other `[FIRST|LAST](var.col)` is a VALUE measure
     // (r11) read from the winning placement's buffered rows on the value
     // route — Left(src -> alias) = span measure, Right = value measure.
-    // Under a composite pattern the span anchors exist only when EVERY
-    // branch starts (ends) with the SAME mandatory variable — otherwise a
-    // span measure errors via the mapping below and the user keeps value
-    // measures (match_start_ts/match_end_ts still drive the output span).
-    val (firstVar, firstMin, firstMax, _) =
-      if (!composite) tokens.head
-      else {
-        val heads = expBranches.map(_.head)
-        if (heads.map(_.name).distinct.size == 1 && heads.forall(_.lo >= 1))
-          (heads.head.name, heads.map(_.lo).min,
-            heads.map(_.hi.getOrElse(Int.MaxValue)).max, false)
-        else ("", 0, 0, false)
-      }
-    val (lastVar, lastMin, _, _) =
-      if (!composite) tokens.last
-      else {
-        val tails = expBranches.map(_.last)
-        if (tails.map(_.name).distinct.size == 1 && tails.forall(_.lo >= 1))
-          (tails.head.name, tails.map(_.lo).min, 0, false)
-        else ("", 0, 0, false)
-      }
-    val varIdx0 = tokens.map(_._1).zipWithIndex.toMap
-    val skipStrategy: graft.operators.MatchRecognize.Skip =
-      if (skipToNext) graft.operators.MatchRecognize.SkipToNextRow
-      else skipToVar match {
-        case Some((kind, v)) =>
-          require(varIdx0.contains(v),
-            s"MATCH_RECOGNIZE: AFTER MATCH SKIP TO references unknown pattern variable '$v'")
-          if (kind == "FIRST") graft.operators.MatchRecognize.SkipToFirst(varIdx0(v))
-          else graft.operators.MatchRecognize.SkipToLast(varIdx0(v))
-        case None => graft.operators.MatchRecognize.SkipPastLastRow
-      }
-    subsetSrc.foreach { case (nm, members) =>
-      members.foreach(v => require(varIdx0.contains(v),
-        s"MATCH_RECOGNIZE: SUBSET $nm references unknown pattern variable '$v'"))
-      require(!varIdx0.contains(nm),
-        s"MATCH_RECOGNIZE: SUBSET $nm collides with a pattern variable")
-    }
-    require(subsetSrc.map(_._1).distinct.size == subsetSrc.size,
-      "MATCH_RECOGNIZE: duplicate SUBSET name")
+    // The span anchors exist only when EVERY branch starts (ends) with the
+    // SAME mandatory variable — otherwise a span measure errors via the
+    // mapping below and the user keeps value measures (match_start_ts/
+    // match_end_ts still drive the output span).
+    def sharedEnd(ends: Seq[graft.operators.MrPattern.PTok]): Option[(String, Int, Int)] =
+      if (ends.map(_.name).distinct.size == 1 && ends.forall(_.lo >= 1))
+        Some((ends.head.name, ends.map(_.lo).min, ends.map(_.hi.getOrElse(Int.MaxValue)).max))
+      else None
+    val (firstVar, firstMin, firstMax) = sharedEnd(mr.branches.map(_.head)).getOrElse(("", 0, 0))
+    val (lastVar, lastMin, _) = sharedEnd(mr.branches.map(_.last)).getOrElse(("", 0, 0))
     // measure tok space: variables, then subsets at nTok + i (the operator's
     // pooled-union convention)
-    val measTokIdx: Map[String, Int] = varIdx0 ++
-      subsetSrc.map(_._1).zipWithIndex.map { case (nm, i) => nm -> (tokens.size + i) }
-    val resolvedSubsets: Seq[(String, Seq[Int])] =
-      subsetSrc.map { case (nm, ms) => (nm, ms.map(varIdx0)) }
-    val MeasRe = "(?is)^(?:(FIRST|LAST)\\s*\\(\\s*)?(\\w+)\\.(\\w+)\\s*\\)?\\s+AS\\s+(\\w+)\\s*$".r
+    val measTokIdx: Map[String, Int] = mr.varIndex ++
+      mr.subsets.map(_._1).zipWithIndex.map { case (nm, i) => nm -> (nTok + i) }
+    val MeasRe = "(?is)^(?:(FIRST|LAST)\\s*\\(\\s*)?(\\w+)\\.(\\w+)\\s*\\)?$".r
     // aggregate MEASURES over a variable's matched rows (r11 — Flink CEP
     // allows these in standing queries): count/sum/min/max/avg, computed by
     // the value operator per winning placement with the batch scan's
     // exactness contract (exact decimal sums, one-division avg)
-    val AggMeasRe =
-      "(?is)^(count|sum|min|max|avg)\\s*\\(\\s*(\\w+)\\.(\\w+|\\*)\\s*\\)\\s+AS\\s+(\\w+)\\s*$".r
+    val AggMeasRe = "(?is)^(count|sum|min|max|avg)\\s*\\(\\s*(\\w+)\\.(\\w+|\\*)\\s*\\)$".r
     import graft.streaming.StreamingMatchRecognize.{MrAggMeasure, MrMeasure}
     // MATCH_NUMBER() (r11): the per-key emitted-match ordinal — the operator
     // emits it under the alias directly, so it rides the Left(src -> alias)
     // projection with src = alias
-    val MnRe = "(?is)^MATCH_NUMBER\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)\\s*$".r
+    val MnRe = "(?is)^MATCH_NUMBER\\s*\\(\\s*\\)$".r
     // CLASSIFIER() (r12, ALL ROWS only): the operator's per-row `cls` column
-    val ClsRe = "(?is)^CLASSIFIER\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)\\s*$".r
+    val ClsRe = "(?is)^CLASSIFIER\\s*\\(\\s*\\)$".r
     var matchNumberAlias: Option[String] = None
     // CLASSIFIER() under ONE ROW PER MATCH (r14, ISO): the LAST matched
     // row's label, emitted by the value operator as `cls` — same projection
     // path as the ALL-ROWS per-row classifier
     var oneRowCls = false
-    val measures: Seq[Either[(String, String), Either[MrMeasure, MrAggMeasure]]] = clause(
-      "(?is)MEASURES\\s+(.*?)\\s+(?:ONE\\s+ROW|ALL\\s+ROWS|AFTER\\s+MATCH|PATTERN\\b)")
-      .map(SqlFrontend.splitTopLevelCommas(_).map(_.trim)).getOrElse(Seq.empty)
-      .map { raw =>
-        // the standard's measure-semantics keywords: under ALL ROWS the
-        // unmarked default is RUNNING (the batch frontend's r11 rule) and
-        // FINAL opts out; under ONE ROW the output point is the final row,
-        // where RUNNING ≡ FINAL, so both strip to the whole-match view
-        val finalMark = "(?is)^\\s*FINAL\\b".r.findFirstIn(raw).isDefined
-        val e = "(?is)^\\s*(?:RUNNING|FINAL)\\b\\s*".r.replaceFirstIn(raw, "")
-        val running = allRowsPerMatch && !finalMark
+    val measures: Seq[Either[(String, String), Either[MrMeasure, MrAggMeasure]]] =
+      mr.measures.map { case MrClause.Measure(e, alias, running) =>
         e match {
-          case MnRe(alias) =>
+          case MnRe() =>
             matchNumberAlias = Some(alias)
             Left(alias -> alias)
-          case ClsRe(alias) =>
+          case ClsRe() =>
             // ALL ROWS: the operator's per-row cls column; ONE ROW (r14,
             // ISO): the last matched row's label, also emitted as `cls`
-            if (!allRowsPerMatch) oneRowCls = true
+            if (!mr.allRows) oneRowCls = true
             Left("cls" -> alias)
-          case AggMeasRe(fn0, v, c, alias) if measTokIdx.contains(v) =>
+          case AggMeasRe(fn0, v, c) if measTokIdx.contains(v) =>
             val fn = fn0.toLowerCase match { case "count" => "cnt"; case f => f }
             Right(Right(MrAggMeasure(fn, measTokIdx(v), c, alias, running = running)))
-          case MeasRe(kind, v, c, alias) if c == ord && varIdx0.contains(v) =>
+          case MeasRe(kind, v, c) if c == ord && mr.varIndex.contains(v) =>
             // FIRST(first.ord) → match start (first var must be mandatory);
             // bare first.ord additionally needs max=1 — the standard's bare
             // ref is the LAST occurrence, which equals the start only
@@ -673,8 +536,8 @@ object StreamPlanner {
             anchor match {
               case Some(src) =>
                 require(!(running && src == "match_end_ts"),
-                  s"streaming MEASURES: '$raw' is the match END under ALL ROWS PER MATCH, " +
-                    "where unmarked measures default to RUNNING (the standard) — mark it FINAL")
+                  s"streaming MEASURES: '$e AS $alias' is the match END under ALL ROWS PER " +
+                    "MATCH, where unmarked measures default to RUNNING (the standard) — mark it FINAL")
                 Left(src -> alias)
               case None =>
                 // not a whole-match anchor (quantified/optional/mid-pattern
@@ -684,15 +547,15 @@ object StreamPlanner {
                 Right(Left(MrMeasure(Option(kind).exists(_.equalsIgnoreCase("FIRST")),
                   measTokIdx(v), c, alias, running = running)))
             }
-          case MeasRe(kind, v, c, alias) if measTokIdx.contains(v) =>
+          case MeasRe(kind, v, c) if measTokIdx.contains(v) =>
             // value measure: bare = the standard's LAST occurrence; subset
             // names read the union of the member runs
             Right(Left(MrMeasure(Option(kind).exists(_.equalsIgnoreCase("FIRST")),
               measTokIdx(v), c, alias, running = running)))
-          case other => sys.error(s"streaming MATCH_RECOGNIZE MEASURES support " +
+          case _ => sys.error(s"streaming MATCH_RECOGNIZE MEASURES support " +
             s"[FIRST|LAST](var.col) over the ORDER BY column or a data column of a " +
             s"pattern variable or SUBSET, count/sum/min/max/avg(var.col) aggregates, " +
-            s"MATCH_NUMBER() and (ALL ROWS) CLASSIFIER(); got '$other'")
+            s"MATCH_NUMBER() and (ALL ROWS) CLASSIFIER(); got '$e AS $alias'")
         }
       }
     val valueMeasures: Seq[MrMeasure] = measures.collect { case Right(Left(m)) => m }
@@ -701,7 +564,7 @@ object StreamPlanner {
     val input00 = SqlFrontend.parseSql(spark, s"SELECT * FROM $tbl")
     // PARTITION BY expression resolution (r15; ALL ROWS accepted since r16):
     // plain names pass through; an expression pre-projects under batch's
-    // selectExpr auto-name. The computed key is then an ordinary column for
+    // auto-name. The computed key is then an ordinary column for
     // every downstream stage (KeyImage, condCols, the typed-key output
     // projection) — and under ALL ROWS it buffers/re-emits like any
     // condCol, the same auto-named column the batch twin now adds to its
@@ -715,12 +578,13 @@ object StreamPlanner {
           s"streaming MATCH_RECOGNIZE: PARTITION BY column '$p' is not in the source")
         (df, acc :+ p)
       case ((df, acc), p) =>
-        val name = df.selectExpr(p).columns.head // batch's output name for the expression
+        val key = Bridge.expr(spark, p)
+        val name = df.select(key).columns.head // batch's output name for the expression
         require(!input00.columns.contains(name),
           s"streaming MATCH_RECOGNIZE: PARTITION BY expression '$p' resolves to auto-name " +
             s"'$name', which already exists as a source column — pre-project the expression " +
             "upstream under a different alias")
-        (df.withColumn(name, expr(p)), acc :+ name)
+        (df.withColumn(name, key), acc :+ name)
     }
     require(parts.distinct.size == parts.size,
       s"streaming MATCH_RECOGNIZE: PARTITION BY entries resolve to duplicate key columns: $parts")
@@ -754,14 +618,12 @@ object StreamPlanner {
     var allRowsCondCols: Seq[String] = Nil
     val matched = {
       // referenced columns are read from the conditions
-      val defMap = defSrc.toMap
-      val subsetNames = subsetSrc.map(_._1).toSet
-      val refCols: Seq[String] = defSrc.flatMap { case (_, c) =>
+      val refCols: Seq[String] = mr.defines.toSeq.flatMap { case (_, c) =>
         "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(c)
-          .filter(mm => varNames.contains(mm.group(1)) || subsetNames.contains(mm.group(1)))
+          .filter(mm => measTokIdx.contains(mm.group(1)))
           .map(_.group(2)).toSeq
       }.distinct
-      require(defSrc.nonEmpty, "streaming MATCH_RECOGNIZE requires a DEFINE clause — an " +
+      require(mr.defines.nonEmpty, "streaming MATCH_RECOGNIZE requires a DEFINE clause — an " +
         "undefined pattern variable matches every row, which the operator cannot bound")
       require(refCols.nonEmpty, "streaming MATCH_RECOGNIZE: value DEFINEs reference no columns")
       refCols.foreach(c => require(input.columns.contains(c),
@@ -775,17 +637,7 @@ object StreamPlanner {
       // the column from row_ts, so rowCondProj below skips the duplicate.
       // any number of referenced columns, buffered in their ORIGINAL types
       // (r11 — the r10 one-numeric+one-string shape is gone; exact decimal/
-      // integral comparison parity with the batch scan by construction);
-      // composite patterns hand MrPattern's preference-ordered branches to
-      // applyPattern, a linear sequence is its own single branch
-      val nidx = tokens.map(_._1).zipWithIndex.toMap
-      val condBranches: Seq[IndexedSeq[graft.operators.MatchRecognize.BTok]] =
-        if (composite) expBranches.map(_.map(t => graft.operators.MatchRecognize.BTok(
-          nidx(t.name), t.lo, t.hi, t.reluctant, t.excluded)).toIndexedSeq)
-        else Seq(tokens.zipWithIndex.map { case ((_, lo, hi, rel), i) =>
-          graft.operators.MatchRecognize.BTok(i, lo,
-            if (hi == Int.MaxValue) None else Some(hi), rel) }.toIndexedSeq)
-      val conds = tokens.map { case (v, _, _, _) => defMap.get(v) }
+      // integral comparison parity with the batch scan by construction)
       // composite PARTITION BY (r13): the operator keys on one string — a
       // collision-free KeyImage of the columns — and the original typed
       // columns ride the buffer (they're constant per key, so ANY matched
@@ -799,11 +651,11 @@ object StreamPlanner {
         input.withColumn(keyCol, graft.core.KeyImage.of(parts.map(col)))
       }
       val partMeasures: Seq[MrMeasure] =
-        if (!multiKey || allRowsPerMatch) Nil
+        if (!multiKey || mr.allRows) Nil
         else parts.map(p => MrMeasure(isFirst = true,
-          tok = tokens.size + resolvedSubsets.size, col = p, alias = p))
-      val opSubsets = resolvedSubsets ++
-        (if (partMeasures.nonEmpty) Seq(("__graft_pkey_pool", tokens.indices.toSeq)) else Nil)
+          tok = nTok + mr.subsets.size, col = p, alias = p))
+      val opSubsets = mr.subsets ++
+        (if (partMeasures.nonEmpty) Seq(("__graft_pkey_pool", 0 until nTok)) else Nil)
       val condCols = (refCols ++ valueMeasures.map(_.col) ++
         aggMeasures.map(_.col).filter(_ != "*") ++
         (if (multiKey) parts else Nil)).distinct
@@ -812,17 +664,16 @@ object StreamPlanner {
           s"streaming MEASURES references unknown column '$c'"))
       allRowsCondCols = condCols
       graft.streaming.StreamingMatchRecognize.applyPattern(opInput, keyCol, condCols,
-        ord, "__tie", tokens.map(_._1), condBranches, conds, withinMicros,
-        ttlSeconds = ttlSeconds,
+        ord, "__tie", mr.varNames, mr.scanBranches, mr.varNames.map(mr.defines.get),
+        mr.withinMicros.getOrElse(0L), ttlSeconds = ttlSeconds,
         ttlWatermarkDelay = graft.sources.TableRegistry.stateTtlWatermarkDelay(ttlSeconds),
-        skip = skipStrategy, measures = valueMeasures ++ partMeasures,
+        skip = mr.skip, measures = valueMeasures ++ partMeasures,
         oneRowClassifier = oneRowCls,
         aggMeasures = aggMeasures,
         matchNumberAlias = matchNumberAlias,
         // composite patterns execute by the parse tree (r12): ISO preferment
         // even when a variable-length quantifier precedes a choice point
-        tree = if (composite) Some(graft.operators.MrPattern.parse(patText)) else None,
-        allRows = allRowsPerMatch, subsets = opSubsets,
+        tree = mr.tree, allRows = mr.allRows, subsets = opSubsets,
         // undecided-at-expiry runs surface as a NAMED accumulator (r12) —
         // visible in the Spark UI / status without an oracle diff
         openTailAcc = Some(spark.sparkContext.longAccumulator(s"mr_open_tails_$tbl")),
@@ -856,7 +707,7 @@ object StreamPlanner {
     locally {
       val aliases = measures.map { case Left((_, a)) => a; case Right(m) => m.fold(_.alias, _.alias) }
       val outNames = (parts ++
-        (if (allRowsPerMatch) ord +: rowCondProj else Nil) ++ aliases).map(_.toLowerCase)
+        (if (mr.allRows) ord +: rowCondProj else Nil) ++ aliases).map(_.toLowerCase)
       val dups = outNames.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
       require(dups.isEmpty, "streaming MATCH_RECOGNIZE: duplicate output column name(s) " +
         s"${dups.mkString(", ")} — a measure alias collides with a partition column, the " +
@@ -867,22 +718,15 @@ object StreamPlanner {
       case Right(m) => col(m.fold(_.alias, _.alias)) // emitted under its alias already
     }
     val projected =
-      if (!allRowsPerMatch) matched.select(partProj ++ measureProj: _*)
+      if (!mr.allRows) matched.select(partProj ++ measureProj: _*)
       else matched.select(partProj ++
         (col("row_ts").cast(input.schema(ord).dataType).as(ord) +:
           (rowCondProj.map(col) ++ measureProj)): _*)
     // the stage's outer SELECT runs over the matched view, with the user's
     // table alias RE-ATTACHED so qualified refs (mr.start_ts) still resolve
-    val keywords = Set("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "UNION",
-      "JOIN", "ON", "LEFT", "RIGHT", "INNER", "FULL", "CROSS")
-    val aliasM = "(?is)^\\s*(?:AS\\s+)?(\\w+)".r.findFirstMatchIn(stageSql.substring(after))
-      .filter(a => !keywords.contains(a.group(1).toUpperCase))
-    val aliasEnd = after + aliasM.map(_.end).getOrElse(0)
     val v = s"__graft_mrs_${counter.incrementAndGet()}"
     projected.createOrReplaceTempView(v)
-    val aliasStr = aliasM.map(a => s" ${a.group(1)}").getOrElse("")
-    val replaced = stageSql.substring(0, m.start) + s"FROM $v$aliasStr" + stageSql.substring(aliasEnd)
-    SqlFrontend.parseSql(spark, replaced)
+    SqlFrontend.parseSql(spark, mr.splice(stageSql, v))
   }
 
   /** One stage whose select list carries `ML_DETECT_ANOMALIES(v, ts, cfg)
@@ -892,37 +736,26 @@ object StreamPlanner {
     * list with the call replaced by the detection struct.
     */
   private def anomalyStage(spark: SparkSession, stageSql: String): DataFrame = {
-    val m = "(?is)ML_DETECT_ANOMALIES\\s*\\(".r.findFirstMatchIn(stageSql)
-      .getOrElse(sys.error("anomalyStage without ML_DETECT_ANOMALIES"))
-    val (args, afterArgs) = SqlFrontend.balancedArgs(stageSql, m.end - 1)
-    require(args.size >= 2, s"ML_DETECT_ANOMALIES needs (value, ts[, config]), got ${args.size}")
-    val cfg = SqlFrontend.parseAnomalyCfg(args.drop(2).mkString(" "))
-    val overM = ("(?is)^\\s*OVER\\s*\\(\\s*PARTITION\\s+BY\\s+(.*?)\\s+ORDER\\s+BY\\s+(\\S+)" +
-      "(?:\\s+RANGE\\s+BETWEEN\\s+UNBOUNDED\\s+PRECEDING\\s+AND\\s+CURRENT\\s+ROW)?\\s*\\)").r
-      .findFirstMatchIn(stageSql.substring(afterArgs))
-      .getOrElse(sys.error("streaming ML_DETECT_ANOMALIES requires OVER (PARTITION BY … ORDER BY …)"))
-    val (part, ord) = (overM.group(1), overM.group(2))
+    val call = AnomalyCall.parse(stageSql).getOrElse(sys.error("anomalyStage without ML_DETECT_ANOMALIES"))
     // composite PARTITION BY: one collision-free state key from all parts
     // (KeyImage length-prefixing — the same image the batch sequential
     // path uses, so batch and streaming agree on exactly which series a
     // row belongs to even under adversarial key values)
-    val parts = SqlFrontend.splitTopLevelCommas(part).map(_.trim).filter(_.nonEmpty)
-    val keyExpr =
-      if (parts.size == 1) expr(parts.head)
-      else graft.core.KeyImage.of(parts.map(p => expr(p)))
+    val keys = call.partition.map(Bridge.expr(spark, _))
+    val keyExpr = if (keys.size == 1) keys.head else graft.core.KeyImage.of(keys)
 
     val (_, fromPart) = SqlFrontend.topLevelSelectFrom(stageSql)
     val input = SqlFrontend.parseSql(spark, s"SELECT * FROM $fromPart")
     // single-column keys collide the same way: withPayload casts the key
     // to string for the state key, and nested string renderings are
     // ambiguous — guard every arity
-    graft.core.KeyImage.requireAtomic(input, parts.map(p => expr(p)))
+    graft.core.KeyImage.requireAtomic(input, keys)
     // rows the operator drops behind their key's frontier, named after the
     // stage's source view like the MR stage's accumulators
     val src = "^\\s*(\\w+)".r.findFirstMatchIn(fromPart).fold("subquery")(_.group(1))
     val det = StreamingAnomaly.withPayload(input,
-      keyExpr, expr(ord), expr(args.head),
-      to_json(struct(input.columns.map(col).toIndexedSeq: _*), jsonOpts), cfg,
+      keyExpr, Bridge.expr(spark, call.order), Bridge.expr(spark, call.value),
+      to_json(struct(input.columns.map(col).toIndexedSeq: _*), jsonOpts), call.cfg,
       lateRows = Some(spark.sparkContext.longAccumulator(s"anomaly_late_rows_$src")))
     val expanded = det.toDF()
       .select(
@@ -934,9 +767,7 @@ object StreamPlanner {
     expanded.createOrReplaceTempView(v)
     // the stage's own select list, with the call → the struct and the FROM
     // (incl. any WHERE tail, already applied to `input`) → the expanded view
-    val replaced = stageSql.substring(0, m.start) + "__graft_anom" +
-      stageSql.substring(afterArgs + overM.end)
-    val (sel, _) = SqlFrontend.topLevelSelectFrom(replaced)
+    val (sel, _) = SqlFrontend.topLevelSelectFrom(call.splice(stageSql, "__graft_anom"))
     SqlFrontend.parseSql(spark, s"SELECT $sel FROM $v")
   }
 }

@@ -4,11 +4,13 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, expr, when}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.operators.{Behavior, MatchRecognize, MrPattern}
+import graft.sources.TableRegistry
+import graft.sql.SqlFrontend
 import graft.streaming.{StreamingMatchRecognize, StreamingSequenceMatchQ}
 import graft.streaming.StreamingSequenceMatchQ.QTok
 
@@ -17,7 +19,9 @@ import graft.streaming.StreamingSequenceMatchQ.QTok
   * series, each series fed to the stream across three micro-batches and
   * closed per key by an all-NULL sentinel row that breaks every run, so every
   * attempt decides. The standing output must equal the batch output row for
-  * row — match starts, lengths and MATCH_NUMBER ordinals.
+  * row — match starts, lengths and MATCH_NUMBER ordinals. The SQL-level case
+  * runs the same patterns as MATCH_RECOGNIZE text, once as a standing CTAS
+  * and once as its batch twin, over the clause toggles.
   */
 class MrParitySpec extends SparkSpec {
 
@@ -136,6 +140,57 @@ class MrParitySpec extends SparkSpec {
     }
     info(s"$matched matches over 8 patterns")
     assert(matched > 30L, s"the generated cases must select matches, got $matched")
+  }
+
+  /** The rows plus `g`, a second key column constant per `k`. */
+  private def keyed(df: DataFrame): DataFrame =
+    df.withColumn("g", when(col("k") === "k1", "odd").otherwise("even"))
+
+  test("SQL-level parity: a standing MATCH_RECOGNIZE CTAS equals its batch twin over clause toggles") {
+    implicit val enc = Encoders.product[Ev]
+    val skips = Seq("AFTER MATCH SKIP PAST LAST ROW", "AFTER MATCH SKIP TO NEXT ROW",
+      "AFTER MATCH SKIP TO FIRST T", "AFTER MATCH SKIP TO LAST T")
+    val evCols = Seq("k", "ts", "tie", "t", "v")
+    var matched = 0L
+    forAll(caseGen.flatMap(c => seriesGen.map(s => (c, s))), 8) { case ((mk, rows), i) =>
+      val c = mk(i)
+      // over eight cases each skip runs once under ONE ROW and once under
+      // ALL ROWS; SUBSET in three, a two-column PARTITION BY in four
+      val (allRows, subset, twoKeys) = (i % 2 == 1, i % 3 == 0, i >= 4)
+      val keys = if (twoKeys) "k, g" else "k"
+      val measures = Seq("LAST(T.tie) AS t_tie", "FIRST(A.tie) AS a_tie") ++
+        (if (c.matchNumber) Seq("MATCH_NUMBER() AS mn") else Nil) ++
+        (if (allRows) Seq("CLASSIFIER() AS cls") else Nil) ++
+        (if (subset) Seq("FINAL count(U.*) AS n_u", "FINAL sum(U.v) AS u_sum") else Nil)
+      val aliases = measures.map(_.split(" AS ").last)
+      val select =
+        s"""SELECT $keys, ${((if (allRows) Seq("ts", "tie") else Nil) ++ aliases).mkString(", ")}
+           |FROM %s MATCH_RECOGNIZE (
+           |  PARTITION BY $keys ORDER BY ts, tie
+           |  MEASURES ${measures.mkString(", ")}
+           |  ${if (allRows) "ALL" else "ONE"} ROW${if (allRows) "S" else ""} PER MATCH
+           |  ${skips(c.skip)}
+           |  PATTERN (${c.pattern})${c.within.fold("")(us => s" WITHIN INTERVAL '${us / 1000000}' SECOND")}
+           |  ${if (subset) "SUBSET U = (A, T)" else ""}
+           |  DEFINE ${c.defs.map { case (v, d) => s"$v AS $d" }.mkString(", ")})""".stripMargin
+      info(s"case $i:\n$select")
+      val mem = StandingTwin.stream[Ev](spark, "mr_sql_src")(df => keyed(df.toDF(evCols: _*)))
+      try {
+        val sorted = rows.sortBy(r => (r._2.getTime, r._3))
+        val streamed = StandingTwin.standing(spark, mem, "mr_sql_out", select.format("mr_sql_src"),
+          sorted.grouped((sorted.size + 2) / 3).toSeq)(SpotStreamingMr.canon)
+        keyed(frame(rows)).createOrReplaceTempView("mr_sql_batch")
+        val batch = SpotStreamingMr.canon(SqlFrontend.execute(spark, select.format("mr_sql_batch")))
+          .collect().toSet
+        assert(streamed == batch, s"case $i\nstream-only ${streamed -- batch}\nbatch-only ${batch -- streamed}")
+        matched += batch.size
+      } finally {
+        TableRegistry.dropTable("mr_sql_src")
+        spark.catalog.dropTempView("mr_sql_batch")
+      }
+    }
+    info(s"$matched rows over 8 texts")
+    assert(matched > 30L, s"the generated texts must select matches, got $matched")
   }
 
   test("closed-stream parity: the StreamingSequenceMatchQ adapter equals Behavior.sequenceMatchQ") {
