@@ -209,11 +209,13 @@ object MrClause {
   * BY …)` call, parsed once for both routes:
   * [[SqlFrontend.rewriteDetectAnomalies]] lowers it to window functions, the
   * standing planner to [[graft.streaming.StreamingAnomaly.withPayload]].
+  * The call's ts argument must name the OVER clause's ORDER BY column
+  * (case-insensitively, backticks aside), which orders the series.
   *
   * @param start index of the call in the statement text
   * @param end   index just past its OVER clause
   */
-final case class AnomalyCall(value: String, ts: String, cfg: AnomalyDetector.Config,
+final case class AnomalyCall(value: String, cfg: AnomalyDetector.Config,
                              partition: Seq[String], order: String, start: Int, end: Int) {
 
   /** `sql` with the call and its OVER clause replaced by `replacement`. */
@@ -233,7 +235,11 @@ object AnomalyCall {
     val cfg = SqlFrontend.parseAnomalyCfg(args.drop(2).mkString(" "))
     val over = OverRe.findFirstMatchIn(sql.substring(afterArgs))
       .getOrElse(sys.error("ML_DETECT_ANOMALIES requires an OVER (PARTITION BY … ORDER BY …) clause"))
-    AnomalyCall(args(0), args(1), cfg,
+    def bare(c: String) = c.trim.replace("`", "").toLowerCase(java.util.Locale.ROOT)
+    require(bare(args(1)) == bare(over.group(2)),
+      s"ML_DETECT_ANOMALIES ts argument '${args(1).trim}' must be the OVER clause's " +
+        s"ORDER BY column '${over.group(2)}'")
+    AnomalyCall(args(0), cfg,
       SqlFrontend.splitTopLevelCommas(over.group(1)).map(_.trim).filter(_.nonEmpty),
       over.group(2), m.start, afterArgs + over.end)
   }

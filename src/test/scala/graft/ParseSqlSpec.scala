@@ -10,7 +10,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
 import graft.sources.TableRegistry
-import graft.sql.SqlFrontend
+import graft.sql.{AnomalyCall, SqlFrontend}
 
 /** Statement parsing keeps backslashes in string literals literal without
   * touching the session's conf: plain `spark.sql` keeps Spark's default,
@@ -152,7 +152,10 @@ class ParseSqlSpec extends SparkSpec {
       mr(define = "A A.v < 2.0, B AS B.v >= 2.0") -> "DEFINE needs 'VAR AS condition'",
       mr(measures = "FIRST(A.ts)") -> "measure needs 'expr AS alias'",
       ("SELECT k, ML_DETECT_ANOMALIES(v, ts, JSON_OBJECT('minTrainingSize' VALUE 2)) AS a " +
-        "FROM %s") -> "requires an OVER (PARTITION BY … ORDER BY …) clause")
+        "FROM %s") -> "requires an OVER (PARTITION BY … ORDER BY …) clause",
+      ("SELECT k, ML_DETECT_ANOMALIES(v, v, JSON_OBJECT('minTrainingSize' VALUE 2)) " +
+        "OVER (PARTITION BY k ORDER BY ts) AS a FROM %s") ->
+        "ts argument 'v' must be the OVER clause's ORDER BY column 'ts'")
     StandingTwin.stream[Ev](spark, "refuse_src")(_.toDF(evCols: _*))
     Seq.empty[Ev].toDF(evCols: _*).createOrReplaceTempView("refuse_batch")
     try {
@@ -168,5 +171,12 @@ class ParseSqlSpec extends SparkSpec {
       TableRegistry.dropTable("refuse_src")
       spark.catalog.dropTempView("refuse_batch")
     }
+  }
+
+  test("an ML_DETECT_ANOMALIES ts argument matches its ORDER BY column case-insensitively, " +
+    "backticks aside") {
+    val call = AnomalyCall.parse("SELECT ML_DETECT_ANOMALIES(v, `Window_Time`) " +
+      "OVER (PARTITION BY k ORDER BY window_time) AS a FROM t")
+    assert(call.map(_.order).contains("window_time"), call)
   }
 }

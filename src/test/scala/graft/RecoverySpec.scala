@@ -248,4 +248,46 @@ class RecoverySpec extends SparkSpec {
     assert(finalState(torn) == finalState(clean),
       "kept docs and signature/shingle state must match the never-crashed run exactly")
   }
+
+  test("a standing statement checkpointed by the FileContext manager restarts exactly on the " +
+    "session's FileSystem manager") {
+    import CheckpointForkSpec._
+    import graft.sources.TableRegistry
+    import graft.sql.{SqlFrontend, StatementCatalog}
+    val feed = claimsFeed(spark, "switch_claims", slices = 4)
+    try {
+      feed.publish(0)
+      // phase 1 on Spark's default manager, which the session replaces (an
+      // unset key would fall back to that default too, so phase 2 restores
+      // the session's value)
+      val sessionManager = spark.conf.get(ManagerKey)
+      spark.conf.set(ManagerKey,
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
+      val (_, before) = try forks {
+        SqlFrontend.execute(spark, s"CREATE TABLE switch_out AS ${spikesSelect("switch_claims")}")
+        Drain.standing("switch_out").processAllAvailable()
+        feed.publish(1)
+        Drain.standing("switch_out").processAllAvailable()
+      } finally spark.conf.set(ManagerKey, sessionManager)
+      assert(before.getOrElse("readlink", 0) > 0,
+        s"the FileContext manager's renames probe links with readlink: $before")
+      // phase 2: the same sink and checkpoint, relit on the session's manager
+      val (_, after) = forks {
+        val q = Drain.relight("switch_out", afterBatch = 1)
+        (2 until 4).foreach { i => feed.publish(i); q.processAllAvailable() }
+      }
+      assert(!after.contains("readlink"), s"the relit statement still ran the old manager: $after")
+      val sink = SqlFrontend.execute(spark, "SELECT * FROM switch_out")
+      spark.read.parquet(feed.dir).createOrReplaceTempView("switch_batch")
+      val p = Drain.parity(sink, closed(SqlFrontend.execute(spark, spikesSelect("switch_batch"))))
+      assert(p.streamed > 0 && p.extra == 0 && p.missing == 0, p)
+      assert(sink.distinct().count() == p.streamed, "the restart duplicated sink rows")
+    } finally {
+      if (TableRegistry.exists("switch_out")) SqlFrontend.execute(spark, "DROP TABLE switch_out")
+      TableRegistry.dropTable("switch_claims")
+      spark.catalog.dropTempView("switch_batch")
+      feed.delete()
+      StatementCatalog.reset()
+    }
+  }
 }
