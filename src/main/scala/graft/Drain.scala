@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.StructType
   * SpotStreamingMr <sf> [slices]                         SpotStreamingMr <sf> [slices]          (mode q164)
   * SpotStreamingMr2Key <sf> [slices] [restartAfter]      SpotStreamingMr <sf> [slices] 2key [restartAfter]
   * SpotStreamingMrRows <sf> [slices] [mode]              SpotStreamingMr <sf> [slices] [mode]
-  *   [restartAfter] [engine] [dumpDir]                     [restartAfter] [engine] [dumpDir]
+  *   [restartAfter] [engine] [dumpDir]                     [restartAfter] [dumpDir]
   * SpotStreamingChain <sf> [slices] [restartAfter] [mode]  unchanged
   * SpotStreamingLabs <sf> [ann]                          unchanged
   * NearDupMaintenanceSpot <sf>                           unchanged

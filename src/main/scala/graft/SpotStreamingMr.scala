@@ -35,14 +35,13 @@ import graft.sql.SqlFrontend
   *
   * `restartAfter` > 0 stops the statement after that many committed
   * micro-batches, while every key holds mid-pattern state, and relights it
-  * from its own checkpoint ([[Drain.relight]]). `engine` picks the state
-  * store: `rocksdb` (transformWithState) or `heap` (flatMapGroupsWithState
-  * on the HDFS-backed provider). `dumpDir` writes the compared streamed rows
-  * to `<dumpDir>/<mode>/` for tools/compare_dumps.py. `peakStateRows` is the
-  * most rows any key kept buffered after a micro-batch.
+  * from its own checkpoint ([[Drain.relight]]). `dumpDir` writes the
+  * compared streamed rows to `<dumpDir>/<mode>/` for tools/compare_dumps.py.
+  * `peakStateRows` is the most rows any key kept buffered after a
+  * micro-batch.
   *
   * Usage: runMain graft.SpotStreamingMr <sfDir> [slices] [mode] [restartAfter]
-  * [engine] [dumpDir]
+  * [dumpDir]
   */
 object SpotStreamingMr {
 
@@ -90,8 +89,6 @@ object SpotStreamingMr {
       "LAST(U.value) AS final_top, MATCH_NUMBER() AS match_seq",
       "ONE ROW PER MATCH AFTER MATCH SKIP TO NEXT ROW", prefixGate = true))
 
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-
   /** Both sides in one comparable shape: timestamps as epoch micros,
     * integers as long, decimals at (38, 6).
     */
@@ -107,22 +104,17 @@ object SpotStreamingMr {
 
   /** Drain one mode and print its `[mrdrain]` report line. */
   def run(spark: SparkSession, sfDir: String, slices: Int = 20, mode: String = "q164",
-          restartAfter: Int = 0, engine: String = "rocksdb",
-          dumpDir: Option[String] = None): Drain.Report = {
+          restartAfter: Int = 0, dumpDir: Option[String] = None): Drain.Report = {
     val m = modes.getOrElse(mode, throw new IllegalArgumentException(
       s"unknown mode '$mode' (one of ${modes.keys.toSeq.sorted.mkString(", ")})"))
-    require(engine == "rocksdb" || engine == "heap", s"unknown engine '$engine'")
     // the feed yields one batch per slice: a later restart point is never reached
     require(restartAfter < slices, s"restartAfter=$restartAfter must be < slices=$slices")
-    val provider = spark.conf.getOption(ProviderKey)
     val ev = core.Tables(spark, sfDir, "events").select(col("user_id"), col("event_type"),
       col("ts").cast("timestamp").as("ts"), col("event_id"), col("value"))
     val feed = Drain.feed(ev, "ts", slices, "mrdrain")
     // the planner names both accumulators after the statement's source view
     val acc = new Drain.Accumulables(spark, "mr_peak_state_rows_", "mr_open_tails_")
     try {
-      if (engine == "heap") spark.conf.set(ProviderKey,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
       feed.publishAll()
       TableRegistry.createTable(TableRegistry.TableDef("mr_feed", Some(feed.schema),
         load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], feed.schema),
@@ -155,7 +147,7 @@ object SpotStreamingMr {
       dumpDir.foreach(d => streamed.write.mode("overwrite").parquet(s"$d/$mode"))
       val nEvents = ev.count()
       Drain.report("mrdrain", spans.ok && rows.ok && prefixBad == 0)(
-        "mode" -> mode, "engine" -> engine, "restartAfter" -> restartAfter, "sec" -> sec,
+        "mode" -> mode, "restartAfter" -> restartAfter, "sec" -> sec,
         "slices" -> slices, "events" -> nEvents, "eventsPerSec" -> (nEvents / sec).toLong,
         "streamRows" -> rows.streamed, "batchRows" -> batch.count(),
         "streamMatches" -> spans.streamed, "batchMatches" -> spans.batch,
@@ -170,7 +162,6 @@ object SpotStreamingMr {
       if (TableRegistry.exists("mr_drain")) SqlFrontend.execute(spark, "DROP TABLE mr_drain")
       TableRegistry.dropTable("mr_feed")
       spark.catalog.dropTempView("mr_batch")
-      provider.fold(spark.conf.unset(ProviderKey))(spark.conf.set(ProviderKey, _))
       feed.delete()
     }
   }
@@ -179,7 +170,7 @@ object SpotStreamingMr {
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val report = run(spark, args.headOption.getOrElse("benchdata/sf10"),
       args.lift(1).map(_.toInt).getOrElse(20), args.lift(2).getOrElse("q164"),
-      args.lift(3).map(_.toInt).getOrElse(0), args.lift(4).getOrElse("rocksdb"), args.lift(5))
+      args.lift(3).map(_.toInt).getOrElse(0), args.lift(4))
     Drain.exit(spark, report)
   }
 }

@@ -246,7 +246,7 @@ object AnomalyDetector {
     * (key, order), then the shared online [[step]] per row with a ring buffer
     * per key — O(maxTrainingSize) memory per key, no per-key collect, keys
     * stream through each task one after another. The same physical shape
-    * flatMapGroupsWithState gives the streaming twin.
+    * transformWithState gives the streaming twin.
     */
   private def detectBatchSeq(df: DataFrame, valueCol: Column, partitionCols: Seq[Column],
                              orderCols: Seq[Column], cfg: Config): DataFrame = {

@@ -27,8 +27,8 @@ import org.apache.spark.sql.SparkSession
   *     the pre-aggregation input (full audit of the unbounded-agg sites in
   *     the scaladoc history at Graft.scala, r7/r15);
   *   - the RocksDB state store provider — per-key streaming state off-heap
-  *     (the 100M+ standing-key backend), and the opt-in that routes
-  *     transformWithState engine (StreamingMatchRecognize's default);
+  *     (the 100M+ standing-key backend); every standing stateful operator
+  *     runs on `transformWithState`, which requires it;
   *   - Spark's generated-class cache (`codegen.cache.maxEntries`) raised
   *     from 100 to 4096 — graft re-plans every execution, so a class is
   *     compiled once only if the cache holds the working set. Each class is

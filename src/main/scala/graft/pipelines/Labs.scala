@@ -232,7 +232,7 @@ object Labs {
 
   /** Streaming Lab3: the same topology as [[lab3Fleet]] but as a continuous
     * query — file-stream source → watermarked 5-min tumble (append on window
-    * close) → flatMapGroupsWithState anomaly → surge filter → foreachBatch
+    * close) → transformWithState anomaly → surge filter → foreachBatch
     * RAG enrichment (embed + vector search + textgen) appended to a parquet
     * sink. foreachBatch is the agent/ML boundary (SURVEY.md §3: fused DAG with
     * per-batch side effects); in production the sink is a Kafka topic via

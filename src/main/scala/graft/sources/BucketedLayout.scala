@@ -35,18 +35,3 @@ object BucketedLayout {
   def drop(spark: SparkSession, name: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS $name")
 }
-
-/** Hive-style partitioned layout — bucketing's sibling for LOW-cardinality
-  * routing keys (language, date, source): one directory per key value, so a
-  * `lang = 'en'` filter never opens the other partitions' files at all
-  * (`PartitionFilters` + pruned `InMemoryFileIndex`, vs bucketing's fixed-n
-  * hash split for high-cardinality join keys). The standard lakehouse layout
-  * for a curated corpus consumed per-language/per-date downstream.
-  */
-object PartitionedLayout {
-
-  def write(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
-
-  def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
-}

@@ -106,16 +106,16 @@ object TableRegistry {
 
   /** The session's `sql.state-ttl` as whole seconds — the knob the reference
     * sets before its stateful queries (`'1 HOURS'` LAB1-Walkthrough.md:120,
-    * `'14 d'` LAB4-Walkthrough.md:124). The standing MATCH_RECOGNIZE stage
-    * reads this and passes it to the operator's event-time TTL
-    * (StreamingOps.ttlConf).
+    * `'14 d'` LAB4-Walkthrough.md:124). The standing MATCH_RECOGNIZE and
+    * ML_DETECT_ANOMALIES stages read this and pass it to their operator's
+    * event-time TTL (StreamingOps.resetTtlTimer).
     * None when unset (state unbounded, the operators' default).
     */
   def stateTtlSeconds: Option[Long] = get("sql.state-ttl").map(durationSeconds)
 
   /** Watermark delay for TTL'd streaming operators:
     * `SET 'sql.state-ttl-watermark-delay' = '<n> <unit>'` when set, else the
-    * TTL itself. Spark's flatMapGroupsWithState drops rows older than the
+    * TTL itself. Spark's transformWithState drops rows older than the
     * watermark, so a 0s delay on a stream with cross-key event-time skew
     * silently loses IN-ORDER rows of lagging keys — a data-loss semantic the
     * reference's Flink state TTL does not have (r8 ADVICE). Delay = TTL is

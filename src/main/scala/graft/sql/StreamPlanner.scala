@@ -27,7 +27,7 @@ import graft.streaming.StreamingAnomaly
   *   3. an `ML_DETECT_ANOMALIES(…) OVER (PARTITION BY k ORDER BY t …)` stage
   *      (unbounded OVER windows don't exist on streams) routes to the stateful
   *      [[StreamingAnomaly.withPayload]] operator: the stage's input rows ride
-  *      through the flatMapGroupsWithState operator as a JSON payload column
+  *      through the transformWithState operator as a JSON payload column
   *      and are re-expanded by schema afterwards, so passthrough columns
   *      survive; the surrounding SELECT list then runs over the re-expanded
   *      view with the call replaced by the detection struct;
@@ -374,8 +374,8 @@ object StreamPlanner {
     // window_time is NOT window_time(__w): Spark's MISSING_AGGREGATION check
     // rejects the WindowTime expression over a grouped struct attribute. The
     // manual end-1ms form is the same value (Flink's window_time contract) and
-    // the downstream stateful op (flatMapGroupsWithState, NoTimeout) needs no
-    // event-time metadata on it.
+    // the downstream stateful op (StreamingAnomaly) needs no event-time
+    // metadata on it: under a state TTL it installs its own watermark.
     val exprOf = Map(
       "window_start" -> "__w.start",
       "window_end" -> "__w.end",
@@ -753,10 +753,15 @@ object StreamPlanner {
     // rows the operator drops behind their key's frontier, named after the
     // stage's source view like the MR stage's accumulators
     val src = "^\\s*(\\w+)".r.findFirstMatchIn(fromPart).fold("subquery")(_.group(1))
+    val ttlSeconds = TableRegistry.stateTtlSeconds.getOrElse(0L)
     val det = StreamingAnomaly.withPayload(input,
       keyExpr, Bridge.expr(spark, call.order), Bridge.expr(spark, call.value),
       to_json(struct(input.columns.map(col).toIndexedSeq: _*), jsonOpts), call.cfg,
-      lateRows = Some(spark.sparkContext.longAccumulator(s"anomaly_late_rows_$src")))
+      lateRows = Some(spark.sparkContext.longAccumulator(s"anomaly_late_rows_$src")),
+      // SET 'sql.state-ttl' evicts a quiet key's training buffer, as it
+      // bounds the MATCH_RECOGNIZE stage's state
+      ttlSeconds = ttlSeconds,
+      ttlWatermarkDelay = TableRegistry.stateTtlWatermarkDelay(ttlSeconds))
     val expanded = det.toDF()
       .select(
         from_json(col("payload"), input.schema, jsonOpts).as("__r"),

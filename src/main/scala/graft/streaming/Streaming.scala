@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.streaming.{DataStreamWriter, StatefulProcessorHandle, TimeMode,
+  TimerValues}
 
 /** Streaming counterparts of the batch operators (SURVEY.md §7.2 step 7).
   *
@@ -43,43 +44,42 @@ object StreamingOps {
   def tsMicros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
 
-  /** Event-time state TTL for StreamingMatchRecognize — the analog of
-    * the reference's `SET 'sql.state-ttl' = '14 d'` (LAB4-Walkthrough.md:124):
+  /** Event-time state TTL for the standing stateful operators
+    * (StreamingMatchRecognize, StreamingAnomaly) — the analog of the
+    * reference's `SET 'sql.state-ttl' = '14 d'` (LAB4-Walkthrough.md:124):
     * a key whose newest event is more than `ttlSeconds` behind the watermark
     * has its state EVICTED (dropped, not flushed — Flink TTL semantics; an
-    * open match attempt simply disappears), and a later event of the
-    * same key re-enters with FRESH state, exactly as a first-ever event would.
-    * Without a TTL the state store grows monotonically with key cardinality —
-    * users/entities on a 100 TB stream — which is the one structure a
-    * bounded-per-key design can't bound by itself.
+    * open match attempt or a training buffer simply disappears), and a later
+    * event of the same key re-enters with FRESH state, exactly as a
+    * first-ever event would. Without a TTL the state store grows
+    * monotonically with key cardinality — users/entities on a 100 TB
+    * stream — which is the one structure a bounded-per-key design can't
+    * bound by itself.
     *
-    * `ttlSeconds == 0` keeps today's NoTimeout behavior. `ttlSeconds > 0`
-    * requires a streaming input; the operator installs the event-time
-    * watermark itself (delay = `ttlWatermarkDelay`), which also engages
+    * `ttlSeconds == 0` runs without timers. Under `ttlSeconds > 0` the
+    * operator installs the event-time watermark itself
+    * (delay = `TableRegistry.stateTtlWatermarkDelay`), which also engages
     * Spark's late-row filter — rows older than the watermark are dropped,
     * consistent with the operator's own late-row rule.
     */
-  private[streaming] def ttlConf(ttlSeconds: Long): org.apache.spark.sql.streaming.GroupStateTimeout = {
+  private[streaming] def ttlTimeMode(ttlSeconds: Long): TimeMode = {
     require(ttlSeconds >= 0, s"ttlSeconds must be >= 0, got $ttlSeconds")
-    if (ttlSeconds > 0) org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()
-    else org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()
+    if (ttlSeconds > 0) TimeMode.EventTime() else TimeMode.None()
   }
 
-  /** Arm (or re-arm) the eviction timer after a key processed a batch:
-    * fires when the watermark passes newest-event-time + ttl. Clamped one
-    * past the current watermark because Spark rejects a timeout at or below
-    * it — a key fed only late-ish events evicts at the next watermark move
-    * rather than erroring. No-op when TTL is off (conf is NoTimeout and
-    * setTimeoutTimestamp would throw) or in batch execution of the same
-    * operator (no watermark to evict against).
+  /** Re-arm a key's one eviction timer after it folded new events: it fires
+    * when the watermark passes newest-event-time + ttl, clamped one past the
+    * current watermark, so a key fed only late-ish events evicts at the next
+    * watermark move, not in the batch that just fed it. No-op when the TTL
+    * is off or the key folded nothing.
     */
-  private[streaming] def armTtl[S](state: org.apache.spark.sql.streaming.GroupState[S],
-                                   ttlSeconds: Long, newestEventMicros: Long): Unit = {
+  private[streaming] def resetTtlTimer(handle: StatefulProcessorHandle, ttlSeconds: Long,
+                                       newestEventMicros: Long, tv: TimerValues): Unit = {
     if (ttlSeconds <= 0 || newestEventMicros == Long.MinValue) return
-    val wm = try state.getCurrentWatermarkMs()
-    catch { case _: UnsupportedOperationException => return } // batch execution
+    val timers = handle.listTimers()
+    while (timers.hasNext) handle.deleteTimer(timers.next())
     val target = Math.floorDiv(newestEventMicros, 1000L) + ttlSeconds * 1000L
-    state.setTimeoutTimestamp(math.max(target, wm + 1L))
+    handle.registerTimer(math.max(target, tv.getCurrentWatermarkInMs() + 1L))
   }
 
   /** Watermarked tumbling aggregation (streaming W1/A1/A2). Late rows beyond

@@ -7,7 +7,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
+  TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
 import graft.operators.{MatchRecognize, MrConditions, MrMatcher, MrProg}
@@ -67,12 +68,10 @@ import graft.operators.{MatchRecognize, MrConditions, MrMatcher, MrProg}
   * append/restore time — the interpreter's per-read path allocates nothing.
   * Nothing reaches the driver.
   *
-  * State engine (r13): on a session with the RocksDB state store provider
-  * (the [[graft.core.Graft.session]] default) the operator runs on
-  * `transformWithState` — state off-heap in RocksDB, TTL via explicit
-  * event-time timers, the backend that survives 100M+ standing keys; other
-  * sessions keep `flatMapGroupsWithState` (heap state). Both engines run
-  * the same per-key step, so outputs are identical by construction.
+  * State engine: `transformWithState` on the session's RocksDB state store
+  * ([[graft.core.Sessions.local]]) — state off-heap, the backend that
+  * survives 100M+ standing keys; the TTL is one explicit event-time timer
+  * per key ([[StreamingOps.resetTtlTimer]], shared with StreamingAnomaly).
   *
   * Recovery contract (r13, spec-pinned in RecoverySpec): the whole [[Buf]] —
   * buffered rows, selection cursor, undecided attempts AND `matchSeq`
@@ -89,7 +88,7 @@ import graft.operators.{MatchRecognize, MrConditions, MrMatcher, MrProg}
   * per-position undecided walk (every start decides independently).
   */
 // Serializable: the per-key step is a local def (a method on this module), so
-// the flatMapGroupsWithState lambda captures the module reference; Scala
+// the StatefulProcessor captures the module reference; Scala
 // serializes modules by readResolve back to MODULE$, so this costs nothing.
 object StreamingMatchRecognize extends Serializable {
 
@@ -256,6 +255,8 @@ object StreamingMatchRecognize extends Serializable {
     val cursorMode = skip != MatchRecognize.SkipToNextRow
     MrMatcher.requireSkipTarget(skip, nTok)
     val nSub = subsets.size
+    require(df.isStreaming, "StreamingMatchRecognize runs on a streaming input; a static " +
+      "frame runs through MatchRecognize.scanPattern")
     require(condCols.nonEmpty, "conditions must reference at least one column")
     require(nTok > 0, "pattern must name at least one variable")
     require(varNames.distinct.size == nTok, s"duplicate variable name in $varNames")
@@ -768,74 +769,32 @@ object StreamingMatchRecognize extends Serializable {
           }
     }
 
-    val grouped = srcQ.groupByKey(_.getString(0))
-    // State-engine selection (r13, VERDICT r12 #6): per-key state is bounded
-    // (O(longest open attempt + navDepth) rows), but at 100M+ standing keys a
-    // heap-backed flatMapGroupsWithState store is the executor-memory
-    // ceiling — the RocksDB state store is the scale-safe backend, reached
-    // through transformWithState (ValueState + event-time timers for the
-    // TTL). Both engines run the SAME processKey, so
-    // outputs are identical by construction; the session opts in by setting
-    // the RocksDB provider (Graft.session/Bench.session do), and sessions on
-    // the default heap provider — or batch execution of this operator — keep
-    // the flatMapGroupsWithState path (transformWithState requires RocksDB).
-    val useTws = df.isStreaming && df.sparkSession.conf
-      .get("spark.sql.streaming.stateStore.providerClass", "")
-      .contains("RocksDBStateStoreProvider")
-    val result =
-      if (useTws) {
-        import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimeMode, TimerValues, ValueState}
-        val proc = new org.apache.spark.sql.streaming.StatefulProcessor[String, Row, Row] {
-          @transient private var st: ValueState[Buf] = _
-          override def init(om: OutputMode, tm: TimeMode): Unit =
-            // TTL rides explicit event-time timers below (TTLConfig's own
-            // expiry is processing-time and silent — it would drop open
-            // tails uncounted)
-            st = getHandle.getValueState[Buf]("mrbuf", stEnc, TTLConfig.NONE)
-          override def handleInputRows(key: String, rows: Iterator[Row],
-                                       tv: TimerValues): Iterator[Row] = {
-            val (nb, out, newest) = processKey(key, rows, Option(st.get()))
-            st.update(nb)
-            stateProbe.foreach(_.add(nb.cells.length.toLong)) // peak retained rows per key
-            if (ttlSeconds > 0 && newest != Long.MinValue) {
-              // re-arm the eviction timer at newest-event + ttl (clamped one
-              // past the watermark — armTtl's rule)
-              val timers = getHandle.listTimers()
-              while (timers.hasNext) getHandle.deleteTimer(timers.next())
-              val target = Math.floorDiv(newest, 1000L) + ttlSeconds * 1000L
-              getHandle.registerTimer(math.max(target, tv.getCurrentWatermarkInMs() + 1L))
-            }
-            out.iterator
-          }
-          override def handleExpiredTimer(key: String, tv: TimerValues,
-                                          info: ExpiredTimerInfo): Iterator[Row] = {
-            val bufOpt = Option(st.get())
-            reportOpenTails(key, bufOpt)
-            val flushed = flushPendingAtExpiry(bufOpt)
-            st.clear()
-            flushed.iterator
-          }
-        }
-        grouped.transformWithState(proc,
-          if (ttlSeconds > 0) TimeMode.EventTime() else TimeMode.None(), OutputMode.Append())
-      } else {
-        grouped.flatMapGroupsWithState[Buf, Row](OutputMode.Append(),
-          StreamingOps.ttlConf(ttlSeconds)) {
-          (key: String, rows: Iterator[Row], state: GroupState[Buf]) =>
-            if (state.hasTimedOut) {
-              val bufOpt = state.getOption
-              reportOpenTails(key, bufOpt)
-              val flushed = flushPendingAtExpiry(bufOpt)
-              state.remove(); flushed.iterator
-            } else {
-              val (nb, out, newest) = processKey(key, rows, state.getOption)
-              state.update(nb)
-              stateProbe.foreach(_.add(nb.cells.length.toLong)) // peak retained rows per key
-              StreamingOps.armTtl(state, ttlSeconds, newest)
-              out.iterator
-            }
-        }
+    val proc = new StatefulProcessor[String, Row, Row] {
+      @transient private var st: ValueState[Buf] = _
+      override def init(om: OutputMode, tm: TimeMode): Unit =
+        // TTL rides explicit event-time timers below (TTLConfig's own
+        // expiry is processing-time and silent — it would drop open
+        // tails uncounted)
+        st = getHandle.getValueState[Buf]("mrbuf", stEnc, TTLConfig.NONE)
+      override def handleInputRows(key: String, rows: Iterator[Row],
+                                   tv: TimerValues): Iterator[Row] = {
+        val (nb, out, newest) = processKey(key, rows, Option(st.get()))
+        st.update(nb)
+        stateProbe.foreach(_.add(nb.cells.length.toLong)) // peak retained rows per key
+        StreamingOps.resetTtlTimer(getHandle, ttlSeconds, newest, tv)
+        out.iterator
       }
-    result.toDF()
+      override def handleExpiredTimer(key: String, tv: TimerValues,
+                                      info: ExpiredTimerInfo): Iterator[Row] = {
+        val bufOpt = Option(st.get())
+        reportOpenTails(key, bufOpt)
+        val flushed = flushPendingAtExpiry(bufOpt)
+        st.clear()
+        flushed.iterator
+      }
+    }
+    srcQ.groupByKey(_.getString(0))
+      .transformWithState(proc, StreamingOps.ttlTimeMode(ttlSeconds), OutputMode.Append())
+      .toDF()
   }
 }

@@ -85,18 +85,4 @@ class BucketedLayoutSpec extends SparkSpec {
         .head().getLong(2)
     assert(sum(spark.read.parquet(s"$dir/z")) == sum(orders))
   }
-
-  test("partitioned layout prunes non-matching partitions at the file index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    val docs = graft.core.Tables(spark, sfDir, "documents")
-    graft.sources.PartitionedLayout.write(docs, s"$dir/docs", Seq("lang"))
-    val langs = docs.select("lang").distinct().count()
-    assert(langs > 1, "fixture needs multiple languages")
-    val en = graft.sources.PartitionedLayout.read(spark, s"$dir/docs")
-      .filter(col("lang") === "en")
-    val p = en.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [isnotnull(lang"),
-      s"the lang filter must prune at the partition level:\n$p")
-    assert(en.count() == docs.filter(col("lang") === "en").count())
-  }
 }

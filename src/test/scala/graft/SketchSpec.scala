@@ -69,34 +69,4 @@ class SketchSpec extends SparkSpec {
     // answer to DISTINCT
     assert(plan.contains("partial_approx_count_distinct"), plan)
   }
-
-  test("Misra-Gries heavy hitters: bounds hold and every true heavy item survives") {
-    import spark.implicits._
-    // planted skew: 2 heavy tokens over a 2000-token cold tail, N = 10000
-    val items = Seq.fill(5000)("hot1") ++ Seq.fill(3000)("hot2") ++
-      (0 until 2000).map(i => s"cold_$i")
-    val n = items.size.toLong
-    val m = 50
-    val df = scala.util.Random.shuffle(items).toDF("tok").repartition(8)
-    val est = graft.operators.FrequentItems.frequent(df, col("tok"), m)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est.size <= m)
-    val slack = n / (m + 1) // 196
-    val truth = Map("hot1" -> 5000L, "hot2" -> 3000L).withDefaultValue(1L)
-    est.foreach { case (k, c) =>
-      assert(c <= truth(k), s"$k overestimated: $c > ${truth(k)}")
-      assert(c >= truth(k) - slack, s"$k undershot the MG bound: $c < ${truth(k)} - $slack")
-    }
-    assert(est.contains("hot1") && est.contains("hot2"),
-      "items with true count > N/(m+1) must survive the merge")
-    assert(est("hot1") > est("hot2"))
-  }
-
-  test("Misra-Gries aggregates map-side: m counters per partition cross the wire, not rows") {
-    import spark.implicits._
-    val df = (0 until 1000).map(i => s"t$i").toDF("tok")
-    val p = graft.operators.FrequentItems.frequent(df, col("tok"), 10)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("partial_misragriesagg"), s"map-side partial required:\n$p")
-  }
 }

@@ -211,6 +211,19 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("the standing stateful operators refuse a static frame and name its batch route") {
+    import spark.implicits._
+    import graft.operators.MatchRecognize.MrTok
+    val static = Seq(("k1", ts("2024-01-01 00:00:00"), 1L, 1.0)).toDF("key", "ts", "id", "value")
+    val cfg = AnomalyDetector.Config(minTrainingSize = 3, maxTrainingSize = 5, confidencePercentage = 95.0)
+    val anom = intercept[IllegalArgumentException](
+      StreamingAnomaly(static, "key", "ts", "value", cfg))
+    assert(anom.getMessage.contains("AnomalyDetector.detectBatch"), anom.getMessage)
+    val mr = intercept[IllegalArgumentException](graft.streaming.StreamingMatchRecognize(
+      static, "key", Seq("value"), "ts", "id", Seq(MrTok("A", 1, Some(1))), Seq(None)))
+    assert(mr.getMessage.contains("MatchRecognize.scanPattern"), mr.getMessage)
+  }
+
   test("streaming ARIMA anomaly is bit-identical to the pure-Scala twin across triggers") {
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[(String, Timestamp, Double)]
@@ -1346,56 +1359,6 @@ class StreamingSpec extends SparkSpec {
     val streamedStarts = streamed.select("key", "match_start_ts")
     assert(streamedStarts.exceptAll(sqlRows).isEmpty && sqlRows.exceptAll(streamedStarts).isEmpty,
       "closed-stream skip-past matches must equal the SQL rewrite")
-  }
-
-  test("streaming MR state engines (transformWithState/RocksDB vs flatMapGroupsWithState) emit identical output") {
-    // the r13 migration contract: both engines run the SAME per-key step, so
-    // a feed drained through each — across micro-batch boundaries, ALL ROWS,
-    // RUNNING measures, MATCH_NUMBER — must produce row-identical output.
-    // The engine is chosen at PLAN time from the session's state-store
-    // provider conf; the shared spec session defaults to RocksDB (TWS), and
-    // unsetting the conf around planning+start exercises the heap engine.
-    import graft.streaming.StreamingMatchRecognize
-    import graft.streaming.StreamingMatchRecognize.{MrAggMeasure, MrMeasure}
-    import graft.operators.MatchRecognize.MrTok
-    implicit val sq = spark.sqlContext
-    implicit val enc = Encoders.product[(String, Timestamp, Long, Double)]
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val rocks = spark.conf.get(providerKey)
-    assert(rocks.contains("RocksDB"), s"spec session must default to RocksDB, got $rocks")
-
-    def ev(m: Int, v: Double) = ("k1", ts(f"2024-01-01 00:0$m:00"), m.toLong, v)
-    val b1 = Seq(ev(0, 10.0), ev(1, 8.0), ev(2, 12.0), ev(3, 11.0), ev(4, 9.0))
-    val b2 = Seq(ev(5, 14.0), ev(6, 5.0))
-
-    def drain(name: String): Seq[String] = {
-      val mem = MemoryStream[(String, Timestamp, Long, Double)]
-      val matched = StreamingMatchRecognize(
-        mem.toDF().toDF("u", "ts", "id", "v"), "u", condCols = Seq("v"),
-        tsCol = "ts", tieCol = "id",
-        tokens = Seq(MrTok("S", 1, Some(1)), MrTok("D", 1, None), MrTok("U", 1, None)),
-        defs = Seq(None, Some("D.v < PREV(D.v)"), Some("U.v > PREV(U.v)")),
-        skip = MatchRecognize.SkipPastLastRow,
-        measures = Seq(MrMeasure(isFirst = false, 1, "v", "bottom")),
-        aggMeasures = Seq(MrAggMeasure("sum", 2, "v", "up_sum")),
-        matchNumberAlias = Some("mn"))
-      val q = matched.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        mem.addData(b1: _*); q.processAllAvailable()
-        mem.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      spark.table(name).orderBy("mn").collect().map(_.toString).toSeq
-    }
-
-    val viaTws = drain("mr_eng_tws")
-    val viaHeap =
-      try { spark.conf.unset(providerKey); drain("mr_eng_heap") }
-      finally spark.conf.set(providerKey, rocks)
-    assert(viaTws.nonEmpty && viaTws == viaHeap,
-      s"engines diverged:\nTWS : $viaTws\nheap: $viaHeap")
-    // both decide the same two matches: (10,8,12) and (11,9,14)
-    assert(viaTws.size == 2, viaTws.toString)
   }
 
   test("streaming AFTER MATCH SKIP TO FIRST <var>: overlapping matches across micro-batches " +

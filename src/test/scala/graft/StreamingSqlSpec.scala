@@ -403,6 +403,66 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("standing ML_DETECT_ANOMALIES under SET sql.state-ttl evicts a quiet key: its next " +
+    "row starts fresh training") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.Encoders
+    implicit val enc = Encoders.product[(String, Timestamp, Double)]
+    StatementCatalog.reset()
+    Seq("ttl_anom_out", "ttl_anom_events").foreach { t =>
+      if (TableRegistry.exists(t)) TableRegistry.dropTable(t)
+      spark.catalog.dropTempView(t)
+    }
+    val mem = MemoryStream[(String, Timestamp, Double)]
+    val schema = mem.toDF().toDF("k", "ts", "v").schema
+    TableRegistry.createTable(TableRegistry.TableDef("ttl_anom_events", Some(schema),
+      load = s => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
+      loadStream = Some(_ => mem.toDF().toDF("k", "ts", "v"))))
+    // offset from epoch (initial watermark 0 filters rows AT it)
+    def at(sec: Long) = new Timestamp((1000000L + sec) * 1000L)
+    try {
+      SqlFrontend.execute(spark, "SET 'sql.state-ttl' = '10 min'")
+      SqlFrontend.execute(spark,
+        """CREATE TABLE ttl_anom_out AS
+          |SELECT k, ts, v, ML_DETECT_ANOMALIES(v, ts,
+          |    JSON_OBJECT('minTrainingSize' VALUE 3, 'maxTrainingSize' VALUE 50))
+          |  OVER (PARTITION BY k ORDER BY ts
+          |        RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS anom
+          |FROM ttl_anom_events""".stripMargin)
+      val q = StatementCatalog.get("ttl_anom_out").collect {
+        case st: StatementCatalog.Standing => st.query
+      }.getOrElse(fail("an ML_DETECT_ANOMALIES CTAS over a stream must run standing"))
+      // key a trains on four rows, then goes quiet
+      mem.addData(Seq(10.0, 12.0, 11.0, 13.0).zipWithIndex
+        .map { case (v, i) => ("a", at(60L * i), v) })
+      q.processAllAvailable()
+      assert(Option(q.lastProgress).exists(p => !p.eventTime.isEmpty),
+        "SET sql.state-ttl must install an event-time watermark on the detector input")
+      // key b moves the watermark (5000 s - 10 min) far past a's newest + TTL
+      // (180 s + 10 min); the second batch runs under the moved watermark
+      mem.addData(("b", at(5000), 1.0)); q.processAllAvailable()
+      mem.addData(("b", at(5001), 1.0)); q.processAllAvailable()
+      // a comes back: its evicted buffer must not forecast these rows
+      mem.addData(Seq(100.0, 102.0, 101.0, 103.0).zipWithIndex
+        .map { case (v, i) => ("a", at(6000L + 60L * i), v) })
+      q.processAllAvailable()
+      val a = SqlFrontend.execute(spark,
+          "SELECT ts, anom.forecast_value FROM ttl_anom_out WHERE k = 'a'")
+        .collect().map(r => (r.getTimestamp(0).getTime / 1000L - 1000000L,
+          Option(r.get(1)).map(_.asInstanceOf[Double])))
+        .sortBy(_._1).toSeq
+      assert(a == Seq(0L -> None, 60L -> None, 120L -> None, 180L -> Some(11.0),
+          6000L -> None, 6060L -> None, 6120L -> None, 6180L -> Some(101.0)),
+        s"after eviction key a must train afresh (null forecasts until minTrainingSize), got $a")
+    } finally {
+      if (TableRegistry.exists("ttl_anom_out")) SqlFrontend.execute(spark, "DROP TABLE ttl_anom_out")
+      TableRegistry.dropTable("ttl_anom_events")
+      SqlFrontend.execute(spark, "RESET 'sql.state-ttl'")
+      StatementCatalog.reset()
+    }
+  }
+
   test("a standing temporal join (FOR SYSTEM_TIME AS OF over a STREAM table) is refused " +
     "at CREATE and leaves no running statement") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
