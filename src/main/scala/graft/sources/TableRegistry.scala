@@ -113,7 +113,8 @@ object TableRegistry {
     */
   def stateTtlSeconds: Option[Long] = get("sql.state-ttl").map(durationSeconds)
 
-  /** Watermark delay for TTL'd streaming operators:
+  /** Watermark delay for TTL'd streaming operators whose input carries no
+    * watermark of its own (StreamingOps.withTtlWatermark):
     * `SET 'sql.state-ttl-watermark-delay' = '<n> <unit>'` when set, else the
     * TTL itself. Spark's transformWithState drops rows older than the
     * watermark, so a 0s delay on a stream with cross-key event-time skew

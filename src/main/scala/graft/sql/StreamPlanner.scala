@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.TableRegistry
-import graft.streaming.StreamingAnomaly
+import graft.streaming.{StreamingAnomaly, StreamingOps}
 
 /** Standing-statement planner: a CTAS/INSERT whose FROM chain reaches a
   * STREAM table (a [[TableRegistry]] entry with a continuous loader — the
@@ -375,7 +375,8 @@ object StreamPlanner {
     // rejects the WindowTime expression over a grouped struct attribute. The
     // manual end-1ms form is the same value (Flink's window_time contract) and
     // the downstream stateful op (StreamingAnomaly) needs no event-time
-    // metadata on it: under a state TTL it installs its own watermark.
+    // metadata on it: under a state TTL its timers run on this aggregation's
+    // watermark.
     val exprOf = Map(
       "window_start" -> "__w.start",
       "window_end" -> "__w.end",
@@ -606,13 +607,6 @@ object StreamPlanner {
       "streaming MATCH_RECOGNIZE: the ORDER BY column cannot also be a PARTITION BY column")
     val input = input0.withColumn("__tie",
       tieCol.map(col(_).cast("long")).getOrElse(lit(0L)))
-    // the reference bounds stateful queries with SET 'sql.state-ttl' (the
-    // LAB4 sessions run '14 d') — honor it here as the operator's event-time
-    // TTL; unset = unbounded state, the operator default
-    val ttlSeconds = graft.sources.TableRegistry.stateTtlSeconds.getOrElse(0L)
-    // watermark delay defaults to the TTL itself — a 0s delay would engage
-    // Spark's late-row filter against cross-key event-time skew (r8 ADVICE);
-    // 'sql.state-ttl-watermark-delay' tunes it explicitly
     // the ALL-ROWS projection re-exposes the buffered columns — recorded
     // for the post-match select
     var allRowsCondCols: Seq[String] = Nil
@@ -665,8 +659,7 @@ object StreamPlanner {
       allRowsCondCols = condCols
       graft.streaming.StreamingMatchRecognize.applyPattern(opInput, keyCol, condCols,
         ord, "__tie", mr.varNames, mr.scanBranches, mr.varNames.map(mr.defines.get),
-        mr.withinMicros.getOrElse(0L), ttlSeconds = ttlSeconds,
-        ttlWatermarkDelay = graft.sources.TableRegistry.stateTtlWatermarkDelay(ttlSeconds),
+        mr.withinMicros.getOrElse(0L), ttl = stateTtl,
         skip = mr.skip, measures = valueMeasures ++ partMeasures,
         oneRowClassifier = oneRowCls,
         aggMeasures = aggMeasures,
@@ -729,6 +722,16 @@ object StreamPlanner {
     SqlFrontend.parseSql(spark, mr.splice(stageSql, v))
   }
 
+  /** The reference bounds its stateful queries with SET 'sql.state-ttl' (the
+    * LAB4 sessions run '14 d'): both standing stateful stages (MATCH_RECOGNIZE
+    * and ML_DETECT_ANOMALIES) hand it to their operator as its event-time
+    * TTL, with [[TableRegistry.stateTtlWatermarkDelay]] as the delay of any
+    * watermark the operator installs. Unset (or 0) = unbounded state.
+    */
+  private def stateTtl: Option[StreamingOps.StateTtl] =
+    TableRegistry.stateTtlSeconds.filter(_ > 0)
+      .map(s => StreamingOps.StateTtl(s, TableRegistry.stateTtlWatermarkDelay(s)))
+
   /** One stage whose select list carries `ML_DETECT_ANOMALIES(v, ts, cfg)
     * OVER (PARTITION BY k ORDER BY t …) AS alias`: run the stage's FROM as a
     * streaming input, push it through the stateful detector with the whole
@@ -753,15 +756,11 @@ object StreamPlanner {
     // rows the operator drops behind their key's frontier, named after the
     // stage's source view like the MR stage's accumulators
     val src = "^\\s*(\\w+)".r.findFirstMatchIn(fromPart).fold("subquery")(_.group(1))
-    val ttlSeconds = TableRegistry.stateTtlSeconds.getOrElse(0L)
     val det = StreamingAnomaly.withPayload(input,
       keyExpr, Bridge.expr(spark, call.order), Bridge.expr(spark, call.value),
       to_json(struct(input.columns.map(col).toIndexedSeq: _*), jsonOpts), call.cfg,
       lateRows = Some(spark.sparkContext.longAccumulator(s"anomaly_late_rows_$src")),
-      // SET 'sql.state-ttl' evicts a quiet key's training buffer, as it
-      // bounds the MATCH_RECOGNIZE stage's state
-      ttlSeconds = ttlSeconds,
-      ttlWatermarkDelay = TableRegistry.stateTtlWatermarkDelay(ttlSeconds))
+      ttl = stateTtl)
     val expanded = det.toDF()
       .select(
         from_json(col("payload"), input.schema, jsonOpts).as("__r"),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StatefulProcessorHandle, TimeMode,
   TimerValues}
@@ -44,10 +45,10 @@ object StreamingOps {
   def tsMicros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
 
-  /** Event-time state TTL for the standing stateful operators
+  /** Event-time state TTL of the standing stateful operators
     * (StreamingMatchRecognize, StreamingAnomaly) — the analog of the
     * reference's `SET 'sql.state-ttl' = '14 d'` (LAB4-Walkthrough.md:124):
-    * a key whose newest event is more than `ttlSeconds` behind the watermark
+    * a key whose newest event is more than `seconds` behind the watermark
     * has its state EVICTED (dropped, not flushed — Flink TTL semantics; an
     * open match attempt or a training buffer simply disappears), and a later
     * event of the same key re-enters with FRESH state, exactly as a
@@ -56,15 +57,34 @@ object StreamingOps {
     * stream — which is the one structure a bounded-per-key design can't
     * bound by itself.
     *
-    * `ttlSeconds == 0` runs without timers. Under `ttlSeconds > 0` the
-    * operator installs the event-time watermark itself
-    * (delay = `TableRegistry.stateTtlWatermarkDelay`), which also engages
-    * Spark's late-row filter — rows older than the watermark are dropped,
-    * consistent with the operator's own late-row rule.
+    * The operators take it as `Option[StateTtl]`: `None` runs without
+    * timers. `watermarkDelay` is the delay of the watermark an operator
+    * installs on an input that carries none ([[withTtlWatermark]]); the
+    * standing stages pass `TableRegistry.stateTtlWatermarkDelay`, which
+    * defaults to the TTL itself.
     */
-  private[streaming] def ttlTimeMode(ttlSeconds: Long): TimeMode = {
-    require(ttlSeconds >= 0, s"ttlSeconds must be >= 0, got $ttlSeconds")
-    if (ttlSeconds > 0) TimeMode.EventTime() else TimeMode.None()
+  final case class StateTtl(seconds: Long, watermarkDelay: String) {
+    require(seconds > 0, s"a state TTL must be positive, got $seconds seconds")
+  }
+
+  private[streaming] def ttlTimeMode(ttl: Option[StateTtl]): TimeMode =
+    if (ttl.isDefined) TimeMode.EventTime() else TimeMode.None()
+
+  /** The event-time watermark a TTL'd operator's timers run against. An
+    * input that already carries one — a stream table's declared WATERMARK,
+    * or the TUMBLE aggregation a standing anomaly stage usually reads — keeps
+    * it and the timers fire on it. A second `withWatermark` would hold the
+    * query's watermark (the minimum of the two) a TTL behind the source, and
+    * an upstream TUMBLE would close no window for a TTL of event time.
+    * Otherwise the TTL's own watermark goes on `tsCol`, which
+    * also engages Spark's late-row filter — rows older than the watermark
+    * are dropped, consistent with the operator's own late-row rule.
+    */
+  private[streaming] def withTtlWatermark(df: DataFrame, tsCol: String,
+                                          ttl: Option[StateTtl]): DataFrame = ttl match {
+    case Some(t) if !df.queryExecution.analyzed.exists(_.isInstanceOf[EventTimeWatermark]) =>
+      df.withWatermark(tsCol, t.watermarkDelay)
+    case _ => df
   }
 
   /** Re-arm a key's one eviction timer after it folded new events: it fires
@@ -73,14 +93,14 @@ object StreamingOps {
     * watermark move, not in the batch that just fed it. No-op when the TTL
     * is off or the key folded nothing.
     */
-  private[streaming] def resetTtlTimer(handle: StatefulProcessorHandle, ttlSeconds: Long,
-                                       newestEventMicros: Long, tv: TimerValues): Unit = {
-    if (ttlSeconds <= 0 || newestEventMicros == Long.MinValue) return
-    val timers = handle.listTimers()
-    while (timers.hasNext) handle.deleteTimer(timers.next())
-    val target = Math.floorDiv(newestEventMicros, 1000L) + ttlSeconds * 1000L
-    handle.registerTimer(math.max(target, tv.getCurrentWatermarkInMs() + 1L))
-  }
+  private[streaming] def resetTtlTimer(handle: StatefulProcessorHandle, ttl: Option[StateTtl],
+                                       newestEventMicros: Long, tv: TimerValues): Unit =
+    ttl.filter(_ => newestEventMicros != Long.MinValue).foreach { t =>
+      val timers = handle.listTimers()
+      while (timers.hasNext) handle.deleteTimer(timers.next())
+      val target = Math.floorDiv(newestEventMicros, 1000L) + t.seconds * 1000L
+      handle.registerTimer(math.max(target, tv.getCurrentWatermarkInMs() + 1L))
+    }
 
   /** Watermarked tumbling aggregation (streaming W1/A1/A2). Late rows beyond
     * `delay` are dropped, as in the reference (scripts/publish_lab3_data.py:357-361).

@@ -28,10 +28,12 @@ import graft.anomaly.AnomalyDetector
   *     `lateRows` counts the drops;
   *   - emits exactly the batch detector's contract: nulls until
   *     minTrainingSize, then forecast/upper/lower/is_anomaly;
-  *   - `ttlSeconds > 0` (the standing stage passes `sql.state-ttl`) evicts
-  *     a key whose newest row falls more than the TTL behind the watermark,
-  *     by StreamingMatchRecognize's rule ([[StreamingOps.resetTtlTimer]]);
-  *     the key's next row starts fresh training, as a first-ever row would.
+  *   - a `ttl` (the standing stage passes `sql.state-ttl`) evicts a key
+  *     whose newest row falls more than the TTL behind the watermark, by
+  *     StreamingMatchRecognize's rule ([[StreamingOps.resetTtlTimer]]),
+  *     against the input's own watermark when it carries one (the TUMBLE
+  *     stage upstream); the key's next row starts fresh training, as a
+  *     first-ever row would.
   *
   * State scales O(keys × maxTrainingSize) — at 1000 executors this partitions
   * by key hash like any keyed state; no driver involvement.
@@ -73,8 +75,8 @@ object StreamingAnomaly {
     */
   def withPayload(df: DataFrame, keyExpr: Column, tsExpr: Column, valueExpr: Column,
                   payloadExpr: Column, cfg: AnomalyDetector.Config,
-                  lateRows: Option[LongAccumulator] = None, ttlSeconds: Long = 0L,
-                  ttlWatermarkDelay: String = "0 seconds"): Dataset[DetectionP] = {
+                  lateRows: Option[LongAccumulator] = None,
+                  ttl: Option[StreamingOps.StateTtl] = None): Dataset[DetectionP] = {
     require(df.isStreaming, "StreamingAnomaly runs on a streaming input; a static frame " +
       "runs through AnomalyDetector.detectBatch")
     implicit val pointEnc = Encoders.product[PointP]
@@ -86,18 +88,17 @@ object StreamingAnomaly {
       tsExpr.cast("timestamp").as("ts"),
       valueExpr.cast("double").as("value"),
       payloadExpr.cast("string").as("payload"))
-    val src = if (ttlSeconds > 0) points.withWatermark("ts", ttlWatermarkDelay) else points
-    src.as[PointP]
+    StreamingOps.withTtlWatermark(points, "ts", ttl).as[PointP]
       .groupByKey(_.key)
-      .transformWithState(new Detector(cfg, lateRows, ttlSeconds),
-        StreamingOps.ttlTimeMode(ttlSeconds), OutputMode.Append())
+      .transformWithState(new Detector(cfg, lateRows, ttl),
+        StreamingOps.ttlTimeMode(ttl), OutputMode.Append())
   }
 
   /** The per-key fold: one [[BufferState]] per key, one eviction timer when
     * a TTL is set.
     */
   private class Detector(cfg: AnomalyDetector.Config, lateRows: Option[LongAccumulator],
-                         ttlSeconds: Long)
+                         ttl: Option[StreamingOps.StateTtl])
       extends StatefulProcessor[String, PointP, DetectionP] {
     @transient private var st: ValueState[BufferState] = _
 
@@ -129,7 +130,7 @@ object StreamingAnomaly {
         det
       }
       st.update(BufferState(buf, lastTs, period))
-      if (inOrder.nonEmpty) StreamingOps.resetTtlTimer(getHandle, ttlSeconds, lastTs, tv)
+      if (inOrder.nonEmpty) StreamingOps.resetTtlTimer(getHandle, ttl, lastTs, tv)
       out.iterator
     }
 

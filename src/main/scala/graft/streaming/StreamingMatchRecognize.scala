@@ -196,8 +196,7 @@ object StreamingMatchRecognize extends Serializable {
   def apply(df: DataFrame, keyCol: String, condCols: Seq[String],
             tsCol: String, tieCol: String,
             tokens: Seq[MatchRecognize.MrTok], defs: Seq[Option[String]],
-            withinMicros: Long = 0L, ttlSeconds: Long = 0L,
-            ttlWatermarkDelay: String = "0 seconds",
+            withinMicros: Long = 0L, ttl: Option[StreamingOps.StateTtl] = None,
             skip: MatchRecognize.Skip = MatchRecognize.SkipPastLastRow,
             stateProbe: Option[StreamingOps.MaxAccumulator] = None,
             measures: Seq[MrMeasure] = Seq.empty,
@@ -207,7 +206,7 @@ object StreamingMatchRecognize extends Serializable {
     val branch = tokens.zipWithIndex
       .map { case (t, i) => MatchRecognize.BTok(i, t.lo, t.hi, t.reluctant) }.toIndexedSeq
     applyPattern(df, keyCol, condCols, tsCol, tieCol, tokens.map(_.name), Seq(branch),
-      defs, withinMicros, ttlSeconds, ttlWatermarkDelay, skip, stateProbe, measures,
+      defs, withinMicros, ttl, skip, stateProbe, measures,
       aggMeasures, matchNumberAlias)
   }
 
@@ -234,8 +233,7 @@ object StreamingMatchRecognize extends Serializable {
                    tsCol: String, tieCol: String,
                    varNames: Seq[String], branches: Seq[IndexedSeq[MatchRecognize.BTok]],
                    defs: Seq[Option[String]],
-                   withinMicros: Long = 0L, ttlSeconds: Long = 0L,
-                   ttlWatermarkDelay: String = "0 seconds",
+                   withinMicros: Long = 0L, ttl: Option[StreamingOps.StateTtl] = None,
                    skip: MatchRecognize.Skip = MatchRecognize.SkipPastLastRow,
                    stateProbe: Option[StreamingOps.MaxAccumulator] = None,
                    measures: Seq[MrMeasure] = Seq.empty,
@@ -339,10 +337,10 @@ object StreamingMatchRecognize extends Serializable {
     condCols.foreach(c => require(df.columns.contains(c), s"unknown DEFINE column '$c'"))
     require(defs.size == nTok, "one DEFINE option per pattern variable")
     require(withinMicros >= 0, s"withinMicros out of range: $withinMicros")
-    if (branches.exists(_.exists(_.hi.isEmpty)) && withinMicros == 0L && ttlSeconds == 0L)
+    if (branches.exists(_.exists(_.hi.isEmpty)) && withinMicros == 0L && ttl.isEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "StreamingMatchRecognize: unbounded quantifier with neither withinMicros nor " +
-          "ttlSeconds — an unbroken greedy run grows per-key state without bound and " +
+          "ttl — an unbroken greedy run grows per-key state without bound and " +
           "never emits; set a WITHIN bound (and/or a TTL >= it) to cap state age")
     // MATCH_NUMBER + SKIP TO NEXT ROW defers decided winners behind the
     // undecided frontier (r15); a permanently-undecided earlier start (an
@@ -350,13 +348,13 @@ object StreamingMatchRecognize extends Serializable {
     // FOREVER when no TTL exists — on a bounded drain they never emit where
     // batch emits them (r15 ADVICE). The TTL-expiry flush is the release
     // valve; without one, warn loudly up front.
-    if (matchNumberAlias.isDefined && skip == MatchRecognize.SkipToNextRow && ttlSeconds == 0L)
+    if (matchNumberAlias.isDefined && skip == MatchRecognize.SkipToNextRow && ttl.isEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "StreamingMatchRecognize: MATCH_NUMBER() under SKIP TO NEXT ROW without a TTL — " +
           "a decided winner behind a permanently-undecided earlier start is withheld " +
           "until TTL expiry flushes it, and with no TTL that is FOREVER (a bounded drain " +
           "will omit it where the batch scan emits it); configure 'sql.state-ttl' (or the " +
-          "operator's ttlSeconds) so abandoned open tails release their deferred winners")
+          "operator's ttl) so abandoned open tails release their deferred winners")
 
     // conditions compile against the referenced columns IN THEIR ORIGINAL
     // TYPES, named as in the input so SQL DEFINE text passes through
@@ -452,7 +450,7 @@ object StreamingMatchRecognize extends Serializable {
         col(tsCol).cast("timestamp").as("__mr_ts") +:
         col(tieCol).cast("long").as("__mr_tie") +:
         condCols.map(col): _*)
-    val srcQ = if (ttlSeconds > 0) sel.withWatermark("__mr_ts", ttlWatermarkDelay) else sel
+    val srcQ = StreamingOps.withTtlWatermark(sel, "__mr_ts", ttl)
 
     /** Per-key still-OPEN attempt count at expiry — the open-tail contract. */
     def openRuns(buf: Buf): Int =
@@ -781,7 +779,7 @@ object StreamingMatchRecognize extends Serializable {
         val (nb, out, newest) = processKey(key, rows, Option(st.get()))
         st.update(nb)
         stateProbe.foreach(_.add(nb.cells.length.toLong)) // peak retained rows per key
-        StreamingOps.resetTtlTimer(getHandle, ttlSeconds, newest, tv)
+        StreamingOps.resetTtlTimer(getHandle, ttl, newest, tv)
         out.iterator
       }
       override def handleExpiredTimer(key: String, tv: TimerValues,
@@ -794,7 +792,7 @@ object StreamingMatchRecognize extends Serializable {
       }
     }
     srcQ.groupByKey(_.getString(0))
-      .transformWithState(proc, StreamingOps.ttlTimeMode(ttlSeconds), OutputMode.Append())
+      .transformWithState(proc, StreamingOps.ttlTimeMode(ttl), OutputMode.Append())
       .toDF()
   }
 }

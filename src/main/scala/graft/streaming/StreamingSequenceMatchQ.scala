@@ -29,7 +29,7 @@ import graft.operators.MatchRecognize
   * it; a reluctant token decides as soon as its shortest completion exists.
   * Matches emit in the micro-batch of their deciding event, append mode. An
   * event arriving below a key's buffered tail in a later micro-batch is
-  * dropped and logged, and `ttlSeconds > 0` evicts idle keys (the
+  * dropped and logged, and a `ttl` evicts idle keys (the
   * reference's `SET 'sql.state-ttl'`) — both the value operator's rules.
   */
 object StreamingSequenceMatchQ {
@@ -69,8 +69,8 @@ object StreamingSequenceMatchQ {
   }
 
   def apply(df: DataFrame, keyCol: String, typeCol: String, tsCol: String, tieCol: String,
-            pattern: Seq[QTok], withinMicros: Long = 0L, ttlSeconds: Long = 0L,
-            ttlWatermarkDelay: String = "0 seconds", skipPast: Boolean = false): Dataset[QMatch] = {
+            pattern: Seq[QTok], withinMicros: Long = 0L,
+            ttl: Option[StreamingOps.StateTtl] = None, skipPast: Boolean = false): Dataset[QMatch] = {
     pattern.foreach(t => require(!t.typ.contains("'"),
       s"StreamingSequenceMatchQ: event type literal ${t.typ} contains a quote (')"))
     val toks = pattern.indices.map { i =>
@@ -80,7 +80,7 @@ object StreamingSequenceMatchQ {
     }
     val defs = pattern.indices.map(i => Some(s"v$i.$typeCol = '${pattern(i).typ}'"))
     StreamingMatchRecognize(df.withColumn(typeCol, col(typeCol).cast("string")), keyCol,
-      Seq(typeCol), tsCol, tieCol, toks, defs, withinMicros, ttlSeconds, ttlWatermarkDelay,
+      Seq(typeCol), tsCol, tieCol, toks, defs, withinMicros, ttl,
       if (skipPast) MatchRecognize.SkipPastLastRow else MatchRecognize.SkipToNextRow)
       .as[QMatch](Encoders.product[QMatch])
   }

@@ -1065,7 +1065,7 @@ class StreamingSpec extends SparkSpec {
       condCols = Seq("value"), tsCol = "ts", tieCol = "id",
       varNames = names, branches = branches,
       defs = Seq(None, Some("D.value < PREV(D.value)"), Some("U.value > PREV(U.value)")),
-      skip = MatchRecognize.SkipPastLastRow, ttlSeconds = 60L, ttlWatermarkDelay = "0 seconds",
+      skip = MatchRecognize.SkipPastLastRow, ttl = Some(graft.streaming.StreamingOps.StateTtl(60L, "0 seconds")),
       openTailAcc = Some(acc))
     val q = matched.writeStream.format("memory").queryName("mr_opentail_sink")
       .outputMode("append").start()

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -461,6 +462,54 @@ class StreamingSqlSpec extends SparkSpec with BeforeAndAfterAll {
       SqlFrontend.execute(spark, "RESET 'sql.state-ttl'")
       StatementCatalog.reset()
     }
+  }
+
+  test("a standing TUMBLE + ML_DETECT_ANOMALIES statement under SET sql.state-ttl runs on " +
+    "the TUMBLE's watermark and emits the rows it emits without a TTL") {
+    import CheckpointForkSpec.{claimsFeed, closed, spikesSelect}
+    // the lab4 spike stage, every slice published as its own micro-batch:
+    // its closed rows and the eviction timers its detector saw expire
+    def spikes(tag: String): (Seq[String], Long) = {
+      val feed = claimsFeed(spark, s"${tag}_claims", slices = 6)
+      try {
+        feed.publish(0)
+        SqlFrontend.execute(spark, s"CREATE TABLE ${tag}_spikes AS ${spikesSelect(s"${tag}_claims")}")
+        val q = Drain.standing(s"${tag}_spikes")
+        q.processAllAvailable()
+        (1 until 6).foreach { i => feed.publish(i); q.processAllAvailable() }
+        // one more claim nine hours on moves the watermark once more: the
+        // timers the last windows armed (clamped past the watermark of the
+        // batch that fed them) fire on it
+        val tail = new Path(java.nio.file.Files.createTempDirectory("ttl_tail").toUri)
+        spark.createDataFrame(Seq(("zz_end", new Timestamp(30 * 3600L * 1000L), 0.0)))
+          .toDF(feed.schema.fieldNames.toIndexedSeq: _*).coalesce(1)
+          .write.mode("overwrite").parquet(tail.toString)
+        val fs = tail.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val part = fs.listStatus(tail).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+        assert(fs.rename(part, new Path(s"${feed.dir}/slice_tail.parquet")))
+        fs.delete(tail, true)
+        q.processAllAvailable()
+        val expired = q.recentProgress.flatMap(_.stateOperators)
+          .flatMap(op => Option(op.customMetrics.get("numExpiredTimers")).map(_.longValue)).sum
+        (closed(SqlFrontend.execute(spark, s"SELECT * FROM ${tag}_spikes"))
+          .collect().map(_.mkString("|")).toSeq.sorted, expired)
+      } finally {
+        if (TableRegistry.exists(s"${tag}_spikes")) SqlFrontend.execute(spark, s"DROP TABLE ${tag}_spikes")
+        TableRegistry.dropTable(s"${tag}_claims")
+        feed.delete()
+        StatementCatalog.reset()
+      }
+    }
+    val (plain, _) = spikes("nottl")
+    // a 2 h TTL: the timers fire (the tail claim moves the watermark past
+    // every city's newest window + 2 h) but evict no key that has rows to come
+    val (ttl, expired) = try {
+      SqlFrontend.execute(spark, "SET 'sql.state-ttl' = '2 h'")
+      spikes("ttl")
+    } finally SqlFrontend.execute(spark, "RESET 'sql.state-ttl'")
+    assert(plain.size == 3 * 18, s"every city's 18 hourly windows must close, got ${plain.size}")
+    assert(ttl == plain, s"the TTL changed the spike rows: ${ttl.diff(plain)} vs ${plain.diff(ttl)}")
+    assert(expired == 3, s"each city's eviction timer must fire on the TUMBLE's watermark, got $expired")
   }
 
   test("a standing temporal join (FOR SYSTEM_TIME AS OF over a STREAM table) is refused " +

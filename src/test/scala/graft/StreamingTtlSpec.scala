@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.streaming.StreamingOps.StateTtl
 import graft.streaming.StreamingSequenceMatchQ.QTok
 
 /** Event-time state TTL of the standing MATCH_RECOGNIZE operator — the analog
@@ -28,6 +29,10 @@ class StreamingTtlSpec extends SparkSpec {
   // watermark is filtered as late by the stateful-operator input filter
   private def at(sec: Long) = new Timestamp((1000000L + sec) * 1000L)
 
+  // a 0 s watermark delay: eviction lands on the batch after the one whose
+  // max event time passes a key's newest event + 100 s
+  private val ttl100 = Some(StateTtl(100L, "0 seconds"))
+
   /** One micro-batch: add the rows, drain. */
   private def push[A](mem: MemoryStream[A], q: StreamingQuery, rows: A*): Unit = {
     mem.addData(rows)
@@ -42,7 +47,7 @@ class StreamingTtlSpec extends SparkSpec {
     val q = graft.streaming.StreamingSequenceMatchQ(
       mem.toDF().toDF("k", "typ", "ts", "tie"),
       "k", "typ", "ts", "tie", pattern = Seq(QTok("A", 1, 1), QTok("B", 1, 1)),
-      ttlSeconds = 100L)
+      ttl = ttl100)
       .writeStream.format("memory").queryName("ttl_seq").outputMode("append").start()
     try {
       push(mem, q, ("u1", "A", at(0), 1L))     // trail [A]; timer 100 s
@@ -68,7 +73,7 @@ class StreamingTtlSpec extends SparkSpec {
     val q = graft.streaming.StreamingSequenceMatchQ(
       mem.toDF().toDF("k", "typ", "ts", "tie"),
       "k", "typ", "ts", "tie", pattern = Seq(QTok("A", 1, 1), QTok("B", 0, 1)),
-      ttlSeconds = 100L)
+      ttl = ttl100)
       .writeStream.format("memory").queryName("ttl_seqq").outputMode("append").start()
     try {
       push(mem, q, ("u1", "A", at(0), 1L))     // undecided: [A,B] still completable
@@ -97,7 +102,7 @@ class StreamingTtlSpec extends SparkSpec {
       "k", condCols = Seq("v"), tsCol = "ts", tieCol = "tie",
       tokens = Seq(MrTok("S", 1, Some(1)), MrTok("U", 1, None)),
       defs = Seq(None, Some("U.v > PREV(U.v)")),
-      ttlSeconds = 100L)
+      ttl = ttl100)
       .writeStream.format("memory").queryName("ttl_mrv").outputMode("append").start()
     try {
       push(mem, q, ("u1", "t", at(0), 1.0, 1L), ("u1", "t", at(1), 2.0, 2L)) // open rising run
@@ -142,7 +147,7 @@ class StreamingTtlSpec extends SparkSpec {
     // rows, and the state store holds one row per live key
     val q = graft.streaming.StreamingSequenceMatchQ(
       mem.toDF().toDF("user_id", "ts", "event_id").withColumn("typ", lit("e")),
-      "user_id", "typ", "ts", "event_id", pattern = Seq(QTok("e", 1, 1)), ttlSeconds = 100L)
+      "user_id", "typ", "ts", "event_id", pattern = Seq(QTok("e", 1, 1)), ttl = ttl100)
       .writeStream.format("memory").queryName("ttl_card").outputMode("append").start()
     val batches = 10
     val keysPerBatch = 20
