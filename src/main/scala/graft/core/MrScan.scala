@@ -11,8 +11,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.StructType
 
 /** A per-key sequential scan as ONE Catalyst node — the execution shape of
-  * both MATCH_RECOGNIZE scans ([[graft.operators.MatchRecognize.scanPattern]]
-  * and [[graft.operators.Behavior.skipPastSelect]]).
+  * the batch MATCH_RECOGNIZE scan, [[graft.operators.MatchRecognize.scanPattern]].
   *
   * The node states what the scan needs of its input — every row of a key in
   * one partition, ordered by (keys, order) ascending — and EnsureRequirements

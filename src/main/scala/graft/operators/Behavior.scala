@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Behavioral analytics over event logs: ordered funnels and cohort
   * retention. Both are user-keyed — every stage shuffles on the SAME user
@@ -134,36 +133,36 @@ object Behavior {
       col("__sm_end_ts").as("match_end_ts"), col(tieCol).as("start_tie"))
   }
 
-  /** [[sequenceMatch]] with BOUNDED quantifiers — the DataFrame twin of the
-    * SQL `MATCH_RECOGNIZE` quantifier rewrite and of
-    * [[graft.streaming.StreamingSequenceMatchQ]] (whose greedy order its
-    * expansions enumerate, so all three surfaces share one semantics): the pattern
-    * expands into fixed type-sequences tried leftmost-longest-first, compiled
-    * into ONE when-chain over shared lead() windows — one shuffle, one sort,
-    * every start row decided independently (SKIP TO NEXT ROW). Output adds
-    * `matched_len` (the winning alternative's length).
+  /** [[sequenceMatch]] with quantifiers (`QTok(t, min, max)`, `max =
+    * QTok.Unbounded` for `+`/`{m,}`, reluctant tokens shortest-first) under
+    * AFTER MATCH SKIP TO NEXT ROW: every start row is decided independently,
+    * greedy leftmost-longest. Output adds `matched_len` (the match's row
+    * count). The DataFrame twin of the SQL `MATCH_RECOGNIZE` rewrite and of
+    * [[graft.streaming.StreamingSequenceMatchQ]]: all three run the one
+    * [[MrMatcher]], here through [[MatchRecognize.scan]] — one shuffle on the
+    * user key and one (user, ts, tie) sort.
     */
   def sequenceMatchQ(events: DataFrame, userCol: String, typeCol: String, tsCol: String,
                      tieCol: String,
                      pattern: Seq[graft.streaming.StreamingSequenceMatchQ.QTok],
-                     withinMicros: Long = 0L): DataFrame = {
-    if (pattern.exists(_.max == graft.streaming.StreamingSequenceMatchQ.QTok.Unbounded))
-      return scanTyped(events, userCol, typeCol, tsCol, tieCol, pattern, withinMicros,
-        skipToNext = true)
-    val winner = qWinner(userCol, typeCol, tsCol, tieCol, pattern, withinMicros)
-    events
-      .withColumn("__smq", winner)
-      .filter(col("__smq").isNotNull)
-      .select(col(userCol), col(tsCol).as("match_start_ts"),
-        col("__smq.end_ts").as("match_end_ts"), col(tieCol).as("start_tie"),
-        col("__smq.len").as("matched_len"))
-  }
+                     withinMicros: Long = 0L): DataFrame =
+    scanTyped(events, userCol, typeCol, tsCol, tieCol, pattern, withinMicros, skipToNext = true)
 
-  /** Unbounded-quantifier route for the type-token surfaces: the same
-    * [[graft.operators.MatchRecognize.scan]] NFA cursor the SQL rewrite
-    * uses, with per-token type-equality DEFINEs — output schema identical to
-    * the bounded forms, greedy order identical by the scan's equivalence
-    * spec.
+  /** [[sequenceMatchQ]] under the SQL-standard DEFAULT skip strategy, `AFTER
+    * MATCH SKIP PAST LAST ROW`: selected matches never overlap — once a match
+    * is selected, the next may start only AFTER its last row. (A fixed
+    * pattern is `pattern.map(t => QTok(t, 1, 1))`.) The scan's cursor
+    * resumes past each selected match, so every decision depends on all
+    * earlier ones of its key — the standard's cursor semantics exactly.
+    */
+  def sequenceMatchSkipPast(events: DataFrame, userCol: String, typeCol: String, tsCol: String,
+                            tieCol: String,
+                            pattern: Seq[graft.streaming.StreamingSequenceMatchQ.QTok],
+                            withinMicros: Long = 0L): DataFrame =
+    scanTyped(events, userCol, typeCol, tsCol, tieCol, pattern, withinMicros, skipToNext = false)
+
+  /** Both quantified surfaces: [[MatchRecognize.scan]] with per-token
+    * type-equality DEFINEs, one output row per match.
     */
   private def scanTyped(events: DataFrame, userCol: String, typeCol: String, tsCol: String,
                         tieCol: String,
@@ -183,120 +182,6 @@ object Behavior {
     val endTs = coalesce(pattern.indices.reverse.map(i => col(s"__mr_last_T$i.$tsCol")): _*)
     out.select(col(userCol), col(tsCol).as("match_start_ts"), endTs.as("match_end_ts"),
       col(tieCol).as("start_tie"), col("__mr_len").cast("int").as("matched_len"))
-  }
-
-  /** The per-start-row greedy candidate of [[sequenceMatchQ]] as a Column:
-    * NULL when no alternative matches at this row, else a struct of the
-    * winning alternative's (end_ts, len). Shared by the SKIP TO NEXT ROW and
-    * SKIP PAST LAST ROW surfaces so both decide candidates identically.
-    */
-  private def qWinner(userCol: String, typeCol: String, tsCol: String, tieCol: String,
-                      pattern: Seq[graft.streaming.StreamingSequenceMatchQ.QTok],
-                      withinMicros: Long): Column = {
-    require(withinMicros >= 0, s"withinMicros must be >= 0, got $withinMicros")
-    val exps = graft.streaming.StreamingSequenceMatchQ.expansions(pattern)
-    val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tieCol))
-    def at(c: String, k: Int) = if (k == 0) col(c) else lead(col(c), k).over(w)
-    exps.map { ex =>
-      val types = ex.zipWithIndex.map { case (p, i) => at(typeCol, i) === p }.reduce(_ && _)
-      val endTs = at(tsCol, ex.size - 1)
-      val exists = endTs.isNotNull
-      val within =
-        if (withinMicros == 0) lit(true)
-        else unix_micros(endTs.cast("timestamp")) - unix_micros(col(tsCol).cast("timestamp")) <=
-          withinMicros
-      when(types && exists && within,
-        struct(endTs.as("end_ts"), lit(ex.size).as("len")))
-    }.reduce((a, b) => coalesce(a, b))
-  }
-
-  /** [[sequenceMatchQ]] under the SQL-standard DEFAULT skip strategy, `AFTER
-    * MATCH SKIP PAST LAST ROW`: selected matches never overlap — once a match
-    * is selected, the next candidate may start only AFTER its last row.
-    * (A fixed pattern is `pattern.map(t => QTok(t, 1, 1))`.)
-    *
-    * Candidates are still decided per start row by the same shared lead()
-    * windows as the SKIP TO NEXT ROW twins (greedy longest alternative); the
-    * non-overlap selection is then [[skipPastSelect]]'s per-key linear scan:
-    * scanning (ts, tie)-ordered rows, a candidate is selected iff its start
-    * row is not consumed by the previously selected match, and selecting a
-    * length-L match consumes the following L−1 rows — the standard's cursor
-    * semantics exactly.
-    */
-  def sequenceMatchSkipPast(events: DataFrame, userCol: String, typeCol: String, tsCol: String,
-                            tieCol: String,
-                            pattern: Seq[graft.streaming.StreamingSequenceMatchQ.QTok],
-                            withinMicros: Long = 0L): DataFrame = {
-    if (pattern.exists(_.max == graft.streaming.StreamingSequenceMatchQ.QTok.Unbounded))
-      return scanTyped(events, userCol, typeCol, tsCol, tieCol, pattern, withinMicros,
-        skipToNext = false)
-    val cand = events
-      .withColumn("__smq", qWinner(userCol, typeCol, tsCol, tieCol, pattern, withinMicros))
-      .select(col(userCol), col(tsCol), col(tieCol), col("__smq"),
-        col("__smq.len").as("__len"))
-    skipPastSelect(cand, Seq(col(userCol)), Seq(col(tsCol), col(tieCol)), "__len")
-      .select(col(userCol), col(tsCol).as("match_start_ts"),
-        col("__smq.end_ts").as("match_end_ts"), col(tieCol).as("start_tie"),
-        col("__smq.len").as("matched_len"))
-  }
-
-  /** Greedy non-overlap selection over per-row match candidates — the engine
-    * half of AFTER MATCH SKIP PAST LAST ROW, factored out so the DataFrame
-    * operator and the SQL MATCH_RECOGNIZE rewrite share one semantics.
-    *
-    * Input: every row of the relation (candidate or not — non-candidates
-    * still occupy positions the cursor must consume), with `lenCol` holding
-    * the candidate's row count at this start (NULL/0 = no candidate).
-    * Output: only the selected match-start rows, original schema.
-    *
-    * Scale shape: ONE hash repartition on the key + one sort within
-    * partitions + a streaming O(1)-state pass. The within-key scan is
-    * inherently sequential — that IS the skip-past contract (each decision
-    * depends on every earlier selection) and is how any MATCH_RECOGNIZE
-    * engine executes it; keys parallelize across partitions, nothing
-    * materializes per key, nothing reaches the driver.
-    */
-  private[graft] def skipPastSelect(df: DataFrame, keyCols: Seq[Column],
-                                    orderCols: Seq[Column], lenCol: String): DataFrame = {
-    graft.core.KeyImage.requireAtomic(df, keyCols)
-    // collision-free length-prefixed key image (same reasoning as Cusum: a
-    // separator encoding could merge crafted keys and the cursor would leak
-    // across their series), zero-normalized (KeyImage.ofNormalized): the
-    // scan sorts by the REAL key columns, which groups -0.0 with 0.0 (SQL key
-    // equality) and lets Catalyst reuse an upstream window's (key, order)
-    // sort, so the key-change probe image must agree or the cursor would
-    // reset mid-series on ±0.0 keys
-    val pre = df.withColumn("__spk", graft.core.KeyImage.ofNormalized(df, keyCols))
-    val preSchema = pre.schema
-    val lenIdx = preSchema.fieldIndex(lenCol)
-    val keyIdx = preSchema.fieldIndex("__spk")
-    // the candidate length, integral widths only: a fractional length has no
-    // row count, so DOUBLE, FLOAT and DECIMAL columns fail at build rather
-    // than truncate
-    val lenType = preSchema(lenIdx).dataType
-    if (!Seq(LongType, IntegerType, ShortType, ByteType).contains(lenType))
-      sys.error(s"skipPastSelect: length column '$lenCol' must be integral, got $lenType")
-    // a one-in/one-out filter over the sorted UnsafeRows: no buffering, no
-    // per-row conversion, cloning only the key image it must retain across
-    // rows for the key-change probe
-    graft.core.MrScan.of(pre, keyCols, orderCols, preSchema) { it =>
-      var curKey: org.apache.spark.unsafe.types.UTF8String = null
-      var consume = 0L
-      it.filter { r =>
-        val key = r.getUTF8String(keyIdx)
-        // exact twin of the external `key != curKey` probe incl. nulls
-        // (consecutive null images are ONE series)
-        val changed =
-          if (key == null) curKey != null
-          else curKey == null || !key.equals(curKey)
-        if (changed) { curKey = if (key == null) null else key.clone(); consume = 0L }
-        if (consume > 0L) { consume -= 1L; false }
-        else {
-          val len = if (r.isNullAt(lenIdx)) 0L else r.get(lenIdx, lenType).asInstanceOf[Number].longValue
-          if (len > 0L) { consume = len - 1L; true } else false
-        }
-      }
-    }.drop("__spk")
   }
 
   /** First-order Markov transition matrix over per-user event sequences:

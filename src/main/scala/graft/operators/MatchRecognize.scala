@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Row-pattern recognition by a per-key sequential cursor — the execution
-  * shape MATCH_RECOGNIZE needs when the lead()-expansion rewrite cannot apply:
-  * UNBOUNDED quantifiers (`A+`, `A*`, `A{m,}`) admit no fixed-length
-  * alternative set, and `ALL ROWS PER MATCH` emits every matched row rather
-  * than one per start.
+/** Row-pattern recognition by a per-key sequential cursor — the one batch
+  * executor of MATCH_RECOGNIZE, for every pattern shape: bounded and
+  * UNBOUNDED quantifiers (`A+`, `A*`, `A{m,}`), ONE ROW or ALL ROWS PER
+  * MATCH, every skip strategy. The SQL rewrite and the DataFrame surfaces
+  * ([[Behavior.sequenceMatchQ]], [[Behavior.sequenceMatchSkipPast]]) all
+  * lower onto [[scanPattern]].
   *
-  * Division of labor (the r8 `skipPastSelect` architecture, generalized):
+  * Division of labor:
   *   - Catalyst evaluates every DEFINE predicate ONCE per row as a boolean
   *     column (lag/lead physical navigation included) — codegen'd, vectorized,
   *     pushdown-friendly; the scan never re-evaluates a predicate.
@@ -25,10 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Matching is [[MrMatcher]]'s walk — the one matcher every MATCH_RECOGNIZE
   * operator runs, batch and streaming — with the SQL-standard GREEDY
-  * semantics shared with the bounded rewrite: quantifier counts are explored
-  * leftmost-longest-first (descending lexicographic), with backtracking, so
-  * for bounded patterns the scan and the CASE-expansion formulation select
-  * identical matches (spec-pinned). RELUCTANT quantifiers (`A+?`/`A*?`/
+  * semantics: quantifier counts are explored leftmost-longest-first
+  * (descending lexicographic), with backtracking; for a fixed pattern the
+  * scan selects exactly [[Behavior.sequenceMatch]]'s lead() matches
+  * (spec-pinned). RELUCTANT quantifiers (`A+?`/`A*?`/
   * `A{m,n}?` — Flink's lazy forms, r10) flip that token's exploration to
   * ascending (shortest-first) while keeping leftmost priority, on every
   * surface identically. `AFTER MATCH SKIP PAST
@@ -51,11 +52,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * MEASURES, but their rows are not emitted — the standard's output
   * exclusion.
   *
-  * The per-key dependency chain is inherently sequential (every skip decision
-  * depends on all earlier ones — `Behavior.skipPastSelect`'s contract);
-  * memory is O(longest match attempt), which a `WITHIN` bound caps in event
-  * time, and an unbounded greedy run (`A+` over an always-true DEFINE) can
-  * stretch to the key's row count — the same bound any CEP engine has.
+  * The per-key dependency chain is inherently sequential (under SKIP PAST
+  * LAST ROW every skip decision depends on all earlier ones); memory is
+  * O(longest match attempt), which a `WITHIN` bound caps in event time, and
+  * an unbounded greedy run (`A+` over an always-true DEFINE) can stretch to
+  * the key's row count — the same bound any CEP engine has.
   *
   * Row-local DEFINE predicates (the variable's own current row plus PREV/NEXT
   * physical navigation) are precomputed Catalyst boolean columns — codegen'd,
@@ -67,12 +68,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * order.
   *
   * Reference behavior covered: Flink's MATCH_RECOGNIZE accepts unbounded
-  * quantifiers (confluent docs, flink-sql match_recognize) which the r8
-  * bounded rewrite refused; ALL ROWS PER MATCH, alternation, PERMUTE,
-  * exclusion and SUBSET go beyond Flink (none exist there). Measure
-  * semantics under ALL ROWS follow the standard: unmarked = RUNNING,
-  * FINAL opts out (the SQL frontend maps both onto this scan's final
-  * structs and per-output-row `__mr_run_*` views).
+  * quantifiers (confluent docs, flink-sql match_recognize); ALL ROWS PER
+  * MATCH, alternation, PERMUTE, exclusion and SUBSET go beyond Flink (none
+  * exist there). Measure semantics under ALL ROWS follow the standard:
+  * unmarked = RUNNING, FINAL opts out (the SQL frontend maps both onto this
+  * scan's final structs and per-output-row `__mr_run_*` views).
   */
 object MatchRecognize {
 
@@ -294,6 +294,10 @@ object MatchRecognize {
     val keyIdx = inSchema.fieldIndex("__mr_spk")
     val defIdxArr = (0 until n).map(i => inSchema.fieldIndex(s"__mr_def_$i")).toArray
     val tsIdx = inSchema.fieldIndex(tsCol)
+    // both timestamp flavors store epoch micros as an internal long, which
+    // WITHIN reads directly; any other type fails here, not mid-job
+    if (withinMicros.isDefined) require(Seq(TimestampType, TimestampNTZType).contains(inTypes(tsIdx)),
+      s"MATCH_RECOGNIZE WITHIN requires a timestamp ORDER BY column, got ${inTypes(tsIdx).simpleString}")
     val measureIdxArr = measureCols.map(inSchema.fieldIndex).toArray
     val hasMeasures = measureCols.nonEmpty
     val mStruct = StructType(measureCols.map(c => inSchema(inSchema.fieldIndex(c)).copy(nullable = true)))
@@ -374,14 +378,6 @@ object MatchRecognize {
     val nameU8: Array[UTF8String] = varNames.map(UTF8String.fromString).toArray
     val emitAll = allRows
     val emitOneRowCls = oneRowClassifier
-    // both timestamp flavors store epoch micros as an internal long — WITHIN
-    // reads them directly (the external path converted to LocalDateTime/
-    // Instant per row and re-derived the same micros)
-    val tsIsTimestampTyped = inTypes(tsIdx) match {
-      case TimestampType | TimestampNTZType => true
-      case _ => false
-    }
-    val tsTypeName = inTypes(tsIdx).simpleString
     val needsDyn = dynArr.exists(_ != null)
 
     // the scan consumes the sorted UnsafeRows directly — the only per-row
@@ -417,8 +413,6 @@ object MatchRecognize {
 
         /** WITHIN's event time: internal epoch micros, read directly. */
         private def tsMicrosAt(r: InternalRow): Long = {
-          if (!tsIsTimestampTyped)
-            sys.error("MATCH_RECOGNIZE WITHIN requires a timestamp ORDER BY column, got " + tsTypeName)
           if (r.isNullAt(tsIdx))
             sys.error("MATCH_RECOGNIZE WITHIN requires a timestamp ORDER BY column, got NULL")
           r.getLong(tsIdx)

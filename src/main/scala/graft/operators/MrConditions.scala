@@ -3,17 +3,15 @@ package graft.operators
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Cross-variable DEFINE conditions for the MATCH_RECOGNIZE NFA cursor scan
-  * (r10 — closes the scan route's "state an upper bound" refusal).
+/** Cross-variable DEFINE conditions for the MATCH_RECOGNIZE NFA cursor scan.
   *
-  * The bounded lead()-expansion path evaluates cross-variable conditions by
-  * enumerating every fixed-length alternative; the NFA scan cannot (unbounded
-  * runs have no fixed offsets), but it buffers the full rows of the current
-  * attempt, and inside one attempt every earlier variable's run placement is
-  * FIXED by the time a row is tested — so `LAST(A.col)` / `FIRST(A.col)` /
-  * `A.col` are direct reads of buffered rows. This module parses the SQL
-  * condition text into a tiny AST and evaluates it per candidate row with SQL
-  * (Kleene) three-valued logic.
+  * A variable's run has no fixed row offset (quantifiers decide it per
+  * attempt), but the scan buffers the full rows of the current attempt, and
+  * inside one attempt every earlier variable's run placement is FIXED by the
+  * time a row is tested — so `LAST(A.col)` / `FIRST(A.col)` / `A.col` are
+  * direct reads of buffered rows. This module parses the SQL condition text
+  * into a tiny AST and evaluates it per candidate row with SQL (Kleene)
+  * three-valued logic.
   *
   * Division of labor, by design:
   *   - row-local DEFINEs (the common case) stay Catalyst-compiled boolean
@@ -27,13 +25,12 @@ import org.apache.spark.sql.types._
   *     self run's FIRST) pay the interpreted-atom cost, and only on rows the
   *     NFA actually tests.
   *
-  * RUNNING visibility (the standard's DEFINE semantics, matching the bounded
-  * path's `subst`): while classifying a row as variable `v`, a reference to
-  * an EARLIER pattern variable resolves against its matched run in this
-  * attempt (empty run → NULL); `v`'s own bare/LAST refs are the candidate row
-  * and FIRST(v.col) the run's first row; references to LATER variables are
-  * NULL — their conditions can never hold, exactly as the standard
-  * prescribes.
+  * RUNNING visibility (the standard's DEFINE semantics): while classifying a
+  * row as variable `v`, a reference to an EARLIER pattern variable resolves
+  * against its matched run in this attempt (empty run → NULL); `v`'s own
+  * bare/LAST refs are the candidate row and FIRST(v.col) the run's first
+  * row; references to LATER variables are NULL — their conditions can never
+  * hold, exactly as the standard prescribes.
   *
   * Interpreted surface: AND/OR/NOT, comparisons (= == <> != < <= > >=),
   * IS [NOT] NULL, arithmetic (+ - * / and unary -), parentheses,
@@ -45,14 +42,13 @@ import org.apache.spark.sql.types._
   * executor). BEYOND that surface (r11): any deterministic Spark SQL
   * expression — ABS/CASE/IN/LIKE/BETWEEN/COALESCE/... — compiles through
   * the [[Hybrid]] Catalyst fallback (navigation atoms stay interpreted and
-  * feed slots of a composed row; numeric semantics there are Spark's own,
-  * matching the bounded lead()-CASE route bit-for-bit). A condition BOTH
-  * paths refuse fails loudly with both reasons; subqueries and
-  * non-deterministic expressions are refused. Interpreted-path numeric
-  * comparisons and + - * are exact
-  * (BigDecimal) when both operands are integral/decimal, double otherwise;
-  * division is always double — the same determinism contract the catalog's
-  * oracle queries pin.
+  * feed slots of a composed row; numeric semantics there are Spark's own).
+  * A condition BOTH paths refuse fails loudly with both reasons; subqueries
+  * and non-deterministic expressions are refused (compute such a value as an
+  * input column upstream and reference that). Interpreted-path numeric
+  * comparisons and + - * are exact (BigDecimal) when both operands are
+  * integral/decimal, double otherwise; division is always double — the same
+  * determinism contract the catalog's oracle queries pin.
   */
 object MrConditions {
 
@@ -592,8 +588,9 @@ object MrConditions {
     private def fail(msg: String): Nothing =
       sys.error(s"MATCH_RECOGNIZE cross-variable DEFINE: $msg at offset $pos in: $src " +
         "(supported: AND/OR/NOT, comparisons, IS [NOT] NULL, + - * /, literals, " +
-        "column refs, var.col, FIRST/LAST(var.col); state an upper bound to use " +
-        "the full bounded-rewrite surface)")
+        "column refs, var.col, FIRST/LAST(var.col); any other deterministic Spark " +
+        "SQL expression without a subquery runs through the Catalyst fallback — " +
+        "compute a non-deterministic or subquery value as an input column upstream)")
     private def ws(): Unit = while (pos < src.length && src.charAt(pos).isWhitespace) pos += 1
     private def peek: Char = if (pos < src.length) src.charAt(pos) else '\u0000'
     private def kw(k: String): Boolean = { // case-insensitive keyword with word boundary

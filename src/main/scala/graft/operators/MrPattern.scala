@@ -31,8 +31,7 @@ package graft.operators
   *     with the rewrite hint;
   *   - a variable may appear in MULTIPLE alternatives but only once per
   *     expanded branch;
-  *   - the expansion is capped at 256 branches (PERMUTE(5!) = 120 fits;
-  *     the same cap as the bounded lead()-CASE expansion).
+  *   - the expansion is capped at 256 branches (PERMUTE(5!) = 120 fits).
   */
 object MrPattern {
 

@@ -3664,8 +3664,8 @@ FROM n"""))
     // MATCH SKIP PAST LAST ROW (q111's SKIP TO NEXT ROW sibling): selected
     // view→click matches never overlap — a selected match consumes its rows,
     // so the next may start only after it. Exercises the full SQL-text path:
-    // candidate CASE over shared lead() windows + the non-overlap selection
-    // (one key repartition + in-order O(1)-state scan, Behavior.skipPastSelect).
+    // row-local DEFINE columns + the scan's skip-past cursor (one key
+    // repartition + one (key, ts, tie) sort under MrScanExec).
     t(s, dir, "events").createOrReplaceTempView("events_mr_sp")
     graft.sql.SqlFrontend.execute(s, """
       SELECT * FROM events_mr_sp MATCH_RECOGNIZE (
@@ -3714,8 +3714,8 @@ FROM n"""))
     // The MATCH_RECOGNIZE ticker idiom — rising-value runs per user via
     // PHYSICAL navigation (`U.value > PREV(U.value)`): S anchors anywhere, U
     // extends greedily while each row strictly exceeds its predecessor.
-    // PREV compiles to a lead() offset in the same shared window CASE, so
-    // the plan stays one shuffle + one sort.
+    // PREV compiles to a lag() helper column over the scan's own (key, ts,
+    // tie) window, so the plan stays one shuffle + one sort.
     t(s, dir, "events").createOrReplaceTempView("events_mr_nav")
     graft.sql.SqlFrontend.execute(s, """
       SELECT * FROM events_mr_nav MATCH_RECOGNIZE (

@@ -6,8 +6,8 @@ import graft.anomaly.AnomalyDetector
 import graft.operators.{MatchRecognize, MrPattern}
 
 /** One `FROM t MATCH_RECOGNIZE (…) [AS] alias` clause, parsed once for both
-  * routes: [[SqlFrontend.rewriteMatchRecognize]] lowers it to the lead()-CASE
-  * or [[MatchRecognize.scanPattern]], the standing planner ([[StreamPlanner]])
+  * routes: [[SqlFrontend.rewriteMatchRecognize]] lowers it to
+  * [[MatchRecognize.scanPattern]], the standing planner ([[StreamPlanner]])
   * to [[graft.streaming.StreamingMatchRecognize.applyPattern]]. So a clause
   * means the same thing, and a malformed one fails with the same message,
   * whether its statement runs as a snapshot or standing. Every grammar-level
@@ -34,11 +34,6 @@ final case class MrClause(
     branches: Seq[Vector[MrPattern.PTok]], tree: Option[MrPattern.Node],
     subsets: Seq[(String, Seq[Int])], defines: ListMap[String, String],
     measures: Seq[MrClause.Measure], withinMicros: Option[Long]) {
-
-  def composite: Boolean = tree.isDefined
-
-  /** The linear token table; empty for a composite pattern. */
-  def linear: Seq[MrPattern.PTok] = if (composite) Nil else branches.head
 
   val varIndex: Map[String, Int] = varNames.zipWithIndex.toMap
 

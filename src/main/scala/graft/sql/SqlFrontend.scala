@@ -902,79 +902,48 @@ object SqlFrontend {
           s"AND ($alias.__graft_valid_to IS NULL OR $timeExpr < $alias.__graft_valid_to)")
     })
 
-  /** Flink `MATCH_RECOGNIZE` (row-pattern recognition, the CEP SQL surface):
-    * `PATTERN` sequences of variables with BOUNDED quantifiers (`A`, `A?`,
-    * `A{m}`, `A{m,n}`), `ONE ROW PER MATCH`, `AFTER MATCH SKIP TO NEXT ROW`
-    * or `AFTER MATCH SKIP PAST LAST ROW` (the latter is ALSO the implicit
-    * default when the clause is absent — the SQL standard's), optional
-    * `WITHIN INTERVAL …`, `DEFINE` conditions over any pattern variable's
-    * columns (cross-variable comparisons like `B.price > A.price` work),
-    * `MEASURES X.col [AS a]` with `FIRST`/`LAST`.
+  /** Flink `MATCH_RECOGNIZE` (row-pattern recognition, the CEP SQL surface),
+    * lowered onto one executor for every clause shape:
+    * [[graft.operators.MatchRecognize.scanPattern]], the per-key cursor over
+    * [[graft.operators.MrMatcher]], the matcher the standing route runs too.
+    * That covers bounded and unbounded quantifiers (`A`, `A?`, `A{m,n}`,
+    * `A+`, `A*`, `A{m,}` and their reluctant `?` forms), alternation, PERMUTE
+    * and exclusion (run by the [[MrPattern]] parse tree), ONE ROW or ALL ROWS
+    * PER MATCH, all four AFTER MATCH strategies (SKIP PAST LAST ROW is the
+    * implicit default when the clause is absent, the SQL standard's),
+    * `WITHIN INTERVAL …`, SUBSET, `MATCH_NUMBER()`, `CLASSIFIER()` and
+    * aggregate MEASURES.
     *
-    * Rewritten to the SAME lead()-window formulation
-    * [[graft.operators.Behavior.sequenceMatch]] uses (and q111's oracle
-    * verifies): a quantified pattern expands into its fixed-length
-    * alternatives (bounded, so the product is finite and enumerable), each
-    * alternative's DEFINE conjunction becomes a predicate over `lead(col, k)`
-    * offsets, and ONE `CASE WHEN alt₁ … WHEN alt₂ …` tries alternatives in
-    * GREEDY order (leftmost quantifier longest first — the SQL-standard
-    * default; matches are decided per starting row, so SKIP TO NEXT ROW is
-    * exact). All alternatives share one window spec → one shuffle + one sort,
-    * no joins, no explode; Catalyst computes each distinct (col, offset) lead
-    * once. Inside `DEFINE v`, `v.col` and `LAST(v.col)` are the current
-    * candidate row and `FIRST(v.col)` the variable's first occurrence —
-    * Flink's RUNNING semantics: only earlier-offset occurrences are visible,
-    * so a forward reference (`DEFINE B AS B.x > C.x` with C later in the
-    * pattern) and a reference to an absent optional variable are both NULL —
-    * the condition can never hold, exactly as the standard prescribes.
-    * MEASURES see the FULL match (final semantics).
+    * Selection is the SQL-standard greedy one: quantifier counts are explored
+    * leftmost-longest-first with backtracking, reluctant tokens
+    * shortest-first. The scan is one Catalyst node that requires its input
+    * clustered by the PARTITION BY key and sorted by (key, ORDER BY), so
+    * EnsureRequirements plans one exchange and one sort, shared with the
+    * DEFINE window.
     *
-    * SKIP PAST LAST ROW layers a greedy NON-OVERLAP selection on the same
-    * candidate CASE: the per-start candidates (with their row counts) are
-    * computed by the identical window pass, then
-    * [[graft.operators.Behavior.skipPastSelect]] scans each key in order —
-    * a candidate is selected iff its start row is not consumed by the
-    * previously selected match, and a selected length-L match consumes the
-    * next L−1 rows. That selection has an unbounded per-key dependency chain
-    * (every decision depends on all earlier ones), so it is NOT expressible
-    * as one more window — the rewrite registers the selected relation as a
-    * temp view (the [[rewriteTemporalJoin]] precedent) backed by one
-    * repartition + sortWithinPartitions + O(1)-state mapPartitions scan,
-    * which is also how a native MATCH_RECOGNIZE engine executes it.
+    * DEFINE: a row-local condition (the variable's own row) compiles to one
+    * Catalyst boolean column. `PREV`/`NEXT` navigate physically (the
+    * ticker idiom `B AS B.price > PREV(B.price)`): each becomes a lag()/lead()
+    * helper column over the same window, so rows before the match start are
+    * visible and a row past the partition edge is NULL, per the standard;
+    * they are DEFINE-only and self-variable-only (loud errors otherwise — in
+    * MEASURES there is no single current row). Cross-variable refs, `FIRST()`,
+    * logical offsets and SUBSET refs compile to
+    * [[graft.operators.MrConditions]]' interpreted predicate, evaluated
+    * against the attempt's buffered rows with Flink's RUNNING semantics: only
+    * earlier variables' rows are visible, so a forward reference or a
+    * reference to an absent optional variable is NULL and the condition
+    * cannot hold. A condition beyond the interpreted surface runs through its
+    * Catalyst fallback, which refuses non-deterministic calls and subqueries.
     *
-    * `PREV`/`NEXT` navigate physically inside DEFINE (the ticker-pattern
-    * idiom `B AS B.price > PREV(B.price)`): at candidate offset k they are
-    * the k∓n lead() refs — rows BEFORE the match start included, NULL past
-    * the partition edge, per the standard. DEFINE-only, self-variable-only
-    * (loud errors otherwise — in MEASURES there is no single current row).
-    *
-    * UNBOUNDED quantifiers (`A+`, `A*`, `A{m,}`) and `ALL ROWS PER MATCH`
-    * route to the NFA CURSOR path instead (r8 verdict directive #1): each
-    * DEFINE compiles to one Catalyst-evaluated boolean column (row-local —
-    * the variable's own row plus PREV/NEXT physical navigation; cross-
-    * variable and FIRST() conditions stay on the bounded path, loudly), and
-    * [[graft.operators.MatchRecognize.scan]] runs the same greedy leftmost-
-    * longest selection as the CASE expansion via a per-key O(attempt)-state
-    * cursor — one repartition + one (key, order) sort shared with the DEFINE
-    * window. MEASURES keep final semantics through per-variable FIRST/LAST
-    * structs the scan emits; `ALL ROWS PER MATCH` emits every matched row
-    * (input columns + measures + `CLASSIFIER()`), with FINAL measure
-    * semantics — a documented deviation from the standard's RUNNING default,
-    * and a capability beyond Flink (ONE ROW only there). The
-    * variable-targeted strategies `SKIP TO [FIRST|LAST] <var>` (r9) also run
-    * on the scan — the cursor resumes AT the target row, overlaps allowed,
-    * empty-target/self-loop failing loudly per the standard — as do
-    * `MATCH_NUMBER()` (the scan's per-key match ordinal) and aggregate
-    * MEASURES (`count/sum/min/max/avg` over a variable's matched rows; sums
-    * are exact HALF_UP-scale-6 decimals, order-independent). Cross-variable
-    * and FIRST() DEFINEs compose with ALL scan-routed features too (r10):
-    * they compile to [[graft.operators.MrConditions]]' interpreted predicate
-    * — evaluated against the attempt's buffered rows, where every earlier
-    * variable's placement is fixed — while row-local DEFINEs and PREV/NEXT
-    * navigation stay Catalyst-codegen'd (navigation becomes a lag()/lead()
-    * helper column over the same shared window). The interpreter's condition
-    * surface is the documented subset in MrConditions; anything beyond it
-    * fails at plan time with the bounded-path hint.
+    * MEASURES read the full match (FINAL semantics) through the scan's
+    * per-variable FIRST/LAST structs; `MATCH_NUMBER()` is the match's per-key
+    * ordinal, `CLASSIFIER()` the last matched row's label under ONE ROW.
+    * `ALL ROWS PER MATCH` emits every matched row (input columns + measures +
+    * `CLASSIFIER()`) with RUNNING measures by default and FINAL on request —
+    * a capability beyond Flink (ONE ROW only there). The variable-targeted
+    * strategies `SKIP TO [FIRST|LAST] <var>` resume the cursor at the target
+    * row, failing loudly on an empty target or a self-loop, per the standard.
     *
     * The clause itself is read by [[MrClause.parse]], the one parser the
     * standing planner's stage shares; this method only lowers it.
@@ -989,92 +958,11 @@ object SqlFrontend {
     val subsetNames: Set[String] = mr.subsets.map(_._1).toSet
     // a variable name valid in MEASURES: pattern variables plus subsets
     val mVars: Set[String] = idx.keySet ++ subsetNames
-
-    /** Column ref at absolute row offset k from the match start. */
-    def at(colName: String, k: Int): String =
-      if (k == 0) colName else s"lead($colName, $k) OVER $w"
-
-    /** Substitute pattern-variable refs for one expansion. `self` = the
-      * (variable, occurrence-offset) currently being DEFINEd, if any.
-      *
-      * DEFINE uses RUNNING semantics (Flink/standard): while classifying a
-      * row as `v`, only occurrences at STRICTLY EARLIER offsets (plus the
-      * candidate row itself for `v`'s own refs) are visible; a reference to
-      * a variable with nothing matched yet — any forward reference — is
-      * NULL, which makes the condition unsatisfiable, exactly as the
-      * standard prescribes. MEASURES (`self = None`) see the full match.
-      */
-    def subst(expr: String, offsets: Map[String, Seq[Int]],
-              self: Option[(String, Int)]): String = {
-      def visible(v: String): Seq[Int] = self match {
-        case Some((_, off)) => offsets.getOrElse(v, Nil).filter(_ < off)
-        case None           => offsets.getOrElse(v, Nil)
-      }
-      // PREV/NEXT: PHYSICAL navigation relative to the row being classified
-      // (the standard's row-pattern navigation; Flink restricts it to DEFINE
-      // and so do we — in MEASURES the "current row" is the whole match).
-      // At candidate offset k, PREV(self.col, n) is the partition row k−n —
-      // lead() with a negative offset IS lag(), and a row before the
-      // partition start is NULL, exactly the standard's out-of-range rule.
-      // PREV can therefore see rows BEFORE the match start: physical, not
-      // logical, navigation. Only the variable being DEFINEd may navigate
-      // (other variables' "current row" is ambiguous mid-match) — loud error.
-      val nav = "(?i)\\b(PREV|NEXT)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
-        .replaceAllIn(expr, mm => java.util.regex.Matcher.quoteReplacement {
-          val kind = mm.group(1).toUpperCase
-          val (v, c) = (mm.group(2), mm.group(3))
-          val n = Option(mm.group(4)).map(_.toInt).getOrElse(1)
-          if (!idx.contains(v)) mm.matched
-          else self match {
-            case Some((sv, off)) if sv == v =>
-              at(c, if (kind == "PREV") off - n else off + n)
-            case Some(_) => sys.error(s"MATCH_RECOGNIZE: $kind() may only navigate the " +
-              s"variable being DEFINEd, got $kind($v.$c)")
-            case None => sys.error(s"MATCH_RECOGNIZE: $kind() is DEFINE-only " +
-              "(physical navigation has no single current row in MEASURES)")
-          }
-        })
-      // optional trailing integer = Flink's logical occurrence offset
-      // (FIRST(A.c, k) = the (k+1)-th occurrence, LAST(A.c, k) = k back from
-      // the last); the RUNNING list for the variable being DEFINEd ends at
-      // the candidate row, and an out-of-run offset is NULL
-      val marked = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
-        .replaceAllIn(nav, mm => java.util.regex.Matcher.quoteReplacement {
-          val (kind, v, c) = (mm.group(1).toUpperCase, mm.group(2), mm.group(3))
-          val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
-          if (!idx.contains(v)) mm.matched
-          else {
-            val occ = self match {
-              case Some((sv, off)) if sv == v => visible(v) :+ off
-              case _ => visible(v)
-            }
-            occ.lift(if (kind == "FIRST") k else occ.size - 1 - k)
-              .map(at(c, _)).getOrElse("NULL")
-          }
-        })
-      "\\b(\\w+)\\.(\\w+)\\b".r.replaceAllIn(marked, mm =>
-        java.util.regex.Matcher.quoteReplacement {
-          val (v, c) = (mm.group(1), mm.group(2))
-          if (!idx.contains(v)) mm.matched
-          else self match {
-            case Some((sv, off)) if sv == v => at(c, off)
-            case _ => visible(v) match {
-              case Nil => "NULL"
-              case occ => at(c, occ.last)
-            }
-          }
-        })
-    }
-    // MATCH_NUMBER(), CLASSIFIER() and aggregate measures need the cursor —
-    // scan route (CLASSIFIER under ONE ROW is the last matched row's label,
-    // r14 — only the scan's winning path knows it)
-    val usesMatchNumber = mr.measures.exists(m =>
-      "(?i)\\bMATCH_NUMBER\\s*\\(".r.findFirstIn(m.text).isDefined)
+    // CLASSIFIER() under ONE ROW is the last matched row's label, which the
+    // scan emits only on request
     val usesClassifier = mr.measures.exists(m =>
       "(?i)\\bCLASSIFIER\\s*\\(".r.findFirstIn(m.text).isDefined)
     val AggRe = "(?i)\\b(count|sum|min|max|avg)\\s*\\(\\s*(\\w+)\\.(\\w+|\\*)\\s*\\)".r
-    val usesAggregates = mr.measures.exists(m =>
-      AggRe.findAllMatchIn(m.text).exists(mm => mVars.contains(mm.group(2))))
     // which flavors of per-output-row RUNNING structs the scan must emit:
     // var-ref measures need __mr_run_first/last, aggregate measures (r11)
     // need __mr_run_agg — detected separately so neither pays for the other
@@ -1088,377 +976,293 @@ object SqlFrontend {
         "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(stripped)
           .exists(mm => idx.contains(mm.group(1)))
       })
-    val relation = if (!mr.composite && mr.subsets.isEmpty && mr.linear.forall(_.hi.isDefined) &&
-      !mr.allRows && !usesMatchNumber && !usesAggregates && !usesClassifier &&
-      (mr.skip == MatchRecognize.SkipToNextRow || mr.skip == MatchRecognize.SkipPastLastRow)) {
-      // ------------------------------- bounded, ONE ROW: lead()-expansion CASE
-      // every bounded-count assignment, greedy order: leftmost quantifier
-      // longest first (descending lexicographic) — reluctant tokens ascend
-      // (shortest first) instead; zero-length matches excluded
-      val expansions: Seq[Seq[Int]] = mr.linear
-        .map(t => (if (t.reluctant) t.lo to t.hi.get else t.hi.get to t.lo by -1).toSeq)
-        .foldLeft(Seq(Seq.empty[Int]))((acc, counts) => acc.flatMap(pfx => counts.map(pfx :+ _)))
-        .filter(_.sum > 0)
-      require(expansions.nonEmpty, "MATCH_RECOGNIZE: pattern admits only the empty match")
-      require(expansions.size <= 256,
-        s"MATCH_RECOGNIZE: quantifier ranges expand to ${expansions.size} alternatives (cap 256) — " +
-          "tighten the bounds")
-
-      // one WHEN branch per alternative: its DEFINEs at their absolute offsets,
-      // the existence guard on the final row, the WITHIN bound, its measures
-      val branches = expansions.map { counts =>
-        val starts = counts.scanLeft(0)(_ + _)
-        val offsets: Map[String, Seq[Int]] = mr.varNames.zipWithIndex.map { case (v, i) =>
-          v -> (starts(i) until starts(i + 1))
-        }.toMap
-        val len = counts.sum
-        val defineConds = mr.varNames.flatMap { v =>
-          mr.defines.get(v).toSeq.flatMap(cond =>
-            offsets(v).map(off => s"(${subst(cond, offsets, Some((v, off)))})"))
-        }
-        val exists = s"${at(ord, len - 1)} IS NOT NULL"
-        val within = mr.withinMicros.map(us =>
-          s"unix_micros(CAST(${at(ord, len - 1)} AS TIMESTAMP)) - " +
-            s"unix_micros(CAST($ord AS TIMESTAMP)) <= $us")
-        val cond = ((defineConds :+ exists) ++ within.toSeq).mkString(" AND ")
-        // '__len' always rides in the struct: the skip-past selection consumes
-        // it, and the measure-less form already exposed it as the one field
-        val fields = (s"'__len', $len" +:
-          mr.measures.map(m => s"'${m.alias}', ${subst(m.text, offsets, None)}")).mkString(", ")
-        s"WHEN ($cond) THEN named_struct($fields)"
-      }
-
-      val measureNames = mr.measures.map(_.alias)
-      require(!measureNames.contains("__len"), "MATCH_RECOGNIZE: '__len' is a reserved measure alias")
-      val candidateSql = s"SELECT *, CASE ${branches.mkString(" ")} END AS __mr FROM ${mr.table}"
-      if (mr.skip == MatchRecognize.SkipToNextRow) {
-        val outerCols = (partCols ++ measureNames.map(a => s"__mr.$a AS $a")).mkString(", ")
-        s"(SELECT $outerCols FROM ($candidateSql) __graft_mr0 WHERE __mr IS NOT NULL)"
-      } else {
-        // non-overlap selection: candidates flow through skipPastSelect's
-        // per-key ordered scan; the selected relation becomes a temp view the
-        // rewritten text references (rewriteTemporalJoin registers views the
-        // same way). EVERY row enters the scan — non-candidates still occupy
-        // row positions a selected match must consume.
-        val cand0 = Bridge.sql(spark, s"SELECT *, __mr.__len AS __graft_len FROM ($candidateSql) __graft_mr0")
-        // column pruning before the selection scan (r16 optimization round,
-        // guide §2.3 "project before the exchange"): skipPastSelect's MrScan
-        // node reads its whole input by position, so Catalyst cannot prune
-        // beneath it and every source column would be shuffled and sorted.
-        // The scan needs only the key/order columns and the candidate struct
-        // (measures already live INSIDE __mr, computed by the CASE above);
-        // the outer select reads partCols + __mr fields. Identical output
-        // rows (q162 oracle).
-        val candRefs = (partCols ++ ordCols)
-          .flatMap("\\w+".r.findAllIn(_)).map(_.toLowerCase).toSet
-        val cand = cand0.select(cand0.columns
-          .filter(c => candRefs.contains(c.toLowerCase) || !c.matches("\\w+") ||
-            c == "__mr" || c == "__graft_len")
-          .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-        val sel = graft.operators.Behavior.skipPastSelect(
-          cand, partCols.map(Bridge.expr(spark, _)),
-          ordCols.map(Bridge.expr(spark, _)), "__graft_len")
-        val out = sel.select((partCols ++ measureNames.map(a => s"__mr.$a AS $a")).map(Bridge.expr(spark, _)): _*)
-        // counter-named like every rewrite-registered view (llmops TVFs,
-        // temporal join): a content-hash name can collide across texts and
-        // silently swap plans under a cached/standing statement
-        val view = "__graft_mr_skippast_" + llmopsViewId.incrementAndGet()
-        out.createOrReplaceTempView(view)
-        trackEphemeralView(view)
-        view
-      }
-    } else {
-      // -------------- unbounded quantifiers / ALL ROWS: the NFA cursor scan.
-      // Row-local DEFINE predicates (the variable's own row plus PREV/NEXT
-      // physical navigation — the common case) each compile to ONE boolean
-      // column over the shared (key, order) window, Catalyst-codegen'd.
-      // CROSS-VARIABLE and FIRST() conditions (r10 — previously a loud
-      // state-a-bound refusal) route to the scan's interpreted predicate
-      // instead ([[graft.operators.MrConditions]]): inside one NFA attempt
-      // every earlier variable's run placement is fixed, so LAST/FIRST/bare
-      // refs are direct reads of buffered rows. PREV/NEXT stays Catalyst
-      // either way — it is rewritten to a precomputed lag()/lead() helper
-      // column over the SAME window (one shared exchange + sort), so the
-      // interpreter never reaches outside the attempt's buffer.
-      val navCols = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      def navRewrite(cond: String, v: String, forDyn: Boolean): String =
-        "(?i)\\b(PREV|NEXT)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
-          .replaceAllIn(cond, mm => java.util.regex.Matcher.quoteReplacement {
-            val kind = mm.group(1).toUpperCase
-            val (vv, c) = (mm.group(2), mm.group(3))
-            val nn = Option(mm.group(4)).map(_.toInt).getOrElse(1)
-            if (!idx.contains(vv)) mm.matched
-            else if (vv != v) sys.error(s"MATCH_RECOGNIZE: $kind() may only navigate the " +
-              s"variable being DEFINEd, got $kind($vv.$c)")
-            else {
-              val sql = if (kind == "PREV") s"lag($c, $nn) OVER $w" else s"lead($c, $nn) OVER $w"
-              if (!forDyn) sql
-              else { // the interpreter reads it as a bare column of the candidate row
-                val name = s"__graft_mrnav_${navCols.size}"
-                navCols += ((name, sql))
-                name
-              }
-            }
-          })
-      /** True when the condition references another variable's rows or the
-        * self run's FIRST — the parts only the attempt's buffer can answer.
-        */
-      def needsDyn(cond: String, v: String): Boolean = {
-        // any cross-variable ref, any SUBSET union ref (r11), any FIRST(),
-        // or any LOGICAL OFFSET (even self-LAST: `LAST(B.v, 1)` is a
-        // run-relative read only the attempt buffer can answer) routes the
-        // whole condition to the interpreter
-        val crossFl = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
-          .findAllMatchIn(cond).exists { mm =>
-            val (kind, vv) = (mm.group(1).toUpperCase, mm.group(2))
-            val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
-            subsetNames.contains(vv) ||
-              (idx.contains(vv) && (vv != v || kind == "FIRST" || k > 0))
-          }
-        // strip FIRST/LAST(...) and PREV/NEXT(...) arguments before probing
-        // bare qualified refs so their var.col operands don't double-count
-        val bare = "(?i)\\b(?:FIRST|LAST|PREV|NEXT)\\s*\\(\\s*\\w+\\.\\w+\\s*(?:,\\s*\\d+\\s*)?\\)".r
-          .replaceAllIn(cond, " ")
-        crossFl || "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(bare)
-          .exists(mm => subsetNames.contains(mm.group(1)) ||
-            (idx.contains(mm.group(1)) && mm.group(1) != v))
-      }
-      def localDefine(cond: String, v: String): String = {
-        val nav = navRewrite(cond, v, forDyn = false)
-        val marked = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
-          .replaceAllIn(nav, mm => java.util.regex.Matcher.quoteReplacement {
-            val (kind, vv, c) = (mm.group(1).toUpperCase, mm.group(2), mm.group(3))
-            val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
-            if (!idx.contains(vv)) mm.matched
-            // running LAST (offset 0) = the candidate row; any other form
-            // was routed to the interpreter by needsDyn
-            else if (vv == v && kind == "LAST" && k == 0) c
-            else sys.error(s"unreachable: needsDyn routes $kind($vv.$c, $k) to the interpreter")
-          })
-        "\\b(\\w+)\\.(\\w+)\\b".r.replaceAllIn(marked, mm =>
-          java.util.regex.Matcher.quoteReplacement {
-            val (vv, c) = (mm.group(1), mm.group(2))
-            if (!idx.contains(vv)) mm.matched
-            else if (vv == v) c
-            else sys.error(s"unreachable: needsDyn routes $vv.$c to the interpreter")
-          })
-      }
-      // (static Catalyst column, interpreted condition) per variable: exactly
-      // one of the pair is live — lit(true) + Some(text) on the dynamic route
-      val defPairs: Seq[(org.apache.spark.sql.Column, Option[String])] =
-        mr.varNames.map { nm =>
-          mr.defines.get(nm) match {
-            case None => (org.apache.spark.sql.functions.lit(true), None)
-            case Some(cond) if needsDyn(cond, nm) =>
-              (org.apache.spark.sql.functions.lit(true), Some(navRewrite(cond, nm, forDyn = true)))
-            case Some(cond) =>
-              (Bridge.expr(spark, localDefine(cond, nm)), None)
-          }
-        }
-      val defs = defPairs.map(_._1)
-      val dynDefs: Seq[Option[String]] =
-        if (defPairs.exists(_._2.isDefined)) defPairs.map(_._2) else Seq.empty
-      // columns the MEASURES read → captured into the per-variable structs
-      // (subset-variable refs too — their structs carry the same fields)
-      val measureColNames = mr.measures.flatMap { m =>
-        "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(m.text)
-          .filter(mm => mVars.contains(mm.group(1))).map(_.group(2)).toSeq
-      }.distinct
-      // MEASURES read the FULL match (final semantics): FIRST/LAST/bare refs
-      // become fields of the scan's __mr_first_<v>/__mr_last_<v> structs;
-      // CLASSIFIER() is the scan's __mr_var label (per-row under ALL ROWS;
-      // the last matched row's label under ONE ROW — r14, ISO)
-      def scanMeasure(e0: String, running: Boolean = false): String = {
-        "(?i)\\b(PREV|NEXT)\\s*\\(\\s*(\\w+)\\.".r.findFirstMatchIn(e0)
-          .filter(mm => idx.contains(mm.group(2)))
-          .foreach(mm => sys.error(s"MATCH_RECOGNIZE: ${mm.group(1).toUpperCase}() is " +
-            "DEFINE-only (physical navigation has no single current row in MEASURES)"))
-        // aggregate measures over a variable's matched rows → the scan's
-        // __mr_agg_<v> struct, or under RUNNING (r11) the per-output-row
-        // __mr_run_agg_<v> prefix struct; avg = one deterministic double
-        // division of the exact decimal sum by the non-null count
-        val e = AggRe.replaceAllIn(e0, mm => java.util.regex.Matcher.quoteReplacement {
-          val (fn, v, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
-          if (!mVars.contains(v)) mm.matched
+    // Row-local DEFINE predicates (the variable's own row plus PREV/NEXT
+    // physical navigation — the common case) each compile to ONE boolean
+    // column over the shared (key, order) window, Catalyst-codegen'd.
+    // CROSS-VARIABLE and FIRST() conditions route to the scan's interpreted
+    // predicate instead ([[graft.operators.MrConditions]]): inside one attempt
+    // every earlier variable's run placement is fixed, so LAST/FIRST/bare
+    // refs are direct reads of buffered rows. PREV/NEXT stays Catalyst
+    // either way — it is rewritten to a precomputed lag()/lead() helper
+    // column over the SAME window (one shared exchange + sort), so the
+    // interpreter never reaches outside the attempt's buffer.
+    val navCols = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def navRewrite(cond: String, v: String, forDyn: Boolean): String =
+      "(?i)\\b(PREV|NEXT)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
+        .replaceAllIn(cond, mm => java.util.regex.Matcher.quoteReplacement {
+          val kind = mm.group(1).toUpperCase
+          val (vv, c) = (mm.group(2), mm.group(3))
+          val nn = Option(mm.group(4)).map(_.toInt).getOrElse(1)
+          if (!idx.contains(vv)) mm.matched
+          else if (vv != v) sys.error(s"MATCH_RECOGNIZE: $kind() may only navigate the " +
+            s"variable being DEFINEd, got $kind($vv.$c)")
           else {
-            require(!(running && subsetNames.contains(v)),
-              s"MATCH_RECOGNIZE: RUNNING over SUBSET variable '$v' is not supported " +
-                "(MEASURES under ALL ROWS default to RUNNING, the standard) — mark the " +
-                "measure FINAL")
-            val base = if (running) s"__mr_run_agg_$v" else s"__mr_agg_$v"
-            fn match {
-              case "count" => s"$base.cnt_${if (c == "*") "rows" else c}"
-              case "avg" =>
-                require(c != "*", "MATCH_RECOGNIZE: avg(V.*) — name a column")
-                s"(CAST($base.sum_$c AS DOUBLE) / $base.cnt_$c)"
-              case f =>
-                require(c != "*", s"MATCH_RECOGNIZE: $f(V.*) — name a column")
-                s"$base.${f}_$c"
+            val sql = if (kind == "PREV") s"lag($c, $nn) OVER $w" else s"lead($c, $nn) OVER $w"
+            if (!forDyn) sql
+            else { // the interpreter reads it as a bare column of the candidate row
+              val name = s"__graft_mrnav_${navCols.size}"
+              navCols += ((name, sql))
+              name
             }
           }
         })
-        // MATCH_NUMBER(): the match's 1-based ordinal WITHIN its partition —
-        // deterministic under any parallelism, unlike the standard's
-        // query-global counter (documented deviation; per-key ordinals are
-        // what downstream joins actually use)
-        val mn = "(?i)\\bMATCH_NUMBER\\s*\\(\\s*\\)".r.replaceAllIn(e, _ => "__mr_seq")
-        // CLASSIFIER(): the scan's __mr_var — per-row under ALL ROWS, or
-        // (r14, ISO 9075-2) the LAST matched row's label under ONE ROW
-        val cls = "(?i)\\bCLASSIFIER\\s*\\(\\s*\\)".r.replaceAllIn(mn, _ => "__mr_var")
-        val fl = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
-          .replaceAllIn(cls, mm => java.util.regex.Matcher.quoteReplacement {
-            val (kind, vv, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
-            val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
-            if (!mVars.contains(vv)) mm.matched
-            else if (running) {
-              require(!subsetNames.contains(vv),
-                s"MATCH_RECOGNIZE: RUNNING over SUBSET variable '$vv' is not supported " +
-                  "(MEASURES under ALL ROWS default to RUNNING, the standard) — mark the " +
-                  "measure FINAL")
-              require(k == 0, "MATCH_RECOGNIZE: RUNNING with a logical offset is not " +
-                s"supported (MEASURES under ALL ROWS default to RUNNING, the standard) — " +
-                  s"mark the measure FINAL or drop the offset in ${mm.matched}")
-              s"__mr_run_${kind}_$vv.$c" // per-output-row running struct
-            }
-            else if (k == 0) s"__mr_${kind}_$vv.$c" // plain FIRST/LAST struct (FINAL)
-            else {
-              require(!subsetNames.contains(vv),
-                s"MATCH_RECOGNIZE: logical-offset ${kind.toUpperCase}($vv.$c, $k) over a " +
-                  "SUBSET variable is not supported — offset into a member variable instead")
-              s"__mr_off_${kind.take(1)}${k}_$vv.$c" // logical-offset struct
-            }
-          })
-        "\\b(\\w+)\\.(\\w+)\\b".r.replaceAllIn(fl, mm =>
-          java.util.regex.Matcher.quoteReplacement {
-            val (vv, c) = (mm.group(1), mm.group(2))
-            if (!mVars.contains(vv)) mm.matched
-            else if (running) {
-              require(!subsetNames.contains(vv),
-                s"MATCH_RECOGNIZE: RUNNING over SUBSET variable '$vv' is not supported " +
-                  "(MEASURES under ALL ROWS default to RUNNING, the standard) — mark the " +
-                  "measure FINAL")
-              s"__mr_run_last_$vv.$c"
-            }
-            else s"__mr_last_$vv.$c"
-          })
+    /** True when the condition references another variable's rows or the
+      * self run's FIRST — the parts only the attempt's buffer can answer.
+      */
+    def needsDyn(cond: String, v: String): Boolean = {
+      // any cross-variable ref, any SUBSET union ref (r11), any FIRST(),
+      // or any LOGICAL OFFSET (even self-LAST: `LAST(B.v, 1)` is a
+      // run-relative read only the attempt buffer can answer) routes the
+      // whole condition to the interpreter
+      val crossFl = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
+        .findAllMatchIn(cond).exists { mm =>
+          val (kind, vv) = (mm.group(1).toUpperCase, mm.group(2))
+          val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
+          subsetNames.contains(vv) ||
+            (idx.contains(vv) && (vv != v || kind == "FIRST" || k > 0))
+        }
+      // strip FIRST/LAST(...) and PREV/NEXT(...) arguments before probing
+      // bare qualified refs so their var.col operands don't double-count
+      val bare = "(?i)\\b(?:FIRST|LAST|PREV|NEXT)\\s*\\(\\s*\\w+\\.\\w+\\s*(?:,\\s*\\d+\\s*)?\\)".r
+        .replaceAllIn(cond, " ")
+      crossFl || "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(bare)
+        .exists(mm => subsetNames.contains(mm.group(1)) ||
+          (idx.contains(mm.group(1)) && mm.group(1) != v))
+    }
+    def localDefine(cond: String, v: String): String = {
+      val nav = navRewrite(cond, v, forDyn = false)
+      val marked = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
+        .replaceAllIn(nav, mm => java.util.regex.Matcher.quoteReplacement {
+          val (kind, vv, c) = (mm.group(1).toUpperCase, mm.group(2), mm.group(3))
+          val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
+          if (!idx.contains(vv)) mm.matched
+          // running LAST (offset 0) = the candidate row; any other form
+          // was routed to the interpreter by needsDyn
+          else if (vv == v && kind == "LAST" && k == 0) c
+          else sys.error(s"unreachable: needsDyn routes $kind($vv.$c, $k) to the interpreter")
+        })
+      "\\b(\\w+)\\.(\\w+)\\b".r.replaceAllIn(marked, mm =>
+        java.util.regex.Matcher.quoteReplacement {
+          val (vv, c) = (mm.group(1), mm.group(2))
+          if (!idx.contains(vv)) mm.matched
+          else if (vv == v) c
+          else sys.error(s"unreachable: needsDyn routes $vv.$c to the interpreter")
+        })
+    }
+    // (static Catalyst column, interpreted condition) per variable: exactly
+    // one of the pair is live — lit(true) + Some(text) on the dynamic route
+    val defPairs: Seq[(org.apache.spark.sql.Column, Option[String])] =
+      mr.varNames.map { nm =>
+        mr.defines.get(nm) match {
+          case None => (org.apache.spark.sql.functions.lit(true), None)
+          case Some(cond) if needsDyn(cond, nm) =>
+            (org.apache.spark.sql.functions.lit(true), Some(navRewrite(cond, nm, forDyn = true)))
+          case Some(cond) =>
+            (Bridge.expr(spark, localDefine(cond, nm)), None)
+        }
       }
-      mr.measures.foreach(m => require(!m.alias.startsWith("__mr_"),
-        s"MATCH_RECOGNIZE: measure alias '${m.alias}' uses the reserved __mr_ prefix"))
-      val input00full = spark.sql(s"SELECT * FROM ${mr.table}")
-      // Column pruning before the NFA scan (r16 optimization round, guide
-      // §2.3): scanPattern's MrScan node reads its whole input by position,
-      // so Catalyst cannot prune beneath it and every source column — wide
-      // payloads included — would cross the exchange and the sort even when
-      // no clause referenced it. Under ONE ROW PER MATCH the output is
-      // partition keys + measures, and every column the scan can possibly
-      // touch appears textually in PARTITION BY / ORDER BY / DEFINE /
-      // MEASURES (the substitution and the interpreted conditions both
-      // resolve names from these same texts), so keeping exactly the source
-      // columns mentioned there is safe over-approximation — quoted literals
-      // contribute harmless extra tokens, never a miss. ALL ROWS emits every
-      // source column by contract: no pruning.
-      val input00 =
-        if (mr.allRows) input00full
+    val defs = defPairs.map(_._1)
+    val dynDefs: Seq[Option[String]] =
+      if (defPairs.exists(_._2.isDefined)) defPairs.map(_._2) else Seq.empty
+    // columns the MEASURES read → captured into the per-variable structs
+    // (subset-variable refs too — their structs carry the same fields)
+    val measureColNames = mr.measures.flatMap { m =>
+      "\\b(\\w+)\\.(\\w+)\\b".r.findAllMatchIn(m.text)
+        .filter(mm => mVars.contains(mm.group(1))).map(_.group(2)).toSeq
+    }.distinct
+    // MEASURES read the FULL match (final semantics): FIRST/LAST/bare refs
+    // become fields of the scan's __mr_first_<v>/__mr_last_<v> structs;
+    // CLASSIFIER() is the scan's __mr_var label (per-row under ALL ROWS;
+    // the last matched row's label under ONE ROW — r14, ISO)
+    def scanMeasure(e0: String, running: Boolean = false): String = {
+      "(?i)\\b(PREV|NEXT)\\s*\\(\\s*(\\w+)\\.".r.findFirstMatchIn(e0)
+        .filter(mm => idx.contains(mm.group(2)))
+        .foreach(mm => sys.error(s"MATCH_RECOGNIZE: ${mm.group(1).toUpperCase}() is " +
+          "DEFINE-only (physical navigation has no single current row in MEASURES)"))
+      // aggregate measures over a variable's matched rows → the scan's
+      // __mr_agg_<v> struct, or under RUNNING (r11) the per-output-row
+      // __mr_run_agg_<v> prefix struct; avg = one deterministic double
+      // division of the exact decimal sum by the non-null count
+      val e = AggRe.replaceAllIn(e0, mm => java.util.regex.Matcher.quoteReplacement {
+        val (fn, v, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
+        if (!mVars.contains(v)) mm.matched
         else {
-          val refs = (partCols ++ ordCols ++ mr.defines.values ++ mr.measures.map(_.text))
-            .flatMap("\\w+".r.findAllIn(_)).map(_.toLowerCase).toSet
-          // a column whose NAME is not a plain \w+ identifier (backticked,
-          // hyphenated, non-ASCII) can never be matched by the token probe —
-          // keep it defensively rather than mis-prune a referenced column
-          val keep = input00full.columns.filter(c =>
-            refs.contains(c.toLowerCase) || !c.matches("\\w+"))
-          if (keep.length == input00full.columns.length) input00full
-          else input00full.select(keep.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+          require(!(running && subsetNames.contains(v)),
+            s"MATCH_RECOGNIZE: RUNNING over SUBSET variable '$v' is not supported " +
+              "(MEASURES under ALL ROWS default to RUNNING, the standard) — mark the " +
+              "measure FINAL")
+          val base = if (running) s"__mr_run_agg_$v" else s"__mr_agg_$v"
+          fn match {
+            case "count" => s"$base.cnt_${if (c == "*") "rows" else c}"
+            case "avg" =>
+              require(c != "*", "MATCH_RECOGNIZE: avg(V.*) — name a column")
+              s"(CAST($base.sum_$c AS DOUBLE) / $base.cnt_$c)"
+            case f =>
+              require(c != "*", s"MATCH_RECOGNIZE: $f(V.*) — name a column")
+              s"$base.${f}_$c"
+          }
         }
-      // PARTITION BY expressions under ALL ROWS (r16, VERDICT r15 #3): each
-      // non-plain entry pre-projects onto the input under its selectExpr
-      // auto-name, so the ALL-ROWS shape (which emits every input column)
-      // carries the computed key as a regular column — the SAME auto-named
-      // column the streaming route emits, dissolving the old
-      // schema-agreement refusal. The auto-name must not shadow a real
-      // source column (a silent replace would corrupt it in the output);
-      // two raw entries resolving to one auto-name are a duplicate key.
-      val (input, partColsR) =
-        if (!mr.allRows) (input00, partCols)
-        else partCols.foldLeft((input00, Seq.empty[String])) {
-          case ((df, acc), p) if p.matches("\\w+") => (df, acc :+ p)
-          case ((df, acc), p) =>
-            val nm = df.select(Bridge.expr(spark, p)).columns.head
-            require(!input00.columns.contains(nm),
-              s"MATCH_RECOGNIZE: PARTITION BY expression '$p' resolves to auto-name '$nm', " +
-                "which already exists as a source column — pre-project the expression " +
-                "upstream under a different alias")
-            (df.withColumn(nm, Bridge.expr(spark, p)), acc :+ s"`$nm`")
-        }
-      require(partColsR.distinct.size == partColsR.size,
-        s"MATCH_RECOGNIZE: PARTITION BY entries resolve to duplicate key columns: $partColsR")
-      if (mr.allRows) mr.measures.foreach(m =>
-        require(!input.columns.contains(m.alias),
-          s"MATCH_RECOGNIZE: ALL ROWS PER MATCH emits every input column; measure alias '${m.alias}' collides"))
-      // logical-offset FIRST/LAST measures → extra per-(var, kind, k) structs
-      val OffRe = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*,\\s*(\\d+)\\s*\\)".r
-      val offsetSpecs: Seq[(Int, Boolean, Int)] = mr.measures.flatMap { m =>
-        OffRe.findAllMatchIn(m.text).flatMap { mm =>
-          val (kind, v, k) = (mm.group(1).toUpperCase, mm.group(2), mm.group(4).toInt)
-          if (!idx.contains(v) || k == 0) None else Some((idx(v), kind == "FIRST", k))
-        }
-      }.distinct
-      // aggregate fields each variable's / subset's __mr_agg struct must carry
-      val aggByVar = {
-        val byVar = scala.collection.mutable.Map
-          .empty[String, scala.collection.mutable.LinkedHashSet[(String, String)]]
-        mr.measures.foreach { m =>
-          AggRe.findAllMatchIn(m.text).foreach { mm =>
-            val (fn, v, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
-            if (mVars.contains(v)) {
-              val specs = byVar.getOrElseUpdate(v,
-                scala.collection.mutable.LinkedHashSet.empty[(String, String)])
-              fn match {
-                case "count" => specs += (("cnt", c))
-                case "avg"   => specs += (("sum", c)); specs += (("cnt", c))
-                case f       => specs += ((f, c))
-              }
+      })
+      // MATCH_NUMBER(): the match's 1-based ordinal WITHIN its partition —
+      // deterministic under any parallelism, unlike the standard's
+      // query-global counter (documented deviation; per-key ordinals are
+      // what downstream joins actually use)
+      val mn = "(?i)\\bMATCH_NUMBER\\s*\\(\\s*\\)".r.replaceAllIn(e, _ => "__mr_seq")
+      // CLASSIFIER(): the scan's __mr_var — per-row under ALL ROWS, or
+      // (r14, ISO 9075-2) the LAST matched row's label under ONE ROW
+      val cls = "(?i)\\bCLASSIFIER\\s*\\(\\s*\\)".r.replaceAllIn(mn, _ => "__mr_var")
+      val fl = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*(?:,\\s*(\\d+)\\s*)?\\)".r
+        .replaceAllIn(cls, mm => java.util.regex.Matcher.quoteReplacement {
+          val (kind, vv, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
+          val k = Option(mm.group(4)).map(_.toInt).getOrElse(0)
+          if (!mVars.contains(vv)) mm.matched
+          else if (running) {
+            require(!subsetNames.contains(vv),
+              s"MATCH_RECOGNIZE: RUNNING over SUBSET variable '$vv' is not supported " +
+                "(MEASURES under ALL ROWS default to RUNNING, the standard) — mark the " +
+                "measure FINAL")
+            require(k == 0, "MATCH_RECOGNIZE: RUNNING with a logical offset is not " +
+              s"supported (MEASURES under ALL ROWS default to RUNNING, the standard) — " +
+                s"mark the measure FINAL or drop the offset in ${mm.matched}")
+            s"__mr_run_${kind}_$vv.$c" // per-output-row running struct
+          }
+          else if (k == 0) s"__mr_${kind}_$vv.$c" // plain FIRST/LAST struct (FINAL)
+          else {
+            require(!subsetNames.contains(vv),
+              s"MATCH_RECOGNIZE: logical-offset ${kind.toUpperCase}($vv.$c, $k) over a " +
+                "SUBSET variable is not supported — offset into a member variable instead")
+            s"__mr_off_${kind.take(1)}${k}_$vv.$c" // logical-offset struct
+          }
+        })
+      "\\b(\\w+)\\.(\\w+)\\b".r.replaceAllIn(fl, mm =>
+        java.util.regex.Matcher.quoteReplacement {
+          val (vv, c) = (mm.group(1), mm.group(2))
+          if (!mVars.contains(vv)) mm.matched
+          else if (running) {
+            require(!subsetNames.contains(vv),
+              s"MATCH_RECOGNIZE: RUNNING over SUBSET variable '$vv' is not supported " +
+                "(MEASURES under ALL ROWS default to RUNNING, the standard) — mark the " +
+                "measure FINAL")
+            s"__mr_run_last_$vv.$c"
+          }
+          else s"__mr_last_$vv.$c"
+        })
+    }
+    mr.measures.foreach(m => require(!m.alias.startsWith("__mr_"),
+      s"MATCH_RECOGNIZE: measure alias '${m.alias}' uses the reserved __mr_ prefix"))
+    val input00full = spark.sql(s"SELECT * FROM ${mr.table}")
+    // Column pruning before the NFA scan (r16 optimization round, guide
+    // §2.3): scanPattern's MrScan node reads its whole input by position,
+    // so Catalyst cannot prune beneath it and every source column — wide
+    // payloads included — would cross the exchange and the sort even when
+    // no clause referenced it. Under ONE ROW PER MATCH the output is
+    // partition keys + measures, and every column the scan can possibly
+    // touch appears textually in PARTITION BY / ORDER BY / DEFINE /
+    // MEASURES (the substitution and the interpreted conditions both
+    // resolve names from these same texts), so keeping exactly the source
+    // columns mentioned there is safe over-approximation — quoted literals
+    // contribute harmless extra tokens, never a miss. ALL ROWS emits every
+    // source column by contract: no pruning.
+    val input00 =
+      if (mr.allRows) input00full
+      else {
+        val refs = (partCols ++ ordCols ++ mr.defines.values ++ mr.measures.map(_.text))
+          .flatMap("\\w+".r.findAllIn(_)).map(_.toLowerCase).toSet
+        // a column whose NAME is not a plain \w+ identifier (backticked,
+        // hyphenated, non-ASCII) can never be matched by the token probe —
+        // keep it defensively rather than mis-prune a referenced column
+        val keep = input00full.columns.filter(c =>
+          refs.contains(c.toLowerCase) || !c.matches("\\w+"))
+        if (keep.length == input00full.columns.length) input00full
+        else input00full.select(keep.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+      }
+    // PARTITION BY expressions under ALL ROWS (r16, VERDICT r15 #3): each
+    // non-plain entry pre-projects onto the input under its selectExpr
+    // auto-name, so the ALL-ROWS shape (which emits every input column)
+    // carries the computed key as a regular column — the SAME auto-named
+    // column the streaming route emits, dissolving the old
+    // schema-agreement refusal. The auto-name must not shadow a real
+    // source column (a silent replace would corrupt it in the output);
+    // two raw entries resolving to one auto-name are a duplicate key.
+    val (input, partColsR) =
+      if (!mr.allRows) (input00, partCols)
+      else partCols.foldLeft((input00, Seq.empty[String])) {
+        case ((df, acc), p) if p.matches("\\w+") => (df, acc :+ p)
+        case ((df, acc), p) =>
+          val nm = df.select(Bridge.expr(spark, p)).columns.head
+          require(!input00.columns.contains(nm),
+            s"MATCH_RECOGNIZE: PARTITION BY expression '$p' resolves to auto-name '$nm', " +
+              "which already exists as a source column — pre-project the expression " +
+              "upstream under a different alias")
+          (df.withColumn(nm, Bridge.expr(spark, p)), acc :+ s"`$nm`")
+      }
+    require(partColsR.distinct.size == partColsR.size,
+      s"MATCH_RECOGNIZE: PARTITION BY entries resolve to duplicate key columns: $partColsR")
+    if (mr.allRows) mr.measures.foreach(m =>
+      require(!input.columns.contains(m.alias),
+        s"MATCH_RECOGNIZE: ALL ROWS PER MATCH emits every input column; measure alias '${m.alias}' collides"))
+    // logical-offset FIRST/LAST measures → extra per-(var, kind, k) structs
+    val OffRe = "(?i)\\b(FIRST|LAST)\\s*\\(\\s*(\\w+)\\.(\\w+)\\s*,\\s*(\\d+)\\s*\\)".r
+    val offsetSpecs: Seq[(Int, Boolean, Int)] = mr.measures.flatMap { m =>
+      OffRe.findAllMatchIn(m.text).flatMap { mm =>
+        val (kind, v, k) = (mm.group(1).toUpperCase, mm.group(2), mm.group(4).toInt)
+        if (!idx.contains(v) || k == 0) None else Some((idx(v), kind == "FIRST", k))
+      }
+    }.distinct
+    // aggregate fields each variable's / subset's __mr_agg struct must carry
+    val aggByVar = {
+      val byVar = scala.collection.mutable.Map
+        .empty[String, scala.collection.mutable.LinkedHashSet[(String, String)]]
+      mr.measures.foreach { m =>
+        AggRe.findAllMatchIn(m.text).foreach { mm =>
+          val (fn, v, c) = (mm.group(1).toLowerCase, mm.group(2), mm.group(3))
+          if (mVars.contains(v)) {
+            val specs = byVar.getOrElseUpdate(v,
+              scala.collection.mutable.LinkedHashSet.empty[(String, String)])
+            fn match {
+              case "count" => specs += (("cnt", c))
+              case "avg"   => specs += (("sum", c)); specs += (("cnt", c))
+              case f       => specs += ((f, c))
             }
           }
         }
-        byVar
       }
-      val aggSpecs: Seq[Seq[(String, String)]] =
-        mr.varNames.map(v => aggByVar.get(v).map(_.toSeq).getOrElse(Seq.empty))
-      val subsetSpecs: Seq[MatchRecognize.SubsetSpec] =
-        mr.subsets.map { case (nm, members) =>
-          MatchRecognize.SubsetSpec(nm, members,
-            aggByVar.get(nm).map(_.toSeq).getOrElse(Seq.empty)) }
-      // PREV/NEXT helpers for interpreted DEFINEs ride as input columns over
-      // the same window W — Catalyst collapses their sort into the scan's
-      // (plan-guard spec); they are dropped by the final selectExpr below
-      // (baseCols comes from the PRE-nav `input`)
-      val input2 =
-        if (navCols.isEmpty) input
-        else input.select(("*" +: navCols.toSeq.map { case (nm, e) => s"$e AS $nm" }).map(Bridge.expr(spark, _)): _*)
-      val scanned = MatchRecognize.scanPattern(
-        input2, partColsR.map(Bridge.expr(spark, _)),
-        ordCols.map(Bridge.expr(spark, _)), ord, mr.varNames, mr.scanBranches, defs,
-        mr.withinMicros, mr.skip, mr.allRows, measureColNames,
-        if (aggSpecs.forall(_.isEmpty)) Seq.empty else aggSpecs, dynDefs, offsetSpecs,
-        runningStructs = runningNonAgg, runningAggStructs = runningAggs,
-        subsets = subsetSpecs,
-        // composite patterns execute by the parse tree (r12): choice points
-        // decided at their written positions — ISO preferment even when a
-        // variable-length quantifier precedes an alternation
-        tree = mr.tree,
-        oneRowClassifier = usesClassifier && !mr.allRows)
-      val measures = mr.measures.map(m => s"${scanMeasure(m.text, m.running)} AS ${m.alias}")
-      // ALL ROWS emits every input column (the standard's shape); ONE ROW the
-      // partition key plus measures — both from the match rows the scan kept
-      val baseCols = if (mr.allRows) input.columns.toSeq else partCols
-      val out = scanned.select((baseCols ++ measures).map(Bridge.expr(spark, _)): _*)
-      val view = "__graft_mr_scan_" + llmopsViewId.incrementAndGet()
-      out.createOrReplaceTempView(view)
-      trackEphemeralView(view)
-      view
+      byVar
     }
-    rewriteMatchRecognize(spark, mr.splice(sql, relation))
+    val aggSpecs: Seq[Seq[(String, String)]] =
+      mr.varNames.map(v => aggByVar.get(v).map(_.toSeq).getOrElse(Seq.empty))
+    val subsetSpecs: Seq[MatchRecognize.SubsetSpec] =
+      mr.subsets.map { case (nm, members) =>
+        MatchRecognize.SubsetSpec(nm, members,
+          aggByVar.get(nm).map(_.toSeq).getOrElse(Seq.empty)) }
+    // PREV/NEXT helpers for interpreted DEFINEs ride as input columns over
+    // the same window W — Catalyst collapses their sort into the scan's
+    // (plan-guard spec); they are dropped by the final selectExpr below
+    // (baseCols comes from the PRE-nav `input`)
+    val input2 =
+      if (navCols.isEmpty) input
+      else input.select(("*" +: navCols.toSeq.map { case (nm, e) => s"$e AS $nm" }).map(Bridge.expr(spark, _)): _*)
+    val scanned = MatchRecognize.scanPattern(
+      input2, partColsR.map(Bridge.expr(spark, _)),
+      ordCols.map(Bridge.expr(spark, _)), ord, mr.varNames, mr.scanBranches, defs,
+      mr.withinMicros, mr.skip, mr.allRows, measureColNames,
+      if (aggSpecs.forall(_.isEmpty)) Seq.empty else aggSpecs, dynDefs, offsetSpecs,
+      runningStructs = runningNonAgg, runningAggStructs = runningAggs,
+      subsets = subsetSpecs,
+      // composite patterns execute by the parse tree (r12): choice points
+      // decided at their written positions — ISO preferment even when a
+      // variable-length quantifier precedes an alternation
+      tree = mr.tree,
+      oneRowClassifier = usesClassifier && !mr.allRows)
+    val measures = mr.measures.map(m => s"${scanMeasure(m.text, m.running)} AS ${m.alias}")
+    // ALL ROWS emits every input column (the standard's shape); ONE ROW the
+    // partition key plus measures — both from the match rows the scan kept
+    val baseCols = if (mr.allRows) input.columns.toSeq else partCols
+    val out = scanned.select((baseCols ++ measures).map(Bridge.expr(spark, _)): _*)
+    val view = "__graft_mr_scan_" + llmopsViewId.incrementAndGet()
+    out.createOrReplaceTempView(view)
+    trackEphemeralView(view)
+    rewriteMatchRecognize(spark, mr.splice(sql, view))
   }
 
   private[graft] val CumulateRe =

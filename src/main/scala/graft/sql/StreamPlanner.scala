@@ -398,9 +398,9 @@ object StreamPlanner {
   }
 
   /** One stage whose FROM carries `MATCH_RECOGNIZE` — the standing-CEP form,
-    * routed to a stateful operator instead of the batch lead()-window
-    * rewrite, which streams can't run (unbounded window functions). One
-    * route: every statement runs on
+    * routed to a stateful operator instead of the batch scan, whose
+    * (key, order) sort and lag()/lead() helper columns streams can't run.
+    * One route: every statement runs on
     * [[graft.streaming.StreamingMatchRecognize]] (value-buffered state, the
     * batch scan's [[graft.operators.MrMatcher]]) — literal type DEFINEs
     * (`V AS V.col = 'lit'`) included. DEFINEs range over ANY number of source

@@ -11,11 +11,11 @@ import graft.operators.MatchRecognize
   * `PATTERN (A B{1,2} C?)` with every variable defined as `type = '<lit>'` —
   * as a standing query. It is a thin adapter over
   * [[StreamingMatchRecognize.applyPattern]], the way
-  * [[graft.operators.Behavior]] maps the same tokens onto the batch scan:
-  * token `i` becomes variable `v<i>` defined as `v<i>.<typeCol> = '<typ>'`
-  * over the type column cast to string, so both run the one
-  * [[graft.operators.MrMatcher]] and select identical matches on a closed
-  * stream.
+  * [[graft.operators.Behavior.sequenceMatchQ]] maps the same tokens onto the
+  * batch scan: token `i` becomes variable `v<i>` defined as
+  * `v<i>.<typeCol> = '<typ>'` over the type column cast to string, so both
+  * run the one [[graft.operators.MrMatcher]] and select identical matches on
+  * a closed stream.
   *
   * Strategy: every position is an independent match start (AFTER MATCH SKIP
   * TO NEXT ROW) by default; `skipPast = true` is the SQL-standard default,
@@ -48,25 +48,6 @@ object StreamingSequenceMatchQ {
   }
   case class QMatch(key: String, match_start_ts: Timestamp, match_end_ts: Timestamp,
                     start_tie: Long, matched_len: Int)
-
-  /** Greedy-ordered fixed type-sequences of a bounded quantified pattern —
-    * the batch rewrite [[graft.operators.Behavior.sequenceMatchQ]] compiles
-    * them into one when-chain.
-    */
-  private[graft] def expansions(pattern: Seq[QTok]): Seq[Seq[String]] = {
-    require(pattern.forall(_.max != QTok.Unbounded),
-      "unbounded quantifier: expansions enumerate fixed sequences — the unbounded " +
-        "surfaces run the matcher (streaming: this operator; batch: " +
-        "graft.operators.MatchRecognize.scan)")
-    val seqs = pattern
-      .map(t => (if (t.reluctant) t.min to t.max else t.max to t.min by -1)
-        .map(c => Seq.fill(c)(t.typ)))
-      .foldLeft(Seq(Seq.empty[String]))((acc, alts) => acc.flatMap(p => alts.map(p ++ _)))
-      .filter(_.nonEmpty)
-    require(seqs.nonEmpty, "pattern admits only the empty match")
-    require(seqs.size <= 256, s"quantifiers expand to ${seqs.size} alternatives (cap 256)")
-    seqs.distinct // duplicate type-sequences behave identically; keep greedy order
-  }
 
   def apply(df: DataFrame, keyCol: String, typeCol: String, tsCol: String, tieCol: String,
             pattern: Seq[QTok], withinMicros: Long = 0L,

@@ -183,12 +183,4 @@ class BehaviorSpec extends SparkSpec {
     // "x y z": docs 2,3 → df 2; tie broken by the ngram string ascending
     assert(out == Seq(("a b c", 2L), ("x y z", 2L)))
   }
-
-  test("skipPastSelect refuses a fractional length column when the DataFrame is built") {
-    import spark.implicits._
-    val df = Seq(("u", 1L, 2.0), ("u", 2L, 0.0)).toDF("k", "ts", "len")
-    val err = intercept[RuntimeException](
-      Behavior.skipPastSelect(df, Seq(col("k")), Seq(col("ts")), "len"))
-    assert(err.getMessage.contains("must be integral"), err.getMessage)
-  }
 }

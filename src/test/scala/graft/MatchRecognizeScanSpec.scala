@@ -6,10 +6,10 @@ import graft.operators.MatchRecognize.MrTok
 import graft.sql.SqlFrontend
 import graft.streaming.StreamingSequenceMatchQ.QTok
 
-/** The NFA cursor scan behind unbounded quantifiers and ALL ROWS PER MATCH
-  * (r8 verdict directive #1): greedy selection equivalence with the bounded
-  * lead()-expansion surfaces, unbounded-run semantics, WITHIN capping, ALL
-  * ROWS emission, and the SQL route end-to-end.
+/** The NFA cursor scan, the one batch MATCH_RECOGNIZE executor: greedy
+  * selection equivalence with the bounded lead()-CASE expansion (kept as the
+  * test-only [[MrCaseReference]]), unbounded-run semantics, WITHIN capping,
+  * ALL ROWS emission, and the SQL route end-to-end.
   */
 class MatchRecognizeScanSpec extends SparkSpec {
 
@@ -29,32 +29,45 @@ class MatchRecognizeScanSpec extends SparkSpec {
 
   test("scan equals the bounded expansion surfaces on a bounded pattern (both skip modes)") {
     val events = core.Tables(spark, sfDir, "events")
+    events.createOrReplaceTempView("mr_events_q")
     val toks = Seq(MrTok("A", 1, Some(2)), MrTok("B", 1, Some(1)))
     val defs = Seq(col("event_type") === "view", col("event_type") === "click")
     val qtoks = Seq(QTok("view", 1, 2), QTok("click", 1, 1))
+    // the lead()-CASE expansion of the same pattern, the independent reference
+    def expansion(after: String) = MrCaseReference(spark, s"""
+      SELECT * FROM mr_events_q MATCH_RECOGNIZE (
+        PARTITION BY user_id ORDER BY ts, event_id
+        MEASURES FIRST(A.ts) AS ts, FIRST(A.event_id) AS event_id
+        ONE ROW PER MATCH
+        $after
+        PATTERN (A{1,2} B)
+        DEFINE A AS A.event_type = 'view', B AS B.event_type = 'click'
+      )""").select(col("user_id"), col("ts"), col("event_id"), col("__len").cast("long").as("__mr_len"))
+    def scan(skip: MatchRecognize.Skip) = MatchRecognize.scan(events, Seq(col("user_id")),
+        Seq(col("ts"), col("event_id")), "ts", toks, defs,
+        withinMicros = None, skip = skip, allRows = false, measureCols = Seq("ts"))
+      .select(col("user_id"), col("ts"), col("event_id"), col("__mr_len"))
+    def typed(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("user_id"), col("match_start_ts").as("ts"), col("start_tie").as("event_id"),
+        col("matched_len").cast("long").as("__mr_len"))
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
     // SKIP TO NEXT ROW: every start decided independently, greedy longest
-    val scanNext = MatchRecognize.scan(events, Seq(col("user_id")),
-        Seq(col("ts"), col("event_id")), "ts", toks, defs,
-        withinMicros = None, skip = MatchRecognize.SkipToNextRow, allRows = false, measureCols = Seq("ts"))
-      .select(col("user_id"), col("ts"), col("event_id"), col("__mr_len"))
-    val caseNext = Behavior.sequenceMatchQ(events, "user_id", "event_type", "ts", "event_id", qtoks)
-      .select(col("user_id"), col("match_start_ts").as("ts"), col("start_tie").as("event_id"),
-        col("matched_len").cast("long").as("__mr_len"))
-    assert(scanNext.exceptAll(caseNext).isEmpty && caseNext.exceptAll(scanNext).isEmpty,
+    val caseNext = expansion("AFTER MATCH SKIP TO NEXT ROW")
+    assert(same(scan(MatchRecognize.SkipToNextRow), caseNext),
       "scan vs lead()-CASE greedy selection diverged under SKIP TO NEXT ROW")
+    assert(same(typed(Behavior.sequenceMatchQ(events, "user_id", "event_type", "ts", "event_id", qtoks)),
+      caseNext), "sequenceMatchQ vs lead()-CASE diverged under SKIP TO NEXT ROW")
 
     // SKIP PAST LAST ROW: the sequential consumption must agree too
-    val scanPast = MatchRecognize.scan(events, Seq(col("user_id")),
-        Seq(col("ts"), col("event_id")), "ts", toks, defs,
-        withinMicros = None, skip = MatchRecognize.SkipPastLastRow, allRows = false, measureCols = Seq("ts"))
-      .select(col("user_id"), col("ts"), col("event_id"), col("__mr_len"))
-    val casePast = Behavior.sequenceMatchSkipPast(events, "user_id", "event_type", "ts", "event_id", qtoks)
-      .select(col("user_id"), col("match_start_ts").as("ts"), col("start_tie").as("event_id"),
-        col("matched_len").cast("long").as("__mr_len"))
-    assert(scanPast.exceptAll(casePast).isEmpty && casePast.exceptAll(scanPast).isEmpty,
-      "scan vs skipPastSelect consumption diverged under SKIP PAST LAST ROW")
-    assert(scanPast.count() > 0, "equivalence must not be vacuous")
+    val casePast = expansion("AFTER MATCH SKIP PAST LAST ROW")
+    assert(same(scan(MatchRecognize.SkipPastLastRow), casePast),
+      "scan vs lead()-CASE consumption diverged under SKIP PAST LAST ROW")
+    assert(same(typed(Behavior.sequenceMatchSkipPast(events, "user_id", "event_type", "ts", "event_id",
+      qtoks)), casePast), "sequenceMatchSkipPast vs lead()-CASE diverged under SKIP PAST LAST ROW")
+    assert(casePast.count() > 0 && casePast.count() < caseNext.count(),
+      "equivalence must not be vacuous, and skip-past must consume overlapping starts")
   }
 
   test("unbounded ticker pattern S D+ U+ — greedy maximal runs, both skip modes (SQL route)") {
@@ -448,22 +461,19 @@ class MatchRecognizeScanSpec extends SparkSpec {
   test("cross-variable DEFINE: scan route equals the bounded lead()-CASE on real events") {
     val events = core.Tables(spark, sfDir, "events")
     events.createOrReplaceTempView("mr_events_xvar")
-    // bounded pattern so BOTH routes can run it; the MATCH_NUMBER() measure
-    // forces the scan route without changing selection semantics
-    def q(measuresExtra: String) = s"""
+    // bounded pattern so the lead()-CASE expansion can run it too
+    val q = """
       SELECT * FROM mr_events_xvar MATCH_RECOGNIZE (
         PARTITION BY user_id ORDER BY ts, event_id
         MEASURES FIRST(S.ts) AS start_ts, FIRST(S.event_id) AS start_tie,
-                 LAST(U.ts) AS end_ts$measuresExtra
+                 LAST(U.ts) AS end_ts
         ONE ROW PER MATCH
         PATTERN (S D{1,3} U{1,2})
         DEFINE D AS D.value < PREV(D.value),
                U AS U.value > PREV(U.value) AND U.value < FIRST(S.value)
       )"""
-    val boundedPath = SqlFrontend.execute(spark, q(""))
-      .select("user_id", "start_ts", "start_tie", "end_ts")
-    val scanPath = SqlFrontend.execute(spark, q(", MATCH_NUMBER() AS mseq"))
-      .select("user_id", "start_ts", "start_tie", "end_ts")
+    val boundedPath = MrCaseReference(spark, q).select("user_id", "start_ts", "start_tie", "end_ts")
+    val scanPath = SqlFrontend.execute(spark, q).select("user_id", "start_ts", "start_tie", "end_ts")
     assert(boundedPath.exceptAll(scanPath).isEmpty && scanPath.exceptAll(boundedPath).isEmpty,
       "cross-variable selection diverged between the CASE expansion and the NFA interpreter")
     assert(scanPath.count() > 0, "equivalence must not be vacuous")
@@ -474,13 +484,13 @@ class MatchRecognizeScanSpec extends SparkSpec {
     events.createOrReplaceTempView("mr_events_fb")
     // conditions the interpreter refuses (function calls, CASE, BETWEEN)
     // now compile through the Hybrid Catalyst fallback with the navigation
-    // atoms (FIRST/PREV-rewritten refs) still interpreted; the bounded
-    // route evaluates the same text natively — both must select identically
-    def q(measuresExtra: String) = s"""
+    // atoms (FIRST/PREV-rewritten refs) still interpreted; the lead()-CASE
+    // expansion evaluates the same text natively — both must select identically
+    val q = """
       SELECT * FROM mr_events_fb MATCH_RECOGNIZE (
         PARTITION BY user_id ORDER BY ts, event_id
         MEASURES FIRST(S.ts) AS start_ts, FIRST(S.event_id) AS start_tie,
-                 LAST(U.ts) AS end_ts$measuresExtra
+                 LAST(U.ts) AS end_ts
         ONE ROW PER MATCH
         PATTERN (S D{1,3} U{1,2})
         DEFINE D AS D.value < PREV(D.value),
@@ -488,13 +498,47 @@ class MatchRecognizeScanSpec extends SparkSpec {
                  AND (CASE WHEN U.value < FIRST(S.value) THEN U.value > PREV(U.value)
                       ELSE false END)
       )"""
-    val boundedPath = SqlFrontend.execute(spark, q(""))
-      .select("user_id", "start_ts", "start_tie", "end_ts")
-    val scanPath = SqlFrontend.execute(spark, q(", MATCH_NUMBER() AS mseq"))
-      .select("user_id", "start_ts", "start_tie", "end_ts")
+    val boundedPath = MrCaseReference(spark, q).select("user_id", "start_ts", "start_tie", "end_ts")
+    val scanPath = SqlFrontend.execute(spark, q).select("user_id", "start_ts", "start_tie", "end_ts")
     assert(boundedPath.exceptAll(scanPath).isEmpty && scanPath.exceptAll(boundedPath).isEmpty,
       "fallback selection diverged between the CASE expansion and the NFA + Hybrid")
     assert(scanPath.count() > 0, "equivalence must not be vacuous")
+  }
+
+  test("bounded shapes outside the scan's surface fail when the statement is planned") {
+    ticker.createOrReplaceTempView("mr_ticker")
+    spark.sql("SELECT named_struct('k', k) AS sk, ts, id, v FROM mr_ticker")
+      .createOrReplaceTempView("mr_ticker_sk")
+    spark.sql("SELECT k, ts, id, v AS __mr_v FROM mr_ticker").createOrReplaceTempView("mr_ticker_mr")
+    // each shape is bounded, ONE ROW, SKIP PAST LAST ROW or SKIP TO NEXT ROW;
+    // planning it must fail loudly, before any row is read
+    def refusal(table: String = "mr_ticker", part: String = "k", order: String = "ts, id",
+                measures: String = "FIRST(S.id) AS s", skip: String = "",
+                within: String = "", define: String = "U AS U.v > PREV(U.v)"): String =
+      intercept[RuntimeException](SqlFrontend.execute(spark,
+        s"""SELECT * FROM $table MATCH_RECOGNIZE (
+           |  PARTITION BY $part ORDER BY $order MEASURES $measures ONE ROW PER MATCH
+           |  $skip PATTERN (S U{1,2}) $within DEFINE $define)""".stripMargin)).getMessage
+    val remedy = "compute a non-deterministic or subquery value as an input column upstream"
+    // a non-deterministic call in a cross-variable DEFINE
+    val nondet = refusal(define = "U AS rand() < 2 AND U.v > S.v")
+    assert(nondet.contains("must be deterministic") && nondet.contains(remedy), nondet)
+    // a subquery in a cross-variable DEFINE
+    val subquery = refusal(define = "U AS U.v > S.v + (SELECT min(v) - 100 FROM mr_ticker)")
+    assert(subquery.contains("subqueries are not allowed") && subquery.contains(remedy), subquery)
+    // a measure alias, or a column the clause names, with the reserved __mr_ prefix
+    val alias = refusal(measures = "FIRST(S.id) AS __mr_s")
+    assert(alias.contains("reserved __mr_ prefix"), alias)
+    val column = refusal(table = "mr_ticker_mr", define = "U AS U.__mr_v > PREV(U.__mr_v)")
+    assert(column.contains("reserved __mr_ prefix: __mr_v"), column)
+    // WITHIN over an ORDER BY column that is not a timestamp
+    val within = refusal(order = "id, ts", within = "WITHIN INTERVAL '1' HOUR")
+    assert(within.contains("WITHIN requires a timestamp ORDER BY column, got bigint"), within)
+    // a non-atomic PARTITION BY key, under SKIP TO NEXT ROW as under SKIP PAST LAST ROW
+    for (skip <- Seq("AFTER MATCH SKIP TO NEXT ROW", "")) {
+      val key = refusal(table = "mr_ticker_sk", part = "sk", skip = skip)
+      assert(key.contains("requires atomic key columns"), key)
+    }
   }
 
   test("reluctant quantifiers: U+? takes the SHORTEST rising run, diverging from greedy") {
@@ -520,24 +564,22 @@ class MatchRecognizeScanSpec extends SparkSpec {
   test("reluctant bounded pattern: scan route equals the lead()-CASE route") {
     val events = core.Tables(spark, sfDir, "events")
     events.createOrReplaceTempView("mr_events_lazy")
-    def q(extra: String) = s"""
+    val q = """
       SELECT * FROM mr_events_lazy MATCH_RECOGNIZE (
         PARTITION BY user_id ORDER BY ts, event_id
         MEASURES FIRST(S.ts) AS start_ts, FIRST(S.event_id) AS start_tie,
-                 LAST(U.ts) AS end_ts$extra
+                 LAST(U.ts) AS end_ts
         ONE ROW PER MATCH
         PATTERN (S U{1,3}?)
         DEFINE U AS U.value > PREV(U.value)
       )"""
-    val casePath = SqlFrontend.execute(spark, q(""))
-      .select("user_id", "start_ts", "start_tie", "end_ts")
-    val scanPath = SqlFrontend.execute(spark, q(", MATCH_NUMBER() AS mseq"))
-      .select("user_id", "start_ts", "start_tie", "end_ts")
+    val casePath = MrCaseReference(spark, q).select("user_id", "start_ts", "start_tie", "end_ts")
+    val scanPath = SqlFrontend.execute(spark, q).select("user_id", "start_ts", "start_tie", "end_ts")
     assert(casePath.exceptAll(scanPath).isEmpty && scanPath.exceptAll(casePath).isEmpty,
       "reluctant selection diverged between the CASE expansion and the NFA scan")
     assert(scanPath.count() > 0, "equivalence must not be vacuous")
     // and the lazy result genuinely differs from the greedy one on this data
-    val greedy = SqlFrontend.execute(spark, q("").replace("U{1,3}?", "U{1,3}"))
+    val greedy = SqlFrontend.execute(spark, q.replace("U{1,3}?", "U{1,3}"))
       .select("user_id", "start_ts", "start_tie", "end_ts")
     assert(greedy.exceptAll(scanPath).count() > 0, "lazy must diverge from greedy here")
   }
@@ -561,8 +603,9 @@ class MatchRecognizeScanSpec extends SparkSpec {
     assert(r.getAs[Double]("before_bottom") == 8.0, "LAST(D.v, 1) = one back from the last D")
     assert(r.isNullAt(r.fieldIndex("way_back")), "offset past the run is NULL")
 
-    // bounded route (lead()-CASE) computes the same offsets
-    val rb = SqlFrontend.execute(spark,
+    // a bounded pattern: the scan and the lead()-CASE expansion compute the
+    // same offsets
+    val bounded =
       """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
         |  PARTITION BY k ORDER BY ts, id
         |  MEASURES FIRST(S.id) AS start_id, FIRST(U.v, 1) AS second_up,
@@ -570,11 +613,14 @@ class MatchRecognizeScanSpec extends SparkSpec {
         |  ONE ROW PER MATCH
         |  PATTERN (S D{1,3} U{1,3})
         |  DEFINE D AS D.v < PREV(D.v), U AS U.v > PREV(U.v)
-        |)""".stripMargin).collect()
-    assert(rb.length == 1 && rb.head.getAs[Double]("second_up") == 12.0 &&
-      rb.head.getAs[Double]("before_bottom") == 8.0 &&
-      rb.head.isNullAt(rb.head.fieldIndex("way_back")),
-      s"bounded-route offsets diverged: ${rb.mkString(", ")}")
+        |)""".stripMargin
+    for ((route, rb) <- Seq("scan" -> SqlFrontend.execute(spark, bounded).collect(),
+                            "lead()-CASE" -> MrCaseReference(spark, bounded).collect()))
+      assert(rb.length == 1 && rb.head.getAs[Long]("start_id") == 1L &&
+        rb.head.getAs[Double]("second_up") == 12.0 &&
+        rb.head.getAs[Double]("before_bottom") == 8.0 &&
+        rb.head.isNullAt(rb.head.fieldIndex("way_back")),
+        s"$route offsets diverged: ${rb.mkString(", ")}")
   }
 
   test("self-LAST with a logical offset in DEFINE routes to the interpreter (run-relative read)") {
@@ -697,7 +743,7 @@ class MatchRecognizeScanSpec extends SparkSpec {
         |  PATTERN (S U+) DEFINE U AS rand() > 0.5 AND U.v > FIRST(S.v))""".stripMargin))
     assert(err.getMessage.contains("deterministic"), err.getMessage)
     // B{0,} matched empty: C's reference to LAST(B.v) is NULL → C can never
-    // classify, exactly the bounded path's forward/absent-reference rule
+    // classify, the standard's forward/absent-reference rule
     val rs = SqlFrontend.execute(spark,
       """SELECT * FROM mr_ticker MATCH_RECOGNIZE (
         |  PARTITION BY k ORDER BY ts, id

@@ -49,13 +49,12 @@ class ParseSqlSpec extends SparkSpec {
     }
   }
 
-  test("MATCH_RECOGNIZE DEFINE keeps backslash literals on the scan and the lead()-CASE routes") {
+  test("MATCH_RECOGNIZE DEFINE keeps backslash literals on bounded and unbounded patterns") {
     import spark.implicits._
     Seq((1L, "a1"), (2L, "b2"), (3L, "cc"), (4L, "d4")).map { case (id, s) => ("k", id, s) }
       .toDF("k", "id", "s").createOrReplaceTempView("literal_mr")
-    // `\d` is a digit class only when the backslash survives: the unbounded
-    // A+ is parsed by the rewrite itself (scan route), A{1,2} inside the
-    // statement text (lead()-CASE route)
+    // `\d` is a digit class only when the backslash survives the rewrite's
+    // own parse of the DEFINE text, for an unbounded and a bounded pattern
     def run(quantifier: String) = SqlFrontend.parseSql(spark,
       s"""SELECT * FROM literal_mr MATCH_RECOGNIZE (
          |  PARTITION BY k ORDER BY id

@@ -96,28 +96,32 @@ class PlanAuditSpec extends SparkSpec {
       "both windows must reuse a single (user_id, ts, event_id) sort")
   }
 
-  test("q162: skip-past selection reuses the candidate window's exchange — one shuffle total") {
-    // skipPastSelect's MrScanExec requires its input clustered by the key
-    // and sorted by (key, ts, tie); EnsureRequirements must satisfy both with
-    // the candidate window's own exchange and sort — at 60M events a second
-    // shuffle would double the network cost for zero movement
+  test("q162: the skip-past scan plans one shuffle and one sort below MrScanExec") {
+    // the scan's MrScanExec requires its input clustered by the key and
+    // sorted by (key, ts, tie); EnsureRequirements must satisfy both with
+    // one exchange and one sort — at 60M events a second shuffle would
+    // double the network cost for zero movement
     val p = plan("q162_match_skip_past")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,
-      s"candidate window and skip-past scan must share one exchange:\n${p.linesIterator.filter(_.contains("Exchange")).mkString("\n")}")
-    assert("\\bSort \\[".r.findAllIn(p).size == 1, s"window and scan must share one sort:\n$p")
+      s"the skip-past scan must plan one exchange:\n${p.linesIterator.filter(_.contains("Exchange")).mkString("\n")}")
+    assert("\\bSort \\[".r.findAllIn(p).size == 1, s"the scan must plan one sort:\n$p")
     assert(p.indexOf("MrScanExec") >= 0 && p.indexOf("MrScanExec") < p.indexOf("Exchange"),
       s"the exchange must sit below the scan node:\n$p")
     assert(!p.contains("DeserializeToObject"), s"the scan re-grew an object boundary:\n$p")
   }
 
-  private val mrQueries = Seq("q162_match_skip_past", "q169_match_xvar_cap",
-    "q176_match_permute", "q177_match_subset", "q180_match_iso_preferment")
+  // every batch MATCH_RECOGNIZE statement of the catalog, q162-q181: each
+  // must run on the one scan, bounded patterns included
+  private val mrQueries = graft.queries.Catalog.queries.keys
+    .filter(k => (162 to 181).exists(i => k.startsWith(s"q${i}_"))).toSeq.sorted
 
   test("MATCH_RECOGNIZE scans are one Catalyst plan: exchange and sort under MrScanExec") {
+    assert(mrQueries.size == 20, s"expected q162-q181, got ${mrQueries.mkString(", ")}")
     for (name <- mrQueries) {
       val p = plan(name)
       val scanAt = p.indexOf("MrScanExec")
       assert(scanAt >= 0, s"$name: no MrScanExec node:\n$p")
+      assert("MrScanExec".r.findAllIn(p).size == 1, s"$name: expected exactly one MrScanExec:\n$p")
       assert(!p.contains("ExistingRDD") && !p.contains("DeserializeToObject"),
         s"$name: the scan left the plan through an RDD or object boundary:\n$p")
       assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,

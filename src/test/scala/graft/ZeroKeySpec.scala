@@ -10,17 +10,26 @@ import org.apache.spark.sql.functions._
   */
 class ZeroKeySpec extends SparkSpec {
 
-  test("skipPastSelect treats -0.0 and 0.0 partition keys as one series") {
+  test("the skip-past scan treats -0.0 and 0.0 partition keys as one series") {
     import spark.implicits._
-    // one candidate of length 3 at ts=1 must CONSUME ts=2 and ts=3 (which
-    // are themselves candidates) regardless of their key's zero sign; a
-    // mid-series cursor reset would re-offer and select them
+    // `len` is the candidate match length at each row: S takes the start
+    // row, C* greedily every following row inside it. One candidate of
+    // length 3 at ts=1 must CONSUME ts=2 and ts=3 (which are themselves
+    // candidates) regardless of their key's zero sign; a mid-series cursor
+    // reset would re-offer and select them
     val df = Seq(
       (0.0, 1L, 3L), (-0.0, 2L, 2L), (0.0, 3L, 2L), (-0.0, 4L, 1L))
       .toDF("k", "ts", "len")
-    val sel = graft.operators.Behavior.skipPastSelect(
-        df, Seq(col("k")), Seq(col("ts")), "len")
-      .select("ts").as[Long].collect().sorted
+    df.createOrReplaceTempView("zero_keys")
+    val sel = graft.sql.SqlFrontend.execute(spark, """
+      SELECT * FROM zero_keys MATCH_RECOGNIZE (
+        PARTITION BY k ORDER BY ts
+        MEASURES FIRST(S.ts) AS ts
+        ONE ROW PER MATCH
+        AFTER MATCH SKIP PAST LAST ROW
+        PATTERN (S C*)
+        DEFINE C AS C.ts < S.ts + S.len
+      )""").select("ts").as[Long].collect().sorted
     assert(sel.toSeq == Seq(1L, 4L),
       s"expected one series (select ts=1, consume 2-3, select 4); got ${sel.toSeq}")
   }
